@@ -25,12 +25,16 @@ object Data {
   private val Types = Vector("view", "click", "purchase", "signup")
   private val Names = Vector("ada", "alan", "grace", "edsger", "barbara", "donald", "leslie", "tony")
 
-  /** `n` events from `seed`. Traffic dimensions: 10% `error` tombstones;
-    * 1-3 items, with a 4% tail of 16-64; null email (15%), amount (10%) and
-    * note (40%); Timestamp and Decimal logical types; and 2% `code` values
-    * that are not numbers (poison for `$number`). Shares and item-count
-    * totals are exact and only the positions and values are seeded, so every
-    * seed asks for the same amount of work. */
+  /** `n` events from `seed`. The 10% of `error` tombstones, and the
+    * dimensions themselves (a tail of long item arrays, nulls, Timestamp and
+    * Decimal logical types, codes that are not numbers), follow the
+    * benchmark's specification. The other shares are assumptions no traffic
+    * sample supports: 1-3 items with a 4% tail of 16-64; null email (15%),
+    * amount (10%) and note (40%); 2% `code` values that are not numbers
+    * (poison for `$number`). The traced run reports the share of work each
+    * one causes (`WorkShare`). Shares and item-count totals are exact and
+    * only the positions and values are seeded, so every seed asks for the
+    * same amount of work. */
   def events(seed: Long, n: Int): Vector[Event] = {
     val r = new Random(seed)
     def marked(share: Double): scala.collection.immutable.BitSet =
@@ -54,6 +58,11 @@ object Data {
         note = if (noNote(i)) null else s"note ${r.nextInt(100)}")
     }
   }
+
+  /** The traffic classes `WorkShare` reports on. */
+  val Classes: Vector[(String, Event => Boolean)] = Vector(
+    "long-items" -> (_.items.size >= 16), "error" -> (_.isError), "null-email" -> (_.email == null),
+    "null-amount" -> (_.amount == null), "null-note" -> (_.note == null), "poison-code" -> (_.isPoison))
 
   // ---- Connect records ----
 

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -17,26 +18,31 @@ import graft.connect.JsonataTransform
 import graft.jsonata.{JsonataException, Values}
 import graft.spark.{JsonataAnalysis, JsonataCompiler, JsonataDF, RowJson}
 
-/** One DataFrame transform of a Spark workload: its expression, how a batch
-  * query is built, and the reference view of each event's output (`None`
+/** One DataFrame transform of a Spark workload: its expression, the
+  * `JsonataDF` surface that builds a batch query from an input and the
+  * expression text, and the reference view of each event's output (`None`
   * drops the record). Views map output keys to values; a key whose value is
   * null or absent is left out. */
 final case class Transform(label: String, expr: String, outSchema: Option[StructType],
-    build: DataFrame => DataFrame, view: Row => Option[(Long, Map[String, Any])],
+    surface: (DataFrame, String) => DataFrame, view: Row => Option[(Long, Map[String, Any])],
     expected: Event => Option[Map[String, Any]])
 
-/** `df_interpreted` and `df_compiled`: `local[nproc]` with `GraftExtensions`
-  * on. Fixed-size batches run in a closed loop; each batch is a freshly built
-  * query over one cached input slice, written to the `noop` sink, as a
-  * micro-batch re-plans. `df_interpreted` uses expressions outside the
-  * compiled subset on three surfaces (typed, JSON-string and permissive
-  * output); `df_compiled` runs expressions inside the subset through
-  * `JsonataDF.auto`. */
+/** `df_interpreted` and `df_compiled`: `local[nproc / 2]` with
+  * `GraftExtensions` on; the other half of the cores is left to the JIT, the
+  * collector and the main thread, which plans each batch, so their bursts
+  * do not stall a task. Fixed-size batches run in a closed loop; each batch
+  * is a freshly built query over one cached input slice, written to a sink
+  * that drops its rows (`CommitSink`), as a micro-batch re-plans.
+  * `df_interpreted` uses expressions outside the compiled subset on three
+  * surfaces (typed, JSON-string and permissive output); `df_compiled` runs
+  * expressions inside the subset through `JsonataDF.auto`. */
 final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends Workload {
   import DfWorkload._
 
-  private val cores = Runtime.getRuntime.availableProcessors
-  private val spark = SparkSession.builder()
+  private val cores = math.max(1, Runtime.getRuntime.availableProcessors / 2)
+  private var spark: SparkSession = _
+
+  private def startSession(): SparkSession = SparkSession.builder()
     .master(s"local[$cores]")
     .appName("opbench")
     .config("spark.sql.shuffle.partitions", cores.toString)
@@ -52,38 +58,55 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
     .config("spark.ui.retainedTasks", "500")
     .config("spark.sql.ui.retainedExecutions", "50")
     .getOrCreate()
-  spark.sparkContext.setLogLevel("ERROR")
 
   private val transforms = if (compiled) Compiled else Interpreted
   private var events: Vector[Vector[Event]] = Vector.empty
   private var slices: Vector[DataFrame] = Vector.empty
+  /** This set-up round's text of each transform's expression. */
+  private var exprs: Vector[String] = Vector.empty
   private var tiers: Vector[Boolean] = Vector.empty
 
-  def setup(): Unit = {
-    slices.foreach(_.unpersist(blocking = true))
+  def setup(round: Int): Unit = {
+    val t0 = System.nanoTime()
+    if (spark != null) spark.stop()
+    spark = startSession()
+    spark.sparkContext.setLogLevel("ERROR")
+    val t1 = System.nanoTime()
     events = Data.events(seed, Slices * BatchRecords).grouped(BatchRecords).toVector
     def cached(es: Seq[Event]): DataFrame = {
-      val rdd = spark.sparkContext.parallelize(es.map(Data.row), cores)
+      val rdd = spark.sparkContext.parallelize(es.map(Data.row), cores * TasksPerThread)
       val df = spark.createDataFrame(rdd, Data.SparkSchema).cache()
       df.count()
       df
     }
     slices = events.map(cached)
-    tiers = transforms.map(t => JsonataCompiler.compileQuery(slices.head, t.expr).isDefined)
-    transforms.zip(tiers).foreach { case (t, c) =>
+    val t2 = System.nanoTime()
+    exprs = transforms.map(t => Workload.roundText(t.expr, round))
+    tiers = exprs.map(e => JsonataCompiler.compileQuery(slices.head, e).isDefined)
+    if (round == 1) transforms.zip(tiers).foreach { case (t, c) =>
       System.err.println(s"[opbench] tier ${t.label}: ${if (c) "compiled" else "interpreted"}")
     }
+    val t3 = System.nanoTime()
     (0 until WarmupBatches).foreach(k => write(batchQuery(k)))
+    CommitSink.drain((_, _) => ())
+    val t4 = System.nanoTime()
+    System.err.println(f"[opbench] set-up round $round: session ${(t1 - t0) / 1e9}%.2f s, " +
+      f"inputs ${(t2 - t1) / 1e9}%.2f s, tiers ${(t3 - t2) / 1e9}%.2f s, warm-up ${(t4 - t3) / 1e9}%.2f s")
   }
 
-  private def write(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+  private def write(df: DataFrame): Unit =
+    df.write.format(classOf[CommitSink].getName).mode("overwrite").save()
+
+  private def build(i: Int, slice: DataFrame): DataFrame = transforms(i).surface(slice, exprs(i))
 
   /** Batch `k`: transforms rotate fastest, so each meets every slice. */
   private def batchQuery(k: Int): DataFrame =
-    transforms(k % transforms.size).build(slices((k / transforms.size) % Slices))
+    build(k % transforms.size, slices((k / transforms.size) % Slices))
 
   /** Batch number, unique across phases: it keys the listener's per-batch figures. */
   private var nextBatch = 0
+  /** Whole-stage codegen compilations in the traced phases. */
+  private var codegenCompiles = 0L
   // registered only while a traced phase runs; counts add up across phases
   private val exec = new ExecListener
   private val plans = new PlanListener
@@ -95,7 +118,8 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
       spark.sparkContext.addSparkListener(exec)
       spark.listenerManager.register(plans)
     }
-    val t0 = System.nanoTime()
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val t0 = p.start()
     var now = t0
     while (now < deadlineNs) {
       val k = nextBatch
@@ -114,13 +138,14 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
       }
       tracer.foreach { t => t.end(); t.end() }
       val end = System.nanoTime()
-      p.batchDone(end - now)
-      p.latency.add(end - now)
+      val start = now
+      CommitSink.drain((at, rows) => p.latency.addN(p.adjust(at - start), rows))
       p.records += BatchRecords
-      now = end
+      now = p.batchDone(end)
     }
     p.wallNs = now - t0
     if (tracer.isDefined) {
+      codegenCompiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       Shims.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(exec)
       spark.listenerManager.unregister(plans)
@@ -135,13 +160,13 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
       System.err.println(s"[opbench] ${t.label} runs in the wrong tier for this workload")
       failed += 1
     }
-    for (s <- slices.indices; t <- transforms) {
-      val got = t.build(slices(s)).collect().toSeq.map(t.view)
+    for (s <- slices.indices; (t, i) <- transforms.zipWithIndex) {
+      val got = build(i, slices(s)).collect().toSeq.map(t.view)
       failed += compare(events(s).map(e => t.expected(e).map(e.id -> _)), got, t.label)
       attempted += events(s).size
       if (compiled) {
         // the compiled tier must agree with the interpreter on every record
-        val interp = JsonataDF.transform(slices(s), t.expr).collect().toSeq.map(jsonView)
+        val interp = JsonataDF.transform(slices(s), exprs(i)).collect().toSeq.map(jsonView)
         failed += compare(got, interp, s"${t.label} vs interpreter")
       }
     }
@@ -156,8 +181,9 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
     val inInterpreter = Seq("spark.rowjson.encode.ns_per_record", "jsonata.eval.ns_per_record",
       "spark.rowjson.decode.ns_per_record", "jsonata.serialize.ns_per_record").map(replay.getOrElse(_, 0.0)).sum
     replay ++ tierLayers(tracer) ++ Map(
-      "jsonata.parse.ns_per_expr" -> Workload.parseNsPerExpr(tracer, transforms.map(_.expr)),
+      "jsonata.parse.ns_per_expr" -> Workload.parseNsPerExpr(tracer, exprs),
       "spark.build.ms_per_batch" -> tracer.selfMeanNs("spark.build") / 1e6,
+      "spark.codegen.compiles_per_batch" -> codegenCompiles / batches,
       "spark.plan.ms_per_batch" -> plans.planMs / math.max(1, plans.queries),
       "spark.exec.task_cpu_ns_per_record" -> taskCpu,
       "spark.exec.task_gc_ms" -> exec.gcMs / batches,
@@ -173,11 +199,11 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
     val (cold, memo) = (tracer.id("spark.tier.cold"), tracer.id("spark.tier.memo"))
     for (r <- 0 until TierReps) {
       val padded = slices.head.withColumn(s"tier_pad_${seed}_$r", lit(r))
-      for (t <- transforms) {
+      for (e <- exprs) {
         tracer.begin(cold, r)
-        try JsonataCompiler.compileQuery(padded, t.expr) finally tracer.end()
+        try JsonataCompiler.compileQuery(padded, e) finally tracer.end()
         tracer.begin(memo, r)
-        try JsonataCompiler.compileQuery(slices.head, t.expr) finally tracer.end()
+        try JsonataCompiler.compileQuery(slices.head, e) finally tracer.end()
       }
     }
     Map(
@@ -187,7 +213,7 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
       "spark.tier.exprs" -> tiers.size.toDouble)
   }
 
-  /** The interpreted tier's per-record layers, replayed on the driver thread
+  /** The interpreted tier's per-record layers, replayed on the main thread
     * over slice 0 with the calls `JsonataRowExpression` and
     * `JsonataRowJsonExpression` make: `RowJson.rowToJson`,
     * `JsonataExpr.evaluate`, then `RowJson.jsonToRow` (typed output) or
@@ -200,8 +226,9 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
     var errors = 0L
     var evalAlloc = 0L
     var bytes = 0L
-    for (t <- transforms) {
-      val expr = JsonataTransform.compile(t.expr)
+    val shares = new WorkShare
+    for ((t, i) <- transforms.zipWithIndex) {
+      val expr = JsonataTransform.compile(exprs(i))
       val keep = JsonataAnalysis.referencedValueFields(expr.ast) match {
         case Some(names) => slices.head.columns.filter(names.contains)
         case None => slices.head.columns
@@ -209,9 +236,11 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
       val input = slices.head.select(struct(keep.map(col).toIndexedSeq: _*).as("v"))
       val schema = input.schema("v").dataType.asInstanceOf[StructType]
       val width = keep.length
+      val idAt = keep.indexOf("id")
       val rows: Array[InternalRow] = input.queryExecution.toRdd.map(_.getStruct(0, width).copy()).collect()
       for (_ <- 0 until ReplayPasses; row <- rows) {
         val id = replayed
+        val start = System.nanoTime()
         tracer.begin(record, id)
         tracer.begin(encode, id)
         val env = JsonNodeFactory.instance.objectNode()
@@ -241,9 +270,11 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
             tracer.end()
         }
         tracer.end()
+        shares.add(events.head((row.getLong(idAt) - 1).toInt), System.nanoTime() - start)
         replayed += 1
       }
     }
+    shares.report("replayed interpreter time")
     val n = replayed.toDouble
     Map(
       "spark.rowjson.encode.ns_per_record" -> tracer.selfTotalNs("spark.rowjson.encode") / n,
@@ -259,9 +290,12 @@ final class DfWorkload(seed: Long, compiled: Boolean, out: java.io.File) extends
 }
 
 object DfWorkload {
-  val Slices = 8
+  val Slices = 4
   /** Input records per batch. */
   val BatchRecords = 2048
+  /** Partitions of a slice per task thread: a batch runs in several waves
+    * of tasks, as Spark advises, so its records commit at several times. */
+  val TasksPerThread = 2
   val WarmupBatches = 12
   val TierReps = 10
   val ReplayPasses = 2
@@ -338,16 +372,16 @@ object DfWorkload {
       |  "code": $number(value.code) * 2, "n": $count(value.items)}""".stripMargin
     Vector(
       Transform("transformAs", typedExpr, Some(typedSchema),
-        JsonataDF.transformAs(_, typedExpr, typedSchema), typedView,
+        JsonataDF.transformAs(_, _, typedSchema), typedView,
         e => if (e.isError) None
              else Some(Map("id" -> dec(e.id), "total" -> dec(e.total), "top" -> dec(e.items.map(_.price).max),
                "skus" -> e.items.map(_.sku).mkString(",")))),
-      Transform("transform", jsonExpr, None, JsonataDF.transform(_, jsonExpr), jsonView,
+      Transform("transform", jsonExpr, None, JsonataDF.transform(_, _), jsonView,
         e => if (e.isError) None
              else Some(present("id" -> dec(e.id), "who" -> s"${e.first} ${e.last}", "email" -> e.email,
                "skus" -> e.items.map(_.sku.toUpperCase).mkString(","), "amount" -> e.amount,
                "day" -> java.time.Instant.ofEpochMilli(e.tsMillis).toString.take(10)))),
-      Transform("transformPermissive", permissiveExpr, None, JsonataDF.transformPermissive(_, permissiveExpr),
+      Transform("transformPermissive", permissiveExpr, None, JsonataDF.transformPermissive(_, _),
         r => if (r.isNullAt(1)) jsonMap(r.getString(0))
              else Some(mapper.readTree(r.getString(2)).get("value").get("id").asLong() -> Map("error" -> true)),
         e => if (e.isError) None
@@ -359,7 +393,7 @@ object DfWorkload {
   val Compiled: Vector[Transform] = {
     def auto(label: String, expr: String, ddl: String, expected: Event => Option[Map[String, Any]]) = {
       val schema = StructType.fromDDL(ddl)
-      Transform(label, expr, Some(schema), JsonataDF.auto(_, expr, schema), typedView, expected)
+      Transform(label, expr, Some(schema), JsonataDF.auto(_, _, schema), typedView, expected)
     }
     val iso = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
       .withZone(java.time.ZoneOffset.UTC)

@@ -2,31 +2,69 @@ package opbench
 
 import java.lang.management.ManagementFactory
 
-/** What one timed phase did. On the Spark workloads a record's latency is
-  * the time of the batch that carried it, so there `latency` holds one
-  * sample per batch. */
+/** What one timed phase did. `latency` holds one sample per record: one
+  * `apply()` on `smt_records`; on the Spark workloads, from the start of the
+  * record's batch to the commit of the task that wrote it (`CommitSink`).
+  * `batches` holds one sample per batch: a poll of records on
+  * `smt_records`, a query from build to sink completion on the Spark
+  * workloads. Every duration is host-adjusted (`HostSpeed`): the phase
+  * probes the host between batches and scales each batch's durations by the
+  * latest host-speed factor. */
 final class Phase(val batchRecords: Long) {
   var records = 0L
   var failed = 0L
+  /** Unadjusted wall time of the phase, probes included. */
   var wallNs = 0L
   val latency = new Samples
   val batches = new Samples
   /** Process CPU time of each batch, all threads. */
   val batchCpu = new Samples
+  /** Unadjusted time of each host probe. */
+  val probes = new Samples
 
-  private var cpuMark = Jvm.processCpuNs()
-  /** Closes a batch that took `ns` of wall time. */
-  def batchDone(ns: Long): Unit = {
+  private val recent = new Array[Long](3)
+  private var factor = 1.0
+  private var lastProbe = 0L
+  private var batchStart = 0L
+  private var cpuMark = 0L
+
+  /** Probes the host and returns the time the first batch starts. */
+  def start(): Long = { probe(); batchStart }
+
+  /** A duration of `ns` at the reference host speed. */
+  def adjust(ns: Long): Long = (ns * factor).round
+
+  /** Closes the batch that ended at `now`, probing the host when a probe is
+    * due, and returns the time the next batch starts: probes fall between
+    * batches and count in no batch. */
+  def batchDone(now: Long): Long = {
     val cpu = Jvm.processCpuNs()
-    batches.add(ns)
-    batchCpu.add(cpu - cpuMark)
+    batches.add(adjust(now - batchStart))
+    batchCpu.add(adjust(cpu - cpuMark))
+    batchStart = now
     cpuMark = cpu
+    if (now - lastProbe >= HostSpeed.EveryNs) probe()
+    batchStart
   }
 
-  /** Adds another phase's records, failures, time and batch samples. */
+  /** The factor follows the median of the last three probes, so a probe
+    * that a collection pause hits does not move it. */
+  private def probe(): Unit = {
+    val t = HostSpeed.probeNs()
+    recent(probes.size % 3) = t
+    probes.add(t)
+    val last = recent.take(math.min(probes.size, 3)).sorted
+    factor = HostSpeed.RefNs / last(last.length / 2)
+    lastProbe = System.nanoTime()
+    batchStart = lastProbe
+    cpuMark = Jvm.processCpuNs()
+  }
+
+  /** Adds another phase's records, failures, time and samples. */
   def absorb(o: Phase): Unit = {
     records += o.records; failed += o.failed; wallNs += o.wallNs
     latency.addAll(o.latency); batches.addAll(o.batches); batchCpu.addAll(o.batchCpu)
+    probes.addAll(o.probes)
   }
 
   /** Medians over `Windows` consecutive runs of batches: records per second
@@ -48,9 +86,10 @@ object Phase {
 }
 
 trait Workload {
-  /** One set-up round: build the inputs from the seed, then warm up with a
-    * fixed count of records or batches. */
-  def setup(): Unit
+  /** One set-up round, cold: start the session (Spark workloads), build the
+    * inputs from the seed, parse the round's expressions and decide their
+    * tiers, then warm up with a fixed count of records or batches. */
+  def setup(round: Int): Unit
   /** A closed loop until `deadlineNs`; spans go to `tracer` when it is set. */
   def run(deadlineNs: Long, tracer: Option[Tracer]): Phase
   /** Every input through every transform, untimed, checked against the
@@ -63,6 +102,11 @@ trait Workload {
 
 object Workload {
   val ParseReps = 200
+
+  /** `expr` with a comment naming set-up round `round`: every round's text
+    * is new to the expression cache and the tier memo, both keyed on the
+    * source text, so each round parses and decides tiers cold. */
+  def roundText(expr: String, round: Int): String = s"$expr\n/* set-up round $round */"
 
   /** Mean time of an uncached `Jsonata.compile` over `exprs`, in ns. */
   def parseNsPerExpr(tracer: Tracer, exprs: Seq[String]): Double = {
@@ -80,7 +124,7 @@ object Workload {
   * and traced quarters in turn), verify, and print the metrics as the last
   * line of standard output. */
 object Main {
-  val SetupRounds = 3
+  val SetupRounds = 5
 
   val EndToEnd: Seq[(String, String)] = Seq(
     "setup_s" -> "s", "records_per_s" -> "1/s", "cpu_ns_per_record" -> "ns",
@@ -97,6 +141,7 @@ object Main {
     "spark.tier.compiled_exprs" -> "count", "spark.tier.exprs" -> "count",
     "spark.rowjson.encode.ns_per_record" -> "ns", "spark.rowjson.decode.ns_per_record" -> "ns",
     "spark.build.ms_per_batch" -> "ms", "spark.plan.ms_per_batch" -> "ms",
+    "spark.codegen.compiles_per_batch" -> "count",
     "spark.exec.task_cpu_ns_per_record" -> "ns", "spark.exec.task_gc_ms" -> "ms",
     "spark.exec.jobs_per_batch" -> "count", "spark.exec.stages_per_batch" -> "count",
     "spark.exec.tasks_per_batch" -> "count", "spark.exec.max_task_ms" -> "ms",
@@ -117,18 +162,24 @@ object Main {
       case "df_compiled" => new DfWorkload(seed, compiled = true, out)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
-    // Round 1 counts from process start (JVM, session, first JIT); later
-    // rounds redo input generation and warm-up. The median is reported.
+    // Round 1 counts from process start (JVM, class loading, first JIT);
+    // later rounds redo the whole set-up cold in the warm JVM. The median is
+    // reported, so a slow JVM start on one run does not move it. Each round
+    // is host-adjusted by probes taken just before and after it.
+    HostSpeed.warm()
     val rounds = (1 to SetupRounds).map { r =>
+      val before = HostSpeed.settledNs()
       val t0 = System.nanoTime()
-      w.setup()
-      if (r == 1) (System.currentTimeMillis() - jvmStartMs) / 1e3 else (System.nanoTime() - t0) / 1e9
+      w.setup(r)
+      val s = if (r == 1) (System.currentTimeMillis() - jvmStartMs) / 1e3 else (System.nanoTime() - t0) / 1e9
+      s * 2 * HostSpeed.RefNs / (before + HostSpeed.settledNs())
     }
     System.err.println(s"[opbench] setup rounds s: ${rounds.mkString(", ")}")
 
     val nanos = seconds * 1000000000L
     val (p, names, values) =
       if (!traced) {
+        val classes0 = ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount
         val before = Jvm.snap()
         val p = w.run(System.nanoTime() + nanos, None)
         val d = Jvm.snap() - before
@@ -142,11 +193,17 @@ object Main {
           "batch_p50_ms" -> p.batches.percentileMs(50), "batch_p90_ms" -> p.batches.percentileMs(90))
         println(s"# $name seed=$seed: ${p.records} records, ${p.latency.size} latency samples, " +
           s"${p.batches.size} batches in ${d.wallNs / 1e9} s")
+        println(f"# host: ${p.probes.size} probes, median ${p.probes.percentileMs(50)}%.3f ms " +
+          f"(reference ${HostSpeed.RefNs / 1e6}%.3f ms); unadjusted ${p.records / (d.wallNs / 1e9)}%.0f records/s " +
+          "over the whole phase, probes included")
+        println(s"# jvm: ${d.gcMs} ms in collections, ${d.jitMs} ms compiling in the timed phase, " +
+          s"${ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount - classes0} classes loaded")
         // the sample buffers grow with the run's speed; they are not the workload's live data
         p.latency.clear(); p.batches.clear(); p.batchCpu.clear()
         val heap = Jvm.liveHeapMb()
+        val v0 = System.nanoTime()
         val (att, fail) = w.verify()
-        println(s"# verified $att records, $fail failed")
+        println(s"# verified $att records, $fail failed in ${(System.nanoTime() - v0) / 1e9} s")
         p.records += att; p.failed += fail
         (p, EndToEnd, values + ("live_heap_mb" -> heap))
       } else {
@@ -167,7 +224,8 @@ object Main {
         val layers = w.layers(tracer, t) ++ Map(
           "jvm.gc_ms" -> gcMs.toDouble,
           "trace.overhead_share" ->
-            ((t.wallNs.toDouble / t.records) / (plain.wallNs.toDouble / plain.records) - 1.0))
+            ((t.batches.sum(0, t.batches.size).toDouble / t.records) /
+              (plain.batches.sum(0, plain.batches.size).toDouble / plain.records) - 1.0))
         tracer.write(new java.io.File(out, s"spans-$name.jsonl"))
         val (att, fail) = w.verify()
         val p = new Phase(0)

@@ -13,6 +13,8 @@ final class Samples {
     a(n) = v
     n += 1
   }
+  /** Adds `v` `times` times: one sample per record of a task that wrote `times` records. */
+  def addN(v: Long, times: Long): Unit = { var i = 0L; while (i < times) { add(v); i += 1 } }
   def size: Int = n
   def clear(): Unit = { a = new Array[Long](0); n = 0 }
   def addAll(o: Samples): Unit = { var i = 0; while (i < o.n) { add(o.a(i)); i += 1 } }
@@ -35,12 +37,13 @@ object Jvm {
   private val os = ManagementFactory.getOperatingSystemMXBean.asInstanceOf[com.sun.management.OperatingSystemMXBean]
   private val threads = ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
 
-  final case class Snap(wallNs: Long, allocBytes: Long, gcMs: Long) {
-    def -(o: Snap): Snap = Snap(wallNs - o.wallNs, allocBytes - o.allocBytes, gcMs - o.gcMs)
+  final case class Snap(wallNs: Long, allocBytes: Long, gcMs: Long, jitMs: Long) {
+    def -(o: Snap): Snap = Snap(wallNs - o.wallNs, allocBytes - o.allocBytes, gcMs - o.gcMs, jitMs - o.jitMs)
   }
 
   def snap(): Snap = Snap(System.nanoTime(), threads.getTotalThreadAllocatedBytes,
-    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum)
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum,
+    ManagementFactory.getCompilationMXBean.getTotalCompilationTime)
 
   def processCpuNs(): Long = os.getProcessCpuTime
 
@@ -134,4 +137,70 @@ final class Tracer(keep: Int = 100000) {
         .mkString(",") + "]}")
     } finally w.close()
   }
+}
+
+/** How much of the timed work each traffic class carries. The traffic
+  * shares in `Data.events` are assumptions, so the traced run reports, for
+  * each class, its share of records and its share of the time measured per
+  * record, to show how far each assumption drives the figures. */
+final class WorkShare {
+  private val ns = new Array[Long](Data.Classes.size)
+  private val n = new Array[Long](Data.Classes.size)
+  private var allNs = 0L
+  private var all = 0L
+
+  def add(e: Event, t: Long): Unit = {
+    all += 1; allNs += t
+    var i = 0
+    while (i < ns.length) {
+      if (Data.Classes(i)._2(e)) { n(i) += 1; ns(i) += t }
+      i += 1
+    }
+  }
+
+  /** One `#` line per class on standard output. */
+  def report(what: String): Unit = if (all > 0) Data.Classes.indices.foreach { i =>
+    println(f"# traffic class ${Data.Classes(i)._1}: ${100.0 * n(i) / all}%.1f%% of records, " +
+      f"${100.0 * ns(i) / allNs}%.1f%% of $what")
+  }
+}
+
+/** Host speed. The shared machines the benchmark runs on change speed by
+  * 10-40% from one second to the next as other tenants load them, and
+  * process CPU time moves with wall time, so neither can tell a slower
+  * program from a busier host. A fixed kernel, timed between batches, tracks
+  * the host's speed: each timing metric is scaled by `RefNs` over the
+  * kernel's recent time, which gives it at the reference speed. `RefNs` is
+  * about the kernel's median time on the 4-vCPU VM where the benchmark was
+  * written; it only sets the scale, since two commits are compared on one
+  * host. The kernel builds and probes a string-keyed hash map: allocation,
+  * hashing and pointer chasing, as in the operator's JSON trees. */
+object HostSpeed {
+  val RefNs = 3.0e6
+  /** Time between probes in a timed phase: a probe costs about 3% of it. */
+  val EveryNs = 100000000L
+  @volatile private var sink = 0L
+
+  /** Time of one run of the kernel, in ns. */
+  def probeNs(): Long = {
+    val t0 = System.nanoTime()
+    var acc = 0L
+    var r = 0
+    while (r < 20) {
+      val m = new java.util.HashMap[String, Integer]()
+      var j = 0
+      while (j < 2000) { m.put("k" + j, j); j += 1 }
+      j = 0
+      while (j < 2000) { acc += m.get("k" + (j * 7) % 2000).intValue; j += 1 }
+      r += 1
+    }
+    sink += acc
+    System.nanoTime() - t0
+  }
+
+  /** Compiles the kernel before its times are used. */
+  def warm(): Unit = for (_ <- 0 until 40) probeNs()
+
+  /** Median of three probes, in ns. */
+  def settledNs(): Double = Seq(probeNs(), probeNs(), probeNs()).sorted.apply(1).toDouble
 }

@@ -12,12 +12,14 @@ import graft.jsonata.JsonataException
 final class SmtWorkload(seed: Long) extends Workload {
   import SmtWorkload._
 
-  private val configs = Vector(RemoveEmail, Tombstone, Projection).map(JsonataTransform.Config(_))
+  private var configs: Vector[JsonataTransform.Config] = Vector.empty
   private var events: Vector[Event] = Vector.empty
   private var records: Array[CRecord] = Array.empty
   private var evalAlloc = 0L
+  private val shares = new WorkShare
 
-  def setup(): Unit = {
+  def setup(round: Int): Unit = {
+    configs = Vector(RemoveEmail, Tombstone, Projection).map(e => JsonataTransform.Config(Workload.roundText(e, round)))
     events = Data.events(seed, Records)
     records = events.map(Data.record).toArray
     var i = 0
@@ -28,9 +30,8 @@ final class SmtWorkload(seed: Long) extends Workload {
   }
 
   def run(deadlineNs: Long, tracer: Option[Tracer]): Phase = {
-    val p = new Phase(BatchSize)
-    val t0 = System.nanoTime()
-    var blockStart = t0
+    val p = new Phase(PollRecords)
+    val t0 = p.start()
     var now = t0
     var i = 0L
     val ids = tracer.map(t => SpanNames.map(t.id))
@@ -44,11 +45,12 @@ final class SmtWorkload(seed: Long) extends Workload {
           case Some(t) => tracedApply(t, ids.get, records(k), configs(c), i)
         } catch { case _: DataException => Failed }
       now = System.nanoTime()
-      p.latency.add(now - start)
+      p.latency.add(p.adjust(now - start))
+      if (tracer.isDefined) shares.add(events(k), now - start)
       // cheap inline check; verify() compares every output in full
       if ((out eq Failed) || (out == null) != (c == 1 && events(k).isError)) p.failed += 1
       i += 1
-      if (i % BatchSize == 0) { p.batchDone(now - blockStart); blockStart = now }
+      if (i % PollRecords == 0) now = p.batchDone(now)
     }
     p.records = i
     p.wallNs = now - t0
@@ -115,6 +117,7 @@ final class SmtWorkload(seed: Long) extends Workload {
       }
 
   def layers(tracer: Tracer, traced: Phase): Map[String, Double] = {
+    shares.report("apply time")
     val nodes = records.map(r => countNodes(RecordCodec.recordToJsonNode(r))).sum
     Map(
       "jsonata.parse.ns_per_expr" -> Workload.parseNsPerExpr(tracer, configs.map(_.expr)),
@@ -140,8 +143,10 @@ object SmtWorkload {
   /** Distinct records; the loop cycles through them. */
   val Records = 4096
   val WarmupApplies = 60000
-  /** Applies per block for the batch percentiles. */
-  val BatchSize = 2048
+  /** Records per batch for the batch percentiles: Kafka's default
+    * `max.poll.records`, the most records one poll hands a Connect task,
+    * whose transforms then run on each in turn. */
+  val PollRecords = 500
 
   private val SpanNames =
     Array("connect.apply", "connect.cache", "connect.encode", "jsonata.eval", "connect.decode")
