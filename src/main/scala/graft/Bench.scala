@@ -1,11 +1,44 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every registered query against SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are fully materialized through the noop sink
   * (count() alone would let Spark prune the final project). */
 object Bench {
+
+  /** Time each query once through the noop sink, in order. A query that
+    * throws is named in the second list and gets no timing: its partial
+    * time would otherwise pass for a result and lower the total. */
+  def timeQueries(spark: SparkSession, sfDir: String,
+                  queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : (Seq[(String, Double)], Seq[String]) = {
+    val timed = queries.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val ok =
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
+      val sec = (System.nanoTime() - t0) / 1e9
+      // queries persist() intermediates for intra-query reuse; dropping them
+      // between queries keeps one query's leftover cache from GC-taxing the
+      // next (single-run timings otherwise swing by seconds)
+      spark.sharedState.cacheManager.clearCache()
+      (name, sec, ok)
+    }
+    (timed.collect { case (name, sec, true) => name -> sec },
+      timed.collect { case (name, _, false) => name })
+  }
+
+  /** The one-line JSON result: total and per-query seconds of the queries
+    * that completed, and the names of those that failed. */
+  def summaryLine(results: Seq[(String, Double)], failed: Seq[String], sfDir: String): String = {
+    val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+    val fs = failed.map(n => s""""$n"""").mkString("[", ",", "]")
+    val total = results.map(_._2).sum
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$fs}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -53,21 +86,10 @@ object Bench {
       }
       spark.sharedState.cacheManager.clearCache()
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => keep(q._1)).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // queries persist() intermediates for intra-query reuse; dropping them
-      // between queries keeps one query's leftover cache from GC-taxing the
-      // next (single-run timings otherwise swing by seconds)
-      spark.sharedState.cacheManager.clearCache()
-      name -> sec
-    }
-    val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }
-      .mkString("{", ",", "}")
+    val (results, failed) =
+      timeQueries(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1).filter(q => keep(q._1)))
     val total = results.map(_._2).sum
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val line = summaryLine(results, failed, sfDir)
     println(line)
     // The driver's bench artifact keeps only the last ~2 KB of stdout, which
     // truncated 24 of 96 per-query entries in round 7 — persist the complete

@@ -25,11 +25,27 @@ object Parser {
     ".." -> 20, ":=" -> 10, "!=" -> 40, "<=" -> 40, ">=" -> 40, "~>" -> 40,
     "and" -> 30, "or" -> 25, "in" -> 40, "&" -> 50, "!" -> 0, "~" -> 0)
 
-  def parse(source: String): Ast = new Parser(source).parseAll()
+  /** Deepest nesting of sub-expressions the parser accepts. Each level costs
+    * a few stack frames, so without a bound a pathological source (20,000
+    * nested parentheses) overflows the thread stack; the bound turns that
+    * into a coded parse error. 1000 levels parse within a 1 MB stack (the
+    * JVM default) even before JIT compilation, and match the evaluator's
+    * default `max.depth`. */
+  val MaxNesting = 1000
+
+  /** Parse; a thread stack too small for even [[MaxNesting]] levels gets the
+    * same coded error rather than a raw StackOverflowError. */
+  def parse(source: String): Ast =
+    try new Parser(source).parseAll()
+    catch {
+      case _: StackOverflowError =>
+        throw new JsonataException("S0218", "expression nests too deeply for the thread stack")
+    }
 
   private final class Parser(source: String) {
     private val lexer = new Lexer(source)
     private var cur: Token = fetch()
+    private var nesting = 0
 
     private def fetch(): Token = {
       val t = lexer.next()
@@ -67,12 +83,17 @@ object Parser {
     }
 
     def expression(rbp: Int): Ast = {
+      nesting += 1
+      if (nesting > MaxNesting)
+        throw new JsonataException("S0218",
+          s"expression nests deeper than $MaxNesting levels", cur.pos)
       var t = advance()
       var left = nud(t)
       while (rbp < lbp(cur)) {
         t = advance()
         left = led(t, left)
       }
+      nesting -= 1
       left
     }
 

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * replaces is three `LambdaFunction`-bearing HOFs, every one a
   * CodegenFallback that also blocks subexpression elimination — measured at
   * ~1M rows the $sum consumer alone held the compiled wildcard row to
-  * parity with the interpreted engine (ThroughputBench round-12 note).
+  * parity with the interpreted engine.
   *
   * Exact semantics of the replaced compose, pinned by ArrayFoldSpec on both
   * eval paths:

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * `jsonata_typed(named_struct(...), '{...}', 'a INT')` gets whole-stage
   * codegen, constant folding, and filter/column pushdown through the
   * rewritten projection for free; anything outside the subset keeps the
-  * interpreted [[JsonataRowExpression]] unchanged (fallback-by-construction,
+  * interpreted [[JsonataExpression]] unchanged (fallback-by-construction,
   * same two-tier contract as the DataFrame entry point, and the same
   * differential suite pins tier agreement).
   *
@@ -49,7 +49,8 @@ case class JsonataCompileRule(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsUp { case p =>
       p.transformExpressionsUp {
-        case e @ JsonataRowExpression(child, src, outSchema, _, _, _) if child.resolved =>
+        case e @ JsonataExpression(child, src, JsonataOutput.Typed(outSchema), Some(_), false, _, _)
+            if child.resolved =>
           child.dataType match {
             case st: StructType => rewrite(child, src, st, outSchema).getOrElse(e)
             case _ => e

@@ -2227,7 +2227,7 @@ object JsonataCompiler {
       * context the parent is a different object per element.
       *
       * Why compile a shape that measures ~0.5× the interpreter standalone
-      * (ThroughputBench dyn-key row — nested HOFs are CodegenFallback):
+      * (measured at 1M rows — nested HOFs are CodegenFallback):
       * TIER REACH. transformCompiled is all-or-nothing per expression, so
       * one group-by inside a wide otherwise-compiled projection would drag
       * every other field onto the interpreter — where those fields are the
@@ -2337,7 +2337,7 @@ object JsonataCompiler {
                 // array; the per-key group filters re-read the stamped key
                 // instead of re-evaluating kf — a computed key evaluated
                 // per (key × element) measured 3× SLOWER than the
-                // interpreter on concat keys (ThroughputBench dyn-key row)
+                // interpreter on concat keys (measured at 1M rows)
                 val keyed = transform(arr, e => struct(kf(e).as("k"), e.as("v")))
                 val keys = array_distinct(filter(
                   transform(keyed, x => x.getField("k")), k => k.isNotNull))

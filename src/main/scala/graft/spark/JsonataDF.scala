@@ -1,7 +1,9 @@
 package graft.spark
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.StructType
 
 import graft.connect.JsonataTransform
@@ -10,20 +12,20 @@ import graft.connect.JsonataTransform
   *
   * Rows are wrapped into the record envelope (`topic`, `kafkaPartition`,
   * `value` = the row), the expression is evaluated per row by the native
-  * [[JsonataExpression]], and JSON-null results drop the record (tombstone,
-  * stateless => streaming-safe).
+  * [[JsonataExpression]] over a struct child, and JSON-null results drop the
+  * record (tombstone, stateless => streaming-safe).
   *
   * Scale notes: the operator is a narrow map — no shuffle at any data size.
   * Envelope construction prunes value fields the expression provably never
-  * reads ([[JsonataAnalysis.referencedFields]]), so Catalyst's column pruning
-  * reaches the parquet scan (a scan reading 2 of 40 columns at 100 TB is the
-  * difference between minutes and hours).
+  * reads ([[JsonataAnalysis.referencedValueFields]]), so Catalyst's column
+  * pruning reaches the parquet scan (a scan reading 2 of 40 columns at
+  * 100 TB is the difference between minutes and hours).
   */
 object JsonataDF {
 
   /** The pruned value struct for `expr` over `df`'s columns. Envelope
     * construction itself ({topic, kafkaPartition, value}) happens inside
-    * [[JsonataRowJsonExpression]] directly from the row — no JSON text on the
+    * [[JsonataExpression]] directly from the row — no JSON text on the
     * input side. */
   private def prunedStruct(df: DataFrame, expr: String): Column = {
     val ast = JsonataTransform.compile(expr).ast
@@ -34,21 +36,25 @@ object JsonataDF {
     struct(keep.map(col).toIndexedSeq: _*)
   }
 
+  /** `df` reduced to the one column `as`: the evaluator `node` applied to
+    * `input`. Exploding a one-element array is a single-evaluation barrier:
+    * filter pushdown would otherwise inline the evaluator into the tombstone
+    * filter AND the projection, running it up to 3x per record (pinned by
+    * JsonataSparkSpec). */
+  private def evaluateOnce(df: DataFrame, input: Column, as: String)(
+      node: Expression => JsonataExpression): DataFrame =
+    df.select(explode(array(Shims.column(node(Shims.expression(input))))).as(as))
+
   /** Apply a JSONata expression over a DataFrame; result is one JSON-string
     * column `out`; tombstones (null results) are filtered out.
     *
     * The evaluator reads the pruned value struct directly (no to_json, no
-    * input parse — one serialization per record, of the result). The
-    * explode(array(..)) is a single-evaluation barrier: filter pushdown would
-    * otherwise inline the evaluator into the tombstone filter AND the
-    * projection, running it up to 3x per record (pinned by JsonataSparkSpec). */
+    * input parse — one serialization per record, of the result). */
   def transform(df: DataFrame, expr: String, topic: String = "rows",
-                timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.graftshim.Shims
-    val e = Shims.column(JsonataRowJsonExpression(
-      Shims.expression(prunedStruct(df, expr)), expr, topic, timeoutMs, maxDepth))
-    df.select(explode(array(e)).as("out")).filter(col("out").isNotNull)
-  }
+                timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame =
+    evaluateOnce(df, prunedStruct(df, expr), "out")(JsonataExpression(_, expr,
+      topic = Some(topic), timeoutMs = timeoutMs, maxDepth = maxDepth))
+      .filter(col("out").isNotNull)
 
   /** Permissive transform — the per-record error policy (Spark analog of
     * Connect `errors.tolerance=all` + DLQ routing; reference wraps eval
@@ -62,18 +68,11 @@ object JsonataDF {
     * Tombstones (null result, no error) are dropped as in [[transform]].
     * Stateless narrow map — works unchanged under Structured Streaming. */
   def transformPermissive(df: DataFrame, expr: String, topic: String = "rows",
-                          timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.graftshim.Shims
-    // direct struct input; the expression serializes the original envelope
-    // into `record` only for error rows. explode(array(..)) is the
-    // single-evaluation barrier (see transform).
-    val e = Shims.column(JsonataRowJsonExpression(
-      Shims.expression(prunedStruct(df, expr)), expr, topic, timeoutMs, maxDepth,
-      permissive = true))
-    df.select(explode(array(e)).as("r"))
+                          timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame =
+    evaluateOnce(df, prunedStruct(df, expr), "r")(JsonataExpression(_, expr,
+      topic = Some(topic), permissive = true, timeoutMs = timeoutMs, maxDepth = maxDepth))
       .select(col("r.out").as("out"), col("r.error").as("error"), col("r.record").as("record"))
       .filter(col("out").isNotNull || col("error").isNotNull)
-  }
 
   /** The error rows of [[transformPermissive]] — a ready-to-sink DLQ frame. */
   def deadLetters(df: DataFrame, expr: String, topic: String = "rows",
@@ -83,26 +82,16 @@ object JsonataDF {
       .select(col("record"), col("error"))
 
   /** Transform + decode to typed columns — direct tree-in/tree-out codec
-    * ([[JsonataRowExpression]]): the pruned value struct feeds the evaluator
+    * ([[JsonataOutput.Typed]]): the pruned value struct feeds the evaluator
     * as an in-memory Jackson tree and the result decodes straight into the
-    * declared schema. No to_json/from_json round-trip. The explode(array(..))
-    * is the same single-evaluation barrier as in [[transformPermissive]]. */
+    * declared schema. No to_json/from_json round-trip. */
   def transformAs(df: DataFrame, expr: String, schema: StructType,
                   topic: String = "rows",
-                  timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.graftshim.Shims
-    val ast = JsonataTransform.compile(expr).ast
-    val keep = JsonataAnalysis.referencedValueFields(ast) match {
-      case Some(names) => df.columns.filter(names.contains)
-      case None => df.columns
-    }
-    val valueStruct = struct(keep.map(col).toIndexedSeq: _*)
-    val rowExpr = Shims.column(JsonataRowExpression(
-      Shims.expression(valueStruct), expr, schema, topic, timeoutMs, maxDepth))
-    df.select(explode(array(rowExpr)).as("r"))
+                  timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame =
+    evaluateOnce(df, prunedStruct(df, expr), "r")(JsonataExpression(_, expr,
+      JsonataOutput.Typed(schema), Some(topic), timeoutMs = timeoutMs, maxDepth = maxDepth))
       .filter(col("r").isNotNull)
       .select("r.*")
-  }
 
   /** Two-tier entry point: compile the expression to native Columns when the
     * subset allows (whole-stage codegen, no JSON round-trip — SURVEY.md §2
@@ -133,14 +122,12 @@ object JsonataDF {
     * JsonataTransformation.java:133-156). */
   def transformRecords(df: DataFrame, expr: String,
                        timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.graftshim.Shims
     val known = Seq("topic", "kafkaPartition", "key", "value", "timestamp", "headers")
     val present = known.filter(df.columns.contains)
     require(present.nonEmpty, s"transformRecords needs at least one of: ${known.mkString(", ")}")
-    val e = Shims.column(JsonataRowJsonExpression(
-      Shims.expression(struct(present.map(col): _*)), expr, timeoutMs = timeoutMs,
-      maxDepth = maxDepth, wrapValue = false))
-    df.select(explode(array(e)).as("out")).filter(col("out").isNotNull)
+    evaluateOnce(df, struct(present.map(col): _*), "out")(JsonataExpression(_, expr,
+      timeoutMs = timeoutMs, maxDepth = maxDepth))
+      .filter(col("out").isNotNull)
   }
 
   /** `import graft.spark.JsonataDF.syntax._` enables

@@ -1,12 +1,16 @@
 package graft.spark
 
+import com.fasterxml.jackson.core.JacksonException
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType, VariantType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.types.variant.{Variant, VariantBuilder}
+import org.apache.spark.unsafe.types.{UTF8String, VariantVal}
 
 import graft.connect.JsonataTransform
 import graft.jsonata.{Ast, Jsonata, JsonataException, Values}
@@ -100,280 +104,184 @@ object JsonataAnalysis {
   }
 }
 
-/** Analysis-time input validation shared by the jsonata expressions: a
-  * wrong-typed column becomes a clean AnalysisException instead of an
-  * executor-side ClassCastException mid-job. */
-trait JsonataInputCheck { self: UnaryExpression =>
-  protected def acceptedInput: String
-  protected def acceptsInput(dt: DataType): Boolean
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (acceptsInput(child.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires $acceptedInput input, got ${child.dataType.sql}")
+/** Output codec of [[JsonataExpression]]: the Catalyst type a non-null
+  * result tree becomes, and the conversion into it. */
+sealed trait JsonataOutput extends Serializable {
+  def dataType: DataType
+  def encode(out: JsonNode): Any
+  /** SQL-facing evaluator name (plan strings, type-check messages). */
+  def name: String
 }
 
-/** `jsonata(jsonString, expr)` as a native Catalyst expression.
+object JsonataOutput {
+  /** Compact JSON text — the engine serializer, byte for byte. */
+  case object Json extends JsonataOutput {
+    def dataType: DataType = StringType
+    def encode(out: JsonNode): Any = UTF8String.fromString(Values.jsonSerialize(out, prettify = false))
+    def name: String = "jsonata"
+  }
+
+  /** A declared struct decoded straight from the tree — no JSON text. */
+  final case class Typed(schema: StructType) extends JsonataOutput {
+    def dataType: DataType = schema
+    def encode(out: JsonNode): Any = RowJson.jsonToRow(out, schema)
+    def name: String = "jsonata_row"
+  }
+
+  /** Spark's binary variant (SURVEY.md §1.4 variant envelope tier): the tree
+    * feeds VariantBuilder through a tree-traversing parser, so no JSON text
+    * is produced, and downstream access stays native `variant_get`. */
+  case object Variant extends JsonataOutput {
+    def dataType: DataType = VariantType
+    def encode(out: JsonNode): Any = {
+      val p = out.traverse()
+      p.nextToken() // position on the first token (the String overload does this itself)
+      val v = VariantBuilder.parseJson(p, false)
+      new VariantVal(v.getValue, v.getMetadata)
+    }
+    def name: String = "jsonata_variant"
+  }
+}
+
+/** The interpreted JSONata operator as one Catalyst expression: decode the
+  * input to a Jackson tree, evaluate, encode the result through `output`,
+  * and return null for "no match" or a JSON-null result (tombstone) — the
+  * reference's tree-in/tree-out apply() (JsonataTransformation.java:133-156,
+  * 295-297; SURVEY.md §2.A A1/A3).
   *
-  * CodegenFallback (the evaluator is interpreted), null-tolerant, returns the
-  * JSON-serialized result or null for "no match" (tombstone) — the Spark
-  * mapping of the reference's apply() (SURVEY.md §2.A A1/A3). The compiled AST
-  * lives in a per-JVM cache keyed by source, so executors compile once
-  * (SURVEY.md §2.A A12).
+  * The input side follows the child's type: a JSON string is parsed, a
+  * variant is walked directly ([[VariantJson]]), a struct is converted
+  * straight from the InternalRow ([[RowJson]]) with no `to_json`. With
+  * `topic` set the tree becomes the `value` of a `{topic, kafkaPartition,
+  * value}` envelope; without it the tree is the evaluator's input as is (the
+  * string/variant surfaces, and `transformRecords`, whose row already is the
+  * record).
+  *
+  * CodegenFallback (the evaluator is interpreted), null-tolerant. The
+  * compiled AST lives in a per-JVM cache keyed by source, so executors
+  * compile once (SURVEY.md §2.A A12); input and output dispatch resolve once
+  * per instance, not per record.
   *
   * `permissive = true` is the per-record error policy (the Spark analog of
   * Connect's errors.tolerance=all + DLQ routing around the reference's
   * DataException wrap, JsonataTransformation.java:96-107): the result becomes
-  * `struct<out string, error string>`, and a record whose evaluation raises —
-  * type error, timeout, depth overflow, malformed input JSON — yields
-  * (null, message) instead of failing the job. Expression *parse* errors still
-  * throw at analysis time in both modes: a bad expression is a config error,
-  * not a data error.
+  * `struct<out, error>`, and a record whose evaluation raises — type error,
+  * timeout, depth overflow, malformed input JSON — yields (null, message)
+  * instead of failing the job. On struct input a third field, `record`,
+  * carries the evaluator's input serialized, ONLY on error rows (DLQ
+  * replay). Expression *parse* errors still throw at analysis time in both
+  * modes: a bad expression is a config error, not a data error.
   */
 case class JsonataExpression(
     child: Expression,
     exprSource: String,
+    output: JsonataOutput = JsonataOutput.Json,
+    topic: Option[String] = None,
+    permissive: Boolean = false,
     timeoutMs: Long = 5000L,
-    maxDepth: Int = 1000,
-    permissive: Boolean = false)
-  extends UnaryExpression with CodegenFallback with JsonataInputCheck {
+    maxDepth: Int = 1000)
+  extends UnaryExpression with CodegenFallback {
 
   @transient private lazy val compiled = JsonataTransform.compile(exprSource)
 
-  override protected def acceptedInput: String = "a JSON string"
-  override protected def acceptsInput(dt: DataType): Boolean = dt == StringType
+  /** Input side, resolved once: the child value as the evaluator's input. */
+  @transient private lazy val decode: Any => JsonNode = {
+    val tree: Any => JsonNode = child.dataType match {
+      case st: StructType => in => RowJson.rowToJson(in.asInstanceOf[InternalRow], st)
+      case VariantType => in => {
+        val vv = in.asInstanceOf[VariantVal]
+        VariantJson.toJsonNode(new Variant(vv.getValue, vv.getMetadata))
+      }
+      case _ => in => Jsonata.parseJsonBytes(in.asInstanceOf[UTF8String].getBytes)
+    }
+    topic match {
+      case None => tree
+      case Some(t) => in => {
+        val env = JsonNodeFactory.instance.objectNode()
+        env.put("topic", t)
+        env.put("kafkaPartition", 0)
+        env.set[JsonNode]("value", tree(in))
+        env
+      }
+    }
+  }
+
+  /** Permissive rows keep the failed record only where the input is a struct
+    * (a string input already is the record's text). */
+  @transient private lazy val withRecord = child.dataType.isInstanceOf[StructType]
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType | VariantType | _: StructType => TypeCheckResult.TypeCheckSuccess
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a JSON string, variant or struct input, got ${dt.sql}")
+  }
 
   override def dataType: DataType =
-    if (permissive)
-      StructType(Seq(StructField("out", StringType, nullable = true),
-        StructField("error", StringType, nullable = true)))
-    else StringType
+    if (!permissive) output.dataType
+    else StructType(Seq(StructField("out", output.dataType), StructField("error", StringType)) ++
+      (if (withRecord) Seq(StructField("record", StringType)) else Nil))
   override def nullable: Boolean = true
   override lazy val deterministic: Boolean =
     JsonataAnalysis.isDeterministic(compiled.ast) && child.deterministic
 
-  private def evalOne(input: Any): UTF8String = {
-    val node = Jsonata.parseJsonBytes(input.asInstanceOf[UTF8String].getBytes)
-    val out = compiled.evaluate(node, timeoutMs, maxDepth)
+  private def evalOne(tree: JsonNode): Any = {
+    val out = compiled.evaluate(tree, timeoutMs, maxDepth)
     // no-match AND explicit null both drop the record (reference
     // jsonNodeToRecord:295-297 treats a JSON-null result as a tombstone)
-    if (out == null || out.isNull) null
-    else UTF8String.fromString(Values.jsonSerialize(out, prettify = false))
+    if (out == null || out.isNull) null else output.encode(out)
   }
 
   override def nullSafeEval(input: Any): Any =
-    if (!permissive) evalOne(input)
-    else try InternalRow(evalOne(input), null)
-    catch {
-      case e: JsonataException =>
-        InternalRow(null, UTF8String.fromString(s"Could not evaluate expression: ${e.getMessage}"))
-      case e: com.fasterxml.jackson.core.JacksonException =>
-        InternalRow(null, UTF8String.fromString(s"Could not parse record JSON: ${e.getMessage}"))
+    if (!permissive) evalOne(decode(input))
+    else {
+      var tree: JsonNode = null // the JSON parse stays inside the try
+      try {
+        tree = decode(input)
+        if (withRecord) InternalRow(evalOne(tree), null, null) else InternalRow(evalOne(tree), null)
+      } catch { case e: Exception => failed(JsonataFunctions.recordError(e), tree) }
     }
 
-  override def prettyName: String = if (permissive) "jsonata_try" else "jsonata"
+  private def failed(error: String, tree: JsonNode): InternalRow =
+    if (!withRecord) InternalRow(null, UTF8String.fromString(error))
+    else InternalRow(null, UTF8String.fromString(error),
+      if (tree == null) null else UTF8String.fromString(Values.jsonSerialize(tree, prettify = false)))
+
+  override def prettyName: String = if (permissive) "jsonata_try" else output.name
   override protected def withNewChildInternal(newChild: Expression): JsonataExpression =
-    copy(child = newChild)
-}
-
-/** Typed record transform: struct in, declared struct out — no JSON text
-  * anywhere on the hot path.
-  *
-  * Where [[JsonataExpression]] round-trips JSON strings (row -> to_json ->
-  * Jackson parse -> eval -> serialize -> from_json -> row: two parses and two
-  * serializations per record), this expression converts the InternalRow to a
-  * Jackson tree directly, evaluates, and decodes the result tree into the
-  * declared output schema — the reference's tree-in/tree-out apply()
-  * (JsonataTransformation.java:133-156) mapped onto Catalyst. Null return =
-  * tombstone (the whole struct is null; callers filter it).
-  */
-case class JsonataRowExpression(
-    child: Expression,
-    exprSource: String,
-    outputSchema: StructType,
-    topic: String = "rows",
-    timeoutMs: Long = 5000L,
-    maxDepth: Int = 1000)
-  extends UnaryExpression with CodegenFallback with JsonataInputCheck {
-
-  @transient private lazy val compiled = JsonataTransform.compile(exprSource)
-  @transient private lazy val childSchema = child.dataType.asInstanceOf[StructType]
-
-  override protected def acceptedInput: String = "a struct"
-  override protected def acceptsInput(dt: DataType): Boolean = dt.isInstanceOf[StructType]
-
-  override def dataType: DataType = outputSchema
-  override def nullable: Boolean = true
-  override lazy val deterministic: Boolean =
-    JsonataAnalysis.isDeterministic(compiled.ast) && child.deterministic
-
-  override def nullSafeEval(input: Any): Any = {
-    val env = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.objectNode()
-    env.put("topic", topic)
-    env.put("kafkaPartition", 0)
-    env.set[com.fasterxml.jackson.databind.JsonNode]("value",
-      RowJson.rowToJson(input.asInstanceOf[InternalRow], childSchema))
-    val out = compiled.evaluate(env, timeoutMs, maxDepth)
-    if (out == null || out.isNull) null
-    else RowJson.jsonToRow(out, outputSchema)
-  }
-
-  override def prettyName: String = "jsonata_row"
-  override protected def withNewChildInternal(newChild: Expression): JsonataRowExpression =
-    copy(child = newChild)
-}
-
-/** JSON-string output with a direct struct input: encode InternalRow ->
-  * Jackson tree (no to_json, no input parse), evaluate, serialize the result
-  * once. One text operation per record where the string-column form
-  * ([[JsonataExpression]]) needs three (to_json + parse + serialize).
-  *
-  * `wrapValue = true` builds the standard `{topic, kafkaPartition, value}`
-  * envelope around the row; `false` treats the row itself as the envelope
-  * (the transformRecords surface, where the caller reifies topic/key/value/
-  * headers columns directly).
-  *
-  * `permissive = true` is the same per-record error policy as
-  * [[JsonataExpression]], with the original envelope serialized into the
-  * third field ONLY for error rows (DLQ replay) — `struct<out, error,
-  * record>`.
-  */
-case class JsonataRowJsonExpression(
-    child: Expression,
-    exprSource: String,
-    topic: String = "rows",
-    timeoutMs: Long = 5000L,
-    maxDepth: Int = 1000,
-    wrapValue: Boolean = true,
-    permissive: Boolean = false)
-  extends UnaryExpression with CodegenFallback with JsonataInputCheck {
-
-  @transient private lazy val compiled = JsonataTransform.compile(exprSource)
-  @transient private lazy val childSchema = child.dataType.asInstanceOf[StructType]
-
-  override protected def acceptedInput: String = "a struct"
-  override protected def acceptsInput(dt: DataType): Boolean = dt.isInstanceOf[StructType]
-
-  override def dataType: DataType =
-    if (permissive)
-      StructType(Seq(
-        StructField("out", StringType, nullable = true),
-        StructField("error", StringType, nullable = true),
-        StructField("record", StringType, nullable = true)))
-    else StringType
-  override def nullable: Boolean = true
-  override lazy val deterministic: Boolean =
-    JsonataAnalysis.isDeterministic(compiled.ast) && child.deterministic
-
-  private def envelopeOf(input: Any): com.fasterxml.jackson.databind.JsonNode = {
-    val row = RowJson.rowToJson(input.asInstanceOf[InternalRow], childSchema)
-    if (!wrapValue) row
-    else {
-      val env = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.objectNode()
-      env.put("topic", topic)
-      env.put("kafkaPartition", 0)
-      env.set[com.fasterxml.jackson.databind.JsonNode]("value", row)
-      env
-    }
-  }
-
-  private def evalOne(env: com.fasterxml.jackson.databind.JsonNode): UTF8String = {
-    val out = compiled.evaluate(env, timeoutMs, maxDepth)
-    if (out == null || out.isNull) null
-    else UTF8String.fromString(Values.jsonSerialize(out, prettify = false))
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val env = envelopeOf(input)
-    if (!permissive) evalOne(env)
-    else try InternalRow(evalOne(env), null, null)
-    catch {
-      case e: JsonataException =>
-        InternalRow(null,
-          UTF8String.fromString(s"Could not evaluate expression: ${e.getMessage}"),
-          UTF8String.fromString(Values.jsonSerialize(env, prettify = false)))
-    }
-  }
-
-  override def prettyName: String = if (permissive) "jsonata_try" else "jsonata"
-  override protected def withNewChildInternal(newChild: Expression): JsonataRowJsonExpression =
-    copy(child = newChild)
-}
-
-/** Variant envelope tier (SURVEY.md §1.4 design target): `jsonata_variant`
-  * evaluates against a JSON-string OR VariantType input and returns
-  * `VariantType` — the binary-encoded dynamic-column format — instead of a
-  * JSON string. Downstream traversal stays native (`variant_get` /
-  * `try_variant_get`, codegen'd, shreddable at the scan) rather than
-  * re-parsing JSON text per access. The result tree feeds Spark's
-  * VariantBuilder through a Jackson tree-traversing parser — no JSON text is
-  * produced on the output side. Tombstone (null / JSON-null result) stays a
-  * SQL NULL. The JSON-string tier ([[JsonataExpression]]) remains the
-  * fallback surface.
-  */
-case class JsonataVariantExpression(
-    child: Expression,
-    exprSource: String,
-    timeoutMs: Long = 5000L,
-    maxDepth: Int = 1000)
-  extends UnaryExpression with CodegenFallback with JsonataInputCheck {
-
-  @transient private lazy val compiled = JsonataTransform.compile(exprSource)
-  @transient private lazy val inputIsVariant = child.dataType == VariantType
-
-  override protected def acceptedInput: String = "a JSON string or variant"
-  override protected def acceptsInput(dt: DataType): Boolean =
-    dt == StringType || dt == VariantType
-
-  override def dataType: DataType = VariantType
-  override def nullable: Boolean = true
-  override lazy val deterministic: Boolean =
-    JsonataAnalysis.isDeterministic(compiled.ast) && child.deterministic
-
-  override def nullSafeEval(input: Any): Any = {
-    val node =
-      if (inputIsVariant) {
-        val vv = input.asInstanceOf[org.apache.spark.unsafe.types.VariantVal]
-        // direct binary walk — no JSON text on the input side (VariantJson
-        // pins equivalence with the old toJson+parse form)
-        VariantJson.toJsonNode(new org.apache.spark.types.variant.Variant(
-          vv.getValue, vv.getMetadata))
-      } else Jsonata.parseJsonBytes(input.asInstanceOf[UTF8String].getBytes)
-    val out = compiled.evaluate(node, timeoutMs, maxDepth)
-    if (out == null || out.isNull) null
-    else {
-      val p = out.traverse() // tree-traversing parser: no JSON text produced
-      p.nextToken() // position on the first token (the String overload does this itself)
-      val v = org.apache.spark.types.variant.VariantBuilder.parseJson(p, false)
-      new org.apache.spark.unsafe.types.VariantVal(v.getValue, v.getMetadata)
-    }
-  }
-
-  override def prettyName: String = "jsonata_variant"
-  override protected def withNewChildInternal(newChild: Expression): JsonataVariantExpression =
     copy(child = newChild)
 }
 
 object JsonataFunctions {
   import org.apache.spark.sql.graftshim.Shims
 
+  /** The permissive policy's message for a record that failed: an
+    * evaluation error, or input text that is not JSON. Any other failure is
+    * not the record's fault and is rethrown. */
+  private[spark] def recordError(e: Exception): String = e match {
+    case e: JsonataException => s"Could not evaluate expression: ${e.getMessage}"
+    case e: JacksonException => s"Could not parse record JSON: ${e.getMessage}"
+    case _ => throw e
+  }
+
   /** Column function: evaluate a JSONata expression against a JSON-string column. */
   def jsonata(json: Column, expr: String,
               timeoutMs: Long = 5000L, maxDepth: Int = 1000): Column =
-    Shims.column(JsonataExpression(Shims.expression(json), expr, timeoutMs, maxDepth))
+    Shims.column(JsonataExpression(Shims.expression(json), expr,
+      timeoutMs = timeoutMs, maxDepth = maxDepth))
 
   /** Variant-output tier: evaluate against a JSON-string or variant column,
-    * return VariantType (see [[JsonataVariantExpression]]). */
+    * return VariantType (see [[JsonataOutput.Variant]]). */
   def jsonataVariant(json: Column, expr: String,
                      timeoutMs: Long = 5000L, maxDepth: Int = 1000): Column =
-    Shims.column(JsonataVariantExpression(Shims.expression(json), expr, timeoutMs, maxDepth))
+    Shims.column(JsonataExpression(Shims.expression(json), expr, JsonataOutput.Variant,
+      timeoutMs = timeoutMs, maxDepth = maxDepth))
 
   /** Permissive variant: `struct<out, error>` per record — evaluation errors
     * are captured, never thrown (the DLQ analog; see [[JsonataExpression]]). */
   def jsonataTry(json: Column, expr: String,
                  timeoutMs: Long = 5000L, maxDepth: Int = 1000): Column =
-    Shims.column(JsonataExpression(Shims.expression(json), expr, timeoutMs, maxDepth,
-      permissive = true))
+    Shims.column(JsonataExpression(Shims.expression(json), expr, permissive = true,
+      timeoutMs = timeoutMs, maxDepth = maxDepth))
 
   /** Register `jsonata(json, expr)` and `jsonata_try(json, expr)` for SQL use
     * (UDF form: the expression argument is dynamic, so the compile cache does
@@ -393,12 +301,7 @@ object JsonataFunctions {
         val out = JsonataTransform.compile(expr).evaluate(Jsonata.parseJson(json))
         (if (out == null || out.isNull) null else Values.jsonSerialize(out, prettify = false),
           null: String)
-      } catch {
-        case e: JsonataException =>
-          (null, s"Could not evaluate expression: ${e.getMessage}")
-        case e: com.fasterxml.jackson.core.JacksonException =>
-          (null, s"Could not parse record JSON: ${e.getMessage}")
-      }
+      } catch { case e: Exception => (null, recordError(e)) }
     })
     registerNativeSql(spark)
   }
@@ -430,42 +333,44 @@ object JsonataFunctions {
     "jsonata" -> {
       case args if args.length >= 2 && args.length <= 4 =>
         JsonataExpression(args.head, foldableString(args(1), "jsonata expression"),
-          if (args.length > 2) foldableLong(args(2), "jsonata timeoutMs") else 5000L,
-          if (args.length > 3) foldableLong(args(3), "jsonata maxDepth").toInt else 1000)
+          timeoutMs = if (args.length > 2) foldableLong(args(2), "jsonata timeoutMs") else 5000L,
+          maxDepth = if (args.length > 3) foldableLong(args(3), "jsonata maxDepth").toInt else 1000)
       case _ => throw new IllegalArgumentException(
         "jsonata(json, 'expr'[, timeoutMs[, maxDepth]])")
     },
     "jsonata_row" -> {
       case Seq(child, exprArg) =>
-        JsonataRowJsonExpression(child, foldableString(exprArg, "jsonata_row expression"))
+        JsonataExpression(child, foldableString(exprArg, "jsonata_row expression"),
+          topic = Some("rows"))
       case args => throw new IllegalArgumentException(
         s"jsonata_row(struct, 'expr') takes 2 arguments, got ${args.length}")
     },
     "jsonata_row_try" -> {
       case Seq(child, exprArg) =>
-        JsonataRowJsonExpression(child,
-          foldableString(exprArg, "jsonata_row_try expression"), permissive = true)
+        JsonataExpression(child, foldableString(exprArg, "jsonata_row_try expression"),
+          topic = Some("rows"), permissive = true)
       case args => throw new IllegalArgumentException(
         s"jsonata_row_try(struct, 'expr') takes 2 arguments, got ${args.length}")
     },
     "jsonata_typed" -> {
       case Seq(child, exprArg, ddlArg) =>
-        JsonataRowExpression(child,
-          foldableString(exprArg, "jsonata_typed expression"),
-          StructType.fromDDL(foldableString(ddlArg, "jsonata_typed output schema")))
+        JsonataExpression(child, foldableString(exprArg, "jsonata_typed expression"),
+          JsonataOutput.Typed(
+            StructType.fromDDL(foldableString(ddlArg, "jsonata_typed output schema"))),
+          topic = Some("rows"))
       case args => throw new IllegalArgumentException(
         s"jsonata_typed(struct, 'expr', 'ddl') takes 3 arguments, got ${args.length}")
     },
     "jsonata_variant" -> {
       case Seq(child, exprArg) =>
-        JsonataVariantExpression(child, foldableString(exprArg, "jsonata_variant expression"))
+        JsonataExpression(child, foldableString(exprArg, "jsonata_variant expression"),
+          JsonataOutput.Variant)
       case args => throw new IllegalArgumentException(
         s"jsonata_variant(json_or_variant, 'expr') takes 2 arguments, got ${args.length}")
     })
 
   /** Direct-codec SQL surface — the struct path the Column API already has
-    * (JsonataRowJsonExpression / JsonataRowExpression), reachable from
-    * `spark.sql`:
+    * ([[JsonataExpression]] over a struct child), reachable from `spark.sql`:
     *
     *  - `jsonata_row(struct, 'expr')` -> JSON string: the input row is encoded
     *    straight to a Jackson tree (no `to_json`), one serialization on the
@@ -479,8 +384,8 @@ object JsonataFunctions {
     *    path — poison records yield (null, message, original-envelope JSON)
     *    instead of failing the job.
     *
-    * Both wrap the struct as the standard `{topic, kafkaPartition, value}`
-    * envelope, matching every other entry point.
+    * All three wrap the struct as the standard `{topic, kafkaPartition,
+    * value}` envelope, matching every other entry point.
     *
     * NOTE: like `spark.udf.register`, this (re)binds the function names
     * session-wide — an explicit, caller-opted API action (the registry demo

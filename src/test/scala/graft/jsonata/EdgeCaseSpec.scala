@@ -175,6 +175,20 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(c.timeoutMs == 100L && c.maxDepth == 1000)
   }
 
+  // ---- parser nesting guard ----
+  test("20,000 nested parentheses raise a coded parse error, not a stack overflow") {
+    val deep = "(" * 20000 + "1" + ")" * 20000
+    val e = intercept[JsonataException](Jsonata.compile(deep))
+    assert(e.code == "S0218", e.getMessage)
+    // through the Connect entry point it is a config error, not a dead task
+    assertThrows[graft.connect.DataException](graft.connect.JsonataTransform.compile(deep))
+    val limit = Parser.MaxNesting
+    Jsonata.compile("(" * (limit - 1) + "1" + ")" * (limit - 1)) // at the limit: parses
+    assert(Jsonata.evalString("(" * 100 + "1" + ")" * 100, "{}") == "1")
+    assert(intercept[JsonataException](
+      Jsonata.compile("[" * (limit + 1) + "]" * (limit + 1))).code == "S0218")
+  }
+
   // ---- order-by stability ----
   t("sort is stable on ties", "library.books^(ties).title",
     """{"library": {"books": [

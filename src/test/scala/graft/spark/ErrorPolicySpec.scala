@@ -76,6 +76,19 @@ class ErrorPolicySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.count(_.getAs[String]("error") != null) == 1)
   }
 
+  test("jsonataTry captures malformed record JSON per record; job survives") {
+    val sp = spark
+    import sp.implicits._
+    val df = Seq("""{"n": 1}""", """{"n": """, """{"n": 3}""").toDF("j")
+    val rows = df.select(JsonataFunctions.jsonataTry(col("j"), "n + 1").as("r"))
+      .select(col("r.out"), col("r.error")).collect()
+    assert(rows.length == 3)
+    assert(rows.map(_.getString(0)).toSeq == Seq("2", null, "4"))
+    assert(rows(1).getString(1).startsWith("Could not parse record JSON"),
+      s"malformed input must be captured as a parse error, got: ${rows(1).getString(1)}")
+    assert(rows(0).getString(1) == null && rows(2).getString(1) == null)
+  }
+
   test("the permissive expression evaluates once per record (no plan duplication)") {
     // parquet-backed source: a LocalRelation would be folded at optimization
     // time and hide the projection from the plan

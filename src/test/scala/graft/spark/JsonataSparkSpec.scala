@@ -168,6 +168,23 @@ class JsonataSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e2.getMessage.toLowerCase.contains("struct"))
   }
 
+  test("native SQL functions: a non-struct child fails analysis naming the function") {
+    JsonataFunctions.registerNativeSql(spark)
+    val ints = spark.range(3).selectExpr("CAST(id AS INT) AS n")
+    ints.createOrReplaceTempView("ints3")
+    // (SQL call, the evaluator name its type-check message carries)
+    Seq(
+      "jsonata_row(n, 'value')" -> "jsonata requires",
+      "jsonata_typed(n, 'value', 'x INT')" -> "jsonata_row requires").foreach {
+      case (call, name) =>
+        val e = intercept[org.apache.spark.sql.AnalysisException] {
+          spark.sql(s"SELECT $call FROM ints3").collect()
+        }
+        assert(e.getMessage.contains(name) && e.getMessage.contains("INT"),
+          s"$call: analysis error must name the function and the input type, got: ${e.getMessage}")
+    }
+  }
+
   test("full record envelope: topic rewrite, header access, tombstone") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
