@@ -1,106 +1,70 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: runs every registered query against SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. Results are fully materialized through the noop sink
-  * (count() alone would let Spark prune the final project). */
+/** Benchmark main: runs every registered query against SPARK_GRAFT_SF_DIR on
+  * the [[Harness]] and prints one JSON line. */
 object Bench {
 
-  /** Time each query once through the noop sink, in order. A query that
-    * throws is named in the second list and gets no timing: its partial
-    * time would otherwise pass for a result and lower the total. */
-  def timeQueries(spark: SparkSession, sfDir: String,
-                  queries: Seq[(String, (SparkSession, String) => DataFrame)])
-      : (Seq[(String, Double)], Seq[String]) = {
-    val timed = queries.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // queries persist() intermediates for intra-query reuse; dropping them
-      // between queries keeps one query's leftover cache from GC-taxing the
-      // next (single-run timings otherwise swing by seconds)
-      spark.sharedState.cacheManager.clearCache()
-      (name, sec, ok)
-    }
-    (timed.collect { case (name, sec, true) => name -> sec },
-      timed.collect { case (name, _, false) => name })
+  /** Run each query once, in order. A query that throws is named in the
+    * second list and gets no timing: its partial time would otherwise pass
+    * for a result and lower the total. */
+  def timeQueries(spark: SparkSession, sfDir: String, queries: Seq[(String, Harness.Build)])
+      : (Seq[(String, Double, Harness.Counts)], Seq[String]) = {
+    val runs = queries.map { case (name, build) => name -> Harness.run(spark, name, build(spark, sfDir)) }
+    (runs.collect { case (name, Harness.Run(Some(sec), counts)) => (name, sec, counts) },
+      runs.collect { case (name, Harness.Run(None, _)) => name })
   }
 
+  /** One query's counted metrics, which do not move with host load the way
+    * wall time does. */
+  def countedJson(c: Harness.Counts): String =
+    f"""{"cpu_s":${c.cpuNs / 1e9}%.3f,"task_s":${c.taskMs / 1e3}%.3f,"gc_s":${c.gcMs / 1e3}%.3f,""" +
+      s""""jobs":${c.jobs},"stages":${c.stages},"tasks":${c.tasks},""" +
+      f""""shuffle_read_mb":${c.shuffleRead / 1e6}%.3f,"shuffle_write_mb":${c.shuffleWrite / 1e6}%.3f,""" +
+      f""""spill_mb":${c.spill / 1e6}%.3f}"""
+
   /** The one-line JSON result: total and per-query seconds of the queries
-    * that completed, and the names of those that failed. */
-  def summaryLine(results: Seq[(String, Double)], failed: Seq[String], sfDir: String): String = {
-    val qs = results.map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+    * that completed, their counted metrics, and the names of those that
+    * failed. */
+  def summaryLine(results: Seq[(String, Double, Harness.Counts)], failed: Seq[String],
+                  sfDir: String): String = {
+    val qs = results.map { case (k, v, _) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
+    val cs = results.map { case (k, _, c) => s""""$k":${countedJson(c)}""" }.mkString("{", ",", "}")
     val fs = failed.map(n => s""""$n"""").mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$fs}"""
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"counted":$cs,"sf":"$sfDir","failed":$fs}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // optional comma-separated name-prefix filter (local iteration only; the
-    // driver sets neither, so it always measures the full set)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq).getOrElse(Nil)
-    def keep(name: String): Boolean = only.isEmpty || only.exists(name.startsWith)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The only unpartitioned windows in the registry are sp03/sp04/sp05's
-    // block-summary prefix sums and tx09's 4-row frequency-band summary —
-    // single-partition BY DESIGN over tiny
-    // relations (≈ parallelism rows / ≤65,536 hash buckets, never the
-    // corpus), so WindowExec's blanket warning is expected noise here, not a
-    // scale risk. Filter just that logger, SCOPED to this run: the prior
-    // level is restored before exit so a genuine single-partition-window
-    // regression in any embedding application still surfaces (new queries
-    // are additionally guarded by PlanShapeSpec's registry-wide window
-    // audit).
-    val windowLogger = "org.apache.spark.sql.execution.window"
-    val priorWindowLevel = org.apache.logging.log4j.LogManager.getLogger(windowLogger).getLevel
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      windowLogger, org.apache.logging.log4j.Level.ERROR)
-    // Warm up JVM/codegen/parquet-reader paths so per-query timings measure
-    // the queries, not first-job initialization. The schemas are identical
-    // across scale factors, so running every registered query once at the
-    // smallest SF compiles exactly the generated code, JITs the evaluator,
-    // and plans the same AQE shapes the measured queries will use — the
-    // local-mode analog of a cluster's already-warm executors. One-time cost
-    // (~30 s at sf0.001) is outside the measured window.
-    locally {
-      val warmDir = sfDir.replaceAll("sf[0-9.]+$", "sf0.001")
-      val dir = if (new java.io.File(warmDir).isDirectory) warmDir else sfDir
-      SparkEntry.queries.toSeq.sortBy(_._1).filter(q => keep(q._1)).foreach { case (name, fn) =>
-        try fn(spark, dir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] warmup $name failed: ${e.getMessage}") }
-      }
-      spark.sharedState.cacheManager.clearCache()
-    }
-    val (results, failed) =
-      timeQueries(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1).filter(q => keep(q._1)))
+    // driver sets none, so it always measures the full set)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.nonEmpty)
+    val spark = Harness.session("bench")
+    val queries = Harness.select(only)
+    Harness.warmUp(spark, queries, sfDir)
+    val (results, failed) = timeQueries(spark, sfDir, queries)
     val total = results.map(_._2).sum
     val line = summaryLine(results, failed, sfDir)
     println(line)
-    // The driver's bench artifact keeps only the last ~2 KB of stdout, which
-    // truncated 24 of 96 per-query entries in round 7 — persist the complete
-    // line beside the sources so the full table always survives the run.
-    // Resolve both persisted records against an explicit root rather than
-    // the bare process CWD: a driver launched from outside the repo would
-    // otherwise silently write the authoritative copies elsewhere while
-    // the committed files go stale — the exact parsed:null failure the
-    // sidecar exists to fix. SPARK_GRAFT_BENCH_DIR (or the system
-    // property) overrides; default stays user.dir, and the absolute path
-    // actually written is logged either way.
+    // The full per-query line outgrew the driver's stdout tail window (153
+    // queries ≈ 4.6 KB), so the tail starts MID-LINE and nothing in the
+    // artifact parses. Emit a compact, complete JSON record LAST: whatever
+    // tail the driver keeps now always ends with one parseable line (total +
+    // scale + a pointer to the committed full table).
+    val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","n_queries":${results.length},"queries_full":"BENCH_FULL.json"}"""
+    println(compact)
+    // The driver's bench artifact keeps only the last ~2 KB of stdout, so
+    // the complete line is persisted beside the sources (BENCH_FULL.json),
+    // and the compact record as bare JSON (BENCH_TOTAL.json): the driver's
+    // parser does not strip sbt's "[info] " stdout prefix, and a file is
+    // prefix-free by construction. Both resolve against an explicit root
+    // rather than the bare process CWD, so a driver launched from outside
+    // the repo cannot write them elsewhere while the committed files go
+    // stale. SPARK_GRAFT_BENCH_DIR (or the system property) overrides; the
+    // default stays user.dir, and the absolute path written is logged.
+    // A filtered run measures a subset, so it must not replace the records.
     val benchRoot = java.nio.file.Paths.get(
       sys.props.get("graft.bench.dir")
         .orElse(sys.env.get("SPARK_GRAFT_BENCH_DIR"))
@@ -112,20 +76,13 @@ object Bench {
         System.err.println(s"[bench] wrote $p")
       } catch { case e: Exception =>
         System.err.println(s"[bench] persist of $name failed: ${e.getMessage}") }
-    persist("BENCH_FULL.json", line)
-    // The full per-query line outgrew the driver's stdout tail window (153
-    // queries ≈ 4.6 KB), so the tail starts MID-LINE and nothing in the
-    // artifact parses. Emit a compact, complete JSON record LAST: whatever
-    // tail the driver keeps now always ends with one parseable line (total +
-    // scale + a pointer to the committed full table).
-    val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","n_queries":${results.length},"queries_full":"BENCH_FULL.json"}"""
-    println(compact)
-    // The round-14 artifact still showed parsed:null — the driver's parser
-    // evidently does not strip sbt's "[info] " stdout prefix. A bare-JSON
-    // SIDECAR is prefix-free by construction: anything that can read a
-    // file gets the authoritative compact record here.
-    persist("BENCH_TOTAL.json", compact)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(windowLogger, priorWindowLevel)
+    if (only.isDefined)
+      System.err.println(s"[bench] SPARK_GRAFT_ONLY=${only.get} measures a subset: " +
+        s"BENCH_FULL.json and BENCH_TOTAL.json in $benchRoot are left as they are")
+    else {
+      persist("BENCH_FULL.json", line)
+      persist("BENCH_TOTAL.json", compact)
+    }
     spark.stop()
   }
 }

@@ -1,48 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Optimization-round tooling: dump `.explain("formatted")` for every
   * registered query (or a prefix-filtered subset) to one text file per
-  * query. Plan-only — nothing is executed, so it is safe to run while a
-  * bench occupies the host. Usage:
+  * query, planned on the [[Harness]] session. Plan-only, so it is safe to
+  * run while a bench occupies the host. Usage:
   *
   *   runMain graft.PlanDump <sfDir> <outDir> [namePrefix,...]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir, only) = args match {
-      case Array(a, b)    => (a, b, Seq.empty[String])
-      case Array(a, b, f) => (a, b, f.split(',').toSeq)
-      case _ =>
-        System.err.println("usage: runMain graft.PlanDump <sfDir> <outDir> [namePrefix,...]")
-        sys.exit(2)
+    if (args.length < 2 || args.length > 3) {
+      System.err.println("usage: runMain graft.PlanDump <sfDir> <outDir> [namePrefix,...]")
+      sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir, _*) = args
+    val spark = Harness.session("plandump")
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
-        try {
-          val plan = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-        }
-        spark.sharedState.cacheManager.clearCache()
-      }
+    Harness.select(args.lift(2)).foreach { case (name, build) =>
+      Harness.run(spark, name, build(spark, sfDir), df =>
+        Files.writeString(Paths.get(s"$outDir/$name.txt"), df.queryExecution.explainString(FormattedMode)))
+    }
     spark.stop()
   }
 }

@@ -1,145 +1,34 @@
 package graft
 
-import java.util.concurrent.atomic.LongAdder
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round profiler: run selected queries `reps` times each and
-  * report, per query, the MIN across reps of wall seconds, summed task run
-  * time, summed task CPU time, and shuffle bytes (read side). Task-time and
-  * shuffle-byte totals are far more stable than wall-clock on a noisy host —
-  * an optimization is real when it reduces them. Usage:
+  * report, per query, the fastest completed rep's wall seconds and counts
+  * (task run, CPU, GC and fetch-wait time, shuffle bytes, spill). Task-time
+  * and shuffle-byte totals are far more stable than wall-clock on a noisy
+  * host — an optimization is real when it reduces them. Usage:
   *
   *   SPARK_GRAFT_CPUS=32 sbt 'runMain graft.Prof <sfDir> <reps> <prefix,...>'
   */
 object Prof {
-  private final class SumListener extends SparkListener {
-    val runMs = new LongAdder; val cpuNs = new LongAdder
-    val shRead = new LongAdder; val shWrite = new LongAdder
-    val spill = new LongAdder; val gcMs = new LongAdder
-    val fetchMs = new LongAdder
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        runMs.add(m.executorRunTime)
-        cpuNs.add(m.executorCpuTime)
-        shRead.add(m.shuffleReadMetrics.totalBytesRead)
-        shWrite.add(m.shuffleWriteMetrics.bytesWritten)
-        spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-        gcMs.add(m.jvmGCTime)
-        fetchMs.add(m.shuffleReadMetrics.fetchWaitTime)
-      }
-    }
-    def snapshot(): Seq[Long] =
-      Seq(runMs.sum, cpuNs.sum, shRead.sum, shWrite.sum, spill.sum,
-        gcMs.sum, fetchMs.sum)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val only = if (args.length > 2) args(2).split(',').toSeq else Nil
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val l = new SumListener
-    spark.sparkContext.addSparkListener(l)
-    // SPARK_GRAFT_STAGES=1: per-stage attribution (taskSec + callsite), plus
-    // per-JOB wall/taskMs keyed by the job description (setJobDescription)
-    if (sys.env.get("SPARK_GRAFT_STAGES").contains("1"))
-      spark.sparkContext.addSparkListener(new SparkListener {
-        private val agg = new java.util.concurrent.ConcurrentHashMap[String, LongAdder]()
-        private val stage2job = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-        private val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
-        private val jobTask = new java.util.concurrent.ConcurrentHashMap[Int, LongAdder]()
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val desc = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-          jobStart.put(e.jobId, (desc, e.time))
-          e.stageIds.foreach(sid => stage2job.put(sid, s"job${e.jobId}"))
-        }
-        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          jobStart.remove(e.jobId) match {
-            case null =>
-            case (desc, t0) =>
-              val ts = Option(jobTask.remove(e.jobId)).map(_.sum).getOrElse(0L)
-              System.err.println(
-                f"[prof-job] id=${e.jobId}%4d wallMs=${e.time - t0}%6d taskMs=$ts%7d $desc")
-          }
-        }
-        override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            agg.computeIfAbsent(s"stage${e.stageId}", _ => new LongAdder)
-              .add(m.executorRunTime)
-            Option(stage2job.get(e.stageId)).foreach { j =>
-              if (j.startsWith("job")) jobTask
-                .computeIfAbsent(j.drop(3).toInt, _ => new LongAdder)
-                .add(m.executorRunTime)
-            }
-          }
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val ms = (for {s <- i.submissionTime; c <- i.completionTime} yield c - s).getOrElse(-1L)
-          val ts = Option(agg.get(s"stage${i.stageId}")).map(_.sum).getOrElse(0L)
-          if (ms >= 100 || ts >= 500) System.err.println(
-            f"[prof-stage] id=${i.stageId}%4d tasks=${i.numTasks}%3d wallMs=$ms%6d " +
-              f"taskMs=$ts%7d ${i.name.take(60)}")
-        }
-      })
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only.exists(n.startsWith))
-    // warmup (JIT + codegen) at the smallest scale, same as Bench;
-    // SPARK_GRAFT_WARM_DIR overrides for hosts without the default path
-    locally {
-      val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-      names.foreach { n =>
-        try SparkEntry.queries(n)(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[prof] warmup $n: ${e.getMessage}") }
-      }
-      spark.sharedState.cacheManager.clearCache()
-    }
-    names.foreach { n =>
-      var bestWall = Double.MaxValue
-      var best: Seq[Long] = null
-      var failures = 0
-      (1 to reps).foreach { _ =>
-        val before = l.snapshot()
-        val t0 = System.nanoTime()
-        var ok = true
-        try SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          ok = false; failures += 1
-          System.err.println(s"[prof] $n failed: ${e.getMessage}")
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        spark.sharedState.cacheManager.clearCache()
-        org.apache.spark.sql.graftshim.Shims.drainListenerBus(spark)
-        val after = l.snapshot()
-        // a failed rep's near-zero wall must not latch the min — it would
-        // silently report the failure's (near-empty) metric deltas as the
-        // query's best profile
-        if (ok && wall < bestWall) { bestWall = wall; best = after.zip(before).map { case (a, b) => a - b } }
-      }
-      if (best == null)
+    val spark = Harness.session("prof")
+    val queries = Harness.select(args.lift(2))
+    Harness.warmUp(spark, queries, sfDir)
+    queries.foreach { case (n, build) =>
+      // a failed rep's near-zero wall must not latch the min: it would
+      // report the failure's near-empty counts as the query's best profile
+      val ok = (1 to reps).map(_ => Harness.run(spark, n, build(spark, sfDir))).filter(_.sec.isDefined)
+      if (ok.isEmpty)
         println(f"[prof] $n%-32s FAILED all $reps reps")
       else {
-        val tag = if (failures > 0) s"  (failedReps=$failures)" else ""
-        println(f"[prof] $n%-32s wall=$bestWall%7.2f taskSec=${best(0) / 1e3}%8.2f " +
-          f"cpuSec=${best(1) / 1e9}%8.2f gcSec=${best(5) / 1e3}%6.2f " +
-          f"fetchSec=${best(6) / 1e3}%6.2f shReadMB=${best(2) / 1e6}%8.1f " +
-          f"shWriteMB=${best(3) / 1e6}%8.1f spillMB=${best(4) / 1e6}%6.1f" + tag)
+        val best = ok.minBy(_.sec.get)
+        val c = best.counts
+        val tag = if (ok.size < reps) s"  (failedReps=${reps - ok.size})" else ""
+        println(f"[prof] $n%-32s wall=${best.sec.get}%7.2f taskSec=${c.taskMs / 1e3}%8.2f " +
+          f"cpuSec=${c.cpuNs / 1e9}%8.2f gcSec=${c.gcMs / 1e3}%6.2f " +
+          f"fetchSec=${c.fetchMs / 1e3}%6.2f shReadMB=${c.shuffleRead / 1e6}%8.1f " +
+          f"shWriteMB=${c.shuffleWrite / 1e6}%8.1f spillMB=${c.spill / 1e6}%6.1f" + tag)
       }
     }
     spark.stop()

@@ -1,9 +1,6 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /** Scale-proof smoke (VERDICT r6 item 8): run the dedup / similarity /
   * sampling / text families once at sf1 (10x the bench scale; generate with
@@ -17,66 +14,20 @@ import org.apache.spark.sql.SparkSession
   *   {"sec":s,"max_task_sec":s,"max_task_records":n}},"sf":...}
   *
   * Only documents/embeddings exist at sf1, so the TPC-H/events families are
-  * out of scope here (they run at sf0.1 in Bench).
+  * out of scope here (they run at sf0.1 in Bench). A query that fails is
+  * logged and left out of the line.
   */
 object ScaleSmoke {
-
-  /** Per-task ceiling tracker; reset between queries. */
-  private final class TaskMaxListener extends SparkListener {
-    @volatile var maxTaskMs: Long = 0L
-    @volatile var maxTaskRecords: Long = 0L
-    @volatile var maxTaskStage: Long = -1L
-    override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
-      val m = taskEnd.taskMetrics
-      if (m != null) {
-        if (m.executorRunTime > maxTaskMs) {
-          maxTaskMs = m.executorRunTime
-          maxTaskStage = taskEnd.stageId
-        }
-        val recs = math.max(
-          m.shuffleReadMetrics.recordsRead,
-          math.max(m.inputMetrics.recordsRead, m.shuffleWriteMetrics.recordsWritten))
-        maxTaskRecords = math.max(maxTaskRecords, recs)
-      }
-    }
-    def reset(): Unit = { maxTaskMs = 0L; maxTaskRecords = 0L; maxTaskStage = -1L }
-  }
-
-  /** EXPLAIN-mode stage trace: id, task count, wall, and the RDD callsite —
-    * enough to attribute a straggler stage to an operator. */
-  private final class StageTraceListener extends SparkListener {
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val i = sc.stageInfo
-      val ms = (for {s <- i.submissionTime; c <- i.completionTime} yield c - s).getOrElse(-1L)
-      System.err.println(
-        s"[smoke-stage] id=${i.stageId} tasks=${i.numTasks} wallMs=$ms name=${i.name}")
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/testdata/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // the sf1 slice is ONE ~5 MB file per table; at the default 128 MB
-      // maxPartitionBytes every scan is a single input split and all map-side
-      // work serializes on one core — an artifact of the small fixture, not
-      // the operator. A 100 TB corpus has millions of splits, so the smoke
-      // simulates split abundance; per-operator scale behavior is the thing
-      // under test here, not parquet split math.
-      .config("spark.sql.files.maxPartitionBytes", "256k")
-      .config("spark.sql.files.openCostInBytes", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val listener = new TaskMaxListener
-    spark.sparkContext.addSparkListener(listener)
-    if (sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1"))
-      spark.sparkContext.addSparkListener(new StageTraceListener)
+    // the sf1 slice is ONE ~5 MB file per table; at the default 128 MB
+    // maxPartitionBytes every scan is a single input split and all map-side
+    // work serializes on one core — an artifact of the small fixture, not
+    // the operator. A 100 TB corpus has millions of splits, so the smoke
+    // simulates split abundance; per-operator scale behavior is the thing
+    // under test here, not parquet split math.
+    val spark = Harness.session("smoke",
+      "spark.sql.files.maxPartitionBytes" -> "256k", "spark.sql.files.openCostInBytes" -> "64k")
 
     // the families whose caps/bounds the smoke is about (the sf1 slice has
     // documents/embeddings plus zipf-skewed events and a minimal orders
@@ -92,53 +43,22 @@ object ScaleSmoke {
       "q21", "q22") // window-frame + pivot shapes over the sf1 orders slice
     // local iteration: SPARK_GRAFT_ONLY=name-prefix filter, SPARK_GRAFT_EXPLAIN=1
     // prints each query's formatted plan before running it
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq).getOrElse(Nil)
     val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => prefixes.exists(n.startsWith))
-      .filter(n => only.isEmpty || only.exists(n.startsWith))
+    val queries = Harness.select(sys.env.get("SPARK_GRAFT_ONLY"))
+      .filter { case (name, _) => prefixes.exists(name.startsWith) }
+    Harness.warmUp(spark, queries, sfDir)
 
-    // Warm up JVM/codegen/parquet paths at the smallest SF (same schemas)
-    // so the FIRST measured query doesn't absorb first-job initialization —
-    // round 8 read aj01 at 8.9 s cold where the identical-shape aj03 ran
-    // 1.75 s warm. Same discipline Bench applies; one-time cost outside the
-    // measured window.
-    locally {
-      val warmDir = "/root/testdata/sf0.001"
-      if (new java.io.File(warmDir).isDirectory) {
-        names.foreach { name =>
-          try SparkEntry.queries(name)(spark, warmDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable => System.err.println(s"[smoke] warmup $name: ${e.getMessage}") }
-        }
-        spark.sharedState.cacheManager.clearCache()
-      }
+    val rows = queries.flatMap { case (name, build) =>
+      if (explain) Harness.run(spark, s"explain $name", build(spark, sfDir),
+        df => println(s"=== $name ===\n" + df.queryExecution.explainString(FormattedMode)))
+      val run = Harness.run(spark, name, build(spark, sfDir))
+      run.sec.map(sec => (name, sec, run.counts))
     }
-
-    val rows = mutable.LinkedHashMap.empty[String, (Double, Double, Long)]
-    names.foreach { name =>
-      listener.reset()
-      if (explain) {
-        try println(s"=== $name ===\n" +
-          SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode))
-        catch { case e: Throwable => System.err.println(s"[smoke] explain $name: ${e.getMessage}") }
-      }
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[smoke] $name failed: ${e.getMessage}") }
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      // listener events drain asynchronously; settle before reading maxima
-      org.apache.spark.sql.graftshim.Shims.drainListenerBus(spark)
-      if (explain) System.err.println(
-        s"[smoke] $name max task stage=${listener.maxTaskStage} ms=${listener.maxTaskMs}")
-      rows(name) = (sec, listener.maxTaskMs / 1e3, listener.maxTaskRecords)
-    }
-    val qs = rows.map { case (k, (s, mt, mr)) =>
-      f""""$k":{"sec":$s%.3f,"max_task_sec":$mt%.3f,"max_task_records":$mr}"""
+    val qs = rows.map { case (k, s, c) =>
+      f""""$k":{"sec":$s%.3f,"max_task_sec":${c.maxTaskMs / 1e3}%.3f,"max_task_records":${c.maxTaskRecords}}"""
     }.mkString("{", ",", "}")
-    val total = rows.values.map(_._1).sum
-    val worstTask = if (rows.isEmpty) 0.0 else rows.values.map(_._2).max
+    val total = rows.map(_._2).sum
+    val worstTask = rows.map(_._3.maxTaskMs / 1e3).maxOption.getOrElse(0.0)
     println(f"""{"metric":"scale_smoke","value":$total%.3f,"unit":"sec","worst_task_sec":$worstTask%.3f,"queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
   }

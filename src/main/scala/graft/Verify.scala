@@ -1,53 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs on the
+  * [[Harness]] session, so the plans checked are the plans Bench times. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated name-prefix filter (local iteration
     // only — the driver always calls with exactly two args = run everything)
-    val (sfDir, outDir, only) = args match {
-      case Array(a, b)    => (a, b, Seq.empty[String])
-      case Array(a, b, f) => (a, b, f.split(',').toSeq)
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.spark.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir, _*) = args
+    val spark = Harness.session("verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.exists(name.startsWith) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries persist() intermediates for intra-query reuse (dd03/dc01/
-      // dd04); scoped release between queries — same hygiene as Bench —
-      // keeps one query's leftover cache from pressuring the rest of the run
-      spark.sharedState.cacheManager.clearCache()
+    Harness.select(args.lift(2)).foreach { case (name, build) =>
+      Harness.run(spark, name, build(spark, sfDir),
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Jackson escapes quotes, backslashes and every control character: a
+    // tab or CR in builder-authored SQL must not make the driver's
+    // json.load fail and silently zero the round's correctness.
+    val json = new ObjectMapper().writeValueAsString(SparkEntry.oracleSql.asJava)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -33,9 +33,30 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
 
   private def checkRuntime(): Unit = {
     tick += 1
-    if ((tick & 0xff) == 0 && System.nanoTime() > deadline)
-      throw new JsonataException("U1001", s"expression evaluation timed out after ${timeoutMs}ms")
+    if ((tick & 0xff) == 0) checkDeadline()
   }
+
+  private def checkDeadline(): Unit =
+    if (System.nanoTime() > deadline)
+      throw new JsonataException("U1001", s"expression evaluation timed out after ${timeoutMs}ms")
+
+  /** `s` as a regex built-in should read it. java.util.regex never hands
+    * control back mid-match, so a backtracking pattern would run far past
+    * the timeout; this view checks the deadline every 4096 characters the
+    * matcher reads instead. */
+  private[jsonata] def regexInput(s: String): CharSequence =
+    if (deadline == Long.MaxValue) s
+    else new CharSequence {
+      private var reads = 0
+      def length: Int = s.length
+      def charAt(i: Int): Char = {
+        reads += 1
+        if ((reads & 0xfff) == 0) checkDeadline()
+        s.charAt(i)
+      }
+      def subSequence(start: Int, end: Int): CharSequence = s.subSequence(start, end)
+      override def toString: String = s
+    }
 
   /** Per-item provenance for tuple-stream path evaluation (%/@/# support). */
   private final case class Tup(at: Any, ancestors: List[Any], bindings: Map[String, Any])
@@ -724,7 +745,7 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
     case p: java.util.regex.Pattern =>
       // a regex literal is applicable as a function: returns the first match struct
       args.headOption match {
-        case Some(s: JsonNode) if s.isTextual => Functions.firstMatch(p, s.textValue())
+        case Some(s: JsonNode) if s.isTextual => Functions.firstMatch(p, regexInput(s.textValue()))
         case Some(null) | None => undef
         case _ => throw new JsonataException("T0410", "regex can only be applied to a string")
       }

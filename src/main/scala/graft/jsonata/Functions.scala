@@ -76,7 +76,7 @@ object Functions {
     interp.invoke(f, args.take(math.max(1, arity(f))), null)
 
   /** First regex match as a {match, index, groups} object (regex-as-function). */
-  def firstMatch(p: java.util.regex.Pattern, s: String): Any = {
+  def firstMatch(p: java.util.regex.Pattern, s: CharSequence): Any = {
     val m = p.matcher(s)
     if (!m.find()) undef
     else matchObj(m)
@@ -93,12 +93,6 @@ object Functions {
     }
     o.set[ObjectNode]("groups", groups)
     o
-  }
-
-  private def toPattern(v: Any): java.util.regex.Pattern = v match {
-    case p: java.util.regex.Pattern => p
-    case s: JsonNode if s.isTextual => java.util.regex.Pattern.compile(java.util.regex.Pattern.quote(s.textValue()))
-    case _ => throw new JsonataException("T0410", "expected a string or regex")
   }
 
   private def codePoints(s: String): Array[Int] = s.codePoints().toArray
@@ -212,15 +206,15 @@ object Functions {
     }
   }
 
-  private val fContains = b("contains", "s-u") { (a, _, _) =>
+  private val fContains = b("contains", "s-u") { (a, _, interp) =>
     a(1) match {
-      case p: java.util.regex.Pattern => BooleanNode.valueOf(p.matcher(text(a(0))).find())
+      case p: java.util.regex.Pattern => BooleanNode.valueOf(p.matcher(interp.regexInput(text(a(0)))).find())
       case s: JsonNode if s.isTextual => BooleanNode.valueOf(text(a(0)).contains(s.textValue()))
       case _ => throw new JsonataException("T0410", "$contains pattern must be a string or regex")
     }
   }
 
-  private val fSplit = b("split", "s-un?") { (a, _, _) =>
+  private val fSplit = b("split", "s-un?") { (a, _, interp) =>
     val s = text(a(0))
     val limit = if (a(2) == null) Int.MaxValue else asLongExact(a(2), "D3020").toInt
     if (limit < 0) throw new JsonataException("D3020", "$split limit must be non-negative")
@@ -229,7 +223,7 @@ object Functions {
         val sp = sep.textValue()
         if (sp.isEmpty) s.map(_.toString)
         else s.split(java.util.regex.Pattern.quote(sp), -1).toSeq
-      case p: java.util.regex.Pattern => p.split(s, -1).toSeq
+      case p: java.util.regex.Pattern => p.split(interp.regexInput(s), -1).toSeq
       case _ => throw new JsonataException("T0410", "$split separator must be a string or regex")
     }
     val arr = nf.arrayNode()
@@ -246,13 +240,13 @@ object Functions {
     tn(strs.mkString(sep))
   }
 
-  private val fMatch = b("match", "s-un?") { (a, _, _) =>
+  private val fMatch = b("match", "s-un?") { (a, _, interp) =>
     val p = a(1) match {
       case pat: java.util.regex.Pattern => pat
       case _ => throw new JsonataException("T0410", "$match pattern must be a regex")
     }
     val limit = if (a(2) == null) Int.MaxValue else asLongExact(a(2), "D3040").toInt
-    val m = p.matcher(text(a(0)))
+    val m = p.matcher(interp.regexInput(text(a(0))))
     val out = new JSeq()
     var n = 0
     while (n < limit && m.find()) { // Matcher.find() auto-advances past empty matches
@@ -285,7 +279,7 @@ object Functions {
         sb.append(out, pos, out.length)
         tn(sb.toString)
       case p: java.util.regex.Pattern =>
-        val m = p.matcher(s)
+        val m = p.matcher(interp.regexInput(s))
         val sb = new java.lang.StringBuilder
         var count = 0; var last = 0
         while (count < limit && m.find()) {

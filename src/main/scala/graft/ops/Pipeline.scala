@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -75,6 +76,35 @@ object Pipeline {
     * real decontamination pass wants, and stays populated at every
     * fixture scale (2 docs at sf0.01, ~11% at sf0.1 — the synthetic
     * corpus shares a template vocabulary, so overlap genuinely grows). */
+
+  /** Run `jobs` at once from a thread pool, each thunk's Spark jobs in its
+    * own job group described "`prefix`: label". On the first failure every
+    * group's running and future jobs are cancelled, and every thunk is
+    * awaited before the failure is rethrown: no sibling job outlives the
+    * call. */
+  private[ops] def concurrently(s: SparkSession, prefix: String)(jobs: (String, () => Any)*): Unit = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+    val sc = s.sparkContext
+    val groups = jobs.map { case (label, _) => s"$prefix: $label ${java.util.UUID.randomUUID}" }
+    val pool = Executors.newFixedThreadPool(jobs.size)
+    val done = new ExecutorCompletionService[Any](pool)
+    try {
+      jobs.zip(groups).foreach { case ((label, body), group) =>
+        done.submit { () =>
+          sc.setJobGroup(group, s"$prefix: $label", interruptOnCancel = true)
+          try body() finally sc.clearJobGroup()
+        }
+      }
+      var failure: Throwable = null
+      jobs.foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException =>
+          if (failure == null) { failure = e.getCause; groups.foreach(sc.cancelJobGroupAndFutureJobs) }
+        }
+      }
+      if (failure != null) throw failure
+    } finally pool.shutdown()
+  }
 
   val entries: Seq[Q] = Seq(
     Q("pp04_pretraining_pipeline",
@@ -202,26 +232,18 @@ object Pipeline {
         // (guide §2.6: actions are only sequential because the driver
         // calls them sequentially); each job's tasks back-fill the cores
         // the others' stage tails leave idle. Job descriptions are
-        // thread-local, so each future labels its own jobs (guide §1.5).
+        // thread-local, so `concurrently` labels each thunk's own jobs
+        // (guide §1.5).
         // semDrop stays a (cheap, id-only anti-join) barrier after
         // ndDrop + semPairs.
         def staged[T](label: String)(body: => T): T = {
           s.sparkContext.setJobDescription(s"pp04: $label")
           try body finally s.sparkContext.setJobDescription(null)
         }
-        locally {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-          implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-          try {
-            val barriers = Seq(
-              Future(staged("ndDrop (LSH verify)")(ndDrop.count())),
-              Future(staged("semPairs (pair mining)")(semPairs.count())),
-              Future(staged("contam (bench probe)")(contam.count())))
-            barriers.foreach(Await.result(_, Duration.Inf))
-          } finally pool.shutdown()
-        }
+        concurrently(s, "pp04")(
+          "ndDrop (LSH verify)" -> (() => ndDrop.count()),
+          "semPairs (pair mining)" -> (() => semPairs.count()),
+          "contam (bench probe)" -> (() => contam.count()))
         staged("semDrop (nd filter)")(semDrop.count())
         val dc = staged("dc checkpoint")(sem.join(contam, Seq("doc_id"), "left")
           .withColumn("dc_ok", col("sem_ok") && col("dc_hit").isNull)

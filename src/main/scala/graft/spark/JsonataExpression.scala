@@ -3,7 +3,7 @@ package graft.spark
 import com.fasterxml.jackson.core.JacksonException
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.JsonNodeFactory
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{AnalysisException, Column}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -210,11 +210,9 @@ case class JsonataExpression(
     * (a string input already is the record's text). */
   @transient private lazy val withRecord = child.dataType.isInstanceOf[StructType]
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType | VariantType | _: StructType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a JSON string, variant or struct input, got ${dt.sql}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    JsonataFunctions.inputError(prettyName, child.dataType)
+      .map(TypeCheckResult.TypeCheckFailure).getOrElse(TypeCheckResult.TypeCheckSuccess)
 
   override def dataType: DataType =
     if (!permissive) output.dataType
@@ -329,7 +327,8 @@ object JsonataFunctions {
     * registration surfaces (post-startup [[registerNativeSql]] and the
     * startup [[GraftExtensions]] catalog injection), so argument validation
     * cannot drift between them. */
-  private[spark] val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  private[spark] val builders: Seq[(String, Seq[Expression] => Expression)] =
+    Seq[(String, Seq[Expression] => Expression)](
     "jsonata" -> {
       case args if args.length >= 2 && args.length <= 4 =>
         JsonataExpression(args.head, foldableString(args(1), "jsonata expression"),
@@ -367,7 +366,26 @@ object JsonataFunctions {
           JsonataOutput.Variant)
       case args => throw new IllegalArgumentException(
         s"jsonata_variant(json_or_variant, 'expr') takes 2 arguments, got ${args.length}")
-    })
+    }).map { case (name, build) => name -> inputChecked(name, build) }
+
+  /** Why `name` cannot take an input of type `dt`; none for the types an
+    * evaluator reads. */
+  private[spark] def inputError(name: String, dt: DataType): Option[String] = dt match {
+    case StringType | VariantType | _: StructType => None
+    case _ => Some(s"$name requires a JSON string, variant or struct input, got ${dt.sql}")
+  }
+
+  /** `build`, after the input type check. A SQL call fails it naming the
+    * function the user called, where the expression's own check could only
+    * name its `prettyName`, which plan strings show. */
+  private def inputChecked(name: String, build: Seq[Expression] => Expression)(
+      args: Seq[Expression]): Expression = {
+    args.headOption.filter(_.resolved).flatMap(a => inputError(name, a.dataType)).foreach { msg =>
+      throw new AnalysisException("DATATYPE_MISMATCH.TYPE_CHECK_FAILURE_WITH_HINT", Map(
+        "sqlExpr" -> s""""$name(${args.map(_.sql).mkString(", ")})"""", "msg" -> msg, "hint" -> ""))
+    }
+    build(args)
+  }
 
   /** Direct-codec SQL surface — the struct path the Column API already has
     * ([[JsonataExpression]] over a struct child), reachable from `spark.sql`:

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bench's timed loop: a query that fails is reported, never timed. */
+/** Bench's timed loop: a query that fails is reported, never timed, and a
+  * completed one carries its counted metrics. */
 class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -36,5 +37,11 @@ class BenchSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(line.startsWith(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{"a_ok":"""))
     assert(line.endsWith(""""sf":"sfX","failed":["b_throws_at_build","c_fails_at_run"]}"""))
     assert(!line.contains(""""b_throws_at_build":""") && !line.contains(""""c_fails_at_run":"""))
+
+    // each completed query carries its counted metrics, beside its time
+    results.foreach { case (name, _, counted) =>
+      assert(counted.stages >= 1 && counted.cpuNs > 0, s"$name: $counted")
+    }
+    assert(line.contains(""""counted":{"a_ok":{"cpu_s":"""))
   }
 }

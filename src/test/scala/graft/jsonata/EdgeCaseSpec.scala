@@ -189,6 +189,21 @@ class EdgeCaseSpec extends AnyFunSuite {
       Jsonata.compile("[" * (limit + 1) + "]" * (limit + 1))).code == "S0218")
   }
 
+  // ---- the eval timeout bounds regex built-ins ----
+  test("a catastrophically backtracking regex ends in U1001 within 3x the timeout") {
+    // 28 'a's then 'b': `(.*a){22}$` tries every way to split the a's before failing
+    val input = Jsonata.parseJson("{\"s\": \"" + "a" * 28 + "b\"}")
+    val re = "/(.*a){22}$/"
+    Seq(s"$$contains(s, $re)", s"$$match(s, $re)", s"$$replace(s, $re, 'x')",
+      s"$$split(s, $re)", s"$re(s)").foreach { expr =>
+      val t0 = System.nanoTime()
+      val e = intercept[JsonataException](Jsonata.compile(expr).evaluate(input, 1000L, 1000))
+      val ms = (System.nanoTime() - t0) / 1000000
+      assert(e.code == "U1001", s"$expr: ${e.getMessage}")
+      assert(ms < 3000, s"$expr ran $ms ms past a 1000 ms timeout")
+    }
+  }
+
   // ---- order-by stability ----
   t("sort is stable on ties", "library.books^(ties).title",
     """{"library": {"books": [

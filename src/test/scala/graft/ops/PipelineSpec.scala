@@ -98,4 +98,22 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(after - before <= 2,
       s"stage caches leaked: persistent RDDs grew $before -> $after")
   }
+
+  test("a failed concurrent barrier cancels its sibling jobs before rethrowing") {
+    val sc = spark.sparkContext
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Pipeline.concurrently(spark, "probe")(
+        "fails" -> { () =>
+          while (sc.statusTracker.getActiveJobIds.isEmpty) Thread.sleep(10)
+          throw new IllegalStateException("injected")
+        },
+        // ~10^12 rows: hours of work unless it is cancelled
+        "slow" -> (() => spark.range(0L, 1L << 40, 1, 4).selectExpr("max(id)").collect()))
+    }
+    assert(e.getMessage == "injected")
+    assert((System.nanoTime() - t0) / 1e9 < 60, "the sibling ran to completion instead of being cancelled")
+    org.apache.spark.sql.graftshim.Shims.drainListenerBus(spark)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty)
+  }
 }

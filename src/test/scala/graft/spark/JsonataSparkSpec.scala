@@ -172,10 +172,10 @@ class JsonataSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     JsonataFunctions.registerNativeSql(spark)
     val ints = spark.range(3).selectExpr("CAST(id AS INT) AS n")
     ints.createOrReplaceTempView("ints3")
-    // (SQL call, the evaluator name its type-check message carries)
+    // (SQL call, the function name its type-check message carries)
     Seq(
-      "jsonata_row(n, 'value')" -> "jsonata requires",
-      "jsonata_typed(n, 'value', 'x INT')" -> "jsonata_row requires").foreach {
+      "jsonata_row(n, 'value')" -> "jsonata_row requires",
+      "jsonata_typed(n, 'value', 'x INT')" -> "jsonata_typed requires").foreach {
       case (call, name) =>
         val e = intercept[org.apache.spark.sql.AnalysisException] {
           spark.sql(s"SELECT $call FROM ints3").collect()
