@@ -83,7 +83,10 @@ object Harness {
 
   /** Build a query and write it to `sink`, timed and metered. The default
     * noop sink materializes every row (count() would let Spark prune the
-    * final project). A query that throws is logged and gets no time, so its
+    * final project). Its jobs carry `name` as their description (AQE runs
+    * stages from a pool thread, whose callsite names no query operator);
+    * job groups set inside the query, as in pp04, override it for their
+    * jobs. A query that throws is logged and gets no time, so its
     * partial time never passes for a result. The clock stops before the
     * cache is cleared (queries persist intermediates for reuse, and one
     * query's leftovers would GC-tax the next) and before the listener bus is
@@ -91,13 +94,17 @@ object Harness {
     * prints the run's longest task and its stage. */
   def run(spark: SparkSession, name: String, build: => DataFrame,
           sink: DataFrame => Unit = _.write.format("noop").mode("overwrite").save()): Run = {
-    val meter = meterOf(spark.sparkContext)
+    val sc = spark.sparkContext
+    val meter = meterOf(sc)
     meter.reset()
+    val prevDesc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
     val t0 = System.nanoTime()
     val ok =
       try { sink(build); true }
       catch { case e: Throwable =>
-        System.err.println(s"[${spark.sparkContext.appName}] $name failed: ${e.getMessage}"); false }
+        System.err.println(s"[${sc.appName}] $name failed: ${e.getMessage}"); false }
+      finally sc.setJobDescription(prevDesc)
     val sec = (System.nanoTime() - t0) / 1e9
     spark.sharedState.cacheManager.clearCache()
     Shims.drainListenerBus(spark)
@@ -121,9 +128,9 @@ object Harness {
 /** The harness's one listener: counts a run (see [[Harness.Counts]]). With
   * `trace` (SPARK_GRAFT_STAGES=1) it also prints each job with its wall and
   * task ms and its job description (`setJobDescription`), and each stage
-  * that took at least 100 ms of wall or 500 ms of task time, with its
-  * callsite. All callbacks run on the one listener-bus thread; `reset` and
-  * `counts` are called with the bus drained. */
+  * that took at least 100 ms of wall or 500 ms of task time, with its job's
+  * description and its callsite. All callbacks run on the one listener-bus
+  * thread; `reset` and `counts` are called with the bus drained. */
 final class Meter(val trace: Boolean) extends SparkListener {
   @volatile private var c = Harness.Counts()
   private val jobOfStage = mutable.Map.empty[Int, Int]
@@ -155,9 +162,11 @@ final class Meter(val trace: Boolean) extends SparkListener {
       val i = e.stageInfo
       val ms = (for (s <- i.submissionTime; d <- i.completionTime) yield d - s).getOrElse(-1L)
       val ts = stageTaskMs.remove(i.stageId).getOrElse(0L)
-      jobOfStage.get(i.stageId).foreach(jobTaskMs(_) += ts)
+      val job = jobOfStage.get(i.stageId)
+      job.foreach(jobTaskMs(_) += ts)
+      val desc = job.flatMap(jobStart.get).map(_._1).getOrElse("")
       if (ms >= 100 || ts >= 500) System.err.println(
-        f"[stage] id=${i.stageId}%4d tasks=${i.numTasks}%3d wallMs=$ms%6d taskMs=$ts%7d ${i.name.take(60)}")
+        f"[stage] id=${i.stageId}%4d tasks=${i.numTasks}%3d wallMs=$ms%6d taskMs=$ts%7d [$desc] ${i.name.take(60)}")
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.connect
 
-import graft.jsonata.{Jsonata, JsonataExpr, JsonataException}
+import graft.jsonata.{Jsonata, JsonataExpr, JsonataException, LruCache}
 
 /** The record-level transform operator (reference apply(),
   * JsonataTransformation.java:88-120):
@@ -11,8 +11,8 @@ import graft.jsonata.{Jsonata, JsonataExpr, JsonataException}
   *
   * Empty/blank expression is an identity fast-path (reference :92). Compiled
   * expressions are cached per JVM keyed by source (reference uses an LRU-100
-  * Guava cache, :57-80; here a ConcurrentHashMap with per-entry access stamps
-  * gives the same LRU bound with a lock-free read path — it doubles as the
+  * Guava cache, :57-80; here [[graft.jsonata.LruCache]] gives the same LRU
+  * bound with a lock-free read path — it doubles as the
   * executor-side cache for the Spark tier, where the SQL-UDF form looks up the
   * expression per row and must not serialize cores on a cache mutex).
   */
@@ -41,51 +41,16 @@ object JsonataTransform {
 
   private[connect] val MaxCacheSize = 100
   // LRU capped at 100, matching the reference's Guava cache
-  // (JsonataTransformation.java:57-63): inserting entry N+1 evicts only the
-  // least-recently-used expression, so a workload cycling >100 expressions
-  // degrades gracefully instead of recompiling everything.
-  //
-  // Concurrency: hits are a lock-free CHM get plus one atomic stamp write —
-  // no global mutex on the hot path (the registerSql UDF calls compile() per
-  // row across all executor cores). Recency lives in per-entry stamps from a
-  // monotonic clock; eviction (rare: only on insert past capacity) takes the
-  // one lock and scans the ≤101 entries for the minimum stamp.
-  private final class Entry(val expr: JsonataExpr) {
-    val touched = new java.util.concurrent.atomic.AtomicLong()
-  }
-  private val clock = new java.util.concurrent.atomic.AtomicLong()
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  // (JsonataTransformation.java:57-63). Hits take no lock: the registerSql
+  // UDF calls compile() per row across all executor cores.
+  private val cache = new LruCache[String, JsonataExpr](MaxCacheSize, expr =>
+    try Jsonata.compile(expr)
+    catch { case e: JsonataException => throw new DataException(s"Could not parse expression: ${e.getMessage}", e) })
 
   /** Test hook: whether `expr` is currently cached (touches nothing). */
-  private[connect] def isCached(expr: String): Boolean = cache.containsKey(expr)
+  private[connect] def isCached(expr: String): Boolean = cache.contains(expr)
 
-  def compile(expr: String): JsonataExpr = {
-    val hit = cache.get(expr)
-    if (hit != null) { hit.touched.set(clock.incrementAndGet()); hit.expr }
-    else {
-      val compiled =
-        try Jsonata.compile(expr)
-        catch { case e: JsonataException => throw new DataException(s"Could not parse expression: ${e.getMessage}", e) }
-      val entry = new Entry(compiled)
-      entry.touched.set(clock.incrementAndGet())
-      val prev = cache.putIfAbsent(expr, entry)
-      if (prev != null) { prev.touched.set(clock.incrementAndGet()); prev.expr }
-      else { if (cache.size() > MaxCacheSize) evictLru(); compiled }
-    }
-  }
-
-  private def evictLru(): Unit = cache.synchronized {
-    while (cache.size() > MaxCacheSize) {
-      var lruKey: String = null
-      var lruStamp = Long.MaxValue
-      cache.forEach { (k, v) =>
-        val s = v.touched.get()
-        if (s < lruStamp) { lruStamp = s; lruKey = k }
-      }
-      if (lruKey == null) return
-      cache.remove(lruKey)
-    }
-  }
+  def compile(expr: String): JsonataExpr = cache(expr)
 
   /** Returns null to signal "drop this record". */
   def apply(record: CRecord, config: Config): CRecord = {

@@ -55,43 +55,12 @@ object Jsonata {
   def compile(source: String): JsonataExpr =
     new JsonataExpr(source, Parser.parse(source))
 
-  private final class CacheEntry(val expr: JsonataExpr) {
-    val touched = new java.util.concurrent.atomic.AtomicLong()
-  }
-  private val evalClock = new java.util.concurrent.atomic.AtomicLong()
-  private val evalCache = new java.util.concurrent.ConcurrentHashMap[String, CacheEntry]()
-  private val EvalCacheMax = 1000
+  private val evalCache = new LruCache[String, JsonataExpr](1000, compile)
 
   /** Bounded LRU compile cache for $eval: the argument is data, so repeated
     * payload shapes (e.g. a JSON column with few distinct values) compile
-    * once. Same lock-free stamp-LRU as the main expression cache
-    * (JsonataTransform) — overflow evicts only the least-recently-used
-    * entries, so a workload cycling >1000 shapes degrades gracefully. */
-  def compileCached(source: String): JsonataExpr = {
-    val hit = evalCache.get(source)
-    if (hit != null) { hit.touched.set(evalClock.incrementAndGet()); hit.expr }
-    else {
-      val entry = new CacheEntry(compile(source))
-      entry.touched.set(evalClock.incrementAndGet())
-      val prev = evalCache.putIfAbsent(source, entry)
-      if (prev != null) { prev.touched.set(evalClock.incrementAndGet()); prev.expr }
-      else {
-        if (evalCache.size() > EvalCacheMax) evalCache.synchronized {
-          while (evalCache.size() > EvalCacheMax) {
-            var lruKey: String = null
-            var lruStamp = Long.MaxValue
-            evalCache.forEach { (k, v) =>
-              val s = v.touched.get()
-              if (s < lruStamp) { lruStamp = s; lruKey = k }
-            }
-            if (lruKey == null) return entry.expr
-            evalCache.remove(lruKey)
-          }
-        }
-        entry.expr
-      }
-    }
-  }
+    * once, and a workload cycling >1000 shapes degrades gracefully. */
+  def compileCached(source: String): JsonataExpr = evalCache(source)
 
   /** Convenience: evaluate expression against a JSON string, returns JSON string
     * or null for "no match". */

@@ -22,7 +22,6 @@ object Values {
   val nf: JsonNodeFactory = JsonNodeFactory.instance
 
   def undef: Any = null
-  def isUndef(v: Any): Boolean = v == null
 
   /** Evaluator-created sequence; collapses singleton→value / empty→nothing at
     * expression boundaries unless keepSingleton is set (`[]` operator). */

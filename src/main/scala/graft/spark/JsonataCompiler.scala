@@ -7,7 +7,7 @@ import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
 import graft.connect.JsonataTransform
-import graft.jsonata.Ast
+import graft.jsonata.{Ast, LruCache}
 
 /** Subset-to-Catalyst compiler (SURVEY.md §2 "two-tier execution", §4.3).
   *
@@ -16,8 +16,9 @@ import graft.jsonata.Ast
   * operands, conditionals, top-level object construction, tombstone filters,
   * `^()` order-by over array columns (array_sort with an engine-equivalent
   * comparator), `{}` group-by over array columns (map_from_entries with
-  * $count/$sum/$min/$max/$average aggregates), `$map`/`$filter` with inline
-  * arity-1 lambdas over array operands (→ native transform/filter),
+  * $count/$sum/$min/$max/$average aggregates), `$map`/`$filter`/`$single`
+  * with inline lambdas of arity 1-3 over array operands (→ native
+  * transform/filter),
   * `$reduce` with an inline arity-2 lambda and a literal init (→ native
   * aggregate), object operators `$keys`/`$lookup`/`$sift`/`$each` over
   * struct-typed paths (per-field keep flags; presence = non-null) and over
@@ -26,9 +27,9 @@ import graft.jsonata.Ast
   * runs entirely inside whole-stage codegen with predicate pushdown and column
   * pruning: no JSON serialization, no interpreter, no CodegenFallback.
   *
-  * Anything outside the subset returns None and falls back to the interpreted
-  * tier ([[JsonataDF.transform]]). Both tiers must agree on results — pinned
-  * by the differential suite (DifferentialSpec).
+  * Anything outside the subset returns None and [[JsonataDF.auto]] falls back
+  * to the interpreted tier ([[JsonataDF.transformAs]]). Both tiers must agree
+  * on results — pinned by the differential suite (DifferentialSpec).
   *
   * Semantic notes (why translation is sound):
   *  - envelope encoding drops null fields, so a SQL NULL column is exactly
@@ -53,13 +54,8 @@ object JsonataCompiler {
     compileForSchema(df.schema, exprSource,
       utcSession = df.sparkSession.conf.get("spark.sql.session.timeZone", "") == "UTC")
 
-  private final class MemoEntry(val result: Option[CompiledQuery]) {
-    val touched = new java.util.concurrent.atomic.AtomicLong()
-  }
-  private val memoClock = new java.util.concurrent.atomic.AtomicLong()
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(StructType, String, Boolean), MemoEntry]()
-  private val MemoMax = 512
+  private val memo = new LruCache[(StructType, String, Boolean), Option[CompiledQuery]](512,
+    { case (schema, exprSource, utcSession) => doCompileForSchema(schema, exprSource, utcSession) })
 
   /** Schema-rooted compile — the DataFrame-free entry the analyzer-rule
     * surface ([[JsonataCompileRule]]) shares with [[compileQuery]]: `schema`
@@ -71,32 +67,10 @@ object JsonataCompiler {
     * pass; the decision (including the None fallback verdict) is computed
     * once per distinct query instead. Column trees are immutable, so
     * sharing a cached compile across plans is safe ([[JsonataCompileRule]]
-    * copies along the rebind path anyway). Same lock-free stamp-LRU as the
-    * `$eval` compile cache (Jsonata.compileCached). */
+    * copies along the rebind path anyway). */
   def compileForSchema(schema: StructType, exprSource: String,
-                       utcSession: Boolean): Option[CompiledQuery] = {
-    val key = (schema, exprSource, utcSession)
-    val hit = memo.get(key)
-    if (hit != null) { hit.touched.set(memoClock.incrementAndGet()); return hit.result }
-    val result = doCompileForSchema(schema, exprSource, utcSession)
-    val entry = new MemoEntry(result)
-    entry.touched.set(memoClock.incrementAndGet())
-    val prev = memo.putIfAbsent(key, entry)
-    if (prev != null) prev.touched.set(memoClock.incrementAndGet())
-    else if (memo.size() > MemoMax) memo.synchronized {
-      while (memo.size() > MemoMax) {
-        var lruKey: (StructType, String, Boolean) = null
-        var lruStamp = Long.MaxValue
-        memo.forEach { (k, v) =>
-          val s = v.touched.get()
-          if (s < lruStamp) { lruStamp = s; lruKey = k }
-        }
-        if (lruKey == null) return result
-        memo.remove(lruKey)
-      }
-    }
-    result
-  }
+                       utcSession: Boolean): Option[CompiledQuery] =
+    memo((schema, exprSource, utcSession))
 
   private def doCompileForSchema(schema: StructType, exprSource: String,
                                  utcSession: Boolean): Option[CompiledQuery] = {
@@ -563,33 +537,50 @@ object JsonataCompiler {
       case _ => false
     }
 
+    private def isFloat(dt: DataType): Boolean = dt == DoubleType || dt == FloatType
+
+    /** One static type for occurrences that must agree: integrals widen to
+      * long, integrals with floats to double (exact widenings only); any
+      * other mix is None. */
+    private def unifyNumeric(occs: Seq[DataType]): Option[DataType] =
+      if (occs.forall(_ == occs.head)) Some(if (isIntegral(occs.head)) LongType else occs.head)
+      else if (occs.forall(isIntegral)) Some(LongType)
+      else if (occs.forall(d => isIntegral(d) || isFloat(d))) Some(DoubleType)
+      else None
+
+    /** The field names under `value` of a `value.a.b` name chain; None unless
+      * the first step is `value` and every step is a plain name. */
+    private def valueNames(es: Seq[Ast]): Option[Seq[String]] =
+      if (es.headOption.contains(NameStep("value")) && es.forall(_.isInstanceOf[NameStep]))
+        Some(es.tail.collect { case NameStep(n) => n })
+      else None
+
+    /** [[valueNames]] of path steps without stages, focus or index. */
+    private def valueStepNames(steps: Seq[Step]): Option[Seq[String]] =
+      if (steps.exists(s => s.stages.nonEmpty || s.focus.isDefined || s.index.isDefined)) None
+      else valueNames(steps.map(_.expr))
+
     /** `value.a.b` path -> column reference. */
     private def valuePath(a: Ast): Option[Seq[String]] = a match {
-      case Path(steps, false, None) =>
-        val names = steps.map(_.expr)
-        if (steps.exists(s => s.stages.nonEmpty || s.focus.isDefined || s.index.isDefined)) None
-        else if (names.headOption.contains(NameStep("value")) &&
-          names.forall(_.isInstanceOf[NameStep]))
-          Some(names.tail.collect { case NameStep(n) => n })
-        else None
+      case Path(steps, false, None) => valueStepNames(steps)
       case _ => None
     }
 
+    /** The column at `value`-relative `names`: the whole row, as a struct of
+      * its columns, when `names` is empty. */
+    private def namesCol(names: Seq[String]): Column =
+      if (names.isEmpty) struct(schema.fieldNames.toIndexedSeq.map(col): _*)
+      else col(names.mkString("."))
+
     /** Plain `value.a.b` name steps (no stages/focus/index) resolving to an
       * array column — the input shape for compiled sort/group-by. */
-    private def arrayValuePath(steps: Vector[Step]): Option[(Column, ArrayType)] = {
-      if (steps.exists(s => s.stages.nonEmpty || s.focus.isDefined || s.index.isDefined))
-        return None
-      val es = steps.map(_.expr)
-      if (!es.headOption.contains(NameStep("value")) || !es.forall(_.isInstanceOf[NameStep]))
-        return None
-      val names = es.tail.collect { case NameStep(n) => n }
-      if (names.isEmpty) None
-      else fieldType(names) match {
-        case Some(at: ArrayType) => Some((col(names.mkString(".")), at))
-        case _ => None
+    private def arrayValuePath(steps: Vector[Step]): Option[(Column, ArrayType)] =
+      valueStepNames(steps).filter(_.nonEmpty).flatMap { names =>
+        fieldType(names) match {
+          case Some(at: ArrayType) => Some((col(names.mkString(".")), at))
+          case _ => None
+        }
       }
-    }
 
     /** A bare relative field reference (`price` inside a sort term / group
       * pair) — parsed as either a naked NameStep or a one-step Path. */
@@ -656,59 +647,21 @@ object JsonataCompiler {
       }
     }
 
-    /** Compile a single-parameter lambda body against an element of type `et`.
-      * Returns the per-element Column builder + the body's static type. The
-      * dry run with a typed null placeholder decides compilability once; the
-      * builder then re-compiles against the real lambda variable (compilation
-      * is pure given the same env, so the two runs agree). */
-    private def compileLambda(param: String, et: DataType, body: Ast): Option[(Column => Column, DataType)] = {
-      def inEnv[A](v: TCol)(f: => A): A = {
-        val (se, si) = (lambdaEnv, inLambda)
-        lambdaEnv += (param -> v); inLambda = true
-        try f finally { lambdaEnv = se; inLambda = si }
-      }
-      inEnv(TCol(lit(null).cast(et), et))(compile(body)).map { probe =>
-        (((e: Column) => inEnv(TCol(e, et))(compile(body)).get.col), probe.dt)
-      }
-    }
-
-    /** Two-parameter lambda binding ($reduce's (acc, elem)); same typed-probe
-      * scheme as [[compileLambda]]. */
-    private def compileLambda2(p1: String, t1: DataType, p2: String, t2: DataType,
-                               body: Ast): Option[((Column, Column) => Column, DataType)] = {
-      def inEnv[A](v1: TCol, v2: TCol)(f: => A): A = {
-        val (se, si) = (lambdaEnv, inLambda)
-        lambdaEnv += (p1 -> v1); lambdaEnv += (p2 -> v2); inLambda = true
-        try f finally { lambdaEnv = se; inLambda = si }
-      }
-      inEnv(TCol(lit(null).cast(t1), t1), TCol(lit(null).cast(t2), t2))(compile(body))
-        .map { probe =>
-          (((a: Column, x: Column) =>
-            inEnv(TCol(a, t1), TCol(x, t2))(compile(body)).get.col), probe.dt)
-        }
-    }
-
-    /** Three-parameter HOF lambda ($v, $i, $a): the first two bind per
-      * element like [[compileLambda2]]; the third is the FIXED whole-array
-      * operand (the engine's arrNode) — same typed-probe scheme, with `v3`
-      * identical in probe and build (it is already a concrete column).
-      * `extra` carries the hoisted loop-invariant bindings of
-      * [[withHoisted]] — fixed columns, same in probe and build. */
-    private def compileLambda3(p1: String, t1: DataType, p2: String, t2: DataType,
-                               p3: String, v3: TCol, extra: Seq[(String, TCol)],
-                               body: Ast): Option[((Column, Column) => Column, DataType)] = {
-      def inEnv[A](v1: TCol, v2: TCol)(f: => A): A = {
-        val (se, si) = (lambdaEnv, inLambda)
-        lambdaEnv += (p1 -> v1); lambdaEnv += (p2 -> v2); lambdaEnv += (p3 -> v3)
-        extra.foreach { case (n, tc) => lambdaEnv += (n -> tc) }
-        inLambda = true
-        try f finally { lambdaEnv = se; inLambda = si }
-      }
-      inEnv(TCol(lit(null).cast(t1), t1), TCol(lit(null).cast(t2), t2))(compile(body))
-        .map { probe =>
-          (((a: Column, x: Column) =>
-            inEnv(TCol(a, t1), TCol(x, t2))(compile(body)).get.col), probe.dt)
-        }
+    /** Compile a lambda-like `body` with `params` bound per element and
+      * `fixed` bound to the same columns throughout (a whole operand, hoisted
+      * per-row constants, a bracket predicate's parent). Returns the body's
+      * Column builder, which takes one column per param (extra columns are
+      * ignored), and the body's static type. A dry run with typed null
+      * placeholders decides compilability once; the builder then recompiles
+      * against the real lambda variables (compilation is pure given the same
+      * scope, so the two runs agree). `hide` names outer bindings the body
+      * must not see (see [[bound]]). */
+    private def bodyFn(params: Seq[(String, DataType)], fixed: Seq[(String, TCol)], body: Ast,
+                       hide: Seq[String] = Nil): Option[(Seq[Column] => Column, DataType)] = {
+      def at(cs: Seq[Column]): Option[TCol] =
+        bound(params.zip(cs).map { case ((n, dt), c) => n -> TCol(c, dt) } ++ fixed, hide)(compile(body))
+      at(params.map { case (_, dt) => lit(null).cast(dt) })
+        .map(probe => ((cs: Seq[Column]) => at(cs).get.col, probe.dt))
     }
 
     /** Evaluate hoisted per-row-constant subtrees ONCE via a single-element
@@ -720,7 +673,7 @@ object JsonataCompiler {
       * so an inlined whole-array aggregate would cost O(n) per element).
       * `build(body, extra)` constructs the full HOF column with the hoist
       * names bound to `extra`; it is probed with typed nulls first (same
-      * two-phase scheme as the lambda compilers). Falls back to the
+      * two-phase scheme as [[bodyFn]]). Falls back to the
       * unhoisted `build(origBody, Nil)` when any hoisted subtree fails to
       * compile — hoisting only ever changes the plan, never compilability
       * or results (pinned by DifferentialSpec). */
@@ -761,91 +714,54 @@ object JsonataCompiler {
       * the second parameter (engine passes the 0-based position,
       * Functions.scala fMap/fFilter; Spark's indexed transform/filter
       * overloads supply the same 0-based index — widened to long, the
-      * compiled tier's integral type). The arity-3 ($v, $i, $a) form and
-      * non-inline function references stay interpreted. */
-    private def compileHof(fn: String, args: Seq[Ast]): Option[TCol] =
-      (args.lift(0), args.lift(1)) match {
-        case (Some(arrA), Some(Lambda(Vector(p), body, _))) if args.length == 2 =>
-          compile(arrA).flatMap { t =>
-            t.dt match {
-              case ArrayType(et, _) =>
-                compileLambda(p, et, body).flatMap { case (bf, bt) =>
+      * compiled tier's integral type); arity-3 also binds the whole array
+      * (below). Non-inline function references stay interpreted. */
+    private def compileHof(fn: String, args: Seq[Ast]): Option[TCol] = args match {
+      case Seq(arrA, Lambda(ps, body, _)) if ps.nonEmpty && ps.length <= 3 =>
+        compile(arrA).flatMap { t =>
+          t.dt match {
+            case ArrayType(et, _) =>
+              // arity 1 takes the plain overloads; arity 2 and 3 the indexed
+              // ones, whose 0-based index widens to the tier's integral long
+              val indexed = ps.length > 1
+              def mapped(g: Seq[Column] => Column): Column =
+                if (indexed) transform(t.col, (x, i) => g(Seq(x, i.cast("long"))))
+                else transform(t.col, x => g(Seq(x)))
+              def kept(g: Seq[Column] => Column): Column =
+                if (indexed) filter(t.col, (e, i) => g(Seq(e, i.cast("long"))))
+                else filter(t.col, e => g(Seq(e)))
+              def build(b: Ast, extra: Seq[(String, TCol)]): Option[TCol] =
+                bodyFn(Seq(ps.head -> et) ++ ps.lift(1).map(_ -> LongType),
+                    ps.lift(2).map(_ -> t).toSeq ++ extra, b).flatMap { case (bf, bt) =>
+                  def truthy(cs: Seq[Column]): Column = coalesce(bf(cs), lit(false))
                   fn match {
                     case "map" =>
-                      Some(TCol(emptyAsNull(filter(transform(t.col, bf), x => x.isNotNull)),
-                        ArrayType(bt)))
+                      Some(TCol(emptyAsNull(filter(mapped(bf), x => x.isNotNull)), ArrayType(bt)))
                     case "filter" if bt == BooleanType =>
-                      Some(TCol(emptyAsNull(filter(t.col, e => coalesce(bf(e), lit(false)))),
-                        ArrayType(et)))
+                      Some(TCol(emptyAsNull(kept(truthy)), ArrayType(et)))
                     case "single" if bt == BooleanType =>
-                      Some(TCol(singleFrom(
-                        filter(t.col, e => coalesce(bf(e), lit(false))), et), et))
+                      Some(TCol(singleFrom(kept(truthy), et), et))
                     case _ => None
                   }
                 }
-              case _ => None
-            }
+              // arity-3 ($v, $i, $a): the third parameter is the WHOLE
+              // operand array (fMap/fFilter pass arrNode) — a FIXED outer
+              // column inside the per-element lambda. Loop-invariant
+              // $a-only subtrees ($average($a), $min($a), ...) are hoisted
+              // out of the per-element lambda and evaluated once per row
+              // (see hoistInvariant/withHoisted) — without this, each
+              // element would re-run the whole-array aggregate: O(n²)
+              // arithmetic per row.
+              if (ps.length < 3) build(body, Nil)
+              else {
+                val (body2, hoists) = hoistInvariant(body, Set(ps(0), ps(1)), ps(2))
+                withHoisted(body2, body, hoists, ps(2) -> t, build)
+              }
+            case _ => None
           }
-        case (Some(arrA), Some(Lambda(Vector(p1, p2), body, _))) if args.length == 2 =>
-          compile(arrA).flatMap { t =>
-            t.dt match {
-              case ArrayType(et, _) =>
-                compileLambda2(p1, et, p2, LongType, body).flatMap { case (bf, bt) =>
-                  fn match {
-                    case "map" =>
-                      Some(TCol(emptyAsNull(filter(transform(t.col,
-                        (x, i) => bf(x, i.cast("long"))), x => x.isNotNull)),
-                        ArrayType(bt)))
-                    case "filter" if bt == BooleanType =>
-                      Some(TCol(emptyAsNull(filter(t.col,
-                        (e, i) => coalesce(bf(e, i.cast("long")), lit(false)))),
-                        ArrayType(et)))
-                    case "single" if bt == BooleanType =>
-                      Some(TCol(singleFrom(filter(t.col,
-                        (e, i) => coalesce(bf(e, i.cast("long")), lit(false))), et), et))
-                    case _ => None
-                  }
-                }
-              case _ => None
-            }
-          }
-        // arity-3 ($v, $i, $a): the third parameter is the WHOLE operand
-        // array (fMap/fFilter pass arrNode) — a FIXED outer column inside
-        // the per-element lambda, so the existing indexed transform/filter
-        // overloads carry it; only the env binding differs from arity-2.
-        // Loop-invariant $a-only subtrees ($average($a), $min($a), ...) are
-        // hoisted out of the per-element lambda and evaluated once per row
-        // (see hoistInvariant/withHoisted) — without this, each element
-        // would re-run the whole-array aggregate: O(n²) arithmetic per row.
-        case (Some(arrA), Some(Lambda(Vector(p1, p2, p3), body, _))) if args.length == 2 =>
-          compile(arrA).flatMap { t =>
-            t.dt match {
-              case ArrayType(et, _) =>
-                def build(b: Ast, extra: Seq[(String, TCol)]): Option[TCol] =
-                  compileLambda3(p1, et, p2, LongType, p3, t, extra, b).flatMap {
-                    case (bf, bt) =>
-                      fn match {
-                        case "map" =>
-                          Some(TCol(emptyAsNull(filter(transform(t.col,
-                            (x, i) => bf(x, i.cast("long"))), x => x.isNotNull)),
-                            ArrayType(bt)))
-                        case "filter" if bt == BooleanType =>
-                          Some(TCol(emptyAsNull(filter(t.col,
-                            (e, i) => coalesce(bf(e, i.cast("long")), lit(false)))),
-                            ArrayType(et)))
-                        case "single" if bt == BooleanType =>
-                          Some(TCol(singleFrom(filter(t.col,
-                            (e, i) => coalesce(bf(e, i.cast("long")), lit(false))), et), et))
-                        case _ => None
-                      }
-                  }
-                val (body2, hoists) = hoistInvariant(body, Set(p1, p2), p3)
-                withHoisted(body2, body, hoists, p3 -> t, build)
-              case _ => None
-            }
-          }
-        case _ => None
-      }
+        }
+      case _ => None
+    }
 
     /** `$single`: the one-and-only matching element. Engine contract
       * (Functions.scala fSingle): zero matches raise D3139, more than one
@@ -888,9 +804,12 @@ object JsonataCompiler {
       * is `isNotNull`. */
     private final case class VField(name: String, col: Column, dt: DataType, keep: Column)
 
-    private def bound[A](vs: Seq[(String, TCol)])(f: => A): A = {
+    /** Run `f` inside a lambda scope: `vs` bound over the enclosing
+      * bindings, minus the `hide` names, then restored. The one place that
+      * saves and restores [[lambdaEnv]] and [[inLambda]]. */
+    private def bound[A](vs: Seq[(String, TCol)], hide: Seq[String] = Nil)(f: => A): A = {
       val (se, si) = (lambdaEnv, inLambda)
-      vs.foreach { case (n, t) => lambdaEnv += (n -> t) }
+      lambdaEnv = lambdaEnv -- hide ++ vs
       inLambda = true
       try f finally { lambdaEnv = se; inLambda = si }
     }
@@ -1138,12 +1057,11 @@ object JsonataCompiler {
       * the numeric tower (both integral -> long; any float side -> double
       * — exact widenings only); anything else stays interpreted. */
     private def unifyMerge(f: VField, vc: TCol): Option[VField] = {
-      def flt(dt: DataType) = dt == DoubleType || dt == FloatType
       val uni: Option[(Column, Column, DataType)] = (f.dt, vc.dt) match {
         case (a, b) if a == b => Some((when(f.keep, f.col), vc.col, a))
         case (a, b) if isIntegral(a) && isIntegral(b) =>
           Some((when(f.keep, f.col).cast(LongType), vc.col.cast(LongType), LongType))
-        case (a, b) if (isIntegral(a) || flt(a)) && (isIntegral(b) || flt(b)) =>
+        case (a, b) if (isIntegral(a) || isFloat(a)) && (isIntegral(b) || isFloat(b)) =>
           Some((when(f.keep, f.col).cast(DoubleType), vc.col.cast(DoubleType), DoubleType))
         case _ => None
       }
@@ -1228,15 +1146,8 @@ object JsonataCompiler {
       if (di != es.length - 2 || es.count(_ == Descendant()) != 1) return None
       if (inLambda) return None
       val target = es.last match { case NameStep(n) => n; case _ => return None }
-      val baseNames = es.take(di) match {
-        case v if v.headOption.contains(NameStep("value")) &&
-          v.forall(_.isInstanceOf[NameStep]) => v.tail.collect { case NameStep(n) => n }
-        case _ => return None
-      }
+      val baseNames = valueNames(es.take(di)).getOrElse(return None)
       val baseDt = fieldType(baseNames).getOrElse(return None)
-      val baseCol =
-        if (baseNames.isEmpty) null // whole row: segments build from field roots
-        else col(baseNames.mkString("."))
 
       // pass 1: collect every occurrence type (None = unsupported shape);
       // hasOcc memoizes per-subtree occurrence presence so pass 2's array
@@ -1269,15 +1180,7 @@ object JsonataCompiler {
       }
       val occs = occTypes(baseDt).getOrElse(return None)
       if (occs.isEmpty) return None // no static occurrence: undefined with no type
-      def flt(dt: DataType) = dt == DoubleType || dt == FloatType
-      val tt: DataType =
-        if (occs.forall(_ == occs.head)) occs.head match {
-          case dt if isIntegral(dt) => LongType
-          case dt => dt
-        }
-        else if (occs.forall(isIntegral)) LongType
-        else if (occs.forall(d => isIntegral(d) || flt(d))) DoubleType
-        else return None
+      val tt = unifyNumeric(occs).getOrElse(return None)
       // an ARRAY-typed target splices its ELEMENTS into the result sequence
       // (name-step results flatten) — not modeled: interpreted
       if (tt.isInstanceOf[ArrayType]) return None
@@ -1307,14 +1210,11 @@ object JsonataCompiler {
         }
         case _ => Seq.empty
       }
-      // whole-row base: the root "object" is the row itself — materialize
-      // it as a struct of the row's columns so segs encodes the pre-order
+      // whole-row base: the root "object" is the row itself — materialized
+      // as a struct of the row's columns so segs encodes the pre-order
       // rules exactly ONCE (Catalyst's SimplifyExtractValueOps collapses
       // CreateStruct(...).getField back to the plain columns)
-      val parts =
-        if (baseNames.isEmpty)
-          segs(struct(schema.fieldNames.toIndexedSeq.map(col): _*), baseDt)
-        else segs(baseCol, baseDt)
+      val parts = segs(namesCol(baseNames), baseDt)
       if (parts.isEmpty) return None
       val all = if (parts.length == 1) parts.head else concat(parts: _*)
       Some(TCol(emptyAsNull(filter(all, x => x.isNotNull)), ArrayType(tt)))
@@ -1409,11 +1309,7 @@ object JsonataCompiler {
         case NameStep(n) => n
         case _ => return false
       }
-      val baseNames = es.dropRight(2) match {
-        case v if v.headOption.contains(NameStep("value")) &&
-          v.forall(_.isInstanceOf[NameStep]) => v.tail.collect { case NameStep(n) => n }
-        case _ => return false
-      }
+      val baseNames = valueNames(es.dropRight(2)).getOrElse(return false)
       def scalarOccs(st: StructType): Boolean =
         wcNameOccs(st, f).exists(os =>
           os.nonEmpty && os.forall(!_.isInstanceOf[ArrayType]))
@@ -1444,12 +1340,9 @@ object JsonataCompiler {
         case _ => return None
       }
       val wi = if (target.isEmpty) es.length - 1 else es.length - 2
-      val baseNames = es.take(wi) match {
-        case v if v.headOption.contains(NameStep("value")) &&
-          v.forall(_.isInstanceOf[NameStep]) => v.tail.collect { case NameStep(n) => n }
-        case _ => return None
-      }
+      val baseNames = valueNames(es.take(wi)).getOrElse(return None)
       val baseDt = fieldType(baseNames).getOrElse(return None)
+      val base = namesCol(baseNames)
 
       // the type an array field's splice emits (None = a map leaf: fall back)
       def leafType(dt: DataType): Option[DataType] = dt match {
@@ -1466,13 +1359,6 @@ object JsonataCompiler {
             case dt => Some(acc :+ dt)
           }
         }
-      def flt(dt: DataType) = dt == DoubleType || dt == FloatType
-      def unify(occs: Seq[DataType]): Option[DataType] =
-        if (occs.forall(_ == occs.head))
-          Some(occs.head match { case dt if isIntegral(dt) => LongType; case dt => dt })
-        else if (occs.forall(isIntegral)) Some(LongType)
-        else if (occs.forall(d => isIntegral(d) || flt(d))) Some(DoubleType)
-        else None
       // arrays splice FLAT, however deep the nesting (evalWildcard's flat);
       // a null INNER array is an explicit null element of its parent — the
       // engine emits it as one null item, so it becomes array(null) here
@@ -1559,21 +1445,15 @@ object JsonataCompiler {
         case (st: StructType, None) if st.fields.nonEmpty =>
           for {
             occs <- fieldTypes(st)
-            tt <- unify(occs)
-          } yield {
-            val base =
-              if (baseNames.isEmpty) struct(schema.fieldNames.toIndexedSeq.map(col): _*)
-              else col(baseNames.mkString("."))
-            emit(concat(structSegs(base, st, tt): _*), tt)
-          }
+            tt <- unifyNumeric(occs)
+          } yield emit(concat(structSegs(base, st, tt): _*), tt)
         case (ArrayType(et: StructType, _), None) if et.fields.nonEmpty =>
           for {
             occs <- fieldTypes(et)
-            tt <- unify(occs)
+            tt <- unifyNumeric(occs)
           } yield {
             val all = coalesce(
-              flatten(transform(col(baseNames.mkString(".")),
-                e => concat(structSegs(e, et, tt): _*))),
+              flatten(transform(base, e => concat(structSegs(e, et, tt): _*))),
               array().cast(ArrayType(tt)))
             emit(all, tt)
           }
@@ -1583,46 +1463,39 @@ object JsonataCompiler {
         // both exact; array values splice deep, a null ARRAY VALUE is one
         // null item (an object value null, not an absent key)
         case (mt: MapType, None) if mt.keyType == StringType && baseNames.nonEmpty =>
-          val m = col(baseNames.mkString("."))
           mt.valueType match {
             case _: MapType => None // object items: not modeled (field-map rule)
             case at: ArrayType =>
               for {
                 lt <- leafType(at)
-                tt <- unify(Seq(lt))
-              } yield emit(flatten(transform(map_values(m), v =>
+                tt <- unifyNumeric(Seq(lt))
+              } yield emit(flatten(transform(map_values(base), v =>
                 coalesce(flattened(v, at, tt), array(lit(null).cast(tt))))), tt)
             case vt =>
-              unify(Seq(vt)).map(tt => emit(map_values(m).cast(ArrayType(tt)), tt))
+              unifyNumeric(Seq(vt)).map(tt => emit(map_values(base).cast(ArrayType(tt)), tt))
           }
         case (st: StructType, Some(f)) =>
           for {
             occs <- wcNameOccs(st, f)
             if occs.nonEmpty
-            tt <- unify(occs.map {
+            tt <- unifyNumeric(occs.map {
               case at: ArrayType => at.elementType // one-level splice items
               case dt => dt
             })
-          } yield {
-            val base =
-              if (baseNames.isEmpty) struct(schema.fieldNames.toIndexedSeq.map(col): _*)
-              else col(baseNames.mkString("."))
-            emit(concat(nameSegs(base, st, f, tt): _*), tt)
-          }
+          } yield emit(concat(nameSegs(base, st, f, tt): _*), tt)
         case (ArrayType(et: StructType, _), Some(f)) =>
           // the wildcard emits each element-struct's field VALUES; the name
           // step then applies to those values per element
           for {
             occs <- wcNameOccs(et, f)
             if occs.nonEmpty
-            tt <- unify(occs.map {
+            tt <- unifyNumeric(occs.map {
               case at: ArrayType => at.elementType
               case dt => dt
             })
           } yield {
             val all = coalesce(
-              flatten(transform(col(baseNames.mkString(".")),
-                e => concat(nameSegs(e, et, f, tt): _*))),
+              flatten(transform(base, e => concat(nameSegs(e, et, f, tt): _*))),
               array().cast(ArrayType(tt)))
             emit(all, tt)
           }
@@ -1640,16 +1513,15 @@ object JsonataCompiler {
                   case _ => true
                 }
                 if (!ok) None
-                else unify(Seq(raw match {
+                else unifyNumeric(Seq(raw match {
                   case at2: ArrayType => at2.elementType
                   case dt => dt
                 })).map { tt =>
-                  val m = col(baseNames.mkString("."))
                   val all = raw match {
-                    case _: ArrayType => flatten(transform(map_values(m), v =>
+                    case _: ArrayType => flatten(transform(map_values(base), v =>
                       coalesce(v.getField(f).cast(ArrayType(tt)),
                         array().cast(ArrayType(tt)))))
-                    case _ => filter(transform(map_values(m),
+                    case _ => filter(transform(map_values(base),
                       v => v.getField(f).cast(tt)), x => x.isNotNull)
                   }
                   emit(all, tt)
@@ -1808,6 +1680,10 @@ object JsonataCompiler {
       case _ => None
     }
 
+    /** A map entry's ($v[, $k]) lambda params: the value, then the key. */
+    private def entryParams(params: Vector[String], vt: DataType): Seq[(String, DataType)] =
+      Seq(params.head -> vt) ++ params.lift(1).map(_ -> StringType)
+
     /** `$sift(map, function($v[, $k]){bool})` → native map_filter — the
       * map-typed twin of [[compileStructSift]] (maps arise from the compiled
       * `{}` group-by). An empty result is fSift's undef (see emptyAsNull). */
@@ -1822,18 +1698,12 @@ object JsonataCompiler {
         compile(objA).flatMap { t =>
           t.dt match {
             case MapType(StringType, vt, _) =>
-              def build(b: Ast, extra: Seq[(String, TCol)]): Option[TCol] = {
-                def bodyFor(v: Column, k: Column): Option[TCol] =
-                  bound(Seq(params.head -> TCol(v, vt)) ++
-                    params.lift(1).map(_ -> TCol(k, StringType)) ++
-                    params.lift(2).map(_ -> t) ++ extra)(compile(b))
-                bodyFor(lit(null).cast(vt), lit(null).cast(StringType)) match {
-                  case Some(TCol(_, BooleanType)) =>
-                    Some(TCol(emptyAsNull(map_filter(t.col,
-                      (k, v) => coalesce(bodyFor(v, k).get.col, lit(false)))), t.dt))
-                  case _ => None
-                }
-              }
+              def build(b: Ast, extra: Seq[(String, TCol)]): Option[TCol] =
+                bodyFn(entryParams(params, vt), params.lift(2).map(_ -> t).toSeq ++ extra, b)
+                  .collect { case (bf, BooleanType) =>
+                    TCol(emptyAsNull(map_filter(t.col,
+                      (k, v) => coalesce(bf(Seq(v, k)), lit(false)))), t.dt)
+                  }
               if (params.length < 3) build(body0, Nil)
               else {
                 val (body2, hoists) =
@@ -1876,13 +1746,10 @@ object JsonataCompiler {
           compile(objA).flatMap { t =>
             t.dt match {
               case MapType(StringType, vt, _) =>
-                def bodyFor(v: Column, k: Column): Option[TCol] =
-                  bound(Seq(params.head -> TCol(v, vt)) ++
-                    params.lift(1).map(_ -> TCol(k, StringType)))(compile(body))
-                bodyFor(lit(null).cast(vt), lit(null).cast(StringType)).map { probe =>
+                bodyFn(entryParams(params, vt), Nil, body).map { case (bf, bt) =>
                   val arr = transform(map_entries(t.col), e =>
-                    bodyFor(e.getField("value"), e.getField("key")).get.col)
-                  TCol(emptyAsNull(filter(arr, x => x.isNotNull)), ArrayType(probe.dt))
+                    bf(Seq(e.getField("value"), e.getField("key"))))
+                  TCol(emptyAsNull(filter(arr, x => x.isNotNull)), ArrayType(bt))
                 }
               case _ => None
             }
@@ -1917,9 +1784,9 @@ object JsonataCompiler {
             case ArrayType(et, _) =>
               compile(initA).flatMap { init =>
                 def tryAcc(accT: DataType, initCol: Column): Option[TCol] =
-                  compileLambda2(pa, accT, px, et, body).collect {
+                  bodyFn(Seq(pa -> accT, px -> et), Nil, body).collect {
                     case (bf, bt) if bt == accT =>
-                      TCol(aggregate(t.col, initCol, bf), accT)
+                      TCol(aggregate(t.col, initCol, (acc, x) => bf(Seq(acc, x))), accT)
                   }
                 tryAcc(init.dt, init.col).orElse {
                   if (isNum(init.dt)) tryAcc(DoubleType, init.col.cast(DoubleType))
@@ -2015,7 +1882,7 @@ object JsonataCompiler {
             .collect { case NameStep(n) => n }.drop(1) // strip the `value` root
           val parent: Option[TCol] =
             if (parentNames.isEmpty)
-              Some(TCol(struct(schema.fieldNames.toIndexedSeq.map(col): _*), schema))
+              Some(TCol(namesCol(Nil), schema))
             else fieldType(parentNames).collect {
               case st: StructType => TCol(col(parentNames.mkString(".")), st)
             }
@@ -2189,31 +2056,18 @@ object JsonataCompiler {
       * array/object truthiness differs structurally — those stay
       * interpreted. */
     private def compilePredicate(pred: Ast, et: DataType,
-        parent: Option[TCol] = None): Option[Column => Column] = {
-      def inCtx[A](v: TCol)(f: => A): A = {
-        val (se, si) = (lambdaEnv, inLambda)
-        lambdaEnv += ("" -> v); inLambda = true
-        // `%` resolves ONLY when this stage's caller supplied the parent
-        // (compileStagedPath Shape A — plain struct navigation, one level
-        // up is a single known column). Every other site leaves it unbound
-        // so a % inside nested/per-element/computed-base stages — where
-        // the parent is a DIFFERENT object per element — falls back to the
-        // interpreter (engine ancestry) instead of capturing a stale outer
-        // binding.
-        parent match {
-          case Some(p) => lambdaEnv += ("%" -> p)
-          case None => lambdaEnv -= "%"
-        }
-        try f finally { lambdaEnv = se; inLambda = si }
+        parent: Option[TCol] = None): Option[Column => Column] =
+      // `%` resolves ONLY when this stage's caller supplied the parent
+      // (compileStagedPath Shape A — plain struct navigation, one level
+      // up is a single known column). Every other site leaves it unbound
+      // so a % inside nested/per-element/computed-base stages — where
+      // the parent is a DIFFERENT object per element — falls back to the
+      // interpreter (engine ancestry) instead of capturing a stale outer
+      // binding.
+      bodyFn(Seq("" -> et), parent.map("%" -> _).toSeq, pred, hide = Seq("%")).collect {
+        case (pf, BooleanType) => (e: Column) => pf(Seq(e))
+        case (pf, StringType) => (e: Column) => length(pf(Seq(e))) > lit(0)
       }
-      inCtx(TCol(lit(null).cast(et), et))(compile(pred)) match {
-        case Some(TCol(_, BooleanType)) =>
-          Some((e: Column) => inCtx(TCol(e, et))(compile(pred)).get.col)
-        case Some(TCol(_, StringType)) =>
-          Some((e: Column) => length(inCtx(TCol(e, et))(compile(pred)).get.col) > lit(0))
-        case _ => None
-      }
-    }
 
     /** A DYNAMIC (per-element computed) group-by key: any context-mode
       * compilable expression over the element that is STATICALLY a string —
@@ -2233,18 +2087,19 @@ object JsonataCompiler {
       * every other field onto the interpreter — where those fields are the
       * 3-10× losses. Same status as the member-field group-by (also ~0.5×
       * standalone, same measurement). */
-    private def ctxKey(kExpr: Ast, et: DataType): Option[Column => Column] = {
-      def inCtx[A](v: TCol)(f: => A): A = {
-        val (se, si) = (lambdaEnv, inLambda)
-        lambdaEnv += ("" -> v); inLambda = true
-        lambdaEnv -= "%"
-        try f finally { lambdaEnv = se; inLambda = si }
+    private def ctxKey(kExpr: Ast, et: DataType): Option[Column => Column] =
+      bodyFn(Seq("" -> et), Nil, kExpr, hide = Seq("%")).collect {
+        case (kf, StringType) => (e: Column) => kf(Seq(e))
       }
-      inCtx(TCol(lit(null).cast(et), et))(compile(kExpr)) match {
-        case Some(TCol(_, StringType)) =>
-          Some((e: Column) => inCtx(TCol(e, et))(compile(kExpr)).get.col)
-        case _ => None
-      }
+
+    /** One sort term's comparison, the engine's: undefined keys last, and a
+      * descending term negates the WHOLE comparison (null placement
+      * included). */
+    private def termCmp(ka: Column, kb: Column, desc: Boolean): Column = {
+      val base = when(ka.isNull && kb.isNull, lit(0))
+        .when(ka.isNull, lit(1)).when(kb.isNull, lit(-1))
+        .when(ka < kb, lit(-1)).when(ka > kb, lit(1)).otherwise(lit(0))
+      if (desc) base * lit(-1) else base
     }
 
     /** `value.arr^(t1, t2)` -> array_sort with an explicit comparator that
@@ -2266,15 +2121,7 @@ object JsonataCompiler {
         else {
           val ks = keyed.flatten
           val cmp = (a: Column, b: Column) => {
-            val cs = ks.map { case (kf, desc) =>
-              val (ka, kb) = (kf(a), kf(b))
-              // the engine negates the WHOLE comparison (null placement
-              // included) for a descending term — so does this
-              val base = when(ka.isNull && kb.isNull, lit(0))
-                .when(ka.isNull, lit(1)).when(kb.isNull, lit(-1))
-                .when(ka < kb, lit(-1)).when(ka > kb, lit(1)).otherwise(lit(0))
-              if (desc) base * lit(-1) else base
-            }
+            val cs = ks.map { case (kf, desc) => termCmp(kf(a), kf(b), desc) }
             cs.reduceRight((c, acc) => when(c =!= 0, c).otherwise(acc))
           }
           // an empty sort result is the engine's empty SEQUENCE, not an
@@ -2476,11 +2323,9 @@ object JsonataCompiler {
         case _ => None
       }
 
-    /** Struct-object operand rendered as named output columns — a dropped
-      * field is a NULL column (= decoding the engine's key-absent JSON). */
-    def structObjOutputs(a: Ast): Option[Seq[(String, Column)]] =
-      compileStructObj(a).map(_.map(f => f.name -> when(f.keep, f.col)))
-
+    /** Struct-object operand rendered as named, typed output columns — a
+      * dropped field is a NULL column (= decoding the engine's key-absent
+      * JSON). */
     def structObjOutputsTyped(a: Ast): Option[Seq[(String, Column, DataType)]] =
       compileStructObj(a).map(_.map(f => (f.name, when(f.keep, f.col), f.dt)))
 
@@ -2627,7 +2472,7 @@ object JsonataCompiler {
       // post-inlineBinds shape of `($f := function($v){...}; x ~> $f)`.
       // The engine invokes the lambda with the piped value as its single
       // argument (evalApply non-Call branch → invoke(fn, Seq(lhs), ctx)).
-      // compileLambda's param-only scope is CONSERVATIVE here: the engine
+      // bodyFn's param-only scope is CONSERVATIVE here: the engine
       // passes the current context through, so a body referencing `value.*`
       // or `$` would resolve in the engine — those fall back (inLambda
       // blocks them) rather than compile wrongly. An undefined operand binds
@@ -2637,7 +2482,7 @@ object JsonataCompiler {
       // (Signature.validate) — not modeled, interpreted.
       case ApplyOp(l, Lambda(Vector(p), body, None)) =>
         compile(l).flatMap { lc =>
-          compileLambda(p, lc.dt, body).map { case (f, rt) => TCol(f(lc.col), rt) }
+          bodyFn(Seq(p -> lc.dt), Nil, body).map { case (f, rt) => TCol(f(Seq(lc.col)), rt) }
         }
       // `x ~> /re/` — a regex literal is applicable as a function: the
       // FIRST match object or undefined (evalApply Pattern branch →
@@ -3074,13 +2919,13 @@ object JsonataCompiler {
               if (args.length == 3) Some(Int.MaxValue)
               else intLit(3).collect { case l if l >= 0 && l <= Int.MaxValue => l.toInt }
             val et = RegexMatchAll.resultType.asInstanceOf[ArrayType].elementType
-            (limOpt, compileLambda(pm, et, body)) match {
+            (limOpt, bodyFn(Seq(pm -> et), Nil, body)) match {
               case (Some(lim), Some((bf, StringType))) =>
                 val re = JsonataCompiler.regexStr(p)
                 val ms = RegexMatchAll.column(t.col, p.pattern, p.flags, lim)
                 val segs = split(t.col, re, if (lim == Int.MaxValue) -1 else lim + 1)
                 def repC(m: Column): Column = {
-                  val r = bf(m)
+                  val r = bf(Seq(m))
                   when(r.isNotNull, r).otherwise(raise_error(
                     lit("D3012: $replace replacement function must return a string"))
                     .cast(StringType))
@@ -3167,21 +3012,11 @@ object JsonataCompiler {
             case Some(StrLit(s2)) => Some(s2)
             case _ => None
           }
-          (args.headOption, sep) match {
-            case (Some(sp @ Call(VarRef("split" | "keys" | "each" | "map"), _)), Some(s2)) =>
-              compile(sp).collect {
-                case t if t.dt == ArrayType(StringType) ||
-                    t.dt == ArrayType(StringType, containsNull = true) =>
-                  TCol(array_join(t.col, s2), StringType)
-              }
+          def nullFree(src: Ast): Boolean = src match {
+            case Call(VarRef("split" | "keys" | "each" | "map"), _) => true
             // descendant search results are null-FILTERED by construction
             // (compileDescendantPath), so they join like the HOF sources
-            case (Some(dp: Path), Some(s2)) if dp.steps.exists(_.expr == Descendant()) =>
-              compile(dp).collect {
-                case t if t.dt == ArrayType(StringType) ||
-                    t.dt == ArrayType(StringType, containsNull = true) =>
-                  TCol(array_join(t.col, s2), StringType)
-              }
+            case dp: Path if dp.steps.exists(_.expr == Descendant()) => true
             // a terminal wildcard over an ALL-SCALAR struct is null-free by
             // construction (absent keys filter; only array-element splices
             // and map values can carry explicit nulls, and those bases
@@ -3189,25 +3024,21 @@ object JsonataCompiler {
             // preserved); a wildcard with a TRAILING NAME step is
             // null-FILTERED by construction ONLY for all-scalar f
             // occurrences (wcNameTargetScalarOnly — an array-typed f
-            // splices with its null elements KEPT since round 13, which
-            // array_join would skip where the engine raises)
-            case (Some(wp @ Path(wsteps, false, None)), Some(s2))
-                if (wsteps.lastOption.exists(_.expr == Wildcard()) &&
-                  wsteps.init.map(_.expr).headOption.contains(NameStep("value")) &&
-                  wsteps.init.map(_.expr).forall(_.isInstanceOf[NameStep]) &&
-                  fieldType(wsteps.init.map(_.expr).tail.collect {
-                    case NameStep(n) => n
-                  }).exists {
-                    case st: StructType => st.fields.forall(f =>
-                      !f.dataType.isInstanceOf[ArrayType] &&
-                        !f.dataType.isInstanceOf[MapType])
-                    case _ => false
-                  }) ||
-                  wcNameTargetScalarOnly(wsteps) =>
-              compile(wp).collect {
-                case t if t.dt == ArrayType(StringType) ||
-                    t.dt == ArrayType(StringType, containsNull = true) =>
-                  TCol(array_join(t.col, s2), StringType)
+            // splices with its null elements KEPT, which array_join would
+            // skip where the engine raises)
+            case Path(wsteps, false, None) =>
+              (wsteps.lastOption.exists(_.expr == Wildcard()) &&
+                valueNames(wsteps.init.map(_.expr)).flatMap(fieldType).exists {
+                  case st: StructType => st.fields.forall(f =>
+                    !f.dataType.isInstanceOf[ArrayType] && !f.dataType.isInstanceOf[MapType])
+                  case _ => false
+                }) || wcNameTargetScalarOnly(wsteps)
+            case _ => false
+          }
+          (args.headOption, sep) match {
+            case (Some(src), Some(s2)) if nullFree(src) =>
+              compile(src).collect {
+                case t if t.dt == ArrayType(StringType) => TCol(array_join(t.col, s2), StringType)
               }
             case _ => None
           }
@@ -3278,13 +3109,7 @@ object JsonataCompiler {
                       case None => identity
                       case Some(f) => (e: Column) => e.getField(f)
                     }
-                    val cmp = (a2: Column, b2: Column) => {
-                      val (ka, kb) = (kf(a2), kf(b2))
-                      val base = when(ka.isNull && kb.isNull, lit(0))
-                        .when(ka.isNull, lit(1)).when(kb.isNull, lit(-1))
-                        .when(ka < kb, lit(-1)).when(ka > kb, lit(1)).otherwise(lit(0))
-                      if (asc) base else base * lit(-1)
-                    }
+                    val cmp = (a2: Column, b2: Column) => termCmp(kf(a2), kf(b2), desc = !asc)
                     TCol(emptyAsNull(array_sort(t.col, cmp)), at) // empty = undefined
                   }
                 case _ => None

@@ -189,6 +189,23 @@ class EdgeCaseSpec extends AnyFunSuite {
       Jsonata.compile("[" * (limit + 1) + "]" * (limit + 1))).code == "S0218")
   }
 
+  test("an expression nested MaxNesting deep evaluates on a 1 MB thread stack; one level more is S0218") {
+    val limit = Parser.MaxNesting
+    def onSmallStack(src: String): Any = {
+      var out: Any = null
+      val t = new Thread(null, () =>
+        out = try Jsonata.evalString(src, "{}") catch { case e: Throwable => e }, "nesting", 1L << 20)
+      t.start(); t.join()
+      out
+    }
+    // `limit - 1` brackets around a literal nest `limit` levels deep
+    assert(onSmallStack("(" * (limit - 1) + "1" + ")" * (limit - 1)) == "1")
+    assert(onSmallStack("[" * (limit - 1) + "1" + "]" * (limit - 1)) ==
+      "[" * (limit - 1) + "1" + "]" * (limit - 1))
+    assert(intercept[JsonataException](
+      Jsonata.compile("(" * limit + "1" + ")" * limit)).code == "S0218")
+  }
+
   // ---- the eval timeout bounds regex built-ins ----
   test("a catastrophically backtracking regex ends in U1001 within 3x the timeout") {
     // 28 'a's then 'b': `(.*a){22}$` tries every way to split the a's before failing

@@ -117,8 +117,10 @@ class FuzzDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Compile-rate floors are calibrated to the RECORDED seeds (they catch
     * grammar rot, not randomness): exploratory offsets check agreement only
     * — a different seed legitimately draws more out-of-subset shapes. */
-  private def assertRate(actual: Int, floor: Int, msg: => String): Unit =
+  private def assertRate(actual: Int, floor: Int, msg: => String): Unit = {
+    info(s"compiled: $actual (floor $floor)")
     if (seedOff == 0L) assert(actual >= floor, msg)
+  }
 
   private var spark: SparkSession = _
 
