@@ -48,6 +48,10 @@ final case class CSchema(
     valueSchema: CSchema = null, // MAP / ARRAY
     fields: Vector[CField] = null) { // STRUCT only
 
+  // Schemas key RecordCodec's memo: hash the (immutable) tree once, not on
+  // every lookup. `equals` stays generated and returns early on `eq`.
+  override lazy val hashCode: Int = scala.util.hashing.MurmurHash3.productHash(this)
+
   def field(fname: String): CField = {
     if (fields == null) throw new DataException(s"$ctype schema has no fields")
     fields.find(_.name == fname).getOrElse(
@@ -137,23 +141,27 @@ object Logical {
   * reference delegates to Values.dateFormatFor/parseString,
   * JsonataTransformation.java:237-241, 588). All UTC. */
 object CValues {
-  private val DatePattern = "yyyy-MM-dd"
-  private val TimePattern = "HH:mm:ss.SSS'Z'"
-  private val TimestampPattern = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
   private val Utc = java.util.TimeZone.getTimeZone("UTC")
 
-  private def fmt(pattern: String): java.text.SimpleDateFormat = {
-    val f = new java.text.SimpleDateFormat(pattern)
-    f.setTimeZone(Utc)
-    f
-  }
+  // SimpleDateFormat is costly to build and not thread-safe: one per pattern
+  // per thread. (java.time would change lenient parsing, the Julian calendar
+  // before 1582 and years above 9999.)
+  private def utc(pattern: String): ThreadLocal[java.text.SimpleDateFormat] =
+    ThreadLocal.withInitial { () =>
+      val f = new java.text.SimpleDateFormat(pattern)
+      f.setTimeZone(Utc)
+      f
+    }
+  private val DateFormat = utc("yyyy-MM-dd")
+  private val TimeFormat = utc("HH:mm:ss.SSS'Z'")
+  private val TimestampFormat = utc("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
 
   /** Pick the ISO form by the millis content (Connect Values.dateFormatFor). */
   def formatDate(d: java.util.Date): String = {
     val t = d.getTime
-    if (t < Logical.MillisPerDay) fmt(TimePattern).format(d)
-    else if (t % Logical.MillisPerDay == 0) fmt(DatePattern).format(d)
-    else fmt(TimestampPattern).format(d)
+    if (t < Logical.MillisPerDay) TimeFormat.get().format(d)
+    else if (t % Logical.MillisPerDay == 0) DateFormat.get().format(d)
+    else TimestampFormat.get().format(d)
   }
 
   private val DateRe = "^\\d{4}-\\d{2}-\\d{2}$".r
@@ -165,9 +173,9 @@ object CValues {
   def parseDateString(s: String): java.util.Date = {
     try {
       s match {
-        case DateRe() => fmt(DatePattern).parse(s)
-        case TimeRe() => fmt(TimePattern).parse(if (s.endsWith("Z")) s else s + "Z")
-        case TimestampRe() => fmt(TimestampPattern).parse(if (s.endsWith("Z")) s else s + "Z")
+        case DateRe() => DateFormat.get().parse(s)
+        case TimeRe() => TimeFormat.get().parse(if (s.endsWith("Z")) s else s + "Z")
+        case TimestampRe() => TimestampFormat.get().parse(if (s.endsWith("Z")) s else s + "Z")
         case _ => null
       }
     } catch { case _: java.text.ParseException => null }

@@ -2,6 +2,7 @@ package graft.connect
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node._
+import graft.jsonata.LruCache
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
@@ -16,9 +17,58 @@ import scala.jdk.CollectionConverters._
   *
   * Schemas are reified as data ("schema-as-data") so expressions can rewrite
   * them; decode is structural-first (valueSchema => MAP/ARRAY, else `type`).
+  *
+  * Schema work is done once per schema, not once per record:
+  *  - Schema nodes are shared and read-only. `recordToJsonNode` puts one
+  *    memoized node per schema (equal schemas share one) into every
+  *    envelope; the evaluator never mutates its input (`~>|…|` deep-copies,
+  *    `$merge`/`$sift` build new nodes; EvaluatorPuritySpec pins this).
+  *  - The decoder reuses a schema only by identity, where the round trip is
+  *    exact. When a schema node in the result is the very node encoded for
+  *    one of the original record's schemas, at any depth, `jsonNodeToRecord`
+  *    returns the `CSchema` that node was encoded from, provided decoding
+  *    the node gives an equal schema of the same representation. A
+  *    `CStruct`, `java.util.List` or `ByteBuffer` default, for example,
+  *    decodes to another form, so its schema is rebuilt, as is every node
+  *    the expression built.
+  * The public `schemaToJsonNode` and `jsonNodeToSchema` stay a full encode
+  * and a full decode.
   */
 object RecordCodec {
   private val nf = JsonNodeFactory.instance
+
+  /** One schema's encoding: its `node`, shared by every envelope that
+    * carries the schema, and `exact`, each schema node of that tree whose
+    * decode is exactly the `CSchema` it encodes, mapped to that schema. */
+  private final class Encoded(val node: ObjectNode, val exact: java.util.IdentityHashMap[JsonNode, CSchema])
+
+  /** Schemas memoized; like the expression cache's, a fixed bound. */
+  private val MaxSchemas = 100
+  private val encodings = new LruCache[CSchema, Encoded](MaxSchemas, { s =>
+    val exact = new java.util.IdentityHashMap[JsonNode, CSchema]()
+    new Encoded(encodeSchema(s, exact), exact)
+  })
+
+  /** The decoder's reuse table: a node-identity lookup over the `exact`
+    * maps of the schemas one record carries. */
+  private final class Reuse(tables: Array[java.util.IdentityHashMap[JsonNode, CSchema]]) {
+    def apply(n: JsonNode): CSchema = {
+      var i = 0
+      while (i < tables.length) {
+        val s = tables(i).get(n)
+        if (s != null) return s
+        i += 1
+      }
+      null
+    }
+  }
+  private val NoReuse = new Reuse(Array.empty)
+
+  private def reuseOf(r: CRecord): Reuse = {
+    val headerSchemas = if (r.headers == null) Iterator.empty else r.headers.iterator.map(_.schema)
+    val schemas = (Iterator(r.keySchema, r.valueSchema) ++ headerSchemas).filter(_ != null)
+    new Reuse(schemas.map(encodings(_).exact).toArray)
+  }
 
   // ================================================================
   // encode
@@ -29,16 +79,28 @@ object RecordCodec {
     node.put("topic", r.topic)
     if (r.kafkaPartition == null) node.putNull("kafkaPartition")
     else node.put("kafkaPartition", r.kafkaPartition.intValue())
-    if (r.keySchema != null) node.set[JsonNode]("keySchema", schemaToJsonNode(r.keySchema))
+    if (r.keySchema != null) node.set[JsonNode]("keySchema", encodings(r.keySchema).node)
     if (r.key != null) node.set[JsonNode]("key", objectToJsonNode(r.key))
-    if (r.valueSchema != null) node.set[JsonNode]("valueSchema", schemaToJsonNode(r.valueSchema))
+    if (r.valueSchema != null) node.set[JsonNode]("valueSchema", encodings(r.valueSchema).node)
     if (r.value != null) node.set[JsonNode]("value", objectToJsonNode(r.value))
     if (r.timestamp != null) node.put("timestamp", r.timestamp.longValue())
     if (r.headers != null) node.set[JsonNode]("headers", headersToJsonNode(r.headers))
     node
   }
 
-  def schemaToJsonNode(s: CSchema): ObjectNode = {
+  def schemaToJsonNode(s: CSchema): ObjectNode = encodeSchema(s, null)
+
+  /** Encode `s`; with `exact`, also record each node whose decode is exactly
+    * its schema. The walk is post-order, so a node's children are settled
+    * first: when all of them are exact, decoding the node takes them from
+    * `exact` and costs one level; when one is not, neither is the node. */
+  private def encodeSchema(s: CSchema, exact: java.util.IdentityHashMap[JsonNode, CSchema]): ObjectNode = {
+    var childrenExact = true
+    def child(c: CSchema): ObjectNode = {
+      val n = encodeSchema(c, exact)
+      if (exact != null && !exact.containsKey(n)) childrenExact = false
+      n
+    }
     val node = nf.objectNode()
     node.put("type", s.ctype.typeName)
     if (s.optional) node.put("optional", true)
@@ -52,21 +114,38 @@ object RecordCodec {
       node.set[JsonNode]("parameters", p)
     }
     if (s.ctype == CType.MAP && s.keySchema != null)
-      node.set[JsonNode]("keySchema", schemaToJsonNode(s.keySchema))
+      node.set[JsonNode]("keySchema", child(s.keySchema))
     if ((s.ctype == CType.MAP || s.ctype == CType.ARRAY) && s.valueSchema != null)
-      node.set[JsonNode]("valueSchema", schemaToJsonNode(s.valueSchema))
+      node.set[JsonNode]("valueSchema", child(s.valueSchema))
     if (s.ctype == CType.STRUCT && s.fields != null) {
       val fs = nf.objectNode()
       s.fields.foreach { f =>
         val fn = nf.objectNode()
         fn.put("name", f.name)
         fn.put("index", f.index)
-        if (f.schema != null) fn.set[JsonNode]("schema", schemaToJsonNode(f.schema))
+        if (f.schema != null) fn.set[JsonNode]("schema", child(f.schema))
         fs.set[JsonNode](f.name, fn)
       }
       node.set[JsonNode]("fields", fs)
     }
+    if (exact != null && childrenExact) {
+      val d = decodeSchema(node, new Reuse(Array(exact)))
+      if (d == s && sameValue(d.defaultValue, s.defaultValue)) exact.put(node, s)
+    }
     node
+  }
+
+  /** Equal and of one representation throughout: `==` alone equates 12 and
+    * 12L, or a `List` and a `Vector`. */
+  private def sameValue(a: Any, b: Any): Boolean = (a, b) match {
+    case (null, null) => true
+    case (x: scala.collection.Seq[_], y: scala.collection.Seq[_]) =>
+      x.getClass == y.getClass && x.length == y.length && x.lazyZip(y).forall(sameValue)
+    case (x: scala.collection.Map[_, _], y: scala.collection.Map[_, _]) =>
+      x.getClass == y.getClass && x.size == y.size && x.iterator.zip(y.iterator).forall {
+        case ((xk, xv), (yk, yv)) => xk == yk && sameValue(xv, yv)
+      }
+    case _ => a != null && b != null && a.getClass == b.getClass && a == b
   }
 
   /** Typed value -> JSON, preserving the numeric tower exactly
@@ -117,7 +196,7 @@ object RecordCodec {
       val o = nf.objectNode()
       o.put("key", h.key)
       if (h.value != null) o.set[JsonNode]("value", objectToJsonNode(h.value))
-      if (h.schema != null) o.set[JsonNode]("schema", schemaToJsonNode(h.schema))
+      if (h.schema != null) o.set[JsonNode]("schema", encodings(h.schema).node)
       arr.add(o)
     }
     arr
@@ -134,24 +213,30 @@ object RecordCodec {
     val topic = if (node.hasNonNull("topic")) node.get("topic").asText() else null
     val kafkaPartition: Integer =
       if (node.hasNonNull("kafkaPartition")) Integer.valueOf(node.get("kafkaPartition").asInt()) else Integer.valueOf(-1)
-    val keySchema = if (node.hasNonNull("keySchema")) jsonNodeToSchema(node.get("keySchema")) else null
+    val reuse = reuseOf(original)
+    val keySchema = if (node.hasNonNull("keySchema")) decodeSchema(node.get("keySchema"), reuse) else null
     val key = if (node.hasNonNull("key")) jsonNodeToObject(keySchema, node.get("key")) else null
-    val valueSchema = if (node.hasNonNull("valueSchema")) jsonNodeToSchema(node.get("valueSchema")) else null
+    val valueSchema = if (node.hasNonNull("valueSchema")) decodeSchema(node.get("valueSchema"), reuse) else null
     val value = if (node.hasNonNull("value")) jsonNodeToObject(valueSchema, node.get("value")) else null
     val timestamp: java.lang.Long =
       if (node.hasNonNull("timestamp")) java.lang.Long.valueOf(node.get("timestamp").asLong()) else null
-    val headers = if (node.hasNonNull("headers")) jsonNodeToHeaders(node.get("headers")) else null
+    val headers = if (node.hasNonNull("headers")) jsonNodeToHeaders(node.get("headers"), reuse) else null
     CRecord(topic, kafkaPartition, keySchema, key, valueSchema, value, timestamp, headers, original.meta)
   }
 
   /** Structural-first schema decode (reference jsonNodeToSchema:361-408). */
-  def jsonNodeToSchema(node: JsonNode): CSchema = {
+  def jsonNodeToSchema(node: JsonNode): CSchema = decodeSchema(node, NoReuse)
+
+  /** `jsonNodeToSchema`, taking any node `reuse` knows, at any depth, from it. */
+  private def decodeSchema(node: JsonNode, reuse: Reuse): CSchema = {
     if (node == null || node.isNull) return null
+    val known = reuse(node)
+    if (known != null) return known
     var s: CSchema =
       if (node.hasNonNull("valueSchema")) {
-        val valueSchema = jsonNodeToSchema(node.get("valueSchema"))
+        val valueSchema = decodeSchema(node.get("valueSchema"), reuse)
         if (node.hasNonNull("keySchema"))
-          CSchema(CType.MAP, keySchema = jsonNodeToSchema(node.get("keySchema")), valueSchema = valueSchema)
+          CSchema(CType.MAP, keySchema = decodeSchema(node.get("keySchema"), reuse), valueSchema = valueSchema)
         else CSchema(CType.ARRAY, valueSchema = valueSchema)
       } else if (node.hasNonNull("type")) {
         CSchema(CType.forName(node.get("type").asText()))
@@ -173,7 +258,7 @@ object RecordCodec {
         val fnode = e.getValue
         if (!fnode.hasNonNull("name") || !fnode.hasNonNull("index"))
           throw new DataException("Field node must have 'name' and 'index'")
-        val fschema = if (fnode.hasNonNull("schema")) jsonNodeToSchema(fnode.get("schema")) else null
+        val fschema = if (fnode.hasNonNull("schema")) decodeSchema(fnode.get("schema"), reuse) else null
         CField(e.getKey, i, fschema)
       }.toVector
       s = s.copy(fields = fields)
@@ -183,9 +268,9 @@ object RecordCodec {
     s
   }
 
-  private def jsonNodeToHeaders(node: JsonNode): Vector[CHeader] =
+  private def jsonNodeToHeaders(node: JsonNode, reuse: Reuse): Vector[CHeader] =
     node.elements().asScala.map { item =>
-      val schema = if (item.hasNonNull("schema")) jsonNodeToSchema(item.get("schema")) else null
+      val schema = if (item.hasNonNull("schema")) decodeSchema(item.get("schema"), reuse) else null
       val value = if (item.has("value")) jsonNodeToObject(schema, item.get("value")) else null
       CHeader(item.get("key").asText(), value, schema)
     }.toVector

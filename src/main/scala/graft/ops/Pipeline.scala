@@ -81,7 +81,9 @@ object Pipeline {
     * own job group described "`prefix`: label". On the first failure every
     * group's running and future jobs are cancelled, and every thunk is
     * awaited before the failure is rethrown: no sibling job outlives the
-    * call. */
+    * call. A cancelled job's caller wakes before the scheduler posts the
+    * job's end, so the rethrow also waits (up to 30 s) until the status
+    * tracker shows no job of these groups running. */
   private[ops] def concurrently(s: SparkSession, prefix: String)(jobs: (String, () => Any)*): Unit = {
     import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
     val sc = s.sparkContext
@@ -102,7 +104,14 @@ object Pipeline {
           if (failure == null) { failure = e.getCause; groups.foreach(sc.cancelJobGroupAndFutureJobs) }
         }
       }
-      if (failure != null) throw failure
+      if (failure != null) {
+        val tracker = sc.statusTracker
+        def running = groups.exists(g => tracker.getJobIdsForGroup(g).exists(id =>
+          tracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING)))
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (running && System.nanoTime() < deadline) Thread.sleep(10)
+        throw failure
+      }
     } finally pool.shutdown()
   }
 

@@ -17,6 +17,8 @@ final case class Q(
     oracle: Option[String])
 
 object Tables {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Fallback schema for the LEGACY events fixture generation, whose `ts` was
     * parquet INT64 TIMESTAMP(NANOS): Spark's schema *inference* refuses that
     * type (PARQUET_TYPE_ILLEGAL) unless the session-wide legacy `nanosAsLong`
@@ -161,7 +163,10 @@ object Tables {
     * `maxPartitionBytes`, so a few big splittable files parallelize fine on
     * their own and must not be rewarded with a full-table shuffle (file COUNT
     * alone would do exactly that). File stats are driver-side listings with an
-    * early exit once the estimate clears the target — no physical planning. */
+    * early exit once the estimate clears the target — no physical planning.
+    * A file that cannot be statted makes the estimate meaningless: spread
+    * logs it and repartitions to `defaultParallelism`, as it did before the
+    * estimate existed. */
   def spread(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val target = sc.defaultParallelism
@@ -180,10 +185,16 @@ object Tables {
     val maxBytes = conf("spark.sql.files.maxPartitionBytes", "128MB")
     val openCost = conf("spark.sql.files.openCostInBytes", "4MB")
     val hconf = sc.hadoopConfiguration
-    val lens = files.map { f =>
+    val stats = files.map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
-      try p.getFileSystem(hconf).getFileStatus(p).getLen catch { case _: Exception => 0L }
+      scala.util.Try(p.getFileSystem(hconf).getFileStatus(p).getLen)
     }
+    val failed = stats.indexWhere(_.isFailure)
+    if (failed >= 0) {
+      log.warn(s"spread: cannot stat ${files(failed)} (${stats(failed).failed.get}); repartitioning to $target")
+      return df.repartition(target)
+    }
+    val lens = stats.map(_.get)
     val bytesPerCore = (lens.sum + openCost * files.length) / math.max(target, 1)
     val maxSplit = math.min(maxBytes, math.max(openCost, bytesPerCore))
     val splits = lens.map(len => math.max(1L, (len + maxSplit - 1) / maxSplit)).sum
