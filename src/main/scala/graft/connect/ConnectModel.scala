@@ -49,7 +49,7 @@ final case class CSchema(
     fields: Vector[CField] = null) { // STRUCT only
 
   // Schemas key RecordCodec's memo: hash the (immutable) tree once, not on
-  // every lookup. `equals` stays generated and returns early on `eq`.
+  // every lookup.
   override lazy val hashCode: Int = scala.util.hashing.MurmurHash3.productHash(this)
 
   def field(fname: String): CField = {

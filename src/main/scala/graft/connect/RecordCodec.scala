@@ -18,57 +18,48 @@ import scala.jdk.CollectionConverters._
   * Schemas are reified as data ("schema-as-data") so expressions can rewrite
   * them; decode is structural-first (valueSchema => MAP/ARRAY, else `type`).
   *
-  * Schema work is done once per schema, not once per record:
+  * Schema work is done once per schema, not once per record, which pays
+  * where records repeat a few schemas (at most `MaxSchemas` in rotation):
   *  - Schema nodes are shared and read-only. `recordToJsonNode` puts one
-  *    memoized node per schema (equal schemas share one) into every
-  *    envelope; the evaluator never mutates its input (`~>|…|` deep-copies,
-  *    `$merge`/`$sift` build new nodes; EvaluatorPuritySpec pins this).
+  *    memoized node per schema into every envelope; two schemas share a
+  *    node only when they have one form throughout (`sameSchema`: parameter
+  *    order and each default's classes and order count, not only `==`). The
+  *    evaluator never mutates its input (`~>|…|` deep-copies, `$merge`/
+  *    `$sift` build new nodes; EvaluatorPuritySpec pins this).
   *  - The decoder reuses a schema only by identity, where the round trip is
-  *    exact. When a schema node in the result is the very node encoded for
-  *    one of the original record's schemas, at any depth, `jsonNodeToRecord`
-  *    returns the `CSchema` that node was encoded from, provided decoding
-  *    the node gives an equal schema of the same representation. A
-  *    `CStruct`, `java.util.List` or `ByteBuffer` default, for example,
-  *    decodes to another form, so its schema is rebuilt, as is every node
-  *    the expression built.
+  *    exact. Each shared schema node, at every depth, is a [[SchemaNode]]
+  *    that carries the `CSchema` it encodes. When the result holds such a
+  *    node, `jsonNodeToRecord` returns its `CSchema`, provided decoding the
+  *    node gives that schema in the same form; the first decode that meets
+  *    the node settles that. A `CStruct`, `java.util.List` or `ByteBuffer`
+  *    default, for example, decodes to another form, so its schema is
+  *    rebuilt, as is every node the expression built or copied.
   * The public `schemaToJsonNode` and `jsonNodeToSchema` stay a full encode
-  * and a full decode.
+  * (of plain nodes) and a full decode.
   */
 object RecordCodec {
   private val nf = JsonNodeFactory.instance
 
-  /** One schema's encoding: its `node`, shared by every envelope that
-    * carries the schema, and `exact`, each schema node of that tree whose
-    * decode is exactly the `CSchema` it encodes, mapped to that schema. */
-  private final class Encoded(val node: ObjectNode, val exact: java.util.IdentityHashMap[JsonNode, CSchema])
+  /** A memoized schema node: the encoding of `schema`, and whether decoding
+    * it gives exactly `schema`, unknown (null) until the first decode that
+    * meets the node. Decoders that race to settle it store one answer. */
+  private final class SchemaNode(val schema: CSchema) extends ObjectNode(nf) {
+    @volatile var exact: java.lang.Boolean = null
+  }
+
+  /** The memo's key: equal to another key only when both schemas have one
+    * form throughout, since the encoding keeps that form. */
+  private final class Key(val schema: CSchema) {
+    override def hashCode: Int = schema.hashCode
+    override def equals(o: Any): Boolean = o match {
+      case k: Key => sameSchema(schema, k.schema)
+      case _ => false
+    }
+  }
 
   /** Schemas memoized; like the expression cache's, a fixed bound. */
   private val MaxSchemas = 100
-  private val encodings = new LruCache[CSchema, Encoded](MaxSchemas, { s =>
-    val exact = new java.util.IdentityHashMap[JsonNode, CSchema]()
-    new Encoded(encodeSchema(s, exact), exact)
-  })
-
-  /** The decoder's reuse table: a node-identity lookup over the `exact`
-    * maps of the schemas one record carries. */
-  private final class Reuse(tables: Array[java.util.IdentityHashMap[JsonNode, CSchema]]) {
-    def apply(n: JsonNode): CSchema = {
-      var i = 0
-      while (i < tables.length) {
-        val s = tables(i).get(n)
-        if (s != null) return s
-        i += 1
-      }
-      null
-    }
-  }
-  private val NoReuse = new Reuse(Array.empty)
-
-  private def reuseOf(r: CRecord): Reuse = {
-    val headerSchemas = if (r.headers == null) Iterator.empty else r.headers.iterator.map(_.schema)
-    val schemas = (Iterator(r.keySchema, r.valueSchema) ++ headerSchemas).filter(_ != null)
-    new Reuse(schemas.map(encodings(_).exact).toArray)
-  }
+  private val encodings = new LruCache[Key, ObjectNode](MaxSchemas, k => encodeSchema(k.schema, shared = true))
 
   // ================================================================
   // encode
@@ -79,29 +70,20 @@ object RecordCodec {
     node.put("topic", r.topic)
     if (r.kafkaPartition == null) node.putNull("kafkaPartition")
     else node.put("kafkaPartition", r.kafkaPartition.intValue())
-    if (r.keySchema != null) node.set[JsonNode]("keySchema", encodings(r.keySchema).node)
+    if (r.keySchema != null) node.set[JsonNode]("keySchema", encodings(new Key(r.keySchema)))
     if (r.key != null) node.set[JsonNode]("key", objectToJsonNode(r.key))
-    if (r.valueSchema != null) node.set[JsonNode]("valueSchema", encodings(r.valueSchema).node)
+    if (r.valueSchema != null) node.set[JsonNode]("valueSchema", encodings(new Key(r.valueSchema)))
     if (r.value != null) node.set[JsonNode]("value", objectToJsonNode(r.value))
     if (r.timestamp != null) node.put("timestamp", r.timestamp.longValue())
     if (r.headers != null) node.set[JsonNode]("headers", headersToJsonNode(r.headers))
     node
   }
 
-  def schemaToJsonNode(s: CSchema): ObjectNode = encodeSchema(s, null)
+  def schemaToJsonNode(s: CSchema): ObjectNode = encodeSchema(s, shared = false)
 
-  /** Encode `s`; with `exact`, also record each node whose decode is exactly
-    * its schema. The walk is post-order, so a node's children are settled
-    * first: when all of them are exact, decoding the node takes them from
-    * `exact` and costs one level; when one is not, neither is the node. */
-  private def encodeSchema(s: CSchema, exact: java.util.IdentityHashMap[JsonNode, CSchema]): ObjectNode = {
-    var childrenExact = true
-    def child(c: CSchema): ObjectNode = {
-      val n = encodeSchema(c, exact)
-      if (exact != null && !exact.containsKey(n)) childrenExact = false
-      n
-    }
-    val node = nf.objectNode()
+  /** Encode `s`; `shared`, into a [[SchemaNode]] at every depth. */
+  private def encodeSchema(s: CSchema, shared: Boolean): ObjectNode = {
+    val node = if (shared) new SchemaNode(s) else nf.objectNode()
     node.put("type", s.ctype.typeName)
     if (s.optional) node.put("optional", true)
     if (s.defaultValue != null) node.set[JsonNode]("defaultValue", objectToJsonNode(s.defaultValue))
@@ -114,38 +96,58 @@ object RecordCodec {
       node.set[JsonNode]("parameters", p)
     }
     if (s.ctype == CType.MAP && s.keySchema != null)
-      node.set[JsonNode]("keySchema", child(s.keySchema))
+      node.set[JsonNode]("keySchema", encodeSchema(s.keySchema, shared))
     if ((s.ctype == CType.MAP || s.ctype == CType.ARRAY) && s.valueSchema != null)
-      node.set[JsonNode]("valueSchema", child(s.valueSchema))
+      node.set[JsonNode]("valueSchema", encodeSchema(s.valueSchema, shared))
     if (s.ctype == CType.STRUCT && s.fields != null) {
       val fs = nf.objectNode()
       s.fields.foreach { f =>
         val fn = nf.objectNode()
         fn.put("name", f.name)
         fn.put("index", f.index)
-        if (f.schema != null) fn.set[JsonNode]("schema", child(f.schema))
+        if (f.schema != null) fn.set[JsonNode]("schema", encodeSchema(f.schema, shared))
         fs.set[JsonNode](f.name, fn)
       }
       node.set[JsonNode]("fields", fs)
     }
-    if (exact != null && childrenExact) {
-      val d = decodeSchema(node, new Reuse(Array(exact)))
-      if (d == s && sameValue(d.defaultValue, s.defaultValue)) exact.put(node, s)
-    }
     node
   }
 
-  /** Equal and of one representation throughout: `==` alone equates 12 and
-    * 12L, or a `List` and a `Vector`. */
+  /** `a == b`, and in one form throughout: parameters in one order, and
+    * defaults alike as [[sameValue]] takes them, at every depth. */
+  private def sameSchema(a: CSchema, b: CSchema): Boolean =
+    (a eq b) || a != null && b != null && a.ctype == b.ctype && a.optional == b.optional &&
+      a.name == b.name && a.version == b.version && a.doc == b.doc &&
+      sameValue(a.parameters, b.parameters) && sameValue(a.defaultValue, b.defaultValue) &&
+      sameSchema(a.keySchema, b.keySchema) && sameSchema(a.valueSchema, b.valueSchema) &&
+      sameFields(a.fields, b.fields)
+
+  private def sameFields(a: Vector[CField], b: Vector[CField]): Boolean =
+    (a eq b) || a != null && b != null && a.length == b.length && a.lazyZip(b).forall { (x, y) =>
+      x.name == y.name && x.index == y.index && sameSchema(x.schema, y.schema)
+    }
+
+  /** Equal, with the same classes and the same order throughout: `==`
+    * alone equates 12 and 12L, 0.0 and -0.0, a `List` and a `Vector`, or two
+    * maps in different orders, which encode or decode differently. */
   private def sameValue(a: Any, b: Any): Boolean = (a, b) match {
     case (null, null) => true
     case (x: scala.collection.Seq[_], y: scala.collection.Seq[_]) =>
-      x.getClass == y.getClass && x.length == y.length && x.lazyZip(y).forall(sameValue)
+      x.getClass == y.getClass && sameElems(x.iterator, y.iterator)
     case (x: scala.collection.Map[_, _], y: scala.collection.Map[_, _]) =>
-      x.getClass == y.getClass && x.size == y.size && x.iterator.zip(y.iterator).forall {
-        case ((xk, xv), (yk, yv)) => xk == yk && sameValue(xv, yv)
-      }
-    case _ => a != null && b != null && a.getClass == b.getClass && a == b
+      x.getClass == y.getClass && sameElems(x.keysIterator, y.keysIterator) &&
+        sameElems(x.valuesIterator, y.valuesIterator)
+    case (x: java.util.List[_], y: java.util.List[_]) =>
+      x.getClass == y.getClass && sameElems(x.iterator.asScala, y.iterator.asScala)
+    case (x: java.util.Map[_, _], y: java.util.Map[_, _]) =>
+      x.getClass == y.getClass && sameElems(x.keySet.iterator.asScala, y.keySet.iterator.asScala) &&
+        sameElems(x.values.iterator.asScala, y.values.iterator.asScala)
+    case _ => a != null && b != null && a.getClass == b.getClass && a.asInstanceOf[AnyRef].equals(b)
+  }
+
+  private def sameElems(x: Iterator[Any], y: Iterator[Any]): Boolean = {
+    while (x.hasNext && y.hasNext) if (!sameValue(x.next(), y.next())) return false
+    !x.hasNext && !y.hasNext
   }
 
   /** Typed value -> JSON, preserving the numeric tower exactly
@@ -196,7 +198,7 @@ object RecordCodec {
       val o = nf.objectNode()
       o.put("key", h.key)
       if (h.value != null) o.set[JsonNode]("value", objectToJsonNode(h.value))
-      if (h.schema != null) o.set[JsonNode]("schema", encodings(h.schema).node)
+      if (h.schema != null) o.set[JsonNode]("schema", encodings(new Key(h.schema)))
       arr.add(o)
     }
     arr
@@ -213,25 +215,38 @@ object RecordCodec {
     val topic = if (node.hasNonNull("topic")) node.get("topic").asText() else null
     val kafkaPartition: Integer =
       if (node.hasNonNull("kafkaPartition")) Integer.valueOf(node.get("kafkaPartition").asInt()) else Integer.valueOf(-1)
-    val reuse = reuseOf(original)
-    val keySchema = if (node.hasNonNull("keySchema")) decodeSchema(node.get("keySchema"), reuse) else null
+    val keySchema = if (node.hasNonNull("keySchema")) decodeSchema(node.get("keySchema"), reuse = true) else null
     val key = if (node.hasNonNull("key")) jsonNodeToObject(keySchema, node.get("key")) else null
-    val valueSchema = if (node.hasNonNull("valueSchema")) decodeSchema(node.get("valueSchema"), reuse) else null
+    val valueSchema = if (node.hasNonNull("valueSchema")) decodeSchema(node.get("valueSchema"), reuse = true) else null
     val value = if (node.hasNonNull("value")) jsonNodeToObject(valueSchema, node.get("value")) else null
     val timestamp: java.lang.Long =
       if (node.hasNonNull("timestamp")) java.lang.Long.valueOf(node.get("timestamp").asLong()) else null
-    val headers = if (node.hasNonNull("headers")) jsonNodeToHeaders(node.get("headers"), reuse) else null
+    val headers = if (node.hasNonNull("headers")) jsonNodeToHeaders(node.get("headers")) else null
     CRecord(topic, kafkaPartition, keySchema, key, valueSchema, value, timestamp, headers, original.meta)
   }
 
   /** Structural-first schema decode (reference jsonNodeToSchema:361-408). */
-  def jsonNodeToSchema(node: JsonNode): CSchema = decodeSchema(node, NoReuse)
+  def jsonNodeToSchema(node: JsonNode): CSchema = decodeSchema(node, reuse = false)
 
-  /** `jsonNodeToSchema`, taking any node `reuse` knows, at any depth, from it. */
-  private def decodeSchema(node: JsonNode, reuse: Reuse): CSchema = {
-    if (node == null || node.isNull) return null
-    val known = reuse(node)
-    if (known != null) return known
+  /** `jsonNodeToSchema`; with `reuse`, taking each [[SchemaNode]] whose
+    * decode is exact, at any depth, as the schema it carries. */
+  private def decodeSchema(node: JsonNode, reuse: Boolean): CSchema = node match {
+    case null => null
+    case n: SchemaNode if reuse =>
+      val exact = n.exact
+      if (exact == null) {
+        val s = rebuildSchema(n, reuse)
+        val same = sameSchema(s, n.schema)
+        n.exact = same
+        if (same) n.schema else s
+      } else if (exact) n.schema
+      else rebuildSchema(n, reuse)
+    case n if n.isNull => null
+    case n => rebuildSchema(n, reuse)
+  }
+
+  /** Decode one level of `node`, its children through `decodeSchema`. */
+  private def rebuildSchema(node: JsonNode, reuse: Boolean): CSchema = {
     var s: CSchema =
       if (node.hasNonNull("valueSchema")) {
         val valueSchema = decodeSchema(node.get("valueSchema"), reuse)
@@ -268,9 +283,9 @@ object RecordCodec {
     s
   }
 
-  private def jsonNodeToHeaders(node: JsonNode, reuse: Reuse): Vector[CHeader] =
+  private def jsonNodeToHeaders(node: JsonNode): Vector[CHeader] =
     node.elements().asScala.map { item =>
-      val schema = if (item.hasNonNull("schema")) decodeSchema(item.get("schema"), reuse) else null
+      val schema = if (item.hasNonNull("schema")) decodeSchema(item.get("schema"), reuse = true) else null
       val value = if (item.has("value")) jsonNodeToObject(schema, item.get("value")) else null
       CHeader(item.get("key").asText(), value, schema)
     }.toVector

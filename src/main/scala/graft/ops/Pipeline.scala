@@ -82,8 +82,8 @@ object Pipeline {
     * group's running and future jobs are cancelled, and every thunk is
     * awaited before the failure is rethrown: no sibling job outlives the
     * call. A cancelled job's caller wakes before the scheduler posts the
-    * job's end, so the rethrow also waits (up to 30 s) until the status
-    * tracker shows no job of these groups running. */
+    * job's end, so the rethrow also waits (up to 30 s, then logs and gives
+    * up) until the status tracker shows no job of these groups running. */
   private[ops] def concurrently(s: SparkSession, prefix: String)(jobs: (String, () => Any)*): Unit = {
     import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
     val sc = s.sparkContext
@@ -110,6 +110,8 @@ object Pipeline {
           tracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING)))
         val deadline = System.nanoTime() + 30L * 1000000000L
         while (running && System.nanoTime() < deadline) Thread.sleep(10)
+        if (running) org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"concurrently($prefix): a cancelled job still runs after 30 s; rethrowing without it")
         throw failure
       }
     } finally pool.shutdown()

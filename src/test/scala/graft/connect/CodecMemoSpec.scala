@@ -39,6 +39,34 @@ class CodecMemoSpec extends AnyFunSuite {
     assert(RecordCodec.schemaToJsonNode(s) ne RecordCodec.schemaToJsonNode(s))
   }
 
+  test("schemas equal but for parameter order or a default's class keep their own form") {
+    import scala.collection.immutable.ListMap
+    import scala.jdk.CollectionConverters._
+    val dec = Logical.decimalSchema(2).copy(doc = "CodecMemoSpec form")
+    val decs = Seq(
+      dec.copy(parameters = ListMap("scale" -> "2", "connect.decimal.precision" -> "9")),
+      dec.copy(parameters = ListMap("connect.decimal.precision" -> "9", "scale" -> "2")))
+    val ints = Seq[Any](12L, 12).map(d => CSchema.INT64.copy(defaultValue = d, doc = "CodecMemoSpec form"))
+    val zeros = Seq[Any](0.0, -0.0).map(d => CSchema.FLOAT64.copy(defaultValue = d, doc = "CodecMemoSpec form"))
+    assert(decs(0) == decs(1) && ints(0) == ints(1) && zeros(0) == zeros(1))
+    for (i <- 0 to 1) {
+      val r = golden(java.math.BigDecimal.valueOf(314, 2), decs(i))
+      val order = decs(i).parameters.keys.toSeq
+      assert(RecordCodec.recordToJsonNode(r).get("valueSchema").get("parameters").fieldNames.asScala.toSeq == order)
+      assert(apply(r, "$").valueSchema.parameters.keys.toSeq == order)
+      val d = RecordCodec.recordToJsonNode(golden(1L, ints(i))).get("valueSchema").get("defaultValue")
+      assert(if (i == 0) d.isLong else d.isInt)
+      val z = RecordCodec.recordToJsonNode(golden(1.0, zeros(i))).get("valueSchema").get("defaultValue")
+      assert(java.lang.Double.valueOf(z.doubleValue).equals(zeros(i).defaultValue))
+      assert(apply(golden(1.0, zeros(i)), "$").valueSchema.defaultValue.equals(zeros(i).defaultValue))
+    }
+    // a schema built afresh in the same form shares the memoized node
+    val again = dec.copy(parameters = ListMap("scale" -> "2", "connect.decimal.precision" -> "9"))
+    assert(again ne decs(0))
+    assert(RecordCodec.recordToJsonNode(golden(null, again)).get("valueSchema") eq
+      RecordCodec.recordToJsonNode(golden(null, decs(0))).get("valueSchema"))
+  }
+
   test("$ and the tombstone config return the input's own schemas") {
     val s = own("passthrough")
     val r = smtRecord(1, s)
@@ -49,6 +77,10 @@ class CodecMemoSpec extends AnyFunSuite {
       assert(out.headers.head.schema eq r.headers.head.schema, expr)
       assert(sameRecord(out, r), expr)
     }
+    // a deep copy of the envelope shares no node: its schemas are decoded in full
+    val copied = RecordCodec.jsonNodeToRecord(r, RecordCodec.recordToJsonNode(r).deepCopy())
+    assert(copied.valueSchema ne s)
+    assert(sameRecord(copied, r))
   }
 
   test("removeEmail's schema equals a full decode of its node, and reuses the field schemas") {

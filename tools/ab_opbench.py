@@ -10,7 +10,10 @@ change/parent ratio of the medians, and the change's wins over the pairs.
 A metric is marked GAIN when the change wins at least nine tenths of the
 pairs (ties count for neither side) and the medians differ by more than the
 distance between the parent's quartiles; WORSE when the change's median is
-worse than the parent's by more than the benchmark's bound. Metric
+worse than the parent's by more than the benchmark's bound; UNRESOLVED when
+it is not, but the parent's own quartile distance is wider than the bound
+and some change run reads no better than some parent run; "within bound"
+otherwise. Metric
 directions and bounds come from the change's BENCHMARK.json. Nothing in
 either checkout is edited; run.py builds into each checkout's own opbench
 target and out directories.
@@ -88,8 +91,14 @@ def main():
         verdict = ""
         if wins >= 0.9 * len(p) and sign * (pm - cm) > p3 - p1:
             verdict = "GAIN"
-        elif k in bound and sign * (cm - pm) > bound[k] * abs(pm):
-            verdict = f"WORSE beyond bound {bound[k]}"
+        elif k in bound:
+            every_run_better = all(sign * (b - a) < 0 for a in p for b in c)
+            if sign * (cm - pm) > bound[k] * abs(pm):
+                verdict = f"WORSE beyond bound {bound[k]}"
+            elif p3 - p1 > bound[k] * abs(pm) and not every_run_better:
+                verdict = f"UNRESOLVED: parent spread {(p3 - p1) / abs(pm):.2f} > bound {bound[k]}"
+            else:
+                verdict = "within bound"
         print(f"{k:40} {pm:>14.4g} [{p1:>9.4g}, {p3:>9.4g}] {cm:>14.4g} [{c1:>9.4g}, {c3:>9.4g}] "
               f"{ratio:>6.3f} {wins:>3}/{len(p):<2}  {verdict}")
 
