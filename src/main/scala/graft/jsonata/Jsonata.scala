@@ -2,6 +2,8 @@ package graft.jsonata
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
+import graft.connect.JsonataTransform.Config
+
 /** Public API for the JSONata engine.
   *
   * {{{
@@ -20,7 +22,8 @@ final class JsonataExpr private[jsonata] (val source: String, val ast: Ast) exte
     new java.util.IdentityHashMap[Ast.Path, java.lang.Boolean]()
 
   /** Evaluate; a `null` return means "no result" (record drop / tombstone). */
-  def evaluate(input: JsonNode): JsonNode = evaluate(input, 5000L, 1000)
+  def evaluate(input: JsonNode): JsonNode =
+    evaluate(input, Config.DefaultTimeoutMs, Config.DefaultMaxDepth)
 
   def evaluate(input: JsonNode, timeoutMs: Long, maxDepth: Int,
                bindings: Map[String, JsonNode] = Map.empty): JsonNode = {

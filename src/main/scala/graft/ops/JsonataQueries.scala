@@ -103,9 +103,9 @@ object JsonataQueries {
       Some("""SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k
         FROM events ORDER BY event_id""")),
 
-    // ---- jx09: jx06's query through the NATIVE SQL functions — struct in, ----
+    // ---- jx09: jx06's query through the struct SQL surface — struct in,   ----
     // ---- typed struct out, zero JSON text ops per record (vs jx06's       ----
-    // ---- to_json + parse + serialize + from_json string-UDF surface)      ----
+    // ---- to_json + parse + serialize + from_json string surface)          ----
     Q("jx09_sql_typed",
       (s, d) => {
         graft.spark.JsonataFunctions.registerNativeSql(s)
@@ -679,10 +679,11 @@ object JsonataQueries {
             || ',' || source || ':' || CAST(n_chars AS VARCHAR) AS tags
         FROM documents ORDER BY doc_id""")),
 
-    // ---- jx06: same operator through the SQL registration (spark.sql path) ----
+    // ---- jx06: same operator through SQL `jsonata` over JSON text: the  ----
+    // ---- native evaluator with a string input (the name is historical) ----
     Q("jx06_sql_udf",
       (s, d) => {
-        graft.spark.JsonataFunctions.registerSql(s)
+        graft.spark.JsonataFunctions.registerNativeSql(s)
         val df = Tables.spread(t(s, d, "events"))
         df.createOrReplaceTempView("events_raw")
         s.sql("""

@@ -27,10 +27,8 @@ import org.apache.spark.sql.types.StructType
   * a same-named column in the FROM relation must not capture the
   * reference), then leaves analysis to finish resolving the native function
   * nodes — which is why this is a RESOLUTION rule, not an optimizer rule.
-  * Output conformance mirrors [[JsonataDF.auto]] exactly: declared fields
-  * cast from the compiled output of the same name, declared-but-absent
-  * fields become typed nulls (the interpreter decodes key-absent JSON the
-  * same way), extra compiled outputs drop. Interpreter semantics preserved:
+  * Output conformance is [[JsonataDF.auto]]'s, one definition
+  * ([[JsonataCompiler.CompiledQuery.typed]]). Interpreter semantics preserved:
   * a NULL input struct yields a NULL result row (nullSafeEval), and a
   * compiled tombstone condition (`cond ? {...}`) yields NULL exactly where
   * the engine returns JSON null.
@@ -60,8 +58,7 @@ case class JsonataCompileRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def rewrite(child: Expression, src: String, inSchema: StructType,
                       outSchema: StructType): Option[Expression] = {
-    val utc = spark.conf.get("spark.sql.session.timeZone", "") == "UTC"
-    JsonataCompiler.compileForSchema(inSchema, src, utcSession = utc).map { cq =>
+    JsonataCompiler.compileForSchema(inSchema, src, JsonataCompiler.utcSession(spark)).map { cq =>
       // Re-root every attribute leaf at the struct argument: the compiler
       // only emits schema-rooted `value.*` references, so every nameParts
       // chain grounds as nested extractions over `child` — a same-named
@@ -73,17 +70,7 @@ case class JsonataCompileRule(spark: SparkSession) extends Rule[LogicalPlan] {
               UnresolvedExtractValue(acc, Literal(part))
             }
         }
-      val outs = outSchema.fields.map { f =>
-        cq.outputs.find(_._1 == f.name) match {
-          case Some((_, c)) => bind(c.cast(f.dataType))
-          case None => Literal(null, f.dataType) // key-absent JSON decode
-        }
-      }
-      val structE = Shims.expressionEager(
-        org.apache.spark.sql.functions.struct(
-          outSchema.fields.zip(outs).map { case (f, ex) =>
-            Shims.column(ex).as(f.name)
-          }.toIndexedSeq: _*))
+      val structE = bind(org.apache.spark.sql.functions.struct(cq.typed(outSchema): _*))
       val nullRow = Literal(null, outSchema)
       val body = cq.filter.map(f => If(bind(f), structE, nullRow)).getOrElse(structE)
       If(IsNull(child), nullRow, body)

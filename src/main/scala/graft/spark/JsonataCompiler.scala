@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Add, Divide, EvalMode, Multiply, Remainder, Subtract, UnaryMinus => CUnaryMinus}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
@@ -45,14 +45,25 @@ object JsonataCompiler {
   import Ast._
 
   /** A compiled top-level query: optional tombstone filter + named outputs. */
-  final case class CompiledQuery(filter: Option[Column], outputs: Seq[(String, Column)])
+  final case class CompiledQuery(filter: Option[Column], outputs: Seq[(String, Column)]) {
+    /** The outputs conformed to a declared schema, the interpreter's decode
+      * of the result object: each declared field cast from the output of the
+      * same name, a declared field with no output a typed null (key-absent
+      * JSON), extra outputs dropped. */
+    def typed(schema: StructType): Seq[Column] = schema.fields.toSeq.map { f =>
+      outputs.find(_._1 == f.name).fold(lit(null))(_._2).cast(f.dataType).as(f.name)
+    }
+  }
+
+  /** Whether `spark` renders dates in UTC. $fromMillis renders through
+    * date_format, which follows the SESSION time zone where the engine
+    * always renders UTC — only a UTC session can compile it (others fall
+    * back to the interpreter, same results). */
+  def utcSession(spark: SparkSession): Boolean =
+    spark.conf.get("spark.sql.session.timeZone", "") == "UTC"
 
   def compileQuery(df: DataFrame, exprSource: String): Option[CompiledQuery] =
-    // $fromMillis renders through date_format, which follows the SESSION
-    // time zone where the engine always renders UTC — only a UTC session
-    // can compile it (others fall back to the interpreter, same results)
-    compileForSchema(df.schema, exprSource,
-      utcSession = df.sparkSession.conf.get("spark.sql.session.timeZone", "") == "UTC")
+    compileForSchema(df.schema, exprSource, utcSession(df.sparkSession))
 
   private val memo = new LruCache[(StructType, String, Boolean), Option[CompiledQuery]](512,
     { case (schema, exprSource, utcSession) => doCompileForSchema(schema, exprSource, utcSession) })
@@ -592,6 +603,13 @@ object JsonataCompiler {
       case _ => None
     }
 
+    /** Field `f` of a struct-typed column; None for an absent field or a
+      * non-struct type. */
+    private def fieldOf(t: TCol, f: String): Option[TCol] = t.dt match {
+      case st: StructType => st.fields.find(_.name == f).map(fl => TCol(t.col.getField(f), fl.dataType))
+      case _ => None
+    }
+
     /** Param-rooted path inside a lambda body: `$x` / `$x.price.net` — name
       * steps over the bound element only. When a CONTEXT element is bound
       * (the "" env key, set only while compiling a bracket-predicate stage —
@@ -612,28 +630,15 @@ object JsonataCompiler {
         !p.steps.last.keepArray && p.steps.last.focus.isEmpty &&
         p.steps.last.index.isEmpty &&
         p.steps.tail.forall(_.expr.isInstanceOf[NameStep])
-      var acc: Option[TCol] =
+      val head: Option[TCol] =
         if (!plain) None
         else p.steps.head.expr match {
           case VarRef(n) => lambdaEnv.get(n)
-          case NameStep(f) => lambdaEnv.get("").flatMap { ctx =>
-            ctx.dt match {
-              case st: StructType => st.fields.find(_.name == f)
-                .map(fl => TCol(ctx.col.getField(f), fl.dataType))
-              case _ => None
-            }
-          }
+          case NameStep(f) => lambdaEnv.get("").flatMap(fieldOf(_, f))
           case _ => None
         }
-      val it = p.steps.tail.iterator
-      while (acc.isDefined && it.hasNext) {
-        val f = it.next().expr.asInstanceOf[NameStep].name
-        acc = acc.get.dt match {
-          case st: StructType =>
-            st.fields.find(_.name == f)
-              .map(fl => TCol(acc.get.col.getField(f), fl.dataType))
-          case _ => None
-        }
+      val acc = p.steps.tail.foldLeft(head) { (acc, st) =>
+        acc.flatMap(fieldOf(_, st.expr.asInstanceOf[NameStep].name))
       }
       if (lastStages.isEmpty) acc
       else acc.flatMap { base =>
@@ -1949,9 +1954,7 @@ object JsonataCompiler {
         case (Some(acc), (st, i)) =>
           val NameStep(f) = st.expr: @unchecked
           acc.dt match {
-            case s2: StructType if st.stages.isEmpty =>
-              s2.fields.find(_.name == f)
-                .map(fl => TCol(acc.col.getField(f), fl.dataType))
+            case _: StructType if st.stages.isEmpty => fieldOf(acc, f)
             case s2: StructType =>
               s2.fields.find(_.name == f).flatMap(fl => fl.dataType match {
                 case ft: ArrayType =>
@@ -2275,20 +2278,8 @@ object JsonataCompiler {
         case Call(VarRef("count"), Vector(VarRef(""))) =>
           Some(((g: Column) => size(g).cast(LongType), LongType))
         case Call(VarRef(fn @ ("sum" | "min" | "max" | "average")), Vector(fieldAst)) =>
-          // the key extractor: a struct member field, or `$` for the element
-          val fl: Option[(Column => Column, DataType)] = fieldAst match {
-            case VarRef("") if simpleAtomic(et) && isNum(et) =>
-              Some((identity[Column] _, et))
-            case _ => relField(fieldAst).flatMap { f =>
-              et match {
-                case st: StructType => st.fields.find(_.name == f)
-                  .filter(x => simpleAtomic(x.dataType) && isNum(x.dataType))
-                  .map(x => (((e: Column) => e.getField(f)), x.dataType))
-                case _ => None
-              }
-            }
-          }
-          fl.map { case (extract, fdt) =>
+          // the key extractor: a numeric struct member field, or `$` for the element
+          elemKey(fieldAst, et).filter(k => isNum(k._2)).map { case (extract, fdt) =>
               val integral = isIntegral(fdt)
               // the field extraction stays a transform; the null-skip, cast
               // and fold collapse into the ONE codegen'd NumArrayFold pass
@@ -2369,12 +2360,7 @@ object JsonataCompiler {
       // a BARE field name inside a bracket-predicate stage (the parser
       // leaves single names as naked NameSteps there): resolves against the
       // per-item context element — the "" binding set by compilePredicate
-      case NameStep(f) if lambdaEnv.contains("") =>
-        lambdaEnv("").dt match {
-          case st: StructType => st.fields.find(_.name == f)
-            .map(fl => TCol(lambdaEnv("").col.getField(f), fl.dataType))
-          case _ => None
-        }
+      case NameStep(f) if lambdaEnv.contains("") => fieldOf(lambdaEnv(""), f)
       // field navigation over a NON-PATH struct-typed base —
       // `(x ~> /re/).match`, `(cond ? a : b).field`: plain name steps over
       // any compiled struct expression. Mirrors the engine's object
@@ -2390,11 +2376,8 @@ object JsonataCompiler {
             steps.forall(st => st.stages.isEmpty && st.focus.isEmpty &&
               st.index.isEmpty && !st.keepArray) &&
             steps.tail.forall(_.expr.isInstanceOf[NameStep]) =>
-        steps.tail.foldLeft(compile(steps.head.expr)) {
-          case (Some(TCol(c, st: StructType)), step) =>
-            val name = step.expr.asInstanceOf[NameStep].name
-            st.find(_.name == name).map(f => TCol(c.getField(name), f.dataType))
-          case _ => None
+        steps.tail.foldLeft(compile(steps.head.expr)) { (acc, step) =>
+          acc.flatMap(fieldOf(_, step.expr.asInstanceOf[NameStep].name))
         }
       // inside a lambda body only param-rooted paths resolve (the engine's
       // invocation context is null, so `value.*` there is undefined)
@@ -3087,28 +3070,22 @@ object JsonataCompiler {
             case (Some(t), Some(Lambda(Vector(pl, pr), Binary(op @ ("<" | ">"), lA, rA), _))) =>
               t.dt match {
                 case at @ ArrayType(et, _) =>
-                  def keyDesc(a2: Ast, param: String): Option[(Option[String], DataType)] = a2 match {
-                    case VarRef(`param`) if simpleAtomic(et) => Some((None, et))
-                    case Path(Vector(Step(VarRef(`param`), Vector(), false, None, None)),
-                        false, None) if simpleAtomic(et) => Some((None, et))
+                  // `$p` / `$p.f` as the element-context term [[elemKey]] reads
+                  def keyTerm(a2: Ast, param: String): Option[Ast] = a2 match {
+                    case VarRef(`param`) | Path(Vector(Step(VarRef(`param`), Vector(), false,
+                        None, None)), false, None) => Some(VarRef(""))
                     case Path(Vector(Step(VarRef(`param`), Vector(), false, None, None),
-                        Step(NameStep(f), Vector(), false, None, None)), false, None) =>
-                      et match {
-                        case st: StructType => st.fields.find(_.name == f)
-                          .filter(x => simpleAtomic(x.dataType)).map(fl => (Some(f), fl.dataType))
-                        case _ => None
-                      }
+                        Step(f: NameStep, Vector(), false, None, None)), false, None) => Some(f)
                     case _ => None
                   }
-                  val straight = for { kl <- keyDesc(lA, pl); kr <- keyDesc(rA, pr) }
+                  val straight = for { kl <- keyTerm(lA, pl); kr <- keyTerm(rA, pr) }
                     yield (kl, kr, op == ">")
-                  val crossed = for { kl <- keyDesc(lA, pr); kr <- keyDesc(rA, pl) }
+                  val crossed = for { kl <- keyTerm(lA, pr); kr <- keyTerm(rA, pl) }
                     yield (kl, kr, op == "<")
-                  straight.orElse(crossed).collect { case (kl, kr, asc) if kl == kr =>
-                    val kf: Column => Column = kl._1 match {
-                      case None => identity
-                      case Some(f) => (e: Column) => e.getField(f)
-                    }
+                  for {
+                    (kl, kr, asc) <- straight.orElse(crossed) if kl == kr
+                    (kf, _) <- elemKey(kl, et)
+                  } yield {
                     val cmp = (a2: Column, b2: Column) => termCmp(kf(a2), kf(b2), desc = !asc)
                     TCol(emptyAsNull(array_sort(t.col, cmp)), at) // empty = undefined
                   }

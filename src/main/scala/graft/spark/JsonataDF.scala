@@ -7,6 +7,7 @@ import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.StructType
 
 import graft.connect.JsonataTransform
+import graft.connect.JsonataTransform.Config.{DefaultMaxDepth, DefaultTimeoutMs}
 
 /** Dataset-level JSONata transform (SURVEY.md §2.A A1+A3 as a Spark operator).
   *
@@ -51,7 +52,7 @@ object JsonataDF {
     * The evaluator reads the pruned value struct directly (no to_json, no
     * input parse — one serialization per record, of the result). */
   def transform(df: DataFrame, expr: String, topic: String = "rows",
-                timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame =
+                timeoutMs: Long = DefaultTimeoutMs, maxDepth: Int = DefaultMaxDepth): DataFrame =
     evaluateOnce(df, prunedStruct(df, expr), "out")(JsonataExpression(_, expr,
       topic = Some(topic), timeoutMs = timeoutMs, maxDepth = maxDepth))
       .filter(col("out").isNotNull)
@@ -68,7 +69,7 @@ object JsonataDF {
     * Tombstones (null result, no error) are dropped as in [[transform]].
     * Stateless narrow map — works unchanged under Structured Streaming. */
   def transformPermissive(df: DataFrame, expr: String, topic: String = "rows",
-                          timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame =
+                          timeoutMs: Long = DefaultTimeoutMs, maxDepth: Int = DefaultMaxDepth): DataFrame =
     evaluateOnce(df, prunedStruct(df, expr), "r")(JsonataExpression(_, expr,
       topic = Some(topic), permissive = true, timeoutMs = timeoutMs, maxDepth = maxDepth))
       .select(col("r.out").as("out"), col("r.error").as("error"), col("r.record").as("record"))
@@ -76,7 +77,7 @@ object JsonataDF {
 
   /** The error rows of [[transformPermissive]] — a ready-to-sink DLQ frame. */
   def deadLetters(df: DataFrame, expr: String, topic: String = "rows",
-                  timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame =
+                  timeoutMs: Long = DefaultTimeoutMs, maxDepth: Int = DefaultMaxDepth): DataFrame =
     transformPermissive(df, expr, topic, timeoutMs, maxDepth)
       .filter(col("error").isNotNull)
       .select(col("record"), col("error"))
@@ -87,7 +88,7 @@ object JsonataDF {
     * declared schema. No to_json/from_json round-trip. */
   def transformAs(df: DataFrame, expr: String, schema: StructType,
                   topic: String = "rows",
-                  timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame =
+                  timeoutMs: Long = DefaultTimeoutMs, maxDepth: Int = DefaultMaxDepth): DataFrame =
     evaluateOnce(df, prunedStruct(df, expr), "r")(JsonataExpression(_, expr,
       JsonataOutput.Typed(schema), Some(topic), timeoutMs = timeoutMs, maxDepth = maxDepth))
       .filter(col("r").isNotNull)
@@ -96,19 +97,13 @@ object JsonataDF {
   /** Two-tier entry point: compile the expression to native Columns when the
     * subset allows (whole-stage codegen, no JSON round-trip — SURVEY.md §2
     * "two-tier execution decision"); fall back to the interpreter otherwise.
-    * Differential tests pin that both tiers agree. A declared-but-absent
-    * output field null-fills with its declared type — the interpreter
-    * decodes key-absent JSON the same way, and [[JsonataCompileRule]]'s SQL
-    * surface already did; a bare col() here failed analysis instead,
-    * diverging from both. */
+    * Differential tests pin that both tiers agree. The compiled outputs
+    * conform to `schema` exactly as on [[JsonataCompileRule]]'s SQL surface
+    * ([[JsonataCompiler.CompiledQuery.typed]]). */
   def auto(df: DataFrame, expr: String, schema: StructType,
            topic: String = "rows"): DataFrame =
-    JsonataCompiler.transformCompiled(df, expr) match {
-      case Some(out) =>
-        val present = out.columns.toSet
-        out.select(schema.fields.map(f =>
-          (if (present.contains(f.name)) col(f.name).cast(f.dataType)
-           else lit(null).cast(f.dataType)).as(f.name)).toIndexedSeq: _*)
+    JsonataCompiler.compileQuery(df, expr) match {
+      case Some(cq) => cq.filter.map(df.filter).getOrElse(df).select(cq.typed(schema): _*)
       case None => transformAs(df, expr, schema, topic)
     }
 
@@ -121,25 +116,12 @@ object JsonataDF {
     * reference's apply() over complete records (reference
     * JsonataTransformation.java:133-156). */
   def transformRecords(df: DataFrame, expr: String,
-                       timeoutMs: Long = 5000L, maxDepth: Int = 1000): DataFrame = {
+                       timeoutMs: Long = DefaultTimeoutMs, maxDepth: Int = DefaultMaxDepth): DataFrame = {
     val known = Seq("topic", "kafkaPartition", "key", "value", "timestamp", "headers")
     val present = known.filter(df.columns.contains)
     require(present.nonEmpty, s"transformRecords needs at least one of: ${known.mkString(", ")}")
     evaluateOnce(df, struct(present.map(col): _*), "out")(JsonataExpression(_, expr,
       timeoutMs = timeoutMs, maxDepth = maxDepth))
       .filter(col("out").isNotNull)
-  }
-
-  /** `import graft.spark.JsonataDF.syntax._` enables
-    * `df.jsonataTransform("expr")` — the Dataset-level operator surface
-    * (SURVEY.md §2.E). */
-  object syntax {
-    implicit final class JsonataOps(private val df: DataFrame) {
-      def jsonataTransform(expr: String): DataFrame = transform(df, expr)
-      def jsonataTransformAs(expr: String, schema: StructType): DataFrame =
-        transformAs(df, expr, schema)
-      def jsonataAuto(expr: String, schema: StructType): DataFrame =
-        auto(df, expr, schema)
-    }
   }
 }

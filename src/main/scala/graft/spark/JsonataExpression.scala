@@ -13,6 +13,7 @@ import org.apache.spark.types.variant.{Variant, VariantBuilder}
 import org.apache.spark.unsafe.types.{UTF8String, VariantVal}
 
 import graft.connect.JsonataTransform
+import graft.connect.JsonataTransform.Config
 import graft.jsonata.{Ast, Jsonata, JsonataException, Values}
 
 /** Static analysis over a compiled JSONata AST, used for Catalyst integration:
@@ -170,7 +171,9 @@ object JsonataOutput {
   * instead of failing the job. On struct input a third field, `record`,
   * carries the evaluator's input serialized, ONLY on error rows (DLQ
   * replay). Expression *parse* errors still throw at analysis time in both
-  * modes: a bad expression is a config error, not a data error.
+  * modes: a bad expression is a config error, not a data error. So do limits
+  * out of range: they are checked at construction through Connect's
+  * [[JsonataTransform.Config]].
   */
 case class JsonataExpression(
     child: Expression,
@@ -178,9 +181,11 @@ case class JsonataExpression(
     output: JsonataOutput = JsonataOutput.Json,
     topic: Option[String] = None,
     permissive: Boolean = false,
-    timeoutMs: Long = 5000L,
-    maxDepth: Int = 1000)
+    timeoutMs: Long = Config.DefaultTimeoutMs,
+    maxDepth: Int = Config.DefaultMaxDepth)
   extends UnaryExpression with CodegenFallback {
+
+  Config(exprSource, timeoutMs, maxDepth) // rejects out-of-range limits
 
   @transient private lazy val compiled = JsonataTransform.compile(exprSource)
 
@@ -263,46 +268,26 @@ object JsonataFunctions {
 
   /** Column function: evaluate a JSONata expression against a JSON-string column. */
   def jsonata(json: Column, expr: String,
-              timeoutMs: Long = 5000L, maxDepth: Int = 1000): Column =
+              timeoutMs: Long = Config.DefaultTimeoutMs,
+              maxDepth: Int = Config.DefaultMaxDepth): Column =
     Shims.column(JsonataExpression(Shims.expression(json), expr,
       timeoutMs = timeoutMs, maxDepth = maxDepth))
 
   /** Variant-output tier: evaluate against a JSON-string or variant column,
     * return VariantType (see [[JsonataOutput.Variant]]). */
   def jsonataVariant(json: Column, expr: String,
-                     timeoutMs: Long = 5000L, maxDepth: Int = 1000): Column =
+                     timeoutMs: Long = Config.DefaultTimeoutMs,
+                     maxDepth: Int = Config.DefaultMaxDepth): Column =
     Shims.column(JsonataExpression(Shims.expression(json), expr, JsonataOutput.Variant,
       timeoutMs = timeoutMs, maxDepth = maxDepth))
 
   /** Permissive variant: `struct<out, error>` per record — evaluation errors
     * are captured, never thrown (the DLQ analog; see [[JsonataExpression]]). */
   def jsonataTry(json: Column, expr: String,
-                 timeoutMs: Long = 5000L, maxDepth: Int = 1000): Column =
+                 timeoutMs: Long = Config.DefaultTimeoutMs,
+                 maxDepth: Int = Config.DefaultMaxDepth): Column =
     Shims.column(JsonataExpression(Shims.expression(json), expr, permissive = true,
       timeoutMs = timeoutMs, maxDepth = maxDepth))
-
-  /** Register `jsonata(json, expr)` and `jsonata_try(json, expr)` for SQL use
-    * (UDF form: the expression argument is dynamic, so the compile cache does
-    * the memoization). `jsonata_try` returns `struct<out, error>` like the
-    * permissive Column form. */
-  def registerSql(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.udf.register("jsonata", (json: String, expr: String) => {
-      if (json == null) null
-      else {
-        val out = JsonataTransform.compile(expr).evaluate(Jsonata.parseJson(json))
-        if (out == null || out.isNull) null else Values.jsonSerialize(out, prettify = false)
-      }
-    })
-    spark.udf.register("jsonata_try", (json: String, expr: String) => {
-      if (json == null) (null: String, null: String)
-      else try {
-        val out = JsonataTransform.compile(expr).evaluate(Jsonata.parseJson(json))
-        (if (out == null || out.isNull) null else Values.jsonSerialize(out, prettify = false),
-          null: String)
-      } catch { case e: Exception => (null, recordError(e)) }
-    })
-    registerNativeSql(spark)
-  }
 
   /** Extract a foldable string argument (the JSONata source / output DDL must
     * be a literal — it shapes the plan, it cannot vary per row). */
@@ -323,20 +308,25 @@ object JsonataFunctions {
     case _ => throw new IllegalArgumentException(s"$what must be a literal, got ${e.sql}")
   }
 
+  /** `name(json, 'expr'[, timeoutMs[, maxDepth]])`: the JSON-text surface,
+    * strict (`jsonata`) or permissive (`jsonata_try`). */
+  private def jsonText(name: String, permissive: Boolean): Seq[Expression] => Expression = {
+    case args if args.length >= 2 && args.length <= 4 =>
+      JsonataExpression(args.head, foldableString(args(1), s"$name expression"),
+        permissive = permissive,
+        timeoutMs = args.lift(2).fold(Config.DefaultTimeoutMs)(foldableLong(_, s"$name timeoutMs")),
+        maxDepth = args.lift(3).fold(Config.DefaultMaxDepth)(foldableLong(_, s"$name maxDepth").toInt))
+    case _ => throw new IllegalArgumentException(s"$name(json, 'expr'[, timeoutMs[, maxDepth]])")
+  }
+
   /** Shared native-function builders — ONE definition behind both SQL
     * registration surfaces (post-startup [[registerNativeSql]] and the
     * startup [[GraftExtensions]] catalog injection), so argument validation
     * cannot drift between them. */
   private[spark] val builders: Seq[(String, Seq[Expression] => Expression)] =
     Seq[(String, Seq[Expression] => Expression)](
-    "jsonata" -> {
-      case args if args.length >= 2 && args.length <= 4 =>
-        JsonataExpression(args.head, foldableString(args(1), "jsonata expression"),
-          timeoutMs = if (args.length > 2) foldableLong(args(2), "jsonata timeoutMs") else 5000L,
-          maxDepth = if (args.length > 3) foldableLong(args(3), "jsonata maxDepth").toInt else 1000)
-      case _ => throw new IllegalArgumentException(
-        "jsonata(json, 'expr'[, timeoutMs[, maxDepth]])")
-    },
+    "jsonata" -> jsonText("jsonata", permissive = false),
+    "jsonata_try" -> jsonText("jsonata_try", permissive = true),
     "jsonata_row" -> {
       case Seq(child, exprArg) =>
         JsonataExpression(child, foldableString(exprArg, "jsonata_row expression"),
@@ -387,12 +377,16 @@ object JsonataFunctions {
     build(args)
   }
 
-  /** Direct-codec SQL surface — the struct path the Column API already has
-    * ([[JsonataExpression]] over a struct child), reachable from `spark.sql`:
+  /** The native SQL surface, reachable from `spark.sql` — every entry of
+    * [[builders]]:
     *
+    *  - `jsonata(json, 'expr'[, timeoutMs[, maxDepth]])` -> JSON string, and
+    *    `jsonata_try(json, ...)` -> `struct<out, error>` (the permissive
+    *    policy; a struct input adds `record`), over a JSON string, variant
+    *    or struct;
     *  - `jsonata_row(struct, 'expr')` -> JSON string: the input row is encoded
     *    straight to a Jackson tree (no `to_json`), one serialization on the
-    *    way out — 1 text op/record where the string-UDF form needs 3;
+    *    way out — 1 text op/record where a `to_json` string input needs 3;
     *  - `jsonata_typed(struct, 'expr', 'a INT, b STRING')` -> typed struct:
     *    tree-in/tree-out with the declared schema — 0 text ops/record, the
     *    SQL analog of `JsonataDF.transformAs`. NULL result = tombstone
@@ -402,18 +396,14 @@ object JsonataFunctions {
     *    path — poison records yield (null, message, original-envelope JSON)
     *    instead of failing the job.
     *
-    * All three wrap the struct as the standard `{topic, kafkaPartition,
-    * value}` envelope, matching every other entry point.
+    * The three `jsonata_row*`/`jsonata_typed` forms wrap the struct as the
+    * standard `{topic, kafkaPartition, value}` envelope, matching every
+    * other entry point.
     *
-    * NOTE: like `spark.udf.register`, this (re)binds the function names
+    * NOTE: like registering a UDF, this (re)binds the function names
     * session-wide — an explicit, caller-opted API action (the registry demo
     * queries call it), not a hidden side effect; a session temp function the
     * caller already registered under one of these names is replaced. */
   def registerNativeSql(spark: org.apache.spark.sql.SparkSession): Unit =
-    // the struct/variant surface only: the name `jsonata` stays bound to the
-    // dynamic-expression UDF that registerSql installs (the catalog-extension
-    // route, GraftExtensions, binds the native form instead)
-    builders.filter(_._1 != "jsonata").foreach { case (name, b) =>
-      Shims.registerFunction(spark, name, b)
-    }
+    builders.foreach { case (name, b) => Shims.registerFunction(spark, name, b) }
 }

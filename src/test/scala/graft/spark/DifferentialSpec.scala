@@ -234,18 +234,38 @@ class DifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("auto null-fills a declared-but-absent output field on BOTH tiers") {
     // the declared schema asks for a field the expression never emits; the
     // interpreter decodes key-absent JSON to a typed null, and the compiled
-    // branch (like the SQL rule) must null-fill rather than fail analysis
+    // branch (like the SQL rule) must null-fill rather than fail analysis.
+    // The second input adds a widening cast (`w`) and a tombstone, and both
+    // also run through SQL `jsonata_typed` under GraftExtensions, whose
+    // analyzer rule conforms the compiled outputs by the same definition.
     import org.apache.spark.sql.functions.col
     val df = spark.read.parquet(s"$sfDir/orders.parquet")
-    val expr = "{'k': value.o_orderkey}"
-    val ddl = "k BIGINT, ghost STRING"
-    assert(JsonataCompiler.transformCompiled(df, expr).isDefined)
-    val a = JsonataDF.auto(df, expr, StructType.fromDDL(ddl))
-      .orderBy(col("k")).collect().map(_.toSeq).toSeq
-    val b = JsonataDF.transformAs(df, expr, StructType.fromDDL(ddl))
-      .orderBy(col("k")).collect().map(_.toSeq).toSeq
-    assert(a.nonEmpty && a == b, s"tiers differ: ${a.take(2)} vs ${b.take(2)}")
-    assert(a.forall(_(1) == null))
+    val withRule = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    SparkSession.setActiveSession(spark)
+    SparkSession.setDefaultSession(spark)
+    withRule.read.parquet(s"$sfDir/orders.parquet").createOrReplaceTempView("orders_rule")
+    val rows = Seq("{'k': value.o_orderkey}" -> "k BIGINT, ghost STRING",
+      "value.o_orderkey % 3 = 0 ? null : {'k': value.o_orderkey, 'w': value.o_orderkey}" ->
+        "k BIGINT, ghost STRING, w DOUBLE").map { case (expr, ddl) =>
+      assert(JsonataCompiler.transformCompiled(df, expr).isDefined)
+      val a = JsonataDF.auto(df, expr, StructType.fromDDL(ddl))
+        .orderBy(col("k")).collect().map(_.toSeq).toSeq
+      val b = JsonataDF.transformAs(df, expr, StructType.fromDDL(ddl))
+        .orderBy(col("k")).collect().map(_.toSeq).toSeq
+      val sql = withRule.sql(
+        s"""SELECT r.* FROM (SELECT jsonata_typed(named_struct('o_orderkey', o_orderkey),
+              '${expr.replace("'", "''")}', '$ddl') AS r FROM orders_rule)
+            WHERE r IS NOT NULL ORDER BY r.k""")
+      assert(sql.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case j: JsonataExpression => j })).isEmpty, s"the rule must compile $expr")
+      val c = sql.collect().map(_.toSeq).toSeq
+      assert(a.nonEmpty && a == b, s"tiers differ: ${a.take(2)} vs ${b.take(2)}")
+      assert(a == c, s"auto and SQL jsonata_typed differ: ${a.take(2)} vs ${c.take(2)}")
+      assert(a.forall(_(1) == null))
+      a
+    }
+    // the tombstone dropped every third order; `w` widened to DOUBLE
+    assert(rows(1).size < rows(0).size && rows(1).forall(_(2).isInstanceOf[Double]))
   }
 
   test("$single compiles: exactly-one match agrees across tiers (all arities)") {

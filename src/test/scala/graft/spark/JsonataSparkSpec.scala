@@ -95,13 +95,37 @@ class JsonataSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sql registration evaluates jsonata in SQL") {
-    JsonataFunctions.registerSql(spark)
+    JsonataFunctions.registerNativeSql(spark)
     events.limit(10).createOrReplaceTempView("ev10")
     val rows = spark.sql(
       """SELECT jsonata(to_json(named_struct('value', named_struct('x', event_id))),
                         'value.x + 1') AS y FROM ev10""").collect()
     assert(rows.length == 10)
     assert(rows.forall(_.getString(0) != null))
+  }
+
+  test("SQL jsonata_try over JSON text returns out/error; SQL jsonata equals the Column form") {
+    JsonataFunctions.registerNativeSql(spark)
+    val session = spark
+    import session.implicits._
+    Seq("""{"n": 1}""", "{not json", """{"n": 41}""").toDF("j").createOrReplaceTempView("jtext")
+    val tried = spark.sql(
+      """SELECT r.out, r.error FROM (SELECT j, jsonata_try(j, 'n + 1') AS r FROM jtext)
+         ORDER BY j""").collect().map(r => (r.getString(0), r.getString(1)))
+    assert(tried(0) == ("2", null) && tried(1) == ("42", null), tried.toSeq)
+    assert(tried(2)._1 == null && tried(2)._2.startsWith("Could not parse record JSON"), tried(2))
+    val good = spark.table("jtext").filter(col("j").startsWith("{\""))
+    val sql = spark.sql("SELECT jsonata(j, '{\"m\": n * 2}') FROM jtext WHERE j LIKE '{\"%'")
+    val column = good.select(JsonataFunctions.jsonata(col("j"), """{"m": n * 2}"""))
+    assert(sql.collect().toSeq == column.collect().toSeq)
+  }
+
+  test("out-of-range limits fail at analysis with Connect's messages") {
+    JsonataFunctions.registerNativeSql(spark)
+    val e = intercept[Exception](spark.sql("""SELECT jsonata('{}', 'a', -1)"""))
+    assert(e.getMessage.contains("timeout.ms must be >= 0, got -1"), e.getMessage)
+    val e2 = intercept[Exception](JsonataDF.transform(docs, "value.lang", maxDepth = 0))
+    assert(e2.getMessage.contains("max.depth must be >= 1, got 0"), e2.getMessage)
   }
 
   test("native SQL functions: jsonata_typed is struct-in/struct-out with no JSON text ops") {
