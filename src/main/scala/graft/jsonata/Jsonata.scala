@@ -26,18 +26,21 @@ final class JsonataExpr private[jsonata] (val source: String, val ast: Ast) exte
     evaluate(input, Config.DefaultTimeoutMs, Config.DefaultMaxDepth)
 
   def evaluate(input: JsonNode, timeoutMs: Long, maxDepth: Int,
-               bindings: Map[String, JsonNode] = Map.empty): JsonNode = {
+               bindings: Map[String, JsonNode] = Map.empty): JsonNode =
+    Values.toNode(run(input, timeoutMs, maxDepth, bindings))
+
+  /** Evaluate and return the evaluator's own value (see [[Values]]). */
+  private[jsonata] def run(input: JsonNode, timeoutMs: Long, maxDepth: Int,
+                           bindings: Map[String, JsonNode]): Any = {
     val interp = new Interp(timeoutMs, maxDepth, tupleFlags)
     val env = new Frame(Functions.rootFrame)
     env.bind("$", input) // $$ — root of the input document
     bindings.foreach { case (k, v) => env.bind(k, v) }
-    val result =
-      try interp.eval(ast, input, env)
-      catch {
-        case _: StackOverflowError =>
-          throw new JsonataException("U1001", "stack overflow during expression evaluation")
-      }
-    Values.toNode(result)
+    try interp.eval(ast, input, env)
+    catch {
+      case _: StackOverflowError =>
+        throw new JsonataException("U1001", "stack overflow during expression evaluation")
+    }
   }
 
   /** Evaluate with an arbitrary internal value as input (used by $eval). */
@@ -64,6 +67,15 @@ object Jsonata {
     * payload shapes (e.g. a JSON column with few distinct values) compile
     * once, and a workload cycling >1000 shapes degrades gracefully. */
   def compileCached(source: String): JsonataExpr = evalCache(source)
+
+  /** Evaluate a parsed tree with no input, under the reference's default
+    * limits, and return the evaluator's own value (see [[Values]]): null
+    * for undefined, a [[Values.JSeq]] for a sequence, a [[JFunction]] for
+    * a function, else the JSON node. Errors and timeouts raise
+    * [[JsonataException]]. The Spark compiler folds closed subtrees
+    * through this, so a folded value is the engine's. */
+  def evaluateClosed(ast: Ast): Any =
+    new JsonataExpr("", ast).run(null, Config.DefaultTimeoutMs, Config.DefaultMaxDepth, Map.empty)
 
   /** Convenience: evaluate expression against a JSON string, returns JSON string
     * or null for "no match". */

@@ -6,8 +6,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
 import graft.connect.JsonataTransform
-import graft.jsonata.{Ast, LruCache}
+import graft.jsonata.{Ast, Functions, Jsonata, LruCache}
 
 /** Subset-to-Catalyst compiler (SURVEY.md §2 "two-tier execution", §4.3).
   *
@@ -27,9 +32,11 @@ import graft.jsonata.{Ast, LruCache}
   * runs entirely inside whole-stage codegen with predicate pushdown and column
   * pruning: no JSON serialization, no interpreter, no CodegenFallback.
   *
-  * Anything outside the subset returns None and [[JsonataDF.auto]] falls back
-  * to the interpreted tier ([[JsonataDF.transformAs]]). Both tiers must agree
-  * on results — pinned by the differential suite (DifferentialSpec).
+  * Closed subtrees (no input, builtins only) fold to literals through the
+  * engine itself ([[fold]]). Anything outside the subset returns None and
+  * [[JsonataDF.auto]] falls back to the interpreted tier
+  * ([[JsonataDF.transformAs]]). Both tiers must agree on results — pinned
+  * by the differential suite (DifferentialSpec).
   *
   * Semantic notes (why translation is sound):
   *  - envelope encoding drops null fields, so a SQL NULL column is exactly
@@ -168,20 +175,6 @@ object JsonataCompiler {
     case other => other
   }
 
-  /** Inline a top-level let-binding preamble — `($f := function(...){...};
-    * $x := 3; {...})` — by substituting each bound NAME's references in
-    * everything after it. Sound because only side-effect-free values inline
-    * (inline lambdas, scalar literals, and statically-foldable pure
-    * expressions; the engine evaluates such binds eagerly but their
-    * evaluation is pure, so call-site substitution is observationally
-    * identical), and SAFE-BY-FALLBACK: any reference the rewriter does not
-    * reach stays a VarRef, which the compiler refuses, sending the whole
-    * query to the interpreted tier. Lambda parameters shadow binds during
-    * substitution exactly as engine frames do. This is what lets the
-    * reference's common configured-expression shape — a named predicate
-    * defined once and passed to $sift/$filter/$sort/$map, or schema-as-data
-    * objects navigated and counted (the jx07/removeEmail pattern) — run on
-    * the compiled tier. */
   /** Any Bind anywhere in the subtree (frame-sensitive — blocks paren
     * unwrapping; see the Block case in compileCore/inlineBinds). */
   private[spark] def containsBind(a: Ast): Boolean = a match {
@@ -189,153 +182,84 @@ object JsonataCompiler {
     case other => Ast.children(other).exists(containsBind)
   }
 
+  /** Inline a top-level let-binding preamble — `($f := function(...){...};
+    * $x := 3; {...})` — by substituting each bound NAME's references in
+    * everything after it: a lambda as itself, any other bind as the literal
+    * of its [[fold]]ed value when that is a scalar or an object (the array
+    * constructor flattens an array-valued variable, `[$k, "c"]`, but keeps
+    * a nested array literal). A bind that does not inline leaves the
+    * preamble as written, which the compiler refuses: the query takes the
+    * interpreted tier. Lambda parameters shadow binds as engine frames do.
+    * This lets the reference's configured-expression shapes — a named
+    * predicate passed to $sift/$filter/$sort/$map, or schema-as-data
+    * objects navigated and counted (jx07/removeEmail) — compile. */
   private def inlineBinds(ast: Ast): Ast = ast match {
     // top-level `( {...} )` — same pure-paren unwrap as compileCore's
     case Block(Seq(e)) if !containsBind(e) => inlineBinds(e)
     case Block(exprs) if exprs.length >= 2 && exprs.init.forall(_.isInstanceOf[Bind]) =>
       val env = exprs.init.foldLeft(Option(Map.empty[String, Ast])) {
-        case (Some(m), Bind(n, v)) =>
-          val sv = subst(v, m)
-          sv match {
-            case _: Lambda | _: NumLit | _: StrLit | _: BoolLit => Some(m + (n -> sv))
-            case other => StaticEval(other).map(f => m + (n -> StaticEval.toAst(f)))
-          }
+        case (Some(m), Bind(n, v)) => subst(v, m) match {
+          case l: Lambda => Some(m + (n -> l))
+          case sv => fold(sv, Set.empty).filterNot(_.isArray).map(j => m + (n -> literal(j)))
+        }
         case _ => None
       }
       env.map(m => subst(exprs.last, m)).getOrElse(ast)
     case other => other
   }
 
-  /** Compile-time evaluator for PURE JSONata subtrees — literal objects/
-    * arrays/scalars and the object builtins over them ($merge right-bias
-    * with first-position keys, $sift with a statically-boolean lambda,
-    * $keys/$lookup/$count, static field navigation). This is what
-    * constant-folds "schema-as-data" expressions: a literal schema object
-    * bound in the preamble, rewritten with $sift/$merge, then counted — the
-    * reference's removeEmail golden-test shape — evaluates at COMPILE TIME,
-    * leaving only row-dependent work in the plan. Anything impure (row
-    * paths, free variables, non-literal nodes) or any engine-error/undefined
-    * case ($keys of an empty object, $sift keeping nothing, $merge of a
-    * non-object) returns None and the query falls back to the interpreter —
-    * folding never changes error or undefined semantics, it only replaces
-    * provably-defined values. */
-  private object StaticEval {
-    sealed trait SVal
-    final case class SObj(fields: Vector[(String, SVal)]) extends SVal
-    final case class SArr(items: Vector[SVal]) extends SVal
-    final case class SStr(s: String) extends SVal
-    final case class SNum(n: java.math.BigDecimal) extends SVal
-    final case class SBool(b: Boolean) extends SVal
-    final case class SLambda(l: Lambda) extends SVal
+  /** Constant folding by the engine itself: the value of a CLOSED subtree
+    * — it reads no input ([[readsInput]]), is deterministic, and its free
+    * names are builtins that `rebound` (enclosing lambda parameters and
+    * hoisted per-row values) leaves alone — evaluated with no input under
+    * the reference's default limits. None when the subtree is not closed,
+    * when its value is a function or a sequence, or when the engine gives
+    * it, or any closed subtree inside it, no value (undefined, a raise, a
+    * timeout): a fold never bakes an undefined step into a literal
+    * (`$count($keys({}))` stays interpreted), and a builtin that would take
+    * its argument from the absent context gives undefined. */
+  private def fold(a: Ast, rebound: Set[String]): Option[JsonNode] =
+    if (!closed(a, rebound)) None
+    else engineValue(a).collect { case j: JsonNode if children(a).forall(defined(_, rebound)) => j }
 
-    def apply(a: Ast): Option[SVal] = evalIn(a, Map.empty)
+  private def closed(a: Ast, rebound: Set[String]): Boolean =
+    !readsInput(a) && JsonataAnalysis.isDeterministic(a) &&
+      freeVars(a).exists(_.forall(n => !rebound(n) && Functions.all.exists(_.name == n)))
 
-    /** Fold back to a literal AST (for bind inlining). Lambdas return their
-      * original node; objects/arrays rebuild as literal constructors. */
-    def toAst(v: SVal): Ast = v match {
-      case SObj(fs) => ObjCtor(fs.map { case (k, x) => (StrLit(k): Ast, toAst(x)) })
-      case SArr(is) => ArrCtor(is.map(toAst))
-      case SStr(s) => StrLit(s)
-      case SNum(n) =>
-        val st = n.stripTrailingZeros
-        try NumLit(com.fasterxml.jackson.databind.node.LongNode.valueOf(st.longValueExact))
-        catch { case _: ArithmeticException =>
-          NumLit(com.fasterxml.jackson.databind.node.DecimalNode.valueOf(n))
-        }
-      case SBool(b) => BoolLit(b)
-      case SLambda(l) => l
-    }
+  private def defined(a: Ast, rebound: Set[String]): Boolean =
+    (!closed(a, rebound) || engineValue(a).isDefined) && children(a).forall(defined(_, rebound))
 
-    private def evalIn(a: Ast, env: Map[String, SVal]): Option[SVal] = a match {
-      case StrLit(s) => Some(SStr(s))
-      case NumLit(v) => Some(SNum(v.decimalValue()))
-      case BoolLit(b) => Some(SBool(b))
-      case l: Lambda => Some(SLambda(l))
-      case VarRef(n) => env.get(n)
-      case ObjCtor(pairs) =>
-        val fs = pairs.map {
-          case (StrLit(k), v) => evalIn(v, env).map(k -> _)
-          case _ => None
-        }
-        if (fs.forall(_.isDefined)) Some(SObj(fs.map(_.get))) else None
-      case ArrCtor(items) =>
-        val is = items.map(evalIn(_, env))
-        if (is.forall(_.isDefined)) Some(SArr(is.map(_.get))) else None
-      // static field navigation: the head must itself be static (an inlined
-      // literal object); row-rooted paths have a NameStep head and fail here
-      case Path(steps, false, None)
-          if steps.nonEmpty && steps.forall(s =>
-            s.stages.isEmpty && !s.keepArray && s.focus.isEmpty && s.index.isEmpty) &&
-            steps.tail.forall(_.expr.isInstanceOf[NameStep]) =>
-        steps.tail.foldLeft(evalIn(steps.head.expr, env)) {
-          case (Some(SObj(fs)), st) =>
-            val NameStep(f) = st.expr: @unchecked
-            fs.find(_._1 == f).map(_._2)
-          case _ => None
-        }
-      case Cond(c, t, e) => evalIn(c, env) match {
-        case Some(SBool(true)) => evalIn(t, env)
-        case Some(SBool(false)) => e.flatMap(evalIn(_, env)) // absent else = undefined -> None
-        case _ => None
-      }
-      case Binary(op, l, r) => (op, evalIn(l, env), evalIn(r, env)) match {
-        // deep equality: cross-type compares unequal, same-type compares by value
-        case ("=", Some(a1), Some(b1)) => staticEq(a1, b1).map(SBool.apply)
-        case ("!=", Some(a1), Some(b1)) => staticEq(a1, b1).map(x => SBool(!x))
-        case ("and", Some(SBool(a1)), Some(SBool(b1))) => Some(SBool(a1 && b1))
-        case ("or", Some(SBool(a1)), Some(SBool(b1))) => Some(SBool(a1 || b1))
-        case _ => None
-      }
-      case Call(VarRef(fn), args) => evalCall(fn, args, env)
-      case ApplyOp(l2, Call(VarRef(fn), args)) => evalCall(fn, l2 +: args, env)
-      case _ => None
-    }
+  private def engineValue(a: Ast): Option[Any] =
+    try Option(Jsonata.evaluateClosed(a)) catch { case NonFatal(_) => None }
 
-    private def staticEq(a: SVal, b: SVal): Option[Boolean] = (a, b) match {
-      case (SStr(x), SStr(y)) => Some(x == y)
-      case (SNum(x), SNum(y)) => Some(x.compareTo(y) == 0)
-      case (SBool(x), SBool(y)) => Some(x == y)
-      case (_: SLambda, _) | (_, _: SLambda) => None // function equality raises in the engine
-      case _ if a.getClass != b.getClass => Some(false)
-      case _ => None // structural object/array equality: rarely folded, keep interpreted
-    }
+  /** Whether evaluating `a` may read the input: `$`, `$$`, a bare name,
+    * `*`, `**` or `%` (except a name, `*` or `**` path step after the
+    * first, which navigates the value of the steps before it); a lambda
+    * whose signature takes an argument from the context; or a function
+    * called or applied other than by name, as a lambda body runs in its
+    * caller's context (builtins run lambdas with none). */
+  private def readsInput(a: Ast): Boolean = a match {
+    case VarRef("") | VarRef("$") | NameStep(_) | Wildcard() | Descendant() | ParentRef() => true
+    case Lambda(_, _, Some(sig)) if sig.contains('-') => true
+    case Call(proc, _) if !proc.isInstanceOf[VarRef] => true
+    case ApplyOp(_, rhs) if !rhs.isInstanceOf[VarRef] && !rhs.isInstanceOf[Call] => true
+    case p @ Path(steps, _, _) if steps.tail.exists(s => isNav(s.expr)) =>
+      readsInput(p.copy(steps = steps.head +: steps.tail.map(s =>
+        if (isNav(s.expr)) s.copy(expr = NullLit()) else s)))
+    case other => children(other).exists(readsInput)
+  }
 
-    private def evalCall(fn: String, args: Seq[Ast], env: Map[String, SVal]): Option[SVal] =
-      (fn, args.map(evalIn(_, env))) match {
-        case ("merge", Seq(Some(SArr(items)))) =>
-          // right-bias values, first-occurrence key positions (ObjectNode.set)
-          val objs = items.map { case SObj(fs) => Some(fs); case _ => None }
-          if (!objs.forall(_.isDefined)) None
-          else {
-            val out = scala.collection.mutable.LinkedHashMap.empty[String, SVal]
-            objs.flatten.flatten.foreach { case (k, v) => out.update(k, v) }
-            Some(SObj(out.toVector))
-          }
-        case ("keys", Seq(Some(SObj(fs)))) if fs.nonEmpty =>
-          Some(SArr(fs.map(f => SStr(f._1))))
-        case ("lookup", Seq(Some(SObj(fs)), Some(SStr(k)))) =>
-          fs.find(_._1 == k).map(_._2) // absent key = undefined -> None (fallback)
-        case ("count", Seq(Some(v))) => v match {
-          case SArr(is) => Some(SNum(java.math.BigDecimal.valueOf(is.length.toLong)))
-          case _: SLambda => None
-          case _ => Some(SNum(java.math.BigDecimal.ONE))
-        }
-        case ("sift", Seq(Some(SObj(fs)), Some(SLambda(Lambda(params, body, _)))))
-            if params.nonEmpty && params.length <= 2 =>
-          val kept = fs.map { case (k, v) =>
-            val benv = Map(params.head -> v) ++ params.lift(1).map(_ -> (SStr(k): SVal))
-            evalIn(body, benv) match {
-              case Some(SBool(b)) => Some(if (b) Some(k -> v) else None)
-              case _ => None // non-boolean truthiness stays interpreted
-            }
-          }
-          if (!kept.forall(_.isDefined)) None
-          else {
-            val out = kept.flatMap(_.get)
-            if (out.isEmpty) None else Some(SObj(out)) // empty = fSift undef -> fallback
-          }
-        case _ => None
-      }
+  private def isNav(a: Ast): Boolean = a.isInstanceOf[NameStep] || a == Wildcard() || a == Descendant()
+
+  /** The literal that evaluates to the JSON value `j`. */
+  private def literal(j: JsonNode): Ast = j match {
+    case o: ObjectNode =>
+      ObjCtor(o.fields().asScala.toVector.map(e => (StrLit(e.getKey): Ast, literal(e.getValue))))
+    case a: ArrayNode => ArrCtor(a.asScala.toVector.map(literal))
+    case _ if j.isTextual => StrLit(j.textValue)
+    case _ if j.isBoolean => BoolLit(j.booleanValue)
+    case _ if j.isNumber => NumLit(j)
+    case _ => NullLit()
   }
 
   /** Free JSONata variable names of a subtree, or None when the node uses a
@@ -2320,22 +2244,17 @@ object JsonataCompiler {
     def structObjOutputsTyped(a: Ast): Option[Seq[(String, Column, DataType)]] =
       compileStructObj(a).map(_.map(f => (f.name, when(f.keep, f.col), f.dt)))
 
-    /** Column compilation with a constant-folding fallback: if the node is a
-      * PURE subtree ([[StaticEval]]) evaluating to a scalar, it becomes a
-      * literal column — e.g. `$count($keys($newSchema.fields))` over an
-      * inlined schema object. Tried only after structural compilation fails,
-      * so row-dependent translations always win. */
-    def compile(a: Ast): Option[TCol] = compileCore(a).orElse(staticScalar(a))
-
-    private def staticScalar(a: Ast): Option[TCol] = StaticEval(a).flatMap {
-      case StaticEval.SStr(s) => Some(TCol(lit(s), StringType))
-      case StaticEval.SBool(b) => Some(TCol(lit(b), BooleanType))
-      case StaticEval.SNum(n) =>
-        val st = n.stripTrailingZeros
-        try Some(TCol(lit(st.longValueExact), LongType))
-        catch { case _: ArithmeticException => Some(TCol(lit(n.doubleValue), DoubleType)) }
-      case _ => None
-    }
+    /** Column compilation; a node structural compilation rejects still
+      * compiles to a literal column when it [[fold]]s to a string, boolean
+      * or number (e.g. `$count($keys($newSchema.fields))` over an inlined
+      * schema object), so row-dependent translations always win. */
+    def compile(a: Ast): Option[TCol] = compileCore(a).orElse(fold(a, lambdaEnv.keySet).collect {
+      case j if j.isTextual => TCol(lit(j.textValue), StringType)
+      case j if j.isBoolean => TCol(lit(j.booleanValue), BooleanType)
+      case j if j.isNumber =>
+        try TCol(lit(j.decimalValue.stripTrailingZeros.longValueExact), LongType)
+        catch { case _: ArithmeticException => TCol(lit(j.doubleValue), DoubleType) }
+    })
 
     private def compileCore(a: Ast): Option[TCol] = a match {
       // `( e )` — the parser wraps every parenthesized subexpression in a

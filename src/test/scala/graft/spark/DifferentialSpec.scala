@@ -1086,6 +1086,63 @@ class DifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
       "($o := {\"a\": 1}; {'n': $lookup($o, 'zzz')})").isEmpty)
   }
 
+  /** `auto`'s rows for `expr` over `df`, checked against the interpreter's
+    * as a row multiset. */
+  private def autoRows(df: org.apache.spark.sql.DataFrame, expr: String,
+                       ddl: String): Seq[Seq[Any]] = {
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+    val a = rows(JsonataDF.auto(df, expr, StructType.fromDDL(ddl)))
+    val b = rows(JsonataDF.transformAs(df, expr, StructType.fromDDL(ddl)))
+    assert(a == b, s"auto and the interpreter differ on $expr:\n  auto:        $a\n  interpreted: $b")
+    a
+  }
+
+  private def twoRows = {
+    import org.apache.spark.sql.Row
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(Seq(Row(1L, Seq(1L, 2L)), Row(2L, Seq(3L))).asJava,
+      StructType.fromDDL("id BIGINT, xs ARRAY<BIGINT>"))
+  }
+
+  test("folded values are the engine's: a one-key $keys is a string") {
+    // fKeys returns a sequence, which collapses to its one item
+    val expr = "{'id': value.id, 'n': $keys({\"a\": 1}) = \"a\"}"
+    assert(JsonataCompiler.transformCompiled(twoRows, expr).isDefined)
+    assert(autoRows(twoRows, expr, "id BIGINT, n BOOLEAN").map(_(1)) == Seq(true, true))
+  }
+
+  // an array-valued bind stays a variable: the array constructor flattens
+  // it, where it keeps a nested array literal
+  test("a bind to a two-key $keys flattens in the array constructor") {
+    val expr = "($k := $keys({\"a\": 1, \"b\": 2}); {'id': value.id, 'n': $count([$k, \"c\"])})"
+    assert(autoRows(twoRows, expr, "id BIGINT, n BIGINT").map(_(1)) == Seq(3L, 3L))
+  }
+
+  test("a bind to an array literal flattens in the array constructor") {
+    val expr = "($k := [\"a\", \"b\"]; {'id': value.id, 'n': $count([$k, \"c\"])})"
+    assert(autoRows(twoRows, expr, "id BIGINT, n BIGINT").map(_(1)) == Seq(3L, 3L))
+  }
+
+  test("folding never reads a lambda parameter named like a builtin as the builtin") {
+    val expr = "{'id': value.id, 't': $join($map(value.xs, function($keys){ $type($keys) }), ',')}"
+    assert(autoRows(twoRows, expr, "id BIGINT, t STRING").map(_(1)) ==
+      Seq("number,number", "number"))
+  }
+
+  test("subtrees that read the input or are nondeterministic never become literals") {
+    // the input: `$` is the record envelope, `$$` its root
+    assert(autoRows(twoRows, "{'id': value.id, 'n': $count($keys($))}", "id BIGINT, n BIGINT")
+      .map(_(1)) == Seq(3L, 3L))
+    assert(autoRows(twoRows, "{'id': value.id, 'e': $exists($$)}", "id BIGINT, e BOOLEAN")
+      .map(_(1)) == Seq(true, true))
+    // none of these has a compiled form, so left unfolded the query is the
+    // interpreter's
+    Seq("$string($now())", "$millis()", "$random() < 2", "$count([$millis(), 1])").foreach { e =>
+      assert(JsonataCompiler.transformCompiled(twoRows, s"{'id': value.id, 'n': $e}").isEmpty, e)
+    }
+  }
+
   // ---- compiled $fromMillis/$toMillis (round 9) -------------------------
 
   private def millisDf = {

@@ -1276,4 +1276,87 @@ class FuzzDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
         "the tuple-stream gate moved; retire this pin only with the " +
         "differential above green")
   }
+
+  test("150 seeded closed-subtree shapes (literal objects/arrays and their builtins) agree with the interpreter") {
+    // Closed subtrees read no input, so the compiler folds them with the
+    // engine; each draw puts one next to `value.*` fields. Literal arrays
+    // nested in arrays and arrays built from $keys probe the array
+    // constructor's flattening, the corner a second evaluator got wrong.
+    val sp = spark
+    import sp.implicits._
+    val rnd = new scala.util.Random(80812L + seedOff)
+    val df = FuzzGrammar.rows.toDF("k", "num_a", "num_b", "str_a", "str_b", "arr")
+    def pick(xs: String*): String = xs(rnd.nextInt(xs.length))
+    def str(d: Int): String = if (d <= 0) pick("'a'", "'b'", "\"x\"") else rnd.nextInt(4) match {
+      case 0 => s"$$uppercase(${str(d - 1)})"
+      case 1 => s"$$string(${any(d - 1)})"
+      case 2 => s"(${bool(d - 1)} ? ${str(d - 1)} : ${str(d - 1)})"
+      case _ => str(0)
+    }
+    def num(d: Int): String = if (d <= 0) pick("1", "2", "1.5", "0") else rnd.nextInt(3) match {
+      case 0 => s"$$count(${arr(d - 1)})"
+      case 1 => s"$$count($$keys(${obj(d - 1)}))"
+      case _ => num(0)
+    }
+    def bool(d: Int): String = if (d <= 0) pick("true", "false") else rnd.nextInt(5) match {
+      case 0 => s"(${any(d - 1)} = ${any(d - 1)})"
+      case 1 => s"(${any(d - 1)} != ${any(d - 1)})"
+      case 2 => s"(${bool(d - 1)} and ${any(d - 1)})"
+      case 3 => s"(${any(d - 1)} or ${bool(d - 1)})"
+      case _ => s"($$keys(${obj(d - 1)}) = ${str(0)})"
+    }
+    def scalar(d: Int): String = rnd.nextInt(3) match {
+      case 0 => str(d)
+      case 1 => num(d)
+      case _ => bool(d)
+    }
+    def obj(d: Int): String = if (d <= 0) {
+      rnd.shuffle(Seq("a", "b", "c")).take(1 + rnd.nextInt(3))
+        .map(k => s""""$k": ${if (rnd.nextInt(4) == 0) arr(0) else scalar(0)}""")
+        .mkString("{", ", ", "}")
+    } else rnd.nextInt(3) match {
+      case 0 => s"$$merge([${obj(d - 1)}, ${obj(d - 1)}])"
+      case 1 => s"$$sift(${obj(d - 1)}, function($$v, $$k){ " +
+        pick("$k != 'a'", "$k = 'b' or $k = 'c'", "$v = 1", "$string($v) != 'x'", "true") + " })"
+      case _ => s"""{"a": ${any(d - 1)}, "b": ${scalar(d - 1)}}"""
+    }
+    def arr(d: Int): String = if (d <= 0) {
+      Seq.fill(1 + rnd.nextInt(3))(scalar(0)).mkString("[", ", ", "]")
+    } else rnd.nextInt(4) match {
+      case 0 => s"$$keys(${obj(d - 1)})"
+      case 1 => s"[${arr(d - 1)}, ${scalar(0)}]"
+      case 2 => s"[${scalar(0)}, [${scalar(0)}, ${scalar(0)}]]"
+      case _ => arr(0)
+    }
+    def any(d: Int): String = rnd.nextInt(5) match {
+      case 0 => obj(d)
+      case 1 => arr(d)
+      case 2 => s"$$lookup(${obj(d)}, '${pick("a", "b", "c")}')"
+      case _ => scalar(d)
+    }
+    def top(): (String, String) = rnd.nextInt(5) match {
+      case 0 => (s"{'k': value.k, 'r': $$string(${any(3)})}", "k BIGINT, r STRING")
+      case 1 => (s"{'k': value.k, 'r': ${bool(3)}}", "k BIGINT, r BOOLEAN")
+      case 2 => (s"{'k': value.k, 'r': $$count(${arr(3)})}", "k BIGINT, r BIGINT")
+      case 3 => (s"{'k': value.k, 'r': (value.str_a = ${str(3)})}", "k BIGINT, r BOOLEAN")
+      case _ => (s"${bool(3)} ? {'k': value.k, 'r': value.num_a}", "k BIGINT, r DOUBLE")
+    }
+    def rows(d: => org.apache.spark.sql.DataFrame) =
+      scala.util.Try(d.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))).toEither.left.map(_ => "raised")
+
+    var compiled = 0
+    val disagree = Vector.newBuilder[String]
+    (1 to 150).foreach { n =>
+      val (expr, ddl) = top()
+      if (JsonataCompiler.compileQuery(df, expr).isDefined) compiled += 1
+      val a = rows(JsonataDF.auto(df, expr, StructType.fromDDL(ddl)))
+      val b = rows(JsonataDF.transformAs(df, expr, StructType.fromDDL(ddl)))
+      if (a != b) disagree += s"[closed-fuzz #$n] $expr\n  auto:        ${a.map(_.take(2))}\n" +
+        s"  interpreted: ${b.map(_.take(2))}"
+    }
+    val bad = disagree.result()
+    info(s"disagreements: ${bad.size}")
+    assertRate(compiled, 120, s"closed-subtree compile rate dropped: $compiled/150")
+    assert(bad.isEmpty, bad.take(5).mkString("\n"))
+  }
 }
