@@ -681,6 +681,8 @@ object JsonataQueries {
 
     // ---- jx06: same operator through SQL `jsonata` over JSON text: the  ----
     // ---- native evaluator with a string input (the name is historical) ----
+    // explode(array(..)) keeps the optimizer from copying the call into the
+    // pushed-down `r IS NOT NULL` filter: one evaluation per record.
     Q("jx06_sql_udf",
       (s, d) => {
         graft.spark.JsonataFunctions.registerNativeSql(s)
@@ -688,10 +690,10 @@ object JsonataQueries {
         df.createOrReplaceTempView("events_raw")
         s.sql("""
           SELECT r.event_id, r.total FROM (
-            SELECT from_json(jsonata(to_json(named_struct('value',
+            SELECT explode(array(from_json(jsonata(to_json(named_struct('value',
                      named_struct('event_id', event_id, 'value', value))),
                    '{''event_id'': value.event_id, ''total'': value.value + 1}'),
-                   'event_id BIGINT, total DOUBLE') AS r
+                   'event_id BIGINT, total DOUBLE'))) AS r
             FROM events_raw) WHERE r IS NOT NULL
           ORDER BY r.event_id""")
       },

@@ -126,7 +126,7 @@ object JsonataOutput {
   final case class Typed(schema: StructType) extends JsonataOutput {
     def dataType: DataType = schema
     def encode(out: JsonNode): Any = RowJson.jsonToRow(out, schema)
-    def name: String = "jsonata_row"
+    def name: String = "jsonata_typed"
   }
 
   /** Spark's binary variant (SURVEY.md §1.4 variant envelope tier): the tree

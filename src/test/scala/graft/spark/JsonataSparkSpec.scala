@@ -50,6 +50,12 @@ class JsonataSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"expected exactly one evaluator call in the plan (filter pushdown would run it 3x), found $evals:\n$plan")
   }
 
+  test("a typed interpreted evaluation prints as jsonata_typed in the plan") {
+    val plan = JsonataDF.transformAs(docs, "{'doc_id': value.doc_id, 't': $type(value.lang)}",
+      StructType.fromDDL("doc_id BIGINT, t STRING")).queryExecution.executedPlan.toString
+    assert(plan.contains("jsonata_typed(") && !plan.contains("jsonata_row("), plan)
+  }
+
   test("envelope pruning reaches the parquet scan") {
     val out = JsonataDF.transform(docs,
       "value.lang = 'en' ? {'doc_id': value.doc_id} : null")
