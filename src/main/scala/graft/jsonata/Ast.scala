@@ -1,6 +1,7 @@
 package graft.jsonata
 
 import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.TextNode
 
 /** Post-processed JSONata AST (spec: jsonata.org, v1.8).
   *
@@ -15,7 +16,10 @@ sealed trait Ast
 object Ast {
   // ---- terminals ----
   final case class NumLit(value: JsonNode) extends Ast
-  final case class StrLit(value: String) extends Ast
+  final case class StrLit(value: String) extends Ast {
+    /** The literal's value, built once: a TextNode is immutable. */
+    val node: TextNode = TextNode.valueOf(value)
+  }
   final case class BoolLit(value: Boolean) extends Ast
   final case class NullLit() extends Ast
   final case class RegexLit(pattern: java.util.regex.Pattern) extends Ast
@@ -40,7 +44,10 @@ object Ast {
   final case class ObjCtor(pairs: Vector[(Ast, Ast)]) extends Ast
   final case class ArrCtor(items: Vector[Ast]) extends Ast
   final case class Lambda(params: Vector[String], body: Ast, signature: Option[String]) extends Ast
-  final case class Call(proc: Ast, args: Vector[Ast]) extends Ast
+  final case class Call(proc: Ast, args: Vector[Ast]) extends Ast {
+    /** A partial application: some argument is a `?` placeholder. */
+    val isPartial: Boolean = args.exists(_.isInstanceOf[Placeholder])
+  }
   final case class Placeholder() extends Ast // `?` inside partial application
   final case class ApplyOp(lhs: Ast, rhs: Ast) extends Ast // ~>
   final case class TransformExpr(pattern: Ast, update: Ast, deletes: Option[Ast]) extends Ast // |...|...|
@@ -69,7 +76,21 @@ object Ast {
   final case class Path(
       steps: Vector[Step],
       keepSingletonArray: Boolean = false,
-      group: Option[ObjCtor] = None) extends Ast
+      group: Option[ObjCtor] = None) extends Ast {
+    /** Whether the path runs as a tuple stream, which carries each item's
+      * ancestors and `@`/`#` bindings: some step binds a focus or index
+      * variable, or some step expression or stage reads `%`. */
+    lazy val tupleMode: Boolean = steps.exists { s =>
+      s.focus.isDefined || s.index.isDefined ||
+        s.stages.exists(_.isInstanceOf[IndexStage]) ||
+        containsParent(s.expr) ||
+        s.stages.exists {
+          case FilterStage(e) => containsParent(e)
+          case SortStage(ts) => ts.exists(t => containsParent(t.expr))
+          case _ => false
+        }
+    }
+  }
 
   /** Predicates/grouping applied to a non-path expression: `$x[0]`, `$x{...}`. */
   final case class Filtered(base: Ast, stages: Vector[Stage], group: Option[ObjCtor] = None,

@@ -3,27 +3,43 @@ package graft.jsonata
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node._
 import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
 import Values._
 import Ast._
 
-/** Variable scope frame; the root frame holds the builtin function library. */
+/** Variable scope frame; the root frame holds the builtin function library.
+  * The map is made on the first bind, as many frames (a block's, a lambda's
+  * with no parameters) bind nothing. */
 final class Frame(val parent: Frame) {
-  private val vars = new java.util.HashMap[String, Any]()
-  def bind(name: String, v: Any): Unit = vars.put(name, v)
+  private var vars: java.util.HashMap[String, Any] = null
+  def bind(name: String, v: Any): Unit = {
+    if (vars == null) vars = new java.util.HashMap[String, Any](8)
+    vars.put(name, v)
+  }
+  /** The innermost binding of `name`; null (undefined) when none binds it.
+    * A name bound to undefined shadows outer bindings. */
   def lookup(name: String): Any = {
-    if (vars.containsKey(name)) vars.get(name)
-    else if (parent != null) parent.lookup(name)
-    else null
+    var f = this
+    while (f != null) {
+      val m = f.vars
+      if (m != null) {
+        val v = m.get(name)
+        if (v != null || m.containsKey(name)) return v
+      }
+      f = f.parent
+    }
+    null
   }
 }
 
 /** One evaluation run: tree-walking interpreter with cooperative timeout and
   * lambda-recursion depth guard (mirrors the reference's `timeout.ms` /
   * `max.depth` governance, reference JsonataTransformation.java:104,
-  * Config.java:23-29). */
-final class Interp(val timeoutMs: Long, val maxDepth: Int,
-                   tupleFlags: java.util.IdentityHashMap[Path, java.lang.Boolean]) {
+  * Config.java:23-29).
+  *
+  * Sequences are read through [[Values.Items]] and calls pass their
+  * arguments as one array, so evaluating a path, a call or a constructor
+  * copies no input collection. */
+final class Interp(val timeoutMs: Long, val maxDepth: Int) {
 
   val evalMillis: Long = System.currentTimeMillis() // $now/$millis bound once per evaluation
   private val deadline: Long =
@@ -69,34 +85,40 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
 
   def eval(node: Ast, ctx: Any, env: Frame): Any = {
     checkRuntime()
+    // the most frequent node types first: the match tests them in order
     val raw: Any = node match {
+      case p: Path => evalPath(p, ctx, env)
+      case n: NameStep => lookupName(ctx, n.name)
+      case VarRef(name) => if (name.isEmpty) ctx else env.lookup(name)
+      case c: Call => evalCall(c, ctx, env)
+      case s: StrLit => s.node
       case NumLit(v) => v
-      case StrLit(s) => TextNode.valueOf(s)
+      case Binary(op, l, r) => evalBinary(op, l, r, ctx, env)
+      case o: ObjCtor => evalGroup(o, ctx, env)
+      case Cond(c, t, e) =>
+        if (truthy(eval(c, ctx, env))) eval(t, ctx, env)
+        else e match {
+          case Some(x) => eval(x, ctx, env)
+          case None => undef
+        }
       case BoolLit(b) => BooleanNode.valueOf(b)
       case NullLit() => nf.nullNode()
       case RegexLit(p) => p
-      case VarRef(name) => evalVar(name, ctx, env)
-      case n: NameStep => lookupName(ctx, n.name)
       case Wildcard() => evalWildcard(ctx)
       case Descendant() => evalDescendants(ctx)
       case ParentRef() => evalParent(env)
-      case p: Path => evalPath(p, ctx, env)
       case f: Filtered => evalFiltered(f, ctx, env)
-      case o: ObjCtor => evalGroup(o, ctx, env)
       case a: ArrCtor => evalArrayCtor(a, ctx, env)
       case Block(exprs) =>
         val child = new Frame(env)
         var last: Any = undef
-        exprs.foreach(e => last = eval(e, ctx, child))
+        var i = 0
+        while (i < exprs.length) { last = eval(exprs(i), ctx, child); i += 1 }
         last
       case Bind(name, value) =>
         val v = eval(value, ctx, env)
         env.bind(name, v)
         v
-      case Cond(c, t, e) =>
-        if (truthy(eval(c, ctx, env))) eval(t, ctx, env)
-        else e.map(eval(_, ctx, env)).getOrElse(undef)
-      case Binary(op, l, r) => evalBinary(op, l, r, ctx, env)
       case UnaryMinus(e) =>
         eval(e, ctx, env) match {
           case null => undef
@@ -107,12 +129,11 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
         }
       case r: RangeExpr => evalRange(r, ctx, env)
       case l: Lambda => LambdaFn(l.params, l.body, env, l.signature)
-      case c: Call => evalCall(c, ctx, env)
       case Placeholder() => throw new JsonataException("S0211", "'?' is only valid inside a partial application")
       case a: ApplyOp => evalApply(a, ctx, env)
       case t: TransformExpr => TransformFn(t, env, this)
       case s: SortOpNode => // standalone sort step should not occur outside paths
-        JSeq.of(sortItems(asIterable(ctx).toVector, s.terms, env))
+        sortItems(Items.of(ctx), s.terms, env)
     }
     raw match {
       case s: JSeq =>
@@ -127,41 +148,43 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
   // names / variables / wildcards
   // ------------------------------------------------------------------
 
-  private def evalVar(name: String, ctx: Any, env: Frame): Any =
-    if (name.isEmpty) ctx
-    else env.lookup(name)
-
   /** fn.lookup semantics: field access; maps over arrays (flattening). */
   def lookupName(ctx: Any, name: String): Any = ctx match {
-    case o: ObjectNode => if (o.has(name)) o.get(name) else undef
+    case o: ObjectNode => o.get(name) // null when absent: a child is never null
     case arr if isArrayLike(arr) =>
+      val items = Items.of(arr)
       val out = new JSeq()
-      asIterable(arr).foreach { item =>
-        lookupName(item, name) match {
-          case null =>
-          case s: JSeq => out.items ++= s.items
-          case a: ArrayNode => a.asScala.foreach(out.items += _)
-          case v => out.items += v
-        }
+      var i = 0
+      while (i < items.length) {
+        spreadInto(out, lookupName(items(i), name))
+        i += 1
       }
       out
     case _ => undef
+  }
+
+  /** Appends `v` to `out`, spreading an array or a sequence; nothing adds nothing. */
+  private def spreadInto(out: JSeq, v: Any): Unit = v match {
+    case null =>
+    case s: JSeq => out.items ++= s.items
+    case a: ArrayNode =>
+      var j = 0
+      while (j < a.size()) { out.items += a.get(j); j += 1 }
+    case other => out.items += other
   }
 
   private def evalWildcard(ctx: Any): Any = ctx match {
     case o: ObjectNode =>
       val out = new JSeq()
       def flat(v: JsonNode): Unit = v match {
-        case a: ArrayNode => a.asScala.foreach(flat)
+        case a: ArrayNode => a.forEach(flat(_))
         case other => out.items += other
       }
-      o.fields().asScala.foreach(e => flat(e.getValue))
+      o.elements().forEachRemaining(flat(_))
       out
     case arr if isArrayLike(arr) =>
       val out = new JSeq()
-      asIterable(arr).foreach { item =>
-        asIterable(evalWildcard(item)).foreach(out.items += _)
-      }
+      Items.of(arr).foreach(item => out.items ++= Items.of(evalWildcard(item)))
       out
     case _ => undef
   }
@@ -171,11 +194,11 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
     case _ =>
       val out = new JSeq()
       def recurse(v: Any): Unit = v match {
-        case a: ArrayNode => a.asScala.foreach(recurse)
+        case a: ArrayNode => a.forEach(recurse(_))
         case s: JSeq => s.items.foreach(recurse)
         case o: ObjectNode =>
           out.items += o
-          o.fields().asScala.foreach(e => recurse(e.getValue))
+          o.elements().forEachRemaining(recurse(_))
         case other => out.items += other
       }
       recurse(ctx)
@@ -191,29 +214,14 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
   // paths
   // ------------------------------------------------------------------
 
-  private def needsTupleMode(p: Path): Boolean = {
-    val cached = tupleFlags.get(p)
-    if (cached != null) cached.booleanValue()
-    else {
-      val flag = p.steps.exists { s =>
-        s.focus.isDefined || s.index.isDefined ||
-          s.stages.exists(_.isInstanceOf[IndexStage]) ||
-          containsParent(s.expr) ||
-          s.stages.exists { case FilterStage(e) => containsParent(e); case SortStage(ts) => ts.exists(t => containsParent(t.expr)); case _ => false }
-      }
-      tupleFlags.synchronized { tupleFlags.put(p, java.lang.Boolean.valueOf(flag)) }
-      flag
-    }
-  }
-
   private def evalPath(p: Path, ctx: Any, env: Frame): Any = {
+    // a relative path maps over an array context; an absolute one starts at it
     val absolute = p.steps.head.expr.isInstanceOf[VarRef]
-    val inputSeq: Vector[Any] =
-      if (!absolute && isArrayLike(ctx)) asIterable(ctx).toVector else Vector(ctx)
+    val input = if (!absolute && isArrayLike(ctx)) Items.of(ctx) else Items.one(ctx)
 
     var result: Any =
-      if (needsTupleMode(p)) evalTuplePath(p, ctx, inputSeq, env)
-      else evalPlainPath(p, ctx, inputSeq, env)
+      if (p.tupleMode) evalTuplePath(p, input, env)
+      else evalPlainPath(p, ctx, input, env)
 
     if (p.keepSingletonArray) result match {
       case s: JSeq => s.keepSingleton = true
@@ -228,27 +236,26 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
     result
   }
 
-  private def evalPlainPath(p: Path, origCtx: Any, inputSeq0: Vector[Any], env: Frame): Any = {
-    var inputSeq: Vector[Any] = inputSeq0
+  private def evalPlainPath(p: Path, origCtx: Any, input0: Items, env: Frame): Any = {
+    var input = input0
     var result: Any = undef
     var i = 0
     val n = p.steps.length
     var broke = false
     while (i < n && !broke) {
       val step = p.steps(i)
-      val lastStep = i == n - 1
       step.expr match {
         case SortOpNode(terms) =>
-          var sorted: Vector[Any] = sortItems(inputSeq, terms, env)
+          var sorted: Any = sortItems(input, terms, env)
           step.stages.foreach {
-            case FilterStage(e) => sorted = asIterable(applyFilter(e, JSeq.of(sorted), env)).toVector
+            case FilterStage(e) => sorted = applyFilter(e, sorted, env)
             case _ =>
           }
-          result = JSeq.of(sorted)
+          result = sorted
         case ArrCtor(_) if i == 0 =>
           result = eval(step.expr, origCtx, env)
         case _ =>
-          result = evalStep(step, inputSeq, env, lastStep)
+          result = evalStep(step, input, env, i == n - 1)
       }
       val emptySeq = result match {
         case null => true
@@ -257,43 +264,58 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
       }
       if (emptySeq) { result = undef; broke = true }
       else if (sizeOf(result) == 0) broke = true // plain empty array from data: keep it
-      else inputSeq = asIterable(result).toVector
+      else input = Items.of(result)
       i += 1
     }
     result
   }
 
-  private def evalStep(step: Step, inputSeq: Vector[Any], env: Frame, lastStep: Boolean): Any = {
-    val results = ArrayBuffer[Any]()
-    inputSeq.foreach { item =>
-      var res = eval(step.expr, item, env)
-      step.stages.foreach {
-        case FilterStage(e) => res = applyFilter(e, res, env)
-        case _ =>
-      }
-      if (res != null) results += res
-    }
-    // last-step singleton-array preservation (spec: a path ending in a field
-    // whose value is an array returns that array, not a spread sequence)
-    if (lastStep && results.length == 1 && results(0).isInstanceOf[ArrayNode])
-      return results(0)
-    val out = new JSeq()
+  /** One path step over every input item, the results spread into one
+    * sequence (an array constructor's result is kept whole). A last step
+    * with one result that is an array returns that array: a path ending in
+    * a field whose value is an array yields the array, not a spread
+    * sequence. The sequence is built only when there is more than one
+    * result or the one result spreads. */
+  private def evalStep(step: Step, input: Items, env: Frame, lastStep: Boolean): Any = {
     val noFlatten = step.expr.isInstanceOf[ArrCtor]
-    results.foreach {
-      case a: ArrayNode if noFlatten => out.items += a
-      case a: ArrayNode => a.asScala.foreach(out.items += _)
-      case s: JSeq => out.items ++= s.items
-      case v => out.items += v
+    var out: JSeq = null
+    var first: Any = undef // the first result, held back until a second one shows
+    var i = 0
+    while (i < input.length) {
+      var res = eval(step.expr, input(i), env)
+      var s = 0
+      while (s < step.stages.length) {
+        step.stages(s) match {
+          case FilterStage(e) => res = applyFilter(e, res, env)
+          case _ =>
+        }
+        s += 1
+      }
+      if (res != null) {
+        if (first == null) first = res
+        else {
+          if (out == null) { out = new JSeq(); addResult(out, first, noFlatten) }
+          addResult(out, res, noFlatten)
+        }
+      }
+      i += 1
     }
-    out
+    if (out != null) out
+    // no result, or one that is not an array, stands for the sequence
+    else if (!isArrayLike(first) || (lastStep && first.isInstanceOf[ArrayNode])) first
+    else { out = new JSeq(); addResult(out, first, noFlatten); out }
   }
 
-  private def evalTuplePath(p: Path, origCtx: Any, inputSeq: Vector[Any], env: Frame): Any = {
+  private def addResult(out: JSeq, res: Any, noFlatten: Boolean): Unit =
+    if (noFlatten && res.isInstanceOf[ArrayNode]) out.items += res
+    else spreadInto(out, res)
+
+  private def evalTuplePath(p: Path, inputSeq: Items, env: Frame): Any = {
     val outerAncestors = env.lookup(AncestorsKey) match {
       case l: List[_] => l.asInstanceOf[List[Any]]
       case _ => Nil
     }
-    var tuples: Vector[Tup] = inputSeq.map(v => Tup(v, outerAncestors, Map.empty))
+    var tuples: Vector[Tup] = inputSeq.iterator.map(v => Tup(v, outerAncestors, Map.empty)).toVector
     var broke = false
     for (step <- p.steps if !broke) {
       step.expr match {
@@ -310,11 +332,9 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
             val stepEnv = frameForTuple(env, t)
             val res = eval(step.expr, t.at, stepEnv)
             if (res != null) {
-              val items: Seq[Any] = step.expr match {
-                case ArrCtor(_) => Seq(res)
-                case _ => asIterable(res).toSeq
-              }
-              var candidates = items.zipWithIndex.map { case (item, idx) =>
+              val items = if (step.expr.isInstanceOf[ArrCtor]) Items.one(res) else Items.of(res)
+              var candidates = items.indices.map { idx =>
+                val item = items(idx)
                 var binds = t.bindings
                 step.focus.foreach(fv => binds += (fv -> item))
                 step.index.foreach(iv => binds += (iv -> numNode(idx.toLong)))
@@ -346,7 +366,8 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
     p.group match {
       case Some(ctor) if !broke =>
         // grouping over a tuple stream: keys evaluated per tuple with its bindings
-        return evalGroupTuples(ctor, tuples, env)
+        val members = if (tuples.isEmpty) Vector(Tup(undef, Nil, Map.empty)) else tuples
+        return groupObject(ctor, members.length, members(_).at, i => frameForTuple(env, members(i)), env)
       case _ =>
     }
     val out = new JSeq()
@@ -364,18 +385,9 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
   }
 
   private def filterTuples(pred: Ast, tuples: Vector[Tup], env: Frame): Vector[Tup] = {
-    val out = ArrayBuffer[Tup]()
     val len = tuples.length
-    tuples.zipWithIndex.foreach { case (t, i) =>
-      val stepEnv = frameForTuple(env, t)
-      val res = eval(pred, t.at, stepEnv)
-      numericIndexes(res) match {
-        case Some(idxs) =>
-          if (idxs.exists(ix => normIndex(ix, len) == i)) out += t
-        case None => if (truthy(res)) out += t
-      }
-    }
-    out.toVector
+    tuples.indices.filter(i => selects(eval(pred, tuples(i).at, frameForTuple(env, tuples(i))), i, len))
+      .map(tuples).toVector
   }
 
   private def sortTuples(tuples: Vector[Tup], terms: Vector[SortTerm], env: Frame): Vector[Tup] =
@@ -383,52 +395,20 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
       cmpByTerms(terms, a.at, b.at, frameForTuple(env, a), frameForTuple(env, b)) < 0
     }
 
-  private def evalGroupTuples(ctor: ObjCtor, tuples: Vector[Tup], env: Frame): Any = {
-    // each group accumulates member contexts; value exprs see the member sequence
-    val groups = new java.util.LinkedHashMap[String, (ArrayBuffer[Any], Int)]()
-    val members = if (tuples.isEmpty) Vector(Tup(undef, Nil, Map.empty)) else tuples
-    members.foreach { t =>
-      val tupEnv = frameForTuple(env, t)
-      ctor.pairs.zipWithIndex.foreach { case ((kExpr, _), pi) =>
-        val key = eval(kExpr, t.at, tupEnv)
-        key match {
-          case null =>
-          case s: JsonNode if s.isTextual =>
-            val k = s.textValue()
-            val existing = groups.get(k)
-            if (existing == null) groups.put(k, (ArrayBuffer[Any](t.at), pi))
-            else if (existing._2 != pi)
-              throw new JsonataException("D1009", s"multiple key definitions evaluate to same key '$k'")
-            else existing._1 += t.at
-          case other =>
-            throw new JsonataException("T1003", s"object key must be a string, got ${typeName(other)}")
-        }
-      }
-    }
-    val result = nf.objectNode()
-    groups.forEach { (k, v) =>
-      val (data, pi) = v
-      val dataCtx: Any = if (data.length == 1) data(0) else JSeq.of(data)
-      val value = eval(ctor.pairs(pi)._2, dataCtx, env)
-      if (value != null) {
-        val node = toNode(value)
-        result.set[com.fasterxml.jackson.databind.JsonNode](k, if (node == null) nf.nullNode() else node): Unit
-      }
-    }
-    result
-  }
-
   // ------------------------------------------------------------------
   // filters (predicates)
   // ------------------------------------------------------------------
 
-  private def numericIndexes(res: Any): Option[Seq[Double]] = res match {
-    case n: JsonNode if n.isNumber => Some(Seq(n.doubleValue()))
+  /** Whether a predicate's value `res` keeps item `i` of `len`: a number, or
+    * a non-empty array of numbers only, selects by index (negative counts
+    * from the end); any other value by its truthiness. */
+  private def selects(res: Any, i: Int, len: Int): Boolean = res match {
+    case n: JsonNode if n.isNumber => normIndex(n.doubleValue(), len) == i
     case arr if isArrayLike(arr) =>
-      val items = asIterable(arr).toSeq
-      if (items.nonEmpty && items.forall(isNumber)) Some(items.map(asDouble))
-      else None
-    case _ => None
+      val xs = Items.of(arr)
+      if (xs.nonEmpty && xs.forall(isNumber(_))) xs.exists(x => normIndex(asDouble(x), len) == i)
+      else truthy(res)
+    case _ => truthy(res)
   }
 
   private def normIndex(d: Double, len: Int): Int = {
@@ -438,7 +418,7 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
 
   def applyFilter(pred: Ast, value: Any, env: Frame): Any = {
     if (value == null) return undef
-    val items = asIterable(value).toVector
+    val items = Items.of(value)
     val len = items.length
     val out = new JSeq()
     pred match {
@@ -449,12 +429,11 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
         val idx = normIndex(-n.doubleValue(), len)
         if (idx >= 0 && idx < len) out.items += items(idx)
       case _ =>
-        items.zipWithIndex.foreach { case (item, i) =>
-          val res = eval(pred, item, env)
-          numericIndexes(res) match {
-            case Some(idxs) => if (idxs.exists(ix => normIndex(ix, len) == i)) out.items += item
-            case None => if (truthy(res)) out.items += item
-          }
+        var i = 0
+        while (i < len) {
+          val item = items(i)
+          if (selects(eval(pred, item, env), i, len)) out.items += item
+          i += 1
         }
     }
     out
@@ -464,7 +443,7 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
     var res = eval(f.base, ctx, env)
     f.stages.foreach {
       case FilterStage(e) => res = applyFilter(e, res, env)
-      case SortStage(terms) => res = JSeq.of(sortItems(asIterable(res).toVector, terms, env))
+      case SortStage(terms) => res = sortItems(Items.of(res), terms, env)
       case IndexStage(_) =>
     }
     if (f.keepArray) res = res match {
@@ -483,47 +462,96 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
   // object construction / grouping
   // ------------------------------------------------------------------
 
-  def evalGroup(ctor: ObjCtor, input: Any, env: Frame): Any = {
-    val items0 = input match {
-      case null => Vector(null)
-      case arr if isArrayLike(arr) => asIterable(arr).toVector
-      case v => Vector(v)
-    }
-    val items = if (items0.isEmpty) Vector[Any](null) else items0
-    val groups = new java.util.LinkedHashMap[String, (ArrayBuffer[Any], Int)]()
-    items.foreach { item =>
-      ctor.pairs.zipWithIndex.foreach { case ((kExpr, _), pi) =>
-        val key = eval(kExpr, item, env)
-        key match {
-          case null =>
-          case s: JsonNode if s.isTextual =>
-            val k = s.textValue()
-            val existing = groups.get(k)
-            if (existing == null) groups.put(k, (ArrayBuffer[Any](item), pi))
-            else if (existing._2 != pi)
-              throw new JsonataException("D1009", s"multiple key definitions evaluate to same key '$k'")
-            else existing._1 += item
-          case other =>
-            throw new JsonataException("T1003", s"object key must be a string, got ${typeName(other)}")
+  /** `{...}` over `input`: a non-empty array groups its items; anything
+    * else (an empty array reads as nothing) builds one object. */
+  def evalGroup(ctor: ObjCtor, input: Any, env: Frame): Any =
+    if (isArrayLike(input) && sizeOf(input) > 0) {
+      val items = Items.of(input)
+      groupObject(ctor, items.length, items(_), _ => env, env)
+    } else objectOver(ctor, if (isArrayLike(input)) undef else input, env)
+
+  /** `{...}` over one context item: every key is evaluated, in pair order,
+    * before any value; a key that two pairs give raises D1009; a pair with
+    * an undefined key or value adds nothing. */
+  private def objectOver(ctor: ObjCtor, item: Any, env: Frame): ObjectNode = {
+    val pairs = ctor.pairs
+    val n = pairs.length
+    val keys = new Array[String](n)
+    var i = 0
+    while (i < n) {
+      keys(i) = objectKey(eval(pairs(i)._1, item, env))
+      if (keys(i) != null) {
+        var j = 0
+        while (j < i) {
+          if (keys(i) == keys(j)) duplicateKey(keys(i))
+          j += 1
         }
       }
+      i += 1
+    }
+    val result = nf.objectNode()
+    i = 0
+    while (i < n) {
+      if (keys(i) != null) setValue(result, keys(i), eval(pairs(i)._2, item, env))
+      i += 1
+    }
+    result
+  }
+
+  /** Grouping `{...}` over `n` members, member `i` being `at(i)` in scope
+    * `scope(i)`: members whose key agrees form one group, whose value is
+    * evaluated once over its members (in `env`). All keys are evaluated
+    * before any value; a key that two pairs give raises D1009. */
+  private def groupObject(ctor: ObjCtor, n: Int, at: Int => Any, scope: Int => Frame,
+                          env: Frame): ObjectNode = {
+    val groups = new java.util.LinkedHashMap[String, (ArrayBuffer[Any], Int)]()
+    var i = 0
+    while (i < n) {
+      val item = at(i)
+      val itemEnv = scope(i)
+      var pi = 0
+      while (pi < ctor.pairs.length) {
+        val k = objectKey(eval(ctor.pairs(pi)._1, item, itemEnv))
+        if (k != null) {
+          val existing = groups.get(k)
+          if (existing == null) groups.put(k, (ArrayBuffer[Any](item), pi))
+          else if (existing._2 != pi) duplicateKey(k)
+          else existing._1 += item
+        }
+        pi += 1
+      }
+      i += 1
     }
     val result = nf.objectNode()
     groups.forEach { (k, v) =>
       val (data, pi) = v
       val dataCtx: Any = if (data.length == 1) data(0) else JSeq.of(data)
-      val value = eval(ctor.pairs(pi)._2, dataCtx, env)
-      if (value != null) {
-        val node = toNode(value)
-        result.set[com.fasterxml.jackson.databind.JsonNode](k, if (node == null) nf.nullNode() else node): Unit
-      }
+      setValue(result, k, eval(ctor.pairs(pi)._2, dataCtx, env))
     }
     result
   }
 
+  /** An object key's text; null for an undefined key. */
+  private def objectKey(key: Any): String = key match {
+    case null => null
+    case s: JsonNode if s.isTextual => s.textValue()
+    case other => throw new JsonataException("T1003", s"object key must be a string, got ${typeName(other)}")
+  }
+
+  private def duplicateKey(k: String): Nothing =
+    throw new JsonataException("D1009", s"multiple key definitions evaluate to same key '$k'")
+
+  private def setValue(obj: ObjectNode, k: String, value: Any): Unit =
+    if (value != null) {
+      val node = toNode(value)
+      obj.set[JsonNode](k, if (node == null) nf.nullNode() else node): Unit
+    }
+
   private def evalArrayCtor(a: ArrCtor, ctx: Any, env: Frame): Any = {
     val arr = nf.arrayNode()
-    a.items.foreach { itemExpr =>
+    var i = 0
+    while (i < a.items.length) {
+      val itemExpr = a.items(i)
       val v = eval(itemExpr, ctx, env)
       if (v != null) itemExpr match {
         case ArrCtor(_) => arr.add(toNode(v)): Unit
@@ -532,10 +560,11 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
             case s: JSeq => s.items.foreach { x =>
               val n = toNode(x); arr.add(if (n == null) nf.nullNode() else n): Unit
             }
-            case an: ArrayNode => an.asScala.foreach(x => arr.add(x): Unit)
+            case an: ArrayNode => arr.addAll(an): Unit
             case other => val n = toNode(other); arr.add(if (n == null) nf.nullNode() else n): Unit
           }
       }
+      i += 1
     }
     arr
   }
@@ -571,8 +600,14 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
     0
   }
 
-  def sortItems(items: Vector[Any], terms: Vector[SortTerm], env: Frame): Vector[Any] =
-    items.sortWith((a, b) => cmpByTerms(terms, a, b, env, env) < 0)
+  /** `items` in a stable order by `terms`, as a new sequence. */
+  def sortItems(items: Items, terms: Vector[SortTerm], env: Frame): JSeq = {
+    val arr = new Array[AnyRef](items.length)
+    var i = 0
+    while (i < arr.length) { arr(i) = items(i).asInstanceOf[AnyRef]; i += 1 }
+    java.util.Arrays.sort(arr, (a: AnyRef, b: AnyRef) => cmpByTerms(terms, a, b, env, env))
+    JSeq.of(arr)
+  }
 
   // ------------------------------------------------------------------
   // binary operators
@@ -624,7 +659,7 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
     case "in" =>
       val l = eval(lE, ctx, env); val r = eval(rE, ctx, env)
       if (l == null || r == null) BooleanNode.valueOf(false)
-      else BooleanNode.valueOf(asIterable(r).exists(deepEquals(l, _)))
+      else BooleanNode.valueOf(Items.of(r).exists(deepEquals(l, _)))
     case "+" | "-" | "*" | "/" | "%" =>
       val l = eval(lE, ctx, env); val r = eval(rE, ctx, env)
       if (l == null || r == null) undef
@@ -688,9 +723,8 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
   // ------------------------------------------------------------------
 
   private def evalCall(c: Call, ctx: Any, env: Frame): Any = {
-    val isPartial = c.args.exists(_.isInstanceOf[Placeholder])
     val f = eval(c.proc, ctx, env)
-    if (isPartial) {
+    if (c.isPartial) {
       f match {
         case fn: JFunction =>
           val bound = c.args.map {
@@ -701,19 +735,28 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
         case _ =>
           throw new JsonataException("T1007", s"attempted to partially apply a non-function ${procName(c.proc)}")
       }
-    } else {
-      val args = c.args.map(eval(_, ctx, env))
-      invoke(f, args, ctx, procName(c.proc))
-    }
+    } else invoke(f, evalArgs(c.args, 0, ctx, env), ctx, c.proc)
   }
 
+  /** `args` evaluated in order into a new array, from index `lead` on. */
+  private def evalArgs(args: Vector[Ast], lead: Int, ctx: Any, env: Frame): Array[Any] = {
+    val out = new Array[Any](lead + args.length)
+    var i = 0
+    while (i < args.length) { out(lead + i) = eval(args(i), ctx, env); i += 1 }
+    out
+  }
+
+  /** How an error names the function that `proc` evaluated to. */
   private def procName(p: Ast): String = p match {
     case VarRef(n) => s"$$$n"
     case NameStep(n) => n
+    case null => "<fn>"
     case _ => "<expr>"
   }
 
-  def invoke(f: Any, args: Seq[Any], ctx: Any, name: String = "<fn>"): Any = f match {
+  /** Applies `f` to `args`; `proc`, the expression `f` came from, only
+    * names `f` in an error. */
+  def invoke(f: Any, args: Array[Any], ctx: Any, proc: Ast = null): Any = f match {
     case b: Builtin => b.call(args, ctx, this)
     case LambdaFn(params, body, closure, sig) =>
       depth += 1
@@ -722,12 +765,14 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
       try {
         // typed signature: validate/coerce per call (T0410 on violation)
         val effArgs = sig match {
-          case Some(s) => Signature.validate(s, args, ctx, name)
+          case Some(s) => Signature.validate(s, args, ctx, procName(proc))
           case None => args
         }
         val frame = new Frame(closure)
-        params.zipWithIndex.foreach { case (pn, i) =>
-          frame.bind(pn, if (i < effArgs.length) effArgs(i) else undef)
+        var i = 0
+        while (i < params.length) {
+          frame.bind(params(i), if (i < effArgs.length) effArgs(i) else undef)
+          i += 1
         }
         eval(body, ctx, frame)
       } finally depth -= 1
@@ -738,37 +783,39 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
         case Some(v) => merged += v
         case None => merged += (if (k < args.length) args(k) else undef); k += 1
       }
-      args.drop(k).foreach(merged += _)
-      invoke(target, merged.toSeq, ctx, name)
+      merged ++= args.drop(k)
+      invoke(target, merged.toArray, ctx, proc)
     case tf: TransformFn => tf.invoke(args, this)
     case cf: ComposedFn => cf.invoke(args, this)
     case p: java.util.regex.Pattern =>
       // a regex literal is applicable as a function: returns the first match struct
-      args.headOption match {
-        case Some(s: JsonNode) if s.isTextual => Functions.firstMatch(p, regexInput(s.textValue()))
-        case Some(null) | None => undef
+      if (args.isEmpty) undef
+      else args(0) match {
+        case s: JsonNode if s.isTextual => Functions.firstMatch(p, regexInput(s.textValue()))
+        case null => undef
         case _ => throw new JsonataException("T0410", "regex can only be applied to a string")
       }
-    case null => throw new JsonataException("T1006", s"attempted to invoke a non-function $name")
-    case _ => throw new JsonataException("T1006", s"attempted to invoke a non-function $name (${typeName(f)})")
+    case null => throw new JsonataException("T1006", s"attempted to invoke a non-function ${procName(proc)}")
+    case _ => throw new JsonataException("T1006", s"attempted to invoke a non-function ${procName(proc)} (${typeName(f)})")
   }
 
   private def evalApply(a: ApplyOp, ctx: Any, env: Frame): Any = {
     val lhs = eval(a.lhs, ctx, env)
     a.rhs match {
-      case Call(proc, args) if !args.exists(_.isInstanceOf[Placeholder]) =>
-        val f = eval(proc, ctx, env)
-        val argVals = lhs +: args.map(eval(_, ctx, env))
-        invoke(f, argVals, ctx, procName(proc))
+      case c: Call if !c.isPartial =>
+        val f = eval(c.proc, ctx, env)
+        val argVals = evalArgs(c.args, 1, ctx, env)
+        argVals(0) = lhs
+        invoke(f, argVals, ctx, c.proc)
       case _ =>
         val f = eval(a.rhs, ctx, env)
         f match {
           case fn: JFunction =>
             lhs match {
               case lf: JFunction => ComposedFn(lf, fn) // function composition
-              case _ => invoke(fn, Seq(lhs), ctx)
+              case _ => invoke(fn, Array[Any](lhs), ctx)
             }
-          case p: java.util.regex.Pattern => invoke(p, Seq(lhs), ctx)
+          case p: java.util.regex.Pattern => invoke(p, Array[Any](lhs), ctx)
           case _ => throw new JsonataException("T2006",
             s"right side of '~>' must be a function, got ${typeName(f)}")
         }
@@ -781,27 +828,27 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int,
 final case class LambdaFn(params: Vector[String], body: Ast, closure: Frame,
                           signature: Option[String]) extends JFunction {
   def name = "lambda"
-  def invoke(args: Seq[Any], interp: Interp): Any = interp.invoke(this, args, null)
+  def invoke(args: Array[Any], interp: Interp): Any = interp.invoke(this, args, null)
 }
 
 final case class PartialFn(target: JFunction, bound: Vector[Option[Any]]) extends JFunction {
   def name = s"partial(${target.name})"
-  def invoke(args: Seq[Any], interp: Interp): Any = interp.invoke(this, args, null)
+  def invoke(args: Array[Any], interp: Interp): Any = interp.invoke(this, args, null)
 }
 
 final case class ComposedFn(first: JFunction, second: JFunction) extends JFunction {
   def name = "composed"
-  def invoke(args: Seq[Any], interp: Interp): Any = {
+  def invoke(args: Array[Any], interp: Interp): Any = {
     val mid = interp.invoke(first, args, null)
-    interp.invoke(second, Seq(mid), null)
+    interp.invoke(second, Array[Any](mid), null)
   }
 }
 
 /** `expr ~> | location | update , deletes |` — object-patching function. */
 final case class TransformFn(t: Ast.TransformExpr, env: Frame, owner: Interp) extends JFunction {
   def name = "transform"
-  def invoke(args: Seq[Any], interp: Interp): Any = {
-    val arg = args.headOption.orNull
+  def invoke(args: Array[Any], interp: Interp): Any = {
+    val arg = if (args.isEmpty) null else args(0)
     if (arg == null) return Values.undef
     val clone: Any = arg match {
       case n: JsonNode => n.deepCopy[JsonNode]()
@@ -809,18 +856,18 @@ final case class TransformFn(t: Ast.TransformExpr, env: Frame, owner: Interp) ex
       case other => other
     }
     val matches = interp.eval(t.pattern, clone, env)
-    Values.asIterable(matches).foreach {
+    Values.Items.of(matches).foreach {
       case m: ObjectNode =>
         val upd = interp.eval(t.update, m, env)
         upd match {
           case null =>
-          case o: ObjectNode => o.fields().asScala.foreach(e => m.set[com.fasterxml.jackson.databind.JsonNode](e.getKey, e.getValue): Unit)
+          case o: ObjectNode => m.setAll[JsonNode](o): Unit
           case other => throw new JsonataException("T2011",
             s"transform update must evaluate to an object, got ${Values.typeName(other)}")
         }
         t.deletes.foreach { dExpr =>
           val del = interp.eval(dExpr, m, env)
-          Values.asIterable(del).foreach {
+          Values.Items.of(del).foreach {
             case s: JsonNode if s.isTextual => m.remove(s.textValue()): Unit
             case other => throw new JsonataException("T2012",
               s"transform delete must evaluate to string(s), got ${Values.typeName(other)}")

@@ -17,9 +17,9 @@ final class Builtin(
     val name: String,
     val params: Vector[Param],
     val undefPassthrough: Boolean, // first arg undefined => result undefined
-    fn: (IndexedSeq[Any], Any, Interp) => Any) extends JFunction {
+    fn: (Array[Any], Any, Interp) => Any) extends JFunction {
 
-  def invoke(args: Seq[Any], interp: Interp): Any = call(args, null, interp)
+  def invoke(args: Array[Any], interp: Interp): Any = call(args, null, interp)
 
   private def typeOk(p: Param, v: Any): Boolean = v == null || (p.kind match {
     case 's' => v.isInstanceOf[JsonNode] && v.asInstanceOf[JsonNode].isTextual
@@ -36,22 +36,23 @@ final class Builtin(
     case _ => true
   })
 
-  /** Positional matching with context substitution for unmatched `-` params. */
-  def call(args0: Seq[Any], ctx: Any, interp: Interp): Any = {
-    val args = args0.toIndexedSeq
-    val resolved = new ArrayBuffer[Any](params.length)
+  /** Positional matching with context substitution for unmatched `-` params:
+    * the builtin reads one value per parameter, null where none fits. */
+  def call(args: Array[Any], ctx: Any, interp: Interp): Any = {
+    val resolved = new Array[Any](params.length)
     var ai = 0
-    params.foreach { p =>
-      if (ai < args.length && typeOk(p, args(ai))) { resolved += args(ai); ai += 1 }
-      else if (p.contextable && typeOk(p.copy(contextable = false), ctx)) resolved += ctx
-      else if (p.optional) resolved += null
-      else if (ai < args.length)
+    var pi = 0
+    while (pi < params.length) {
+      val p = params(pi)
+      if (ai < args.length && typeOk(p, args(ai))) { resolved(pi) = args(ai); ai += 1 }
+      else if (p.contextable && typeOk(p, ctx)) resolved(pi) = ctx
+      else if (!p.optional && ai < args.length)
         throw new JsonataException("T0410",
           s"argument ${ai + 1} of function $$$name does not match its expected type '${p.kind}' (got ${typeName(args(ai))})")
-      else resolved += null
+      pi += 1
     }
-    if (undefPassthrough && resolved.nonEmpty && resolved(0) == null) return undef
-    fn(resolved.toIndexedSeq, ctx, interp)
+    if (undefPassthrough && resolved.length > 0 && resolved(0) == null) return undef
+    fn(resolved, ctx, interp)
   }
 }
 
@@ -63,7 +64,7 @@ object Functions {
   private def text(v: Any): String = v.asInstanceOf[JsonNode].textValue()
   private def dbl(v: Any): Double = v.asInstanceOf[JsonNode].doubleValue()
   private def tn(s: String): TextNode = TextNode.valueOf(s)
-  private def items(v: Any): Vector[Any] = asIterable(v).toVector
+  private def items(v: Any): Items = Items.of(v)
 
   def arity(f: Any): Int = f match {
     case b: Builtin => b.params.length
@@ -72,8 +73,27 @@ object Functions {
     case _ => 1
   }
 
-  private def callF(interp: Interp, f: Any, args: Seq[Any]): Any =
-    interp.invoke(f, args.take(math.max(1, arity(f))), null)
+  /** How many arguments a higher-order builtin passes `f`: its arity, at
+    * least `least` and at most `most`. An index or the whole input goes
+    * only to a function that takes it. */
+  private def argCount(f: Any, least: Int, most: Int): Int = math.min(most, math.max(least, arity(f)))
+
+  /** A callback's `(item, index, whole)` arguments, the first `n` of them. */
+  private def itemArgs(n: Int, item: Any, i: Int, whole: JsonNode): Array[Any] = {
+    val args = new Array[Any](n)
+    args(0) = item
+    if (n > 1) args(1) = numNode(i.toLong)
+    if (n > 2) args(2) = whole
+    args
+  }
+
+  /** The whole input array a higher-order builtin passes as its callback's
+    * third argument; the input itself when it is an array. */
+  private def wholeArray(v: Any): JsonNode = v match {
+    case a: ArrayNode => a
+    case s: JSeq => toNode(s)
+    case other => toNode(JSeq(other))
+  }
 
   /** First regex match as a {match, index, groups} object (regex-as-function). */
   def firstMatch(p: java.util.regex.Pattern, s: CharSequence): Any = {
@@ -97,23 +117,23 @@ object Functions {
 
   private def codePoints(s: String): Array[Int] = s.codePoints().toArray
 
-  // stable merge sort with a jsonata "should-swap" comparator
-  private def msort(v: Vector[Any], swap: (Any, Any) => Boolean): Vector[Any] = {
-    if (v.length <= 1) v
-    else {
-      val (l, r) = v.splitAt(v.length / 2)
-      val ls = msort(l, swap); val rs = msort(r, swap)
-      val out = new ArrayBuffer[Any](v.length)
-      var i = 0; var j = 0
-      while (i < ls.length && j < rs.length) {
-        if (swap(ls(i), rs(j))) { out += rs(j); j += 1 }
-        else { out += ls(i); i += 1 }
+  /** Stable top-down merge sort with a jsonata "should-swap" comparator:
+    * sorts `v(from until until)` in place, merging through `tmp`. */
+  private def msort(v: Array[Any], tmp: Array[Any], from: Int, until: Int, swap: (Any, Any) => Boolean): Unit =
+    if (until - from > 1) {
+      val mid = from + (until - from) / 2
+      msort(v, tmp, from, mid, swap)
+      msort(v, tmp, mid, until, swap)
+      var i = from; var j = mid; var k = from
+      while (i < mid && j < until) {
+        if (swap(v(i), v(j))) { tmp(k) = v(j); j += 1 }
+        else { tmp(k) = v(i); i += 1 }
+        k += 1
       }
-      while (i < ls.length) { out += ls(i); i += 1 }
-      while (j < rs.length) { out += rs(j); j += 1 }
-      out.toVector
+      while (i < mid) { tmp(k) = v(i); i += 1; k += 1 }
+      while (j < until) { tmp(k) = v(j); j += 1; k += 1 }
+      System.arraycopy(tmp, from, v, from, until - from)
     }
-  }
 
   private def defaultCmpSwap(a: Any, b: Any): Boolean = (a, b) match {
     case (x: JsonNode, y: JsonNode) if x.isNumber && y.isNumber => x.doubleValue() > y.doubleValue()
@@ -123,7 +143,7 @@ object Functions {
   }
 
   private def b(name: String, sig: String, undefPass: Boolean = true)(
-      fn: (IndexedSeq[Any], Any, Interp) => Any): Builtin = {
+      fn: (Array[Any], Any, Interp) => Any): Builtin = {
     // sig mini-language: one char per param; '-' after char = contextable; '?' = optional
     val ps = ArrayBuffer[Param]()
     var i = 0
@@ -233,11 +253,19 @@ object Functions {
 
   private val fJoin = b("join", "as?") { (a, _, _) =>
     val sep = if (a(1) == null) "" else text(a(1))
-    val strs = items(a(0)).map {
-      case s: JsonNode if s.isTextual => s.textValue()
-      case other => throw new JsonataException("T0412", s"$$join items must be strings, got ${typeName(other)}")
+    val xs = items(a(0))
+    val sb = new java.lang.StringBuilder
+    var i = 0
+    while (i < xs.length) {
+      xs(i) match {
+        case s: JsonNode if s.isTextual =>
+          if (i > 0) sb.append(sep)
+          sb.append(s.textValue())
+        case other => throw new JsonataException("T0412", s"$$join items must be strings, got ${typeName(other)}")
+      }
+      i += 1
     }
-    tn(strs.mkString(sep))
+    tn(sb.toString)
   }
 
   private val fMatch = b("match", "s-un?") { (a, _, interp) =>
@@ -286,7 +314,7 @@ object Functions {
           sb.append(s, last, m.start())
           a(2) match {
             case f: JFunction =>
-              val res = callF(interp, f, Seq(matchObj(m)))
+              val res = interp.invoke(f, Array[Any](matchObj(m)), null)
               res match {
                 case t: JsonNode if t.isTextual => sb.append(t.textValue())
                 case _ => throw new JsonataException("D3012", "$replace replacement function must return a string")
@@ -479,31 +507,51 @@ object Functions {
   // aggregation
   // =================================================================
 
-  private def numItems(v: Any, fname: String): Vector[Double] = items(v).map {
+  private def num(v: Any, fname: String): Double = v match {
     case n: JsonNode if n.isNumber => n.doubleValue()
     case other => throw new JsonataException("T0412", s"$$$fname argument must be an array of numbers, got ${typeName(other)}")
+  }
+
+  /** The sum of `xs` as doubles, in order. */
+  private def sumOf(xs: Items, fname: String): Double = {
+    var sum = 0.0
+    var i = 0
+    while (i < xs.length) { sum += num(xs(i), fname); i += 1 }
+    sum
   }
 
   private val fSum = b("sum", "a") { (a, _, _) =>
     // keep integral fidelity when all items are integral
     val xs = items(a(0))
-    if (xs.forall { case n: JsonNode => n.isIntegralNumber; case _ => false })
-      numNode(xs.map(_.asInstanceOf[JsonNode].longValue()).sum)
-    else numNode(numItems(a(0), "sum").sum)
+    if (xs.forall { case n: JsonNode => n.isIntegralNumber; case _ => false }) {
+      var sum = 0L
+      var i = 0
+      while (i < xs.length) { sum += xs(i).asInstanceOf[JsonNode].longValue(); i += 1 }
+      numNode(sum)
+    } else numNode(sumOf(xs, "sum"))
   }
-  private val fMax = b("max", "a") { (a, _, _) =>
-    val xs = items(a(0))
+
+  /** The first item of `xs` whose number `better` prefers to every item
+    * before it (Double.compare order); every item must be a number. */
+  private def extreme(xs: Items, fname: String, better: Int => Boolean): Any =
     if (xs.isEmpty) undef
-    else xs.maxBy(x => numItems(JSeq(x), "max").head)
-  }
-  private val fMin = b("min", "a") { (a, _, _) =>
-    val xs = items(a(0))
-    if (xs.isEmpty) undef
-    else xs.minBy(x => numItems(JSeq(x), "min").head)
-  }
+    else {
+      var best = 0
+      var bestD = num(xs(0), fname)
+      var i = 1
+      while (i < xs.length) {
+        val d = num(xs(i), fname)
+        if (better(java.lang.Double.compare(d, bestD))) { best = i; bestD = d }
+        i += 1
+      }
+      xs(best)
+    }
+
+  private val fMax = b("max", "a") { (a, _, _) => extreme(items(a(0)), "max", _ > 0) }
+  private val fMin = b("min", "a") { (a, _, _) => extreme(items(a(0)), "min", _ < 0) }
   private val fAverage = b("average", "a") { (a, _, _) =>
-    val xs = numItems(a(0), "average")
-    if (xs.isEmpty) undef else numNode(xs.sum / xs.length)
+    val xs = items(a(0))
+    if (xs.isEmpty) undef else numNode(sumOf(xs, "average") / xs.length)
   }
 
   // =================================================================
@@ -525,7 +573,7 @@ object Functions {
   // =================================================================
 
   private val fCount = b("count", "a?", undefPass = false) { (a, _, _) =>
-    numNode(items(a(0)).length.toLong)
+    numNode(sizeOf(a(0)).toLong)
   }
 
   private val fAppend = b("append", "xx", undefPass = false) { (a, _, _) =>
@@ -541,15 +589,16 @@ object Functions {
   }
 
   private val fSort = b("sort", "af?") { (a, _, interp) =>
-    val xs = items(a(0))
-    val sorted = a(1) match {
-      case null => msort(xs, defaultCmpSwap)
-      case f => msort(xs, (x, y) => truthy(interp.invoke(f, Seq(x, y), null)))
+    val xs = items(a(0)).toArray[Any]
+    val swap: (Any, Any) => Boolean = a(1) match {
+      case null => defaultCmpSwap
+      case f => (x, y) => truthy(interp.invoke(f, Array[Any](x, y), null))
     }
-    JSeq.of(sorted)
+    msort(xs, new Array[Any](xs.length), 0, xs.length, swap)
+    JSeq.of(xs)
   }
 
-  private val fReverse = b("reverse", "a") { (a, _, _) => JSeq.of(items(a(0)).reverse) }
+  private val fReverse = b("reverse", "a") { (a, _, _) => JSeq.of(items(a(0)).reverseIterator) }
 
   private val fShuffle = b("shuffle", "a") { (a, _, _) =>
     val xs = items(a(0)).toBuffer
@@ -574,7 +623,7 @@ object Functions {
   }
 
   private val fZip = b("zip", "aaaaaaaa", undefPass = false) { (a, _, _) =>
-    val arrays = a.takeWhile(_ != null).map(items)
+    val arrays = a.iterator.takeWhile(_ != null).map(items).toVector
     val out = nf.arrayNode()
     if (arrays.nonEmpty) {
       val len = arrays.map(_.length).min
@@ -598,7 +647,7 @@ object Functions {
     val seen = scala.collection.mutable.LinkedHashSet[String]()
     def collect(v: Any): Unit = v match {
       case o: ObjectNode => o.fieldNames().asScala.foreach(k => if (seen.add(k)) out.items += tn(k))
-      case arr if isArrayLike(arr) => asIterable(arr).foreach(collect)
+      case arr if isArrayLike(arr) => items(arr).foreach(collect)
       case _ =>
     }
     collect(a(0))
@@ -618,7 +667,7 @@ object Functions {
           single.set[com.fasterxml.jackson.databind.JsonNode](e.getKey, e.getValue): Unit
           out.items += single
         }
-      case arr if isArrayLike(arr) => asIterable(arr).foreach(spread)
+      case arr if isArrayLike(arr) => items(arr).foreach(spread)
       case other => out.items += other
     }
     spread(a(0))
@@ -626,21 +675,37 @@ object Functions {
   }
 
   private val fMerge = b("merge", "a") { (a, _, _) =>
+    val xs = items(a(0))
     val result = nf.objectNode()
-    items(a(0)).foreach {
-      case o: ObjectNode => o.fields().asScala.foreach(e => result.set[com.fasterxml.jackson.databind.JsonNode](e.getKey, e.getValue): Unit)
-      case other => throw new JsonataException("T0412", s"$$merge items must be objects, got ${typeName(other)}")
+    var i = 0
+    while (i < xs.length) {
+      xs(i) match {
+        case o: ObjectNode => result.setAll[ObjectNode](o)
+        case other => throw new JsonataException("T0412", s"$$merge items must be objects, got ${typeName(other)}")
+      }
+      i += 1
     }
     result
+  }
+
+  /** A callback's `(value, key, object)` arguments for one field, the first `n` of them. */
+  private def fieldArgs(n: Int, e: java.util.Map.Entry[String, JsonNode], o: ObjectNode): Array[Any] = {
+    val args = new Array[Any](n)
+    args(0) = e.getValue
+    if (n > 1) args(1) = tn(e.getKey)
+    if (n > 2) args(2) = o
+    args
   }
 
   private val fSift = b("sift", "o-f") { (a, _, interp) =>
     val o = a(0).asInstanceOf[ObjectNode]
     val f = a(1)
+    val n = argCount(f, 1, 3)
     val result = nf.objectNode()
-    o.fields().asScala.foreach { e =>
-      val keep = interp.invoke(f, Seq(e.getValue, tn(e.getKey), o).take(math.max(1, arity(f))), null)
-      if (truthy(keep)) result.set[com.fasterxml.jackson.databind.JsonNode](e.getKey, e.getValue): Unit
+    val it = o.fields()
+    while (it.hasNext) {
+      val e = it.next()
+      if (truthy(interp.invoke(f, fieldArgs(n, e, o), null))) result.set[JsonNode](e.getKey, e.getValue): Unit
     }
     if (result.isEmpty) undef else result
   }
@@ -648,9 +713,11 @@ object Functions {
   private val fEach = b("each", "o-f") { (a, _, interp) =>
     val o = a(0).asInstanceOf[ObjectNode]
     val f = a(1)
+    val n = argCount(f, 1, 2)
     val out = new JSeq()
-    o.fields().asScala.foreach { e =>
-      val r = interp.invoke(f, Seq(e.getValue, tn(e.getKey)).take(math.max(1, arity(f))), null)
+    val it = o.fields()
+    while (it.hasNext) {
+      val r = interp.invoke(f, fieldArgs(n, it.next(), o), null)
       if (r != null) out.items += r
     }
     out
@@ -701,27 +768,29 @@ object Functions {
 
   private val fMap = b("map", "af") { (a, _, interp) =>
     val xs = items(a(0))
-    val arrNode = toNode(JSeq.of(xs))
     val f = a(1)
-    val ar = arity(f)
+    val n = argCount(f, 1, 3)
+    val whole = if (n > 2) wholeArray(a(0)) else null
     val out = new JSeq()
-    xs.zipWithIndex.foreach { case (v, i) =>
-      val args = Seq(v, numNode(i.toLong), arrNode).take(math.max(1, ar))
-      val r = interp.invoke(f, args, null)
+    var i = 0
+    while (i < xs.length) {
+      val r = interp.invoke(f, itemArgs(n, xs(i), i, whole), null)
       if (r != null) out.items += r
+      i += 1
     }
     out
   }
 
   private val fFilter = b("filter", "af") { (a, _, interp) =>
     val xs = items(a(0))
-    val arrNode = toNode(JSeq.of(xs))
     val f = a(1)
-    val ar = arity(f)
+    val n = argCount(f, 1, 3)
+    val whole = if (n > 2) wholeArray(a(0)) else null
     val out = new JSeq()
-    xs.zipWithIndex.foreach { case (v, i) =>
-      val args = Seq(v, numNode(i.toLong), arrNode).take(math.max(1, ar))
-      if (truthy(interp.invoke(f, args, null))) out.items += v
+    var i = 0
+    while (i < xs.length) {
+      if (truthy(interp.invoke(f, itemArgs(n, xs(i), i, whole), null))) out.items += xs(i)
+      i += 1
     }
     out
   }
@@ -733,11 +802,18 @@ object Functions {
       throw new JsonataException("D3050", "$reduce function must accept at least two arguments")
     if (a(2) == null && xs.isEmpty) undef
     else {
-      var acc: Any = if (a(2) != null) a(2) else xs.head
-      val start = if (a(2) != null) 0 else 1
-      val arrNode = toNode(JSeq.of(xs))
-      (start until xs.length).foreach { i =>
-        acc = interp.invoke(f, Seq(acc, xs(i), numNode(i.toLong), arrNode).take(math.max(2, arity(f))), null)
+      var acc: Any = if (a(2) != null) a(2) else xs(0)
+      val n = argCount(f, 2, 4)
+      val whole = if (n > 3) wholeArray(a(0)) else null
+      var i = if (a(2) != null) 0 else 1
+      while (i < xs.length) {
+        val args = new Array[Any](n)
+        args(0) = acc
+        args(1) = xs(i)
+        if (n > 2) args(2) = numNode(i.toLong)
+        if (n > 3) args(3) = whole
+        acc = interp.invoke(f, args, null)
+        i += 1
       }
       acc
     }
@@ -746,15 +822,23 @@ object Functions {
   private val fSingle = b("single", "af?") { (a, _, interp) =>
     val xs = items(a(0))
     val f = a(1)
-    val arrNode = toNode(JSeq.of(xs))
-    val matches = xs.zipWithIndex.filter { case (v, i) =>
-      f == null || truthy(interp.invoke(f, Seq(v, numNode(i.toLong), arrNode).take(math.max(1, arity(f))), null))
+    val n = if (f == null) 0 else argCount(f, 1, 3)
+    val whole = if (n > 2) wholeArray(a(0)) else null
+    var matches = 0
+    var found: Any = undef
+    var i = 0
+    while (i < xs.length) {
+      if (f == null || truthy(interp.invoke(f, itemArgs(n, xs(i), i, whole), null))) {
+        if (matches == 0) found = xs(i)
+        matches += 1
+      }
+      i += 1
     }
-    if (matches.isEmpty)
+    if (matches == 0)
       throw new JsonataException("D3139", "$single: no matching item")
-    if (matches.length > 1)
-      throw new JsonataException("D3138", s"$$single: ${matches.length} matching items")
-    matches.head._1
+    if (matches > 1)
+      throw new JsonataException("D3138", s"$$single: $matches matching items")
+    found
   }
 
   // =================================================================

@@ -18,9 +18,6 @@ import graft.connect.JsonataTransform.Config
   */
 final class JsonataExpr private[jsonata] (val source: String, val ast: Ast) extends Serializable {
 
-  @transient private lazy val tupleFlags =
-    new java.util.IdentityHashMap[Ast.Path, java.lang.Boolean]()
-
   /** Evaluate; a `null` return means "no result" (record drop / tombstone). */
   def evaluate(input: JsonNode): JsonNode =
     evaluate(input, Config.DefaultTimeoutMs, Config.DefaultMaxDepth)
@@ -32,7 +29,7 @@ final class JsonataExpr private[jsonata] (val source: String, val ast: Ast) exte
   /** Evaluate and return the evaluator's own value (see [[Values]]). */
   private[jsonata] def run(input: JsonNode, timeoutMs: Long, maxDepth: Int,
                            bindings: Map[String, JsonNode]): Any = {
-    val interp = new Interp(timeoutMs, maxDepth, tupleFlags)
+    val interp = new Interp(timeoutMs, maxDepth)
     val env = new Frame(Functions.rootFrame)
     env.bind("$", input) // $$ — root of the input document
     bindings.foreach { case (k, v) => env.bind(k, v) }
@@ -45,7 +42,7 @@ final class JsonataExpr private[jsonata] (val source: String, val ast: Ast) exte
 
   /** Evaluate with an arbitrary internal value as input (used by $eval). */
   private[jsonata] def evaluateValue(input: Any, outer: Interp): Any = {
-    val interp = new Interp(outer.timeoutMs, outer.maxDepth, tupleFlags)
+    val interp = new Interp(outer.timeoutMs, outer.maxDepth)
     val env = new Frame(Functions.rootFrame)
     env.bind("$", input)
     interp.eval(ast, input, env)

@@ -124,7 +124,7 @@ object Signature {
     case _ => '?'
   }
 
-  private def fail(argIdx: Int, fnName: String): Nothing =
+  private def fail(argIdx: Int, fnName: => String): Nothing =
     throw new JsonataException("T0410",
       s"argument ${argIdx + 1} of function $fnName does not match function signature")
 
@@ -134,7 +134,7 @@ object Signature {
     case _ => Nil
   }
 
-  private def checkInner(arr: Any, inner: Option[Param], argIdx: Int, fnName: String): Unit =
+  private def checkInner(arr: Any, inner: Option[Param], argIdx: Int, fnName: => String): Unit =
     inner.foreach { p =>
       elements(arr).foreach { e =>
         val t = typeOf(e)
@@ -142,7 +142,7 @@ object Signature {
       }
     }
 
-  private def checkOne(v: Any, p: Param, argIdx: Int, fnName: String): Any = {
+  private def checkOne(v: Any, p: Param, argIdx: Int, fnName: => String): Any = {
     val t = typeOf(v)
     if (t == 'm') v // undefined always passes through
     else if (p.types.contains(t)) {
@@ -159,8 +159,8 @@ object Signature {
   }
 
   /** Validate `args` against the signature; returns the (possibly coerced)
-    * argument vector to bind. `ctx` feeds `-` substitution. */
-  def validate(raw: String, args: Seq[Any], ctx: Any, fnName: String): Seq[Any] = {
+    * arguments to bind. `ctx` feeds `-` substitution. */
+  def validate(raw: String, args: Array[Any], ctx: Any, fnName: => String): Array[Any] = {
     val sig = parse(raw)
     val out = new ArrayBuffer[Any](args.length)
     var ai = 0
@@ -184,6 +184,6 @@ object Signature {
       pi += 1
     }
     if (ai < args.length) fail(ai, fnName) // surplus arguments
-    out.toSeq
+    out.toArray
   }
 }

@@ -31,16 +31,30 @@ object Values {
     override def toString: String = items.mkString("Seq(", ", ", ")")
   }
   object JSeq {
-    def apply(vs: Any*): JSeq = { val s = new JSeq(); vs.foreach(s.items += _); s }
+    def apply(v: Any): JSeq = { val s = new JSeq(); s.items += v; s }
     def of(vs: IterableOnce[Any]): JSeq = { val s = new JSeq(); s.items ++= vs; s }
   }
 
-  /** Iterate any value as a sequence (arrays spread; scalars are singletons). */
-  def asIterable(v: Any): Iterable[Any] = v match {
-    case null => Nil
-    case s: JSeq => s.items
-    case a: ArrayNode => a.asScala.toVector
-    case other => List(other)
+  /** A value read as a sequence by index, without copying it: a JSeq's own
+    * buffer, a read-only view over an ArrayNode's elements, or one value.
+    * Readers must not outlive a change to the JSeq they view; the evaluator
+    * only appends to a JSeq while it builds it. */
+  final class Items private (buf: ArrayBuffer[Any], arr: ArrayNode, one: Any, val length: Int)
+      extends scala.collection.AbstractSeq[Any] with scala.collection.IndexedSeq[Any] {
+    def apply(i: Int): Any =
+      if (buf ne null) buf(i) else if (arr ne null) arr.get(i) else one
+  }
+  object Items {
+    val empty: Items = new Items(null, null, null, 0)
+    /** `v` as a sequence: arrays spread, nothing is empty, a scalar is one item. */
+    def of(v: Any): Items = v match {
+      case null => empty
+      case s: JSeq => new Items(s.items, null, null, s.items.length)
+      case a: ArrayNode => new Items(null, a, null, a.size())
+      case other => one(other)
+    }
+    /** A one-item sequence of `v`, even when `v` is an array or nothing. */
+    def one(v: Any): Items = new Items(null, null, v, 1)
   }
 
   def sizeOf(v: Any): Int = v match {
@@ -118,14 +132,8 @@ object Values {
     case n: JsonNode if n.isNumber => { val d = n.doubleValue(); d != 0.0 && !d.isNaN }
     case t: JsonNode if t.isTextual => t.textValue().nonEmpty
     case o: ObjectNode => !o.isEmpty
-    case a: ArrayNode =>
-      if (a.size() == 0) false
-      else if (a.size() == 1) truthy(a.get(0))
-      else a.asScala.exists(truthy)
-    case s: JSeq =>
-      if (s.items.isEmpty) false
-      else if (s.items.length == 1) truthy(s.items(0))
-      else s.items.exists(truthy)
+    case a: ArrayNode => Items.of(a).exists(truthy)
+    case s: JSeq => s.items.exists(truthy)
     case _: JFunction => false
     case _: java.util.regex.Pattern => false
     case _ => false
@@ -144,8 +152,8 @@ object Values {
     case (x: JsonNode, y: JsonNode) if x.isBoolean && y.isBoolean => x.booleanValue() == y.booleanValue()
     case (x: NullNode, y: NullNode) => true
     case (x, y) if isArrayLike(x) && isArrayLike(y) =>
-      val xs = asIterable(x).toSeq; val ys = asIterable(y).toSeq
-      xs.length == ys.length && xs.zip(ys).forall { case (i, j) => deepEquals(i, j) }
+      val xs = Items.of(x); val ys = Items.of(y)
+      xs.length == ys.length && xs.indices.forall(i => deepEquals(xs(i), ys(i)))
     case (x: ObjectNode, y: ObjectNode) =>
       val xf = x.fields().asScala.map(e => e.getKey -> e.getValue).toMap
       val yf = y.fields().asScala.map(e => e.getKey -> e.getValue).toMap
@@ -162,7 +170,7 @@ object Values {
     case n: JsonNode if n.isTextual => ("s", n.textValue())
     case n: JsonNode if n.isBoolean => ("b", n.booleanValue())
     case _: NullNode => ("null", 0)
-    case x if isArrayLike(x) => asIterable(x).map(canonical).toVector
+    case x if isArrayLike(x) => Items.of(x).map(canonical).toVector
     case o: ObjectNode =>
       o.fields().asScala.map(e => e.getKey -> canonical(e.getValue)).toMap
     case other => other
@@ -301,5 +309,5 @@ object Values {
   * transform (`| ... | ... |`) function. */
 trait JFunction {
   def name: String
-  def invoke(args: Seq[Any], interp: Interp): Any
+  def invoke(args: Array[Any], interp: Interp): Any
 }

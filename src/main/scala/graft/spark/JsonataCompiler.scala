@@ -624,7 +624,7 @@ object JsonataCompiler {
     }
 
     /** `$map`/`$filter` with an inline arity-1 lambda over an array operand.
-      * Engine semantics mirrored (Functions.scala:708-733): $map drops items
+      * Engine semantics mirrored (Functions.scala `fMap`/`fFilter`): $map drops items
       * whose lambda result is undefined (SQL NULL here); $filter keeps items
       * whose body is truthy — compiled only for statically-boolean bodies,
       * where truthiness is the boolean itself and undefined is false. An
@@ -695,8 +695,8 @@ object JsonataCompiler {
     /** `$single`: the one-and-only matching element. Engine contract
       * (Functions.scala fSingle): zero matches raise D3139, more than one
       * raise D3138 — and an UNDEFINED operand is an empty item list, so it
-      * raises D3139 too (signature 'a' passes undefined through; asIterable
-      * (null) = Nil), which is why the null operand is NOT given the usual
+      * raises D3139 too (signature 'a' passes undefined through;
+      * `Items.of(null)` is empty), which is why the null operand is NOT given the usual
       * undefined-propagation treatment here. The compiled form filters
       * (sharing $filter's pinned JSON-null-element divergence class) and
       * raises through raise_error with the engine's code in the message;

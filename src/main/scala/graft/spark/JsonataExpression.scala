@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.{UTF8String, VariantVal}
 
 import graft.connect.JsonataTransform
 import graft.connect.JsonataTransform.Config
-import graft.jsonata.{Ast, Jsonata, JsonataException, Values}
+import graft.jsonata.{Ast, Functions, Jsonata, JsonataException, Values}
 
 /** Static analysis over a compiled JSONata AST, used for Catalyst integration:
   *
@@ -52,12 +52,46 @@ object JsonataAnalysis {
     * wholesale and introspecting it. Case (b) escapes: a path that *ends* at
     * `value` (including bare `value` used as a function argument), a `value`
     * step carrying predicates/bindings, `$`/`$$`, wildcard/descendant/parent
-    * steps, transforms, zero-arg context-injected builtins, and 1-arg $eval
-    * (whose dynamic expression runs against the call context). A 2-arg $eval
-    * evaluates against its explicit context argument only, so it is safe. */
+    * steps, transforms, calls that may take the context as an argument
+    * (`takesContext`), lambdas whose signature takes an argument from the
+    * context, and 1-arg $eval (whose dynamic expression runs against the
+    * call context). A 2-arg $eval evaluates against its explicit context
+    * argument only, so it is safe. */
   def referencedValueFields(a: Ast): Option[Set[String]] = {
     var escape = false
     var names = Set.empty[String]
+    // names that may hold any function: bound to a non-lambda, or a lambda parameter
+    var rebound = Set.empty[String]
+    var lambdas = Set.empty[String]
+    walk(a) {
+      case Bind(n, _: Lambda) => lambdas += n
+      case Bind(n, _) => rebound += n
+      case Lambda(ps, _, _) => rebound ++= ps
+      case _ =>
+    }
+    /** Whether calling the function `proc` with `args` may pass it the
+      * context. With no arguments it may (bar the input-free builtins). A
+      * builtin takes the context for its contextable first parameter when
+      * no argument fits that parameter (`Builtin.call`). Only an object
+      * parameter, or `$number`'s any-JSON one, can take the envelope or
+      * `value` that way: a string, number or boolean context is a value
+      * that the path to it already named. A lambda runs a body that is
+      * scanned itself; any other function may be such a builtin, so its
+      * first argument must be an object. */
+    def takesContext(proc: Ast, args: Vector[Ast]): Boolean = proc match {
+      case VarRef("eval") if !rebound("eval") => args.length < 2 // runs against the call's context
+      case VarRef(fn) if args.isEmpty => !Set("now", "millis", "random")(fn)
+      case _ if args.isEmpty => true
+      case _: Lambda => false
+      case VarRef(fn) if lambdas(fn) && !rebound(fn) => false
+      case VarRef(fn) if builtins.contains(fn) && !rebound(fn) =>
+        builtins(fn).params.headOption.exists(p => p.contextable && (p.kind match {
+          case 'o' => !surelyObject(args(0))
+          case 'j' => !surelyData(args(0))
+          case _ => false
+        }))
+      case _ => !surelyObject(args(0))
+    }
     def scanPath(steps: Vector[Step]): Unit =
       steps.zipWithIndex.foreach { case (st, i) =>
         st.expr match {
@@ -72,13 +106,19 @@ object JsonataAnalysis {
         }
       }
     def scan(node: Ast): Unit = node match {
-      case Call(VarRef("eval"), args) if args.length >= 2 => args.foreach(scan)
-      case Call(VarRef("eval"), _) => escape = true
-      case Call(proc @ VarRef(fn), args) =>
-        // zero-arg contextable builtins read the whole context ($string() etc.);
-        // $now/$millis/$random take no input at all
-        if (args.isEmpty && !Set("now", "millis", "random")(fn)) escape = true
+      case c: Call =>
+        if (takesContext(c.proc, c.args)) escape = true
+        else { scan(c.proc); c.args.foreach(scan) }
+      case ApplyOp(l, r) =>
+        // `l ~> f(args)` calls f(l, args); `l ~> f(?, args)` fills the gap with l; `l ~> f` calls f(l)
+        val (proc, args) = r match {
+          case c: Call if c.isPartial => (c.proc, c.args.updated(c.args.indexWhere(_.isInstanceOf[Placeholder]), l))
+          case c: Call => (c.proc, l +: c.args)
+          case f => (f, Vector(l))
+        }
+        if (takesContext(proc, args)) escape = true
         else { scan(proc); args.foreach(scan) }
+      case Lambda(_, _, Some(sig)) if sig.contains('-') => escape = true
       case VarRef("") | VarRef("$") => escape = true // $ / $$ expose the whole envelope
       case Wildcard() | Descendant() | ParentRef() => escape = true
       case TransformExpr(_, _, _) => escape = true
@@ -102,6 +142,23 @@ object JsonataAnalysis {
     }
     scan(a)
     if (escape) None else Some(names)
+  }
+
+  private lazy val builtins = Functions.all.map(b => b.name -> b).toMap
+
+  /** Whether `a` never evaluates to a function. */
+  private def surelyData(a: Ast): Boolean = a match {
+    case _: NumLit | _: StrLit | _: BoolLit | _: NullLit | _: NameStep | _: Binary | _: UnaryMinus |
+         _: RangeExpr | _: ObjCtor | _: ArrCtor => true
+    case p: Path => p.group.isDefined || p.steps.forall(_.expr.isInstanceOf[NameStep])
+    case _ => false
+  }
+
+  /** Whether `a` evaluates to an object or to nothing. */
+  private def surelyObject(a: Ast): Boolean = a match {
+    case _: ObjCtor => true
+    case p: Path => p.group.isDefined
+    case _ => false
   }
 }
 

@@ -60,8 +60,10 @@ object StreamingAsof {
         .unionByName(probes.map(p => AsofRow(p.key, p.p_ts, 1, p.probe_id, 0.0))))
   }
 
-  private final case class Feat(ts: Long, v: Double)
-  private final case class Pend(ts: Long, id: Long)
+  // state classes are public: Spark's generated encoder code must reach
+  // their constructors and accessors, or it falls back to interpreting them
+  final case class Feat(ts: Long, v: Double)
+  final case class Pend(ts: Long, id: Long)
 
   private final class AsofProcessor extends StatefulProcessor[Long, AsofRow, Enriched] {
 

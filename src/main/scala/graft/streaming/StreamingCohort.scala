@@ -63,8 +63,10 @@ object StreamingCohort {
       .distinct()
   }
 
+  // state classes are public: Spark's generated encoder code must reach
+  // their constructors and accessors, or it falls back to interpreting them
   /** Cohort week + activated periods (sorted, capped, each present once). */
-  private final case class CohortState(cohortWeek: Long, periods: Array[Long])
+  final case class CohortState(cohortWeek: Long, periods: Array[Long])
 
   private final class CohortProcessor(weekMs: Long, maxPeriods: Int)
       extends StatefulProcessor[Long, UserEvent, PeriodHit] {

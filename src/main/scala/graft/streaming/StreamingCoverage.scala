@@ -61,7 +61,9 @@ object StreamingCoverage {
         TimeMode.None(), OutputMode.Update())(Encoders.product[Kept])
   }
 
-  private final case class Entry(cos: Double, id: Long)
+  // state classes are public: Spark's generated encoder code must reach
+  // their constructors and accessors, or it falls back to interpreting them
+  final case class Entry(cos: Double, id: Long)
 
   private final class CoverageProcessor(m: Int)
       extends StatefulProcessor[Long, Assigned, Kept] {

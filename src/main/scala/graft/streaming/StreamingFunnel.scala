@@ -84,10 +84,12 @@ object StreamingFunnel {
     perStep.reduce(_ unionByName _)
   }
 
-  private final case class Buffered(ts: Long, step: Int)
+  // state classes are public: Spark's generated encoder code must reach
+  // their constructors and accessors, or it falls back to interpreting them
+  final case class Buffered(ts: Long, step: Int)
   /** Automaton: alignedAt(i) = event time step i+1 bound at; -1 = unbound.
     * Spark's Array encoder round-trips primitive arrays losslessly. */
-  private final case class Progress(alignedAt: Array[Long])
+  final case class Progress(alignedAt: Array[Long])
 
   private final class FunnelProcessor(steps: IndexedSeq[String], gaps: IndexedSeq[Long])
       extends StatefulProcessor[Long, FunnelEvent, StepHit] {

@@ -68,7 +68,9 @@ object StreamingMixture {
       .withColumn("selected", col("cum") - col("tokens") < budget)
   }
 
-  private final case class PendDoc(ts: Long, k: String, doc_id: Long, tokens: Long)
+  // state classes are public: Spark's generated encoder code must reach
+  // their constructors and accessors, or it falls back to interpreting them
+  final case class PendDoc(ts: Long, k: String, doc_id: Long, tokens: Long)
 
   private final class MixtureProcessor(defaultBudget: Long,
                                        budgets: Map[String, Long], seed: String)

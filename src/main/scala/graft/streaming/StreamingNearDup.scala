@@ -162,7 +162,9 @@ object StreamingNearDup {
       .select(col("doc_a"), col("doc_b"), col("est"), col("ts"))
   }
 
-  private final case class Entry(ts: Long, doc_id: Long, sig: Seq[Long])
+  // state classes are public: Spark's generated encoder code must reach
+  // their constructors and accessors, or it falls back to interpreting them
+  final case class Entry(ts: Long, doc_id: Long, sig: Seq[Long])
 
   private final class BucketProcessor(horizonMs: Long, bucketCap: Int,
                                       scorer: PairScorer, nBands: Int, bandWidth: Int)

@@ -92,7 +92,9 @@ object StreamingSemanticDedup {
     }
   }
 
-  private final case class Admitted(vec: Array[Double])
+  // state classes are public: Spark's generated encoder code must reach
+  // their constructors and accessors, or it falls back to interpreting them
+  final case class Admitted(vec: Array[Double])
 
   private final class SemanticProcessor(tau: Double, cap: Int)
       extends StatefulProcessor[Long, VecEvent, Verdict] {

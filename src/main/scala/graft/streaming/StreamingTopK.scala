@@ -58,7 +58,9 @@ object StreamingTopK {
         (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("id"), col("col.score").as("score"))
 
-  private final case class Entry(score: Long, id: Long)
+  // state classes are public: Spark's generated encoder code must reach
+  // their constructors and accessors, or it falls back to interpreting them
+  final case class Entry(score: Long, id: Long)
 
   private final class TopKProcessor(windowMs: Long, k: Int)
       extends StatefulProcessor[(String, Long), Scored, Ranked] {

@@ -51,8 +51,10 @@ object StreamingTransitions {
         col("ts").as("at_ms"))
   }
 
+  // state classes are public: Spark's generated encoder code must reach
+  // their constructors and accessors, or it falls back to interpreting them
   /** The last ripe event of the chain. */
-  private final case class Last(ts: Long, eventId: Long, tpe: String)
+  final case class Last(ts: Long, eventId: Long, tpe: String)
 
   private final class TransitionProcessor
       extends StatefulProcessor[Long, TypedEvent, Edge] {

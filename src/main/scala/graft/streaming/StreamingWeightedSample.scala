@@ -59,7 +59,9 @@ object StreamingWeightedSample {
         graft.ops.Sampling.esKeyCol.as("key"))
       .orderBy(col("key"), col("doc_id")).limit(k)
 
-  private final case class Entry(key: Double, doc_id: Long, source: String, w: Double)
+  // state classes are public: Spark's generated encoder code must reach
+  // their constructors and accessors, or it falls back to interpreting them
+  final case class Entry(key: Double, doc_id: Long, source: String, w: Double)
 
   private final class SampleProcessor(k: Int)
       extends StatefulProcessor[Int, Scored, Sampled] {

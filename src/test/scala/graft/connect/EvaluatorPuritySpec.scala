@@ -33,6 +33,29 @@ class EvaluatorPuritySpec extends AnyFunSuite {
     for (i <- 0 until 50; e <- smtExprs) assertPure(e, RecordCodec.recordToJsonNode(smtRecord(i)))
   }
 
+  test("a variable bound to a sequence is unchanged after path steps, $append and $map read it") {
+    // `$s` is a sequence the evaluator built; every reader below views it
+    // without copying, and none may change it
+    val reads = Seq("$s.$uppercase($)", "$s[0]", "$append($s, 'z')", "$append('z', $s)",
+      "$map($s, function($v, $i, $a){ $a })", "$filter($s, function($v){ true })",
+      "$sort($s)", "$reverse($s)", "$s{$: 1}", "[$s, $s]")
+    val input = RecordCodec.recordToJsonNode(smtRecord(1))
+    val plain = Jsonata.compile("value.items.sku").evaluate(input)
+    assert(plain.size() > 1)
+    for (r <- reads) {
+      val out = Jsonata.compile(s"( $$s := value.items.sku; $$x := $r; [$$s] )").evaluate(input)
+      assert(out == plain, s"reading $$s through $r changed it to $out")
+    }
+  }
+
+  test("~>|...| over nested arrays leaves its input unchanged") {
+    val nested = Jsonata.parseJson(
+      """{"a": [[{"x": 1}, {"x": 2}], [{"x": 3, "y": [{"x": 4}]}]], "b": [{"x": 5}]}""")
+    val exprs = Seq("a ~> |$|{'x': 0}|", "$ ~> |a|{'z': 1}, ['x']|", "$ ~> |**.y|{'x': 9}|",
+      "a.x ~> |$|{'w': 1}|", "[a, b] ~> |$|{'x': -1}|", "$ ~> |a.y|{'k': 'v'}|")
+    exprs.foreach(e => assertPure(e, nested))
+  }
+
   test("transform, $merge, $sift, $spread and group-by objects build new nodes") {
     val exprs = Seq(
       "$ ~> |value|{'first': 'X'}|",

@@ -78,6 +78,51 @@ class ParityWave3Spec extends AnyFunSuite {
     assert(e.code == "U1001")
   }
 
+  // ---- object constructor over one context item ----
+  test("a one-item constructor evaluates every key before any value") {
+    val e = intercept[JsonataException](Jsonata.evalString("""{"a": $error("v"), $error("k"): 1}""", "{}"))
+    assert(e.getMessage.contains("k") && !e.getMessage.contains("v"), e.getMessage)
+  }
+  test("D1009 duplicate keys over one item") {
+    val e = intercept[JsonataException](Jsonata.evalString("""{"a": 1, "b": 2, "a": 3}""", "{}"))
+    assert(e.code == "D1009")
+    val e2 = intercept[JsonataException](Jsonata.evalString("""{k: 1, "x": 2}""", """{"k": "x"}"""))
+    assert(e2.code == "D1009")
+  }
+  t("an undefined value drops its key", """{"a": nothing, "b": 1, "c": b}""", "{}", """{"b": 1}""")
+  t("an undefined key drops its pair", """{nothing: 1, "b": 2}""", "{}", """{"b": 2}""")
+
+  // ---- higher-order builtins pass only the arguments a lambda declares ----
+  // a typed lambda raises T0410 on a surplus argument, so these fail if the
+  // builtin passes an index or the whole array to a one-parameter lambda
+  t("$map passes a typed one-parameter lambda one argument",
+    "$map([1, 2], function($v)<n:n>{ $v * 2 })", "{}", "[2, 4]")
+  t("$filter passes a typed one-parameter lambda one argument",
+    "$filter([1, 2, 3], function($v)<n:b>{ $v > 1 })", "{}", "[2, 3]")
+  t("$single passes a typed one-parameter lambda one argument",
+    "$single([1, 2, 3], function($v)<n:b>{ $v = 2 })", "{}", "2")
+  t("$reduce passes a typed two-parameter lambda two arguments",
+    "$reduce([1, 2, 3], function($a, $v)<nn:n>{ $a + $v })", "{}", "6")
+  t("$map passes the index and the input array",
+    "$map(xs, function($v, $i, $a){ {'v': $v, 'i': $i, 'a': $a} })", """{"xs": [5, 6]}""",
+    """[{"v": 5, "i": 0, "a": [5, 6]}, {"v": 6, "i": 1, "a": [5, 6]}]""")
+  t("$map's whole array of a sequence equals the sequence",
+    "$map(xs.v, function($v, $i, $a){ $a })", """{"xs": [{"v": 1}, {"v": 2}]}""", "[[1, 2], [1, 2]]")
+  t("$filter passes the index and the input array",
+    "$filter(xs, function($v, $i, $a){ $a[$i] = $v and $count($a) = 3 and $i > 0 })",
+    """{"xs": [7, 8, 9]}""", "[8, 9]")
+  t("$single passes the index and the input array",
+    "$single(xs, function($v, $i, $a){ $i = 1 and $a[2] = 9 })", """{"xs": [7, 8, 9]}""", "8")
+  t("$reduce passes the index and the input array",
+    "$reduce(xs, function($acc, $v, $i, $a){ $acc + $v * $i + $count($a) }, 0)", """{"xs": [7, 8, 9]}""", "35")
+  t("$map over one value passes it as a one-item array",
+    "$map(x, function($v, $i, $a){ $a })", """{"x": 4}""", "[4]")
+  test("T1006 names the function that is not one") {
+    val e = intercept[JsonataException](Jsonata.evalString("$foo(1)", "{}"))
+    assert(e.code == "T1006")
+    assert(e.getMessage.contains("$foo"), e.getMessage)
+  }
+
   // ---- $each / $map over objects and mixed ----
   t("$keys on array of objects unions", "$keys([{'a':1},{'b':2},{'a':3}])", "{}", """["a","b"]""")
   t("$lookup missing key", "$lookup({'a': 1}, 'zz')", "{}", UNDEF)

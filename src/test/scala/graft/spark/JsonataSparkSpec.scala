@@ -85,6 +85,46 @@ class JsonataSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(JsonataAnalysis.referencedValueFields(ast2) == Some(Set("doc_id")))
   }
 
+  test("a builtin that takes the context for a parameter keeps every field") {
+    import graft.connect.JsonataTransform
+    val session = spark
+    import session.implicits._
+    // $sift's object parameter does not take the lambda, so the engine
+    // passes it the envelope: the expression reads every value field
+    val df = Seq((1L, "x")).toDF("a", "b")
+    val out = JsonataDF.transform(df, "$sift(function($v){ true })").collect().map(_.getString(0))
+    assert(out.toSeq == Seq("""{"topic":"rows","kafkaPartition":0,"value":{"a":1,"b":"x"}}"""))
+    def fields(e: String) = JsonataAnalysis.referencedValueFields(JsonataTransform.compile(e).ast)
+    for (e <- Seq("$sift(function($v){ true })", "$each(function($v){ $v })", "$number()",
+      "$keys()", "value.a ~> $sift(function($v){ true })", "($f := $sift; $f(function($v){ true }))",
+      "$eval('value.b')", "(function($x)<o-:o>{ $x })()"))
+      assert(fields(e).isEmpty, e)
+    assert(fields("$sift({'k': value.a}, function($v){ true })") == Some(Set("a")))
+    assert(fields("$number(value.a) + $string(value.b)") == Some(Set("a", "b")))
+    assert(fields("value.b ~> $uppercase") == Some(Set("b")))
+  }
+
+  test("the interpreted opbench expressions keep their pruning") {
+    import graft.connect.JsonataTransform
+    // DfWorkload.Interpreted's three expressions: each reads only the
+    // value fields it names, so df_interpreted prunes the rest
+    val total = "$sum($map(value.items, function($i) { $i.qty * $i.price }))"
+    val cases = Seq(
+      s"""value.event_type = 'error' ? null : {"id": value.id, "total": $total,
+         |  "top": $$max(value.items.price), "skus": $$join(value.items.sku, ",")}""".stripMargin ->
+        Set("event_type", "id", "items"),
+      """value.event_type = 'error' ? null : {"id": value.id,
+        |  "who": value.first & " " & value.last, "email": value.email,
+        |  "skus": $join($map(value.items, function($i) { $uppercase($i.sku) }), ","),
+        |  "amount": value.amount, "day": $substring(value.ts, 0, 10)}""".stripMargin ->
+        Set("event_type", "id", "first", "last", "email", "items", "amount", "ts"),
+      """value.event_type = 'error' ? null : {"id": value.id,
+        |  "code": $number(value.code) * 2, "n": $count(value.items)}""".stripMargin ->
+        Set("event_type", "id", "code", "items"))
+    for ((e, names) <- cases)
+      assert(JsonataAnalysis.referencedValueFields(JsonataTransform.compile(e).ast) == Some(names), e)
+  }
+
   test("$ escape disables pruning") {
     val out = JsonataDF.transform(docs, "$.value.doc_id")
     val scans = out.queryExecution.executedPlan.collect {
