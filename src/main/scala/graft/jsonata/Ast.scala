@@ -41,7 +41,11 @@ object Ast {
   final case class RangeExpr(lhs: Ast, rhs: Ast) extends Ast // ..
   /** Object constructor — always evaluated as a (possibly grouping) aggregation
     * over its context sequence, per the spec's "object-for-each" semantics. */
-  final case class ObjCtor(pairs: Vector[(Ast, Ast)]) extends Ast
+  final case class ObjCtor(pairs: Vector[(Ast, Ast)]) extends Ast {
+    /** Every key is a string literal and no two are equal: no key clash. */
+    val distinctLiteralKeys: Boolean = pairs.forall(_._1.isInstanceOf[StrLit]) &&
+      pairs.map(_._1.asInstanceOf[StrLit].value).distinct.length == pairs.length
+  }
   final case class ArrCtor(items: Vector[Ast]) extends Ast
   final case class Lambda(params: Vector[String], body: Ast, signature: Option[String]) extends Ast
   final case class Call(proc: Ast, args: Vector[Ast]) extends Ast {

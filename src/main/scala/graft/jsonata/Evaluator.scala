@@ -471,22 +471,18 @@ final class Interp(val timeoutMs: Long, val maxDepth: Int) {
     } else objectOver(ctor, if (isArrayLike(input)) undef else input, env)
 
   /** `{...}` over one context item: every key is evaluated, in pair order,
-    * before any value; a key that two pairs give raises D1009; a pair with
-    * an undefined key or value adds nothing. */
+    * before any value; a key that two pairs give raises D1009 (checked only
+    * when the keys are not distinct literals); a pair with an undefined key
+    * or value adds nothing. */
   private def objectOver(ctor: ObjCtor, item: Any, env: Frame): ObjectNode = {
     val pairs = ctor.pairs
     val n = pairs.length
     val keys = new Array[String](n)
+    val seen = if (ctor.distinctLiteralKeys) null else new java.util.HashSet[String]()
     var i = 0
     while (i < n) {
       keys(i) = objectKey(eval(pairs(i)._1, item, env))
-      if (keys(i) != null) {
-        var j = 0
-        while (j < i) {
-          if (keys(i) == keys(j)) duplicateKey(keys(i))
-          j += 1
-        }
-      }
+      if (seen != null && keys(i) != null && !seen.add(keys(i))) duplicateKey(keys(i))
       i += 1
     }
     val result = nf.objectNode()

@@ -72,12 +72,15 @@ object JsonataAnalysis {
     /** Whether calling the function `proc` with `args` may pass it the
       * context. With no arguments it may (bar the input-free builtins). A
       * builtin takes the context for its contextable first parameter when
-      * no argument fits that parameter (`Builtin.call`). Only an object
-      * parameter, or `$number`'s any-JSON one, can take the envelope or
-      * `value` that way: a string, number or boolean context is a value
-      * that the path to it already named. A lambda runs a body that is
-      * scanned itself; any other function may be such a builtin, so its
-      * first argument must be an object. */
+      * the first argument does not fit it (`Builtin.call`). Only an object
+      * parameter (`$sift`, `$each`) or `$number`'s any-JSON one can take
+      * the envelope or `value` that way: a string, number or boolean
+      * context is a value that the path to it already named. A data first
+      * argument never lets the context in: it fits an any-JSON parameter,
+      * and when it does not fit an object one it moves on to the function
+      * parameter after it, which raises T0410 whatever the context holds.
+      * A lambda runs a body that is scanned itself; any other function may
+      * be such a builtin, so its first argument must be data. */
     def takesContext(proc: Ast, args: Vector[Ast]): Boolean = proc match {
       case VarRef("eval") if !rebound("eval") => args.length < 2 // runs against the call's context
       case VarRef(fn) if args.isEmpty => !Set("now", "millis", "random")(fn)
@@ -86,11 +89,10 @@ object JsonataAnalysis {
       case VarRef(fn) if lambdas(fn) && !rebound(fn) => false
       case VarRef(fn) if builtins.contains(fn) && !rebound(fn) =>
         builtins(fn).params.headOption.exists(p => p.contextable && (p.kind match {
-          case 'o' => !surelyObject(args(0))
-          case 'j' => !surelyData(args(0))
+          case 'o' | 'j' => !surelyData(args(0))
           case _ => false
         }))
-      case _ => !surelyObject(args(0))
+      case _ => !surelyData(args(0))
     }
     def scanPath(steps: Vector[Step]): Unit =
       steps.zipWithIndex.foreach { case (st, i) =>
@@ -151,13 +153,6 @@ object JsonataAnalysis {
     case _: NumLit | _: StrLit | _: BoolLit | _: NullLit | _: NameStep | _: Binary | _: UnaryMinus |
          _: RangeExpr | _: ObjCtor | _: ArrCtor => true
     case p: Path => p.group.isDefined || p.steps.forall(_.expr.isInstanceOf[NameStep])
-    case _ => false
-  }
-
-  /** Whether `a` evaluates to an object or to nothing. */
-  private def surelyObject(a: Ast): Boolean = a match {
-    case _: ObjCtor => true
-    case p: Path => p.group.isDefined
     case _ => false
   }
 }

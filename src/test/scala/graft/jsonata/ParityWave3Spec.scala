@@ -89,6 +89,14 @@ class ParityWave3Spec extends AnyFunSuite {
     val e2 = intercept[JsonataException](Jsonata.evalString("""{k: 1, "x": 2}""", """{"k": "x"}"""))
     assert(e2.code == "D1009")
   }
+  test("a wide one-item constructor keeps every key and still finds a duplicate") {
+    val literal = (0 until 200).map(i => s""""k$i": $i""").mkString("{", ", ", "}")
+    val out = Jsonata.parseJson(Jsonata.evalString(literal, "{}"))
+    assert(out.size == 200 && out.get("k199").intValue == 199)
+    val computed = (0 until 200).map(i => s""""k$i": $i""").mkString("{", ", ", """, "k" & n: 0}""")
+    val e = intercept[JsonataException](Jsonata.evalString(computed, """{"n": 150}"""))
+    assert(e.code == "D1009" && e.getMessage.contains("k150"), e.getMessage)
+  }
   t("an undefined value drops its key", """{"a": nothing, "b": 1, "c": b}""", "{}", """{"b": 1}""")
   t("an undefined key drops its pair", """{nothing: 1, "b": 2}""", "{}", """{"b": 2}""")
 

@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
 """Top methods by CPU samples and top allocation sites in a JFR recording.
 
-    python3 tools/jfrtop.py <recording.jfr> [--under FRAME] [--top N] [--depth K]
+    python3 tools/jfrtop.py <recording.jfr> [--under FRAME] [--depth K]
 
 Reads `jdk.ExecutionSample` and `jdk.ObjectAllocationSample` events through
-the JDK's `jfr print` and prints two tables:
+the JDK's `jfr print` (up to 256 frames a stack) and prints two tables of
+the top 25 rows:
 
 - self time: CPU samples by the method on top of the stack, with its share
   of the counted samples;
@@ -35,16 +36,18 @@ import subprocess
 import sys
 
 EVENTS = "jdk.ExecutionSample,jdk.ObjectAllocationSample"
+TOP = 25  # rows per table
+STACK_DEPTH = 256  # frames read per stack
 UNITS = {"byte": 1, "bytes": 1, "B": 1, "kB": 1024, "KB": 1024, "MB": 1024 ** 2,
          "GB": 1024 ** 3, "TB": 1024 ** 4}
 FRAME = re.compile(r"^\s+(\S.*?)\((.*?)\)(?: line: (\d+))?")
 
 
-def events(path, depth):
+def events(path):
     """Yield (type, frames, weight, class, truncated) per sample; frames
     are [(method, line)] from the top of the stack down, and `truncated`
     marks a stack that JFR or `jfr print` cut short."""
-    cmd = ["jfr", "print", "--events", EVENTS, "--stack-depth", str(depth), path]
+    cmd = ["jfr", "print", "--events", EVENTS, "--stack-depth", str(STACK_DEPTH), path]
     proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, text=True, errors="replace")
     kind, frames, weight, cls, in_stack, truncated = None, [], 0.0, "", False, False
     for line in proc.stdout:
@@ -83,9 +86,9 @@ def key(frames, depth, with_line):
     return " < ".join(name(f) for f in frames[:depth]) or "<no stack>"
 
 
-def table(title, counter, total, fmt, top):
+def table(title, counter, total, fmt):
     print(f"\n{title}")
-    for k, v in counter.most_common(top):
+    for k, v in counter.most_common(TOP):
         print(f"{100.0 * v / total:6.1f}%  {fmt(v):>10}  {k}")
 
 
@@ -101,16 +104,14 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("recording")
     ap.add_argument("--under", help="count only stacks holding a frame that contains this text")
-    ap.add_argument("--top", type=int, default=25, help="rows per table (25)")
     ap.add_argument("--depth", type=int, default=1, help="frames per row key (1)")
-    ap.add_argument("--stack-depth", type=int, default=256, help="frames read per stack (256)")
     a = ap.parse_args()
 
     cpu, alloc = collections.Counter(), collections.Counter()
     n_cpu = n_cpu_all = 0
     b_alloc = b_alloc_all = 0.0
     truncated = 0
-    for kind, frames, weight, cls, cut in events(a.recording, a.stack_depth):
+    for kind, frames, weight, cls, cut in events(a.recording):
         is_cpu = kind == "jdk.ExecutionSample"
         if is_cpu:
             n_cpu_all += 1
@@ -134,10 +135,9 @@ def main():
     if a.under and truncated:
         print(f"{truncated} truncated stacks did not show {a.under}: raise the recording's stackdepth")
     if n_cpu:
-        table("self time (share of counted CPU samples, samples, method)", cpu, n_cpu, str, a.top)
+        table("self time (share of counted CPU samples, samples, method)", cpu, n_cpu, str)
     if b_alloc:
-        table("allocation (share of counted sampled bytes, bytes, site [class])", alloc, b_alloc,
-              human, a.top)
+        table("allocation (share of counted sampled bytes, bytes, site [class])", alloc, b_alloc, human)
 
 
 if __name__ == "__main__":
