@@ -156,10 +156,13 @@ object CValues {
   private val TimeFormat = utc("HH:mm:ss.SSS'Z'")
   private val TimestampFormat = utc("yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
 
-  /** Pick the ISO form by the millis content (Connect Values.dateFormatFor). */
+  /** Pick the ISO form by the millis content (Connect Values.dateFormatFor,
+    * except that an instant before 1970 is a date or a timestamp, never a
+    * time of day: Connect's `t < one day` test turns -1 ms into 23:59:59.999,
+    * which parses back as 86399999). */
   def formatDate(d: java.util.Date): String = {
     val t = d.getTime
-    if (t < Logical.MillisPerDay) TimeFormat.get().format(d)
+    if (t >= 0 && t < Logical.MillisPerDay) TimeFormat.get().format(d)
     else if (t % Logical.MillisPerDay == 0) DateFormat.get().format(d)
     else TimestampFormat.get().format(d)
   }

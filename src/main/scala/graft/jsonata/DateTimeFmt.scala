@@ -202,33 +202,35 @@ object DateTimeFmt {
     }
   }
 
-  private def parsePicture(s: String, pic: String): Long = {
-    // build a regex with one capture group per marker
-    val comps = scala.collection.mutable.ArrayBuffer[Char]()
-    val re = new StringBuilder("^")
-    tokens(pic).foreach {
-      case Left(lit) => re.append(java.util.regex.Pattern.quote(lit))
-      case Right(Marker(comp, mod)) =>
-        comps += comp
-        comp match {
-          case 'P' => re.append("([AaPp][Mm])")
-          case 'M' if mod.startsWith("N") || mod.startsWith("n") => re.append("([A-Za-z]+)")
-          case 'F' => re.append("([A-Za-z]+)")
-          case 'Z' | 'z' => re.append("(Z|[+-]\\d{2}:?\\d{2})")
-          case _ =>
-            val w = padWidth(mod.split(',')(0))
-            if (w > 0) re.append(s"(\\d{1,$w})") else re.append("(\\d+)")
-        }
+  /** The anchored regex that parses a `pic` picture, one capture group per
+    * marker, and the marker of each group in group order. */
+  private[graft] def pictureRegex(pic: String): (String, Seq[Marker]) = {
+    val toks = tokens(pic)
+    val re = toks.map {
+      case Left(lit) => java.util.regex.Pattern.quote(lit)
+      case Right(Marker(comp, mod)) => comp match {
+        case 'P' => "([AaPp][Mm])"
+        case 'M' if mod.startsWith("N") || mod.startsWith("n") => "([A-Za-z]+)"
+        case 'F' => "([A-Za-z]+)"
+        case 'Z' | 'z' => "(Z|[+-]\\d{2}:?\\d{2})"
+        case _ =>
+          val w = padWidth(mod.split(',')(0))
+          if (w > 0) s"(\\d{1,$w})" else "(\\d+)"
+      }
     }
-    re.append("$")
-    val m = java.util.regex.Pattern.compile(re.toString).matcher(s.trim)
+    (re.mkString("^", "", "$"), toks.collect { case Right(mk) => mk })
+  }
+
+  private def parsePicture(s: String, pic: String): Long = {
+    val (re, markers) = pictureRegex(pic)
+    val m = java.util.regex.Pattern.compile(re).matcher(s.trim)
     if (!m.matches()) throw new JsonataException("D3136", s"'$s' does not match picture '$pic'")
     var year = 1970; var month = 1; var day = 1; var hour = 0; var minute = 0; var second = 0; var milli = 0
     var pm = false; var h12 = -1; var dayOfYear = -1
     var offset: ZoneOffset = ZoneOffset.UTC
-    comps.zipWithIndex.foreach { case (c, i) =>
+    markers.zipWithIndex.foreach { case (mk, i) =>
       val g = m.group(i + 1)
-      c match {
+      mk.comp match {
         case 'Y' => year = g.toInt
         case 'M' => month = if (g.forall(_.isDigit)) g.toInt
           else MonthNames.indexWhere(_.toLowerCase.startsWith(g.toLowerCase)) + 1

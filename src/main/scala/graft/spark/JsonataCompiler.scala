@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import graft.connect.JsonataTransform
-import graft.jsonata.{Ast, Functions, Jsonata, LruCache}
+import graft.jsonata.{Ast, Functions, Jsonata, LruCache, Values}
 
 /** Subset-to-Catalyst compiler (SURVEY.md §2 "two-tier execution", §4.3).
   *
@@ -136,14 +136,12 @@ object JsonataCompiler {
     // boundary's key-absent encoding, same as JsonataDF.auto null-fill)
     case ApplyOp(l, t: TransformExpr) => ctx.transformOutputs(l, t)
     case Call(VarRef("merge"), Vector(ArrCtor(items))) if items.nonEmpty =>
-      val parts = items.map { it =>
+      allOf(items.map { it =>
         ctx.structObjOutputsTyped(it).orElse(it match {
           case o: ObjCtor => compileObjectTyped(ctx, o)
           case _ => None
         })
-      }
-      if (!parts.forall(_.isDefined)) None
-      else {
+      }).flatMap { parts =>
         // Right-bias is on PRESENT keys: fMerge only sets keys the later
         // object actually CARRIES, and under the boundary encoding presence
         // is non-null — so a duplicate key merges as coalesce(later,
@@ -156,7 +154,7 @@ object JsonataCompiler {
         // analysis where the tier's contract is fall-back-not-crash.
         val out = scala.collection.mutable.LinkedHashMap.empty[String, (Column, DataType)]
         var ok = true
-        parts.flatten.flatten.foreach { case (k, c, dt) =>
+        parts.flatten.foreach { case (k, c, dt) =>
           out.get(k) match {
             case None => out.update(k, (c, dt))
             case Some((prev, pdt)) =>
@@ -249,7 +247,15 @@ object JsonataCompiler {
     case other => children(other).exists(readsInput)
   }
 
+  /** A path step with no stages, keep-array marker, focus or index. */
+  private def plainStep(s: Step): Boolean =
+    s.stages.isEmpty && !s.keepArray && s.focus.isEmpty && s.index.isEmpty
+
   private def isNav(a: Ast): Boolean = a.isInstanceOf[NameStep] || a == Wildcard() || a == Descendant()
+
+  /** Every value of `xs`, or None when any is missing. */
+  private def allOf[A](xs: Seq[Option[A]]): Option[Seq[A]] =
+    if (xs.forall(_.isDefined)) Some(xs.flatten) else None
 
   /** The literal that evaluates to the JSON value `j`. */
   private def literal(j: JsonNode): Ast = j match {
@@ -332,9 +338,7 @@ object JsonataCompiler {
     def cheap(a: Ast): Boolean = a match {
       case VarRef(_) => true
       case Path(steps, _, None)
-          if steps.forall(s => s.stages.isEmpty && !s.keepArray &&
-            s.focus.isEmpty && s.index.isEmpty) &&
-            steps.tail.forall(_.expr.isInstanceOf[NameStep]) => true
+          if steps.forall(plainStep) && steps.tail.forall(_.expr.isInstanceOf[NameStep]) => true
       case _ => false
     }
     def go(a: Ast, pe: Set[String]): Ast = {
@@ -425,11 +429,10 @@ object JsonataCompiler {
 
   private def compileObjectTyped(ctx: Ctx, a: Ast): Option[Seq[(String, Column, DataType)]] = a match {
     case ObjCtor(pairs) =>
-      val outs = pairs.map {
+      allOf(pairs.map {
         case (StrLit(k), v) => ctx.compile(v).map(cv => (k, cv.col, cv.dt))
         case _ => None
-      }
-      if (outs.forall(_.isDefined)) Some(outs.map(_.get)) else None
+      })
     case _ => None
   }
 
@@ -478,7 +481,7 @@ object JsonataCompiler {
       * long, integrals with floats to double (exact widenings only); any
       * other mix is None. */
     private def unifyNumeric(occs: Seq[DataType]): Option[DataType] =
-      if (occs.forall(_ == occs.head)) Some(if (isIntegral(occs.head)) LongType else occs.head)
+      if (occs.forall(_ == occs.head)) Some(normDt(occs.head))
       else if (occs.forall(isIntegral)) Some(LongType)
       else if (occs.forall(d => isIntegral(d) || isFloat(d))) Some(DoubleType)
       else None
@@ -549,8 +552,7 @@ object JsonataCompiler {
       // in-lambda shape); anything staged mid-path stays interpreted
       val lastStages = p.steps.lastOption.map(_.stages).getOrElse(Vector.empty)
       val plain = !p.keepSingletonArray && p.group.isEmpty && p.steps.nonEmpty &&
-        !p.steps.init.exists(s => s.stages.nonEmpty || s.keepArray ||
-          s.focus.isDefined || s.index.isDefined) &&
+        p.steps.init.forall(plainStep) &&
         !p.steps.last.keepArray && p.steps.last.focus.isEmpty &&
         p.steps.last.index.isEmpty &&
         p.steps.tail.forall(_.expr.isInstanceOf[NameStep])
@@ -756,10 +758,7 @@ object JsonataCompiler {
           fieldType(names) match {
             case Some(st: StructType) =>
               val prefix = names.map(_ + ".").mkString
-              Some(st.fields.toSeq.map { f =>
-                val c = col(prefix + f.name)
-                VField(f.name, c, f.dataType, c.isNotNull)
-              })
+              Some(spread(st)(n => col(prefix + n)))
             case _ => None
           }
         }
@@ -771,10 +770,25 @@ object JsonataCompiler {
       case _ => None
     }
 
+    /** The fields of a struct of type `st`, each field's column given by
+      * `field` from its name; a NULL column is an absent key. */
+    private def spread(st: StructType)(field: String => Column): Seq[VField] =
+      st.fields.toSeq.map { f =>
+        val c = field(f.name)
+        VField(f.name, c, f.dataType, c.isNotNull)
+      }
+
     /** Bind ($v[, $k]) for one field of a struct object. */
     private def fieldBindings(params: Vector[String], f: VField): Seq[(String, TCol)] =
       Seq(params.head -> TCol(f.col, f.dt)) ++
         params.lift(1).map(_ -> TCol(lit(f.name), StringType))
+
+    /** A per-field lambda body with its key parameter `$k` replaced by the
+      * field's name: conditions on the key become closed subtrees that the
+      * engine folds (see the [[Cond]] rule of [[compileCore]]), so a
+      * heterogeneous struct compiles bodies like `$k = 'n' ? $v : 0`. */
+    private def keyed(body: Ast, params: Vector[String], f: VField): Ast =
+      params.lift(1).fold(body)(k => subst(body, Map(k -> StrLit(f.name))))
 
     /** `base ~> | pattern | {updates} [, deletes] |` — compiled object
       * patching (B22's configured shape: patch this record / this nested
@@ -783,8 +797,9 @@ object JsonataCompiler {
       *    `value` or `value.a.b`; sift/computed bases stay interpreted).
       *    An UNDEFINED base (null nested struct) makes the engine return
       *    undefined from the whole apply (TransformFn's null-arg early
-      *    return) — every output keep flag is AND-ed with `defined` and
-      *    the TCol materialization nulls the struct itself.
+      *    return) — every output keep flag is AND-ed with the returned
+      *    `defined` test (None for the always-defined root base) and the
+      *    TCol materialization nulls the struct itself.
       *  - pattern: `$` (the patched clone itself) or a plain name-step path
       *    resolving THROUGH StructTypes to a StructType. A step absent from
       *    the schema can never match a typed input — the transform compiles
@@ -814,14 +829,11 @@ object JsonataCompiler {
       * and new keys append in update order — mirrored by the ordered VField
       * list. A null matched object patches nothing: nested rebuilds guard
       * on the match's isNotNull. */
-    private def transformFields(l: Ast, t: TransformExpr): Option[(Seq[VField], Column)] = {
+    private def transformFields(l: Ast, t: TransformExpr): Option[(Seq[VField], Option[Column])] = {
       val upd: Option[Vector[(String, Ast)]] = t.update match {
         case ObjCtor(pairs) =>
-          val ks = pairs.map { case (StrLit(k), v) => Some(k -> v); case _ => None }
-          val got = ks.flatten
-          if (ks.forall(_.isDefined) && got.map(_._1).distinct.length == got.length)
-            Some(got)
-          else None
+          allOf(pairs.map { case (StrLit(k), v) => Some(k -> v); case _ => None })
+            .filter(got => got.map(_._1).distinct.length == got.length).map(_.toVector)
         case _ => None
       }
       val dels: Option[Vector[String]] = t.deletes match {
@@ -834,9 +846,7 @@ object JsonataCompiler {
       def patSteps(a: Ast): Option[List[String]] = a match {
         case VarRef("") => Some(Nil)
         case NameStep(n) => Some(List(n))
-        case Path(steps, false, None)
-            if steps.forall(s => s.stages.isEmpty && !s.keepArray &&
-              s.focus.isEmpty && s.index.isEmpty) =>
+        case Path(steps, false, None) if steps.forall(plainStep) =>
           val es = steps.map(_.expr)
           if (es.length == 1 && es.head == VarRef("")) Some(Nil)
           else if (es.forall(_.isInstanceOf[NameStep]))
@@ -844,22 +854,21 @@ object JsonataCompiler {
           else None
         case _ => None
       }
-      val base: Option[(Seq[VField], Column)] = l match {
-        case NameStep("value") => compileStructObj(l).map(_ -> lit(true))
-        case p: Path => compileStructObj(p).map { vfs =>
-          val names = valuePath(p).getOrElse(Seq.empty)
-          vfs -> (if (names.isEmpty) lit(true) else col(names.mkString(".")).isNotNull)
-        }
+      val names: Option[Seq[String]] = l match {
+        case NameStep("value") => Some(Nil)
+        case p: Path => valuePath(p)
         case _ => None
       }
       for {
-        bd <- base
+        ns <- names
+        fields <- compileStructObj(l)
         path <- patSteps(t.pattern)
         pairs <- upd
         delKeys <- dels
         if pairs.forall { case (_, v) => cannotBeJsonNull(v) }
-        out <- patchVirtual(bd._1, path, pairs, delKeys)
-      } yield (out.map(f => VField(f.name, f.col, f.dt, bd._2 && f.keep)), bd._2)
+        out <- patchVirtual(fields, vfStruct(fields), path, pairs, delKeys)
+        defined = if (ns.isEmpty) None else Some(col(ns.mkString(".")).isNotNull)
+      } yield (out.getOrElse(fields).map(f => defined.fold(f)(d => f.copy(keep = d && f.keep))), defined)
     }
 
     /** Top-level spread of a compiled transform, ROOT bases only: an
@@ -869,101 +878,63 @@ object JsonataCompiler {
       * defined, so only they are valid where no filter can be attached
       * (tombstone branches, $merge parts); [[transformQuery]] carries the
       * defined-filter for the direct top-level shape. */
-    def transformOutputs(l: Ast, t: TransformExpr): Option[Seq[(String, Column)]] = {
-      val rootBase = l match {
-        case NameStep("value") => true
-        case p: Path => valuePath(p).exists(_.isEmpty)
-        case _ => false
-      }
-      if (!rootBase) None
-      else transformFields(l, t).map(_._1.map(f => f.name -> when(f.keep, f.col)))
-    }
+    def transformOutputs(l: Ast, t: TransformExpr): Option[Seq[(String, Column)]] =
+      transformQuery(l, t).collect { case (outs, None) => outs }
 
     /** The whole-query transform shape: outputs + the undefined-base drop
       * filter (None for root bases, which are always defined). */
     def transformQuery(l: Ast, t: TransformExpr): Option[(Seq[(String, Column)], Option[Column])] =
       transformFields(l, t).map { case (vfs, defined) =>
-        val filt = l match {
-          case NameStep("value") => None
-          case p: Path if valuePath(p).exists(_.isEmpty) => None
-          case _ => Some(defined)
-        }
-        (vfs.map(f => f.name -> when(f.keep, f.col)), filt)
+        (vfs.map(f => f.name -> when(f.keep, f.col)), defined)
       }
 
-    /** Patch at `path` inside the virtual (spread) object `fields`. */
-    private def patchVirtual(fields: Seq[VField], path: List[String],
-        pairs: Vector[(String, Ast)], delKeys: Vector[String]): Option[Seq[VField]] =
+    /** Patch at `path` inside the spread object `fields`, whose own column
+      * and type `self` are the update context where the path ends. None when
+      * the shape stays interpreted; Some(None) when the path can match
+      * nothing in typed input, which leaves the object as it is:
+      *  - an absent key can never exist;
+      *  - a scalar mid-path matches nothing (name steps over non-objects
+      *    are empty), while a final non-struct match raises T2013;
+      *  - an array on the path fans the match out per element, and a MAP
+      *    encodes as a JSON object the engine navigates INTO (not a scalar
+      *    no-match): both stay interpreted. */
+    private def patchVirtual(fields: Seq[VField], self: (Column, StructType), path: List[String],
+        pairs: Vector[(String, Ast)], delKeys: Vector[String]): Option[Option[Seq[VField]]] =
       path match {
-        case Nil =>
-          val (ctxCol, ctxSt) = vfStruct(fields)
-          applyPatch(fields, ctxCol, ctxSt, pairs, delKeys)
+        case Nil => applyPatch(fields, self._1, self._2, pairs, delKeys).map(Some(_))
         case n :: rest =>
           fields.indexWhere(_.name == n) match {
-            case -1 => Some(fields) // key can never exist in typed input: no match
+            case -1 => Some(None)
             case i => fields(i).dt match {
               case st: StructType =>
-                patchReal(fields(i).col, st, rest, pairs, delKeys).map { case (c2, st2) =>
-                  val guarded = when(fields(i).col.isNotNull, c2)
-                  fields.updated(i, VField(n, guarded, st2, guarded.isNotNull))
+                val c = fields(i).col
+                patchReal(c, st, rest, pairs, delKeys).map { case (c2, st2) =>
+                  val guarded = when(c.isNotNull, c2)
+                  Some(fields.updated(i, VField(n, guarded, st2, guarded.isNotNull)))
                 }
-              case _: ArrayType => None // per-element fan-out: interpreted
-              // a MAP encodes as a JSON object the engine navigates INTO —
-              // not a scalar no-match (round-11 review, verified live)
-              case _: MapType => None
-              case _ =>
-                // scalar mid-path: name steps over non-objects match nothing
-                if (rest.nonEmpty) Some(fields)
-                else None // final non-struct match raises T2013: interpreted
+              case _: ArrayType | _: MapType => None
+              case _ => if (rest.nonEmpty) Some(None) else None
             }
           }
       }
 
     /** Patch at `path` inside a REAL struct column. Returns the rebuilt
-      * column + its (possibly widened) type. */
+      * column + its (possibly widened) type, or the column itself when the
+      * path matches nothing. */
     private def patchReal(c: Column, st: StructType, path: List[String],
         pairs: Vector[(String, Ast)], delKeys: Vector[String]): Option[(Column, StructType)] =
-      path match {
-        case Nil =>
-          val fields = st.fields.toSeq.map { f =>
-            val fc = c.getField(f.name)
-            VField(f.name, fc, f.dataType, fc.isNotNull)
-          }
-          applyPatch(fields, c, st, pairs, delKeys).map(vfStruct)
-        case n :: rest =>
-          st.fields.find(_.name == n) match {
-            case None => Some((c, st)) // absent key: no match
-            case Some(f) => f.dataType match {
-              case ist: StructType =>
-                patchReal(c.getField(n), ist, rest, pairs, delKeys).map { case (c2, st2) =>
-                  val vfs = st.fields.toSeq.map { g =>
-                    if (g.name != n) {
-                      val gc = c.getField(g.name)
-                      VField(g.name, gc, g.dataType, gc.isNotNull)
-                    } else {
-                      val guarded = when(c.getField(n).isNotNull, c2)
-                      VField(n, guarded, st2, guarded.isNotNull)
-                    }
-                  }
-                  vfStruct(vfs)
-                }
-              case _: ArrayType => None
-              case _: MapType => None // JSON object to the engine (see above)
-              case _ => if (rest.nonEmpty) Some((c, st)) else None
-            }
-          }
-      }
+      patchVirtual(spread(st)(c.getField), (c, st), path, pairs, delKeys)
+        .map(_.fold((c, st))(vfStruct))
 
     /** Apply the update pairs then the deletes to an ordered field list,
       * compiling each update value with ctx = the matched object. */
     private def applyPatch(fields: Seq[VField], ctxCol: Column, ctxSt: StructType,
         pairs: Vector[(String, Ast)], delKeys: Vector[String]): Option[Seq[VField]] = {
-      val compiled = pairs.map { case (k, vAst) =>
+      val compiled = allOf(pairs.map { case (k, vAst) =>
         bound(Seq("" -> TCol(ctxCol, ctxSt)))(compile(vAst)).map(k -> _)
-      }
-      if (!compiled.forall(_.isDefined)) return None
+      }).getOrElse(return None)
       var out = fields.toVector
-      compiled.flatten.foreach { case (k, vc) =>
+      compiled.foreach { case (k, vc) =>
         out.indexWhere(_.name == k) match {
           case -1 => out = out :+ VField(k, vc.col, vc.dt, vc.col.isNotNull)
           case i => unifyMerge(out(i), vc) match {
@@ -1036,8 +1007,7 @@ object JsonataCompiler {
       case Block(Seq(e)) if !containsBind(e) => cannotBeJsonNull(e)
       case Call(VarRef(fn), args) => nullFreeFns(fn) && args.forall(cannotBeJsonNull)
       case p: Path =>
-        p.steps.forall(s => s.stages.isEmpty && s.focus.isEmpty &&
-          s.index.isEmpty && !s.keepArray) &&
+        p.steps.forall(plainStep) &&
           p.steps.forall(_.expr match {
             case _: NameStep | _: VarRef => true
             case _ => false
@@ -1087,20 +1057,8 @@ object JsonataCompiler {
         val res: Option[Seq[DataType]] = dt match {
           case st: StructType =>
             val own = st.fields.find(_.name == target).map(_.dataType).toSeq
-            st.fields.foldLeft(Option(own)) {
-              case (None, _) => None
-              case (Some(acc), f) => f.dataType match {
-                case s: StructType => occTypes(s).map(acc ++ _)
-                case a: ArrayType => occTypes(a).map(acc ++ _)
-                case _: MapType => None
-                case _ => Some(acc)
-              }
-            }
-          case ArrayType(et, _) => et match {
-            case _: StructType | _: ArrayType => occTypes(et)
-            case _: MapType => None
-            case _ => Some(Seq.empty)
-          }
+            allOf(st.fields.toSeq.map(f => occTypes(f.dataType))).map(own ++ _.flatten)
+          case ArrayType(et, _) => occTypes(et)
           case _: MapType => None
           case _ => Some(Seq.empty)
         }
@@ -1149,6 +1107,62 @@ object JsonataCompiler {
       Some(TCol(emptyAsNull(filter(all, x => x.isNotNull)), ArrayType(tt)))
     }
 
+    /** The non-array leaf of a (possibly nested) array type, or `dt` itself
+      * when it is no array; None for a map leaf, whose keys are not
+      * statically enumerable. */
+    private def leafOf(dt: DataType): Option[DataType] = dt match {
+      case ArrayType(et, _) => leafOf(et)
+      case _: MapType => None
+      case other => Some(other)
+    }
+
+    /** Field `f` of the struct items that `*` emits for one field of type
+      * `dt` (a struct, or arrays of structs): its RAW type, or nothing when
+      * the items are scalars or lack `f`. None = out of the subset (a map
+      * leaf on either side). */
+    private def nameOcc(dt: DataType, f: String): Option[Seq[DataType]] = leafOf(dt) match {
+      case Some(st: StructType) => st.fields.find(_.name == f) match {
+        case Some(tf) => leafOf(tf.dataType).map(_ => Seq(tf.dataType))
+        case None => Some(Nil) // key absent: emits nothing
+      }
+      case Some(_) => Some(Nil) // scalar items: the name step skips them
+      case None => None // emitted object with dynamic keys
+    }
+
+    /** The RAW target-field types `base.*.f` touches over a struct base —
+      * scalar occurrences contribute themselves, ArrayType occurrences are
+      * returned AS arrays (the caller maps to element types for unify; the
+      * $join consumer uses the rawness to exclude splicing targets, whose
+      * kept null elements break its null-free claim). None = out of the
+      * subset (map-typed anywhere). Class-level because the $join consumer
+      * must ask the same question compileWildcardPath answers. */
+    private def wcNameOccs(st: StructType, f: String): Option[Seq[DataType]] =
+      allOf(st.fields.toSeq.map(fd => nameOcc(fd.dataType, f))).map(_.flatten)
+
+    /** True iff `base.*.f` provably touches ONLY scalar f occurrences —
+      * the $join consumer's null-free precondition: scalar-target segments
+      * drop every null (absent keys), while an ARRAY-typed f keeps its
+      * null elements (engine: explicit JSON nulls), which array_join
+      * would silently skip where the engine raises. Conservative: false
+      * whenever the base shape is out of the enumerable subset. */
+    private def wcNameTargetScalarOnly(wsteps: Vector[Step]): Boolean = {
+      val es = wsteps.map(_.expr)
+      if (es.length < 3 || es(es.length - 2) != Wildcard()) return false
+      val f = es.last match {
+        case NameStep(n) => n
+        case _ => return false
+      }
+      val baseNames = valueNames(es.dropRight(2)).getOrElse(return false)
+      def scalarOnly(occs: Option[Seq[DataType]]): Boolean =
+        occs.exists(os => os.nonEmpty && os.forall(!_.isInstanceOf[ArrayType]))
+      fieldType(baseNames) match {
+        case Some(st: StructType) => scalarOnly(wcNameOccs(st, f))
+        case Some(ArrayType(et: StructType, _)) => scalarOnly(wcNameOccs(et, f))
+        case Some(MapType(_, s2: StructType, _)) => scalarOnly(nameOcc(s2, f))
+        case _ => false
+      }
+    }
+
     /** `value.a.*` — compiled terminal wildcard (B4). The engine's `*` over
       * an object emits, in field order, each field VALUE with arrays (and
       * nested arrays) spliced flat; over an array it maps that rule across
@@ -1177,83 +1191,6 @@ object JsonataCompiler {
       * back (an emitted object item — not modeled among struct segments);
       * an array base needs struct elements (all-scalar elements emit
       * nothing in the engine). */
-    /** The non-array leaf of a (possibly nested) array type. */
-    private def wcStructLeafOf(at: ArrayType): DataType = at.elementType match {
-      case inner: ArrayType => wcStructLeafOf(inner)
-      case other => other
-    }
-
-    /** The RAW target-field types `base.*.f` touches over a struct base —
-      * scalar occurrences contribute themselves, ArrayType occurrences are
-      * returned AS arrays (the caller maps to element types for unify; the
-      * $join consumer uses the rawness to exclude splicing targets, whose
-      * kept null elements break its null-free claim). None = out of the
-      * subset (map-typed anywhere). Class-level because the $join consumer
-      * must ask the same question compileWildcardPath answers. */
-    private def wcNameOccs(st: StructType, f: String): Option[Seq[DataType]] =
-      st.fields.toSeq.foldLeft(Option(Seq.empty[DataType])) {
-        case (None, _) => None
-        case (Some(acc), fd) => fd.dataType match {
-          case _: MapType => None // emitted object with dynamic keys
-          case s2: StructType => s2.fields.find(_.name == f) match {
-            case None => Some(acc) // key absent: emits nothing
-            case Some(tf) => tf.dataType match {
-              case _: MapType => None
-              case at2: ArrayType => wcStructLeafOf(at2) match {
-                case _: MapType => None
-                case _ => Some(acc :+ at2)
-              }
-              case dt => Some(acc :+ dt)
-            }
-          }
-          case at: ArrayType => wcStructLeafOf(at) match {
-            case _: MapType => None
-            case s2: StructType => s2.fields.find(_.name == f) match {
-              case None => Some(acc)
-              case Some(tf) => tf.dataType match {
-                case _: MapType => None
-                case at2: ArrayType => wcStructLeafOf(at2) match {
-                  case _: MapType => None
-                  case _ => Some(acc :+ at2)
-                }
-                case dt => Some(acc :+ dt)
-              }
-            }
-            case _ => Some(acc) // scalar items: the name step skips them
-          }
-          case _ => Some(acc) // scalar field: skipped
-        }
-      }
-
-    /** True iff `base.*.f` provably touches ONLY scalar f occurrences —
-      * the $join consumer's null-free precondition: scalar-target segments
-      * drop every null (absent keys), while an ARRAY-typed f keeps its
-      * null elements (engine: explicit JSON nulls), which array_join
-      * would silently skip where the engine raises. Conservative: false
-      * whenever the base shape is out of the enumerable subset. */
-    private def wcNameTargetScalarOnly(wsteps: Vector[Step]): Boolean = {
-      val es = wsteps.map(_.expr)
-      if (es.length < 3 || es(es.length - 2) != Wildcard()) return false
-      val f = es.last match {
-        case NameStep(n) => n
-        case _ => return false
-      }
-      val baseNames = valueNames(es.dropRight(2)).getOrElse(return false)
-      def scalarOccs(st: StructType): Boolean =
-        wcNameOccs(st, f).exists(os =>
-          os.nonEmpty && os.forall(!_.isInstanceOf[ArrayType]))
-      fieldType(baseNames) match {
-        case Some(st: StructType) => scalarOccs(st)
-        case Some(ArrayType(et: StructType, _)) => scalarOccs(et)
-        case Some(mt: MapType) => mt.valueType match {
-          case s2: StructType => s2.fields.find(_.name == f).exists(tf =>
-            !tf.dataType.isInstanceOf[ArrayType] && !tf.dataType.isInstanceOf[MapType])
-          case _ => false
-        }
-        case _ => false
-      }
-    }
-
     private def compileWildcardPath(steps: Vector[Step]): Option[TCol] = {
       val es = steps.map(_.expr)
       if (inLambda) return None
@@ -1273,21 +1210,10 @@ object JsonataCompiler {
       val baseDt = fieldType(baseNames).getOrElse(return None)
       val base = namesCol(baseNames)
 
-      // the type an array field's splice emits (None = a map leaf: fall back)
-      def leafType(dt: DataType): Option[DataType] = dt match {
-        case ArrayType(et, _) => leafType(et)
-        case _: MapType => None
-        case other => Some(other)
-      }
+      // the type each field emits, for an array field the type of its
+      // splice (None = a map leaf: fall back)
       def fieldTypes(st: StructType): Option[Seq[DataType]] =
-        st.fields.toSeq.foldLeft(Option(Seq.empty[DataType])) {
-          case (None, _) => None
-          case (Some(acc), f) => f.dataType match {
-            case _: MapType => None
-            case at: ArrayType => leafType(at).map(acc :+ _)
-            case dt => Some(acc :+ dt)
-          }
-        }
+        allOf(st.fields.toSeq.map(f => leafOf(f.dataType)))
       // arrays splice FLAT, however deep the nesting (evalWildcard's flat);
       // a null INNER array is an explicit null element of its parent — the
       // engine emits it as one null item, so it becomes array(null) here
@@ -1357,8 +1283,8 @@ object JsonataCompiler {
                   when(v.isNotNull, array(v)).otherwise(array().cast(ArrayType(tt)))
               }
             }
-            case at: ArrayType => wcStructLeafOf(at) match {
-              case s2: StructType => s2.fields.find(_.name == f).map { tf =>
+            case at: ArrayType => leafOf(at) match {
+              case Some(s2: StructType) => s2.fields.find(_.name == f).map { tf =>
                 coalesce(
                   extractF(c.getField(fd.name), at, f, tt,
                     tf.dataType.isInstanceOf[ArrayType]),
@@ -1396,7 +1322,7 @@ object JsonataCompiler {
             case _: MapType => None // object items: not modeled (field-map rule)
             case at: ArrayType =>
               for {
-                lt <- leafType(at)
+                lt <- leafOf(at)
                 tt <- unifyNumeric(Seq(lt))
               } yield emit(flatten(transform(map_values(base), v =>
                 coalesce(flattened(v, at, tt), array(lit(null).cast(tt))))), tt)
@@ -1434,15 +1360,8 @@ object JsonataCompiler {
         case (mt: MapType, Some(f)) if mt.keyType == StringType && baseNames.nonEmpty =>
           mt.valueType match {
             case s2: StructType =>
-              s2.fields.find(_.name == f).flatMap { tf =>
-                val raw = tf.dataType
-                val ok = raw match {
-                  case _: MapType => false
-                  case at2: ArrayType => !wcStructLeafOf(at2).isInstanceOf[MapType]
-                  case _ => true
-                }
-                if (!ok) None
-                else unifyNumeric(Seq(raw match {
+              nameOcc(s2, f).flatMap(_.headOption).flatMap { raw =>
+                unifyNumeric(Seq(raw match {
                   case at2: ArrayType => at2.elementType
                   case dt => dt
                 })).map { tt =>
@@ -1462,56 +1381,11 @@ object JsonataCompiler {
       }
     }
 
-    /** Constant-fold comparisons of the key parameter against string literals
-      * for ONE field (the key is statically known per field), then fold
-      * conditionals whose condition became a literal. This is what lets a
-      * heterogeneous struct compile bodies like `$k = 'n' ? $v : 0`: the
-      * engine's ternary is lazy, so folding the untaken branch away is exact —
-      * while `and`/`or` operands are BOTH evaluated by the engine and are
-      * therefore never dropped (a non-compiling operand still forces the
-      * interpreted tier, preserving any engine type error). Does not descend
-      * into nested lambdas (parameter shadowing). */
-    private def foldKey(a: Ast, k: String, name: String): Ast = {
-      def kRef(x: Ast): Boolean = x match {
-        case VarRef(`k`) => true
-        case Path(Vector(Step(VarRef(`k`), Vector(), false, None, None)), false, None) => true
-        case _ => false
-      }
-      def go(x: Ast): Ast = x match {
-        case Binary(op @ ("=" | "!="), l, r) =>
-          val litKey = (l, r) match {
-            case (lk, StrLit(s)) if kRef(lk) => Some(s)
-            case (StrLit(s), rk) if kRef(rk) => Some(s)
-            case _ => None
-          }
-          litKey match {
-            case Some(s) => BoolLit(if (op == "=") name == s else name != s)
-            case None => Binary(op, go(l), go(r))
-          }
-        case Binary("in", lk, ArrCtor(items))
-            if kRef(lk) && items.nonEmpty && items.forall(_.isInstanceOf[StrLit]) =>
-          BoolLit(items.exists { case StrLit(s) => s == name; case _ => false })
-        case Binary(op, l, r) => (op, go(l), go(r)) match {
-          case ("and", BoolLit(bl), BoolLit(br)) => BoolLit(bl && br)
-          case ("or", BoolLit(bl), BoolLit(br)) => BoolLit(bl || br)
-          case (_, gl, gr) => Binary(op, gl, gr)
-        }
-        case Cond(c, t, e) => go(c) match {
-          case BoolLit(true) => go(t)
-          case BoolLit(false) if e.isDefined => go(e.get)
-          case gc => Cond(gc, go(t), e.map(go))
-        }
-        case Call(p, as) => Call(p, as.map(go))
-        case UnaryMinus(e) => UnaryMinus(go(e))
-        case other => other
-      }
-      go(a)
-    }
-
     /** `$sift(structObj, function($v[, $k[, $o]]){bool})` — per-field keep
       * flags. The lambda body must compile to a static boolean for EVERY
-      * field (after per-field key folding); fSift's general truthiness on
-      * non-boolean results stays interpreted, exactly like $filter. The
+      * field, its key parameter replaced ([[keyed]]); fSift's general
+      * truthiness on non-boolean results stays interpreted, exactly like
+      * $filter. The
       * 3-arg form binds `$o` to the struct BRIDGED as a map column
       * ([[bridgeStructAsMap]]) — possible only when the field types unify;
       * heterogeneous structs stay interpreted (their conditional field
@@ -1527,15 +1401,13 @@ object JsonataCompiler {
             case Some(p3) => bridgeStructAsMap(fields).map(tc => Seq(p3 -> tc))
           }
           oBind.flatMap { ob =>
-            val kept = fields.map { f =>
-              val folded = params.lift(1).map(foldKey(body, _, f.name)).getOrElse(body)
-              bound(fieldBindings(params.take(2), f) ++ ob)(compile(folded)) match {
+            allOf(fields.map { f =>
+              bound(fieldBindings(params.take(2), f) ++ ob)(compile(keyed(body, params, f))) match {
                 case Some(TCol(c, BooleanType)) =>
                   Some(f.copy(keep = f.keep && coalesce(c, lit(false))))
                 case _ => None
               }
-            }
-            if (kept.forall(_.isDefined)) Some(kept.map(_.get)) else None
+            })
           }
         }
       case _ => None
@@ -1653,14 +1525,10 @@ object JsonataCompiler {
     private def compileEach(args: Seq[Ast]): Option[TCol] = args match {
       case Seq(objA, Lambda(params, body, _)) if params.nonEmpty && params.length <= 2 =>
         compileStructObj(objA).flatMap { fields =>
-          val bodies = fields.map { f =>
-            val folded = params.lift(1).map(foldKey(body, _, f.name)).getOrElse(body)
-            bound(fieldBindings(params, f))(compile(folded))
-          }
-          if (!bodies.forall(_.isDefined)) None
-          else {
-            val ts = bodies.map(_.get)
-            ts.map(tc2dt).distinct match {
+          allOf(fields.map { f =>
+            bound(fieldBindings(params, f))(compile(keyed(body, params, f)))
+          }).flatMap { ts =>
+            ts.map(t => normDt(t.dt)).distinct match {
               case Seq(dt) =>
                 val empty = array().cast(ArrayType(dt))
                 val parts = fields.zip(ts).map { case (f, t) =>
@@ -2212,31 +2080,32 @@ object JsonataCompiler {
                 case VarRef("") => g
                 case _ => transform(g, e => extract(e))
               }
-              fn match {
-                case "sum" =>
-                  val dt = if (integral) LongType else DoubleType
-                  // group sums keep the empty→undefined wrap (unlike the
-                  // seed-0 simple-array form): cnt gates the fold
-                  (((g: Column) => {
-                    val v = vals(g)
-                    when(NumArrayFold.cnt(v) > 0, NumArrayFold.sum(v, integral))
-                  }), dt)
-                case "min" | "max" =>
-                  val dt = if (integral) LongType else fdt
-                  (((g: Column) => {
-                    val v = vals(g)
-                    if (fn == "min") NumArrayFold.min(v, dt) else NumArrayFold.max(v, dt)
-                  }), dt)
-                case "average" =>
-                  (((g: Column) => {
-                    val v = vals(g)
-                    when(NumArrayFold.cnt(v) > 0,
-                      NumArrayFold.sum(v, long = false) / NumArrayFold.cnt(v))
-                  }), DoubleType)
+              if (fn == "sum") {
+                // group sums keep the empty→undefined wrap (unlike the
+                // seed-0 simple-array form): cnt gates the fold
+                (((g: Column) => {
+                  val v = vals(g)
+                  when(NumArrayFold.cnt(v) > 0, NumArrayFold.sum(v, integral))
+                }), if (integral) LongType else DoubleType)
+              } else {
+                val (agg, dt) = numFold(fn, fdt)
+                ((g: Column) => agg(vals(g)), dt)
               }
           }
         case _ => None
       }
+
+    /** `$min`/`$max`/`$average` over a numeric array column of element
+      * type `et`, in one NumArrayFold pass, and the result type: undefined
+      * (NULL) when no element is present. */
+    private def numFold(fn: String, et: DataType): (Column => Column, DataType) = fn match {
+      case "min" | "max" =>
+        val dt = normDt(et)
+        (v => if (fn == "min") NumArrayFold.min(v, dt) else NumArrayFold.max(v, dt), dt)
+      case "average" =>
+        (v => when(NumArrayFold.cnt(v) > 0, NumArrayFold.sum(v, long = false) / NumArrayFold.cnt(v)),
+          DoubleType)
+    }
 
     /** Struct-object operand rendered as named, typed output columns — a
       * dropped field is a NULL column (= decoding the engine's key-absent
@@ -2292,9 +2161,7 @@ object JsonataCompiler {
       // so the navigation is scope-safe inside HOF bodies too.
       case Path(steps, false, None)
           if steps.length >= 2 && !steps.head.expr.isInstanceOf[NameStep] &&
-            steps.forall(st => st.stages.isEmpty && st.focus.isEmpty &&
-              st.index.isEmpty && !st.keepArray) &&
-            steps.tail.forall(_.expr.isInstanceOf[NameStep]) =>
+            steps.forall(plainStep) && steps.tail.forall(_.expr.isInstanceOf[NameStep]) =>
         steps.tail.foldLeft(compile(steps.head.expr)) { (acc, step) =>
           acc.flatMap(fieldOf(_, step.expr.asInstanceOf[NameStep].name))
         }
@@ -2315,17 +2182,13 @@ object JsonataCompiler {
       // authored shape, `**` followed by one name): static pre-order
       // expansion over the schema (see compileDescendantPath)
       case Path(steps, false, None)
-          if steps.exists(_.expr == Descendant()) &&
-            steps.forall(s => s.stages.isEmpty && !s.keepArray &&
-              s.focus.isEmpty && s.index.isEmpty) =>
+          if steps.exists(_.expr == Descendant()) && steps.forall(plainStep) =>
         compileDescendantPath(steps)
       // `value.a.*` — terminal wildcard (B4's overwhelmingly common
       // authored shape): static field-value enumeration over the schema —
       // the single-level case of the `**` machinery (compileWildcardPath)
       case Path(steps, false, None)
-          if steps.exists(_.expr == Wildcard()) &&
-            steps.forall(s => s.stages.isEmpty && !s.keepArray &&
-              s.focus.isEmpty && s.index.isEmpty) =>
+          if steps.exists(_.expr == Wildcard()) && steps.forall(plainStep) =>
         compileWildcardPath(steps)
       // stages on a NON-PATH base — `$split(x, ' ')[pred]`, `$f()[0]` —
       // the same stage machinery over any compiled array-typed expression
@@ -2347,13 +2210,19 @@ object JsonataCompiler {
         }
       case Ast.UnaryMinus(e) => compile(e).filter(t => isNum(t.dt))
         .map(t => TCol(Shims.column(CUnaryMinus(Shims.expression(t.col), failOnError = false)), t.dt))
-      case Cond(c, t, e) =>
-        for {
-          cc <- compileBool(c)
-          tc <- compile(t)
-          ec <- e.map(compile).getOrElse(Some(TCol(lit(null).cast(tc2dt(tc)), tc2dt(tc))))
-          if tc2dt(tc) == tc2dt(ec) // branches must agree on type
-        } yield TCol(when(cc, tc.col).otherwise(ec.col), tc.dt)
+      // a closed condition takes the engine's truthiness and compiles only
+      // the branch it takes: `?:` is lazy, so the other may not compile
+      case Cond(c, t, e) => fold(c, lambdaEnv.keySet).map(Values.truthy) match {
+        case Some(true) => compile(t)
+        case Some(false) if e.isDefined => compile(e.get)
+        case _ =>
+          for {
+            cc <- compileBool(c)
+            tc <- compile(t)
+            ec <- e.map(compile).getOrElse(Some(TCol(lit(null).cast(normDt(tc.dt)), normDt(tc.dt))))
+            if normDt(tc.dt) == normDt(ec.dt) // branches must agree on type
+          } yield TCol(when(cc, tc.col).otherwise(ec.col), tc.dt)
+      }
       case Binary(op, l, r) => compileBinary(op, l, r)
       case Call(VarRef(fn), args) => compileCall(fn, args)
       // `x ~> $f(?, a)` — partial application (B21/jsonata.org "chainable
@@ -2405,14 +2274,10 @@ object JsonataCompiler {
       case ApplyOp(l, t: TransformExpr) =>
         transformFields(l, t).map { case (vfs, defined) =>
           val (c, st) = vfStruct(vfs)
-          TCol(when(defined, c), st)
+          TCol(defined.fold(c)(when(_, c)), st)
         }
       case _ => None
     }
-
-    private def tc2dt(t: TCol): DataType =
-      if (isIntegral(t.dt)) LongType // JSONata has one integer space
-      else t.dt
 
     def compileBool(a: Ast): Option[Column] = compile(a) match {
       case Some(TCol(c, BooleanType)) => Some(c)
@@ -2536,7 +2401,8 @@ object JsonataCompiler {
       case _ => false
     }
 
-    /** Integral literal value (with unary minus), for range bounds. */
+    /** Integral literal value (a negative literal parses as
+      * UnaryMinus(NumLit)). */
     private def intLitOf(a: Ast): Option[Long] = a match {
       case NumLit(v) if v.isIntegralNumber => Some(v.longValue())
       case UnaryMinus(NumLit(v)) if v.isIntegralNumber => Some(-v.longValue())
@@ -2547,12 +2413,7 @@ object JsonataCompiler {
       def arg(i: Int): Option[TCol] = if (i < args.length) compile(args(i)) else None
       def str(i: Int): Option[TCol] = arg(i).filter(_.dt == StringType)
       def num(i: Int): Option[TCol] = arg(i).filter(t => isNum(t.dt))
-      def intLit(i: Int): Option[Long] = args.lift(i) match {
-        case Some(NumLit(v)) if v.isIntegralNumber => Some(v.longValue())
-        // a negative literal parses as UnaryMinus(NumLit)
-        case Some(UnaryMinus(NumLit(v))) if v.isIntegralNumber => Some(-v.longValue())
-        case _ => None
-      }
+      def intLit(i: Int): Option[Long] = args.lift(i).flatMap(intLitOf)
       fn match {
         // a lambda param shadowing a builtin name must not be compiled as
         // the builtin (the engine would call the bound function value)
@@ -2848,7 +2709,7 @@ object JsonataCompiler {
             case Some(StrLit(p)) if p.nonEmpty => Some(p)
             case _ => None
           }
-          (str(0), args.lift(1).flatMap(intLitOf), padStr) match {
+          (str(0), intLit(1), padStr) match {
             case (Some(t), Some(w), Some(p)) =>
               val target = math.abs(w).toInt
               val padded = if (w < 0) lpad(t.col, target, p) else rpad(t.col, target, p)
@@ -3037,21 +2898,12 @@ object JsonataCompiler {
                 // filter→transform→aggregate lambda chain it replaces —
                 // same null-element skip, seed-0 sum, array_min/max
                 // NaN-greatest and empty→NULL semantics (ArrayFoldSpec)
-                import graft.spark.NumArrayFold
-                fn match {
-                  case "sum" =>
-                    val long = isIntegral(et)
-                    Some(TCol(NumArrayFold.sum(t.col, long),
-                      if (long) LongType else DoubleType))
-                  case "min" | "max" =>
-                    val dt = if (isIntegral(et)) LongType else et
-                    Some(TCol(
-                      if (fn == "min") NumArrayFold.min(t.col, dt)
-                      else NumArrayFold.max(t.col, dt), dt))
-                  case "average" =>
-                    val cnt = NumArrayFold.cnt(t.col)
-                    Some(TCol(when(cnt > 0,
-                      NumArrayFold.sum(t.col, long = false) / cnt), DoubleType))
+                if (fn == "sum") {
+                  val long = isIntegral(et)
+                  Some(TCol(NumArrayFold.sum(t.col, long), if (long) LongType else DoubleType))
+                } else {
+                  val (agg, dt) = numFold(fn, et)
+                  Some(TCol(agg(t.col), dt))
                 }
               case dt if isNum(dt) && simpleAtomic(dt) =>
                 // singleton sequence: the aggregate is the value itself —
@@ -3186,41 +3038,32 @@ object JsonataCompiler {
     }.mkString)
   }
 
-  /** Compiled parse plan for a LITERAL $toMillis picture: the exact regex
-    * parsePicture would build (one capture group per marker, quoted
-    * literals, anchored) plus the capture-group index of each component.
-    * Numeric-marker subset only — Y/M/D/H/m/s/f with digit-pad modifiers.
-    * [Y] must be width-BOUNDED: its unbounded `(\d+)` group lets the engine
-    * parse 5+-digit years that Spark's timestamp range rejects (error where
-    * the engine succeeds); a bounded [Y0001] caps at 9999, inside both.
-    * 12-hour [h]/[P], zones [Z]/[z], day-of-year [d], and name components
-    * stay interpreted (their extraction arithmetic has no faithful
-    * column-side form). Duplicate components keep the LAST group —
-    * parsePicture overwrites on re-assignment. */
+  /** Compiled parse plan for a LITERAL $toMillis picture: the regex the
+    * engine parses it with ([[graft.jsonata.DateTimeFmt.pictureRegex]]) plus
+    * the capture-group index of each component. Numeric-marker subset only
+    * — Y/M/D/H/m/s/f with digit-pad modifiers. [Y] must be width-BOUNDED:
+    * its unbounded `(\d+)` group lets the engine parse 5+-digit years that
+    * Spark's timestamp range rejects (error where the engine succeeds); a
+    * bounded [Y0001] caps at 9999, inside both. 12-hour [h]/[P], zones
+    * [Z]/[z], day-of-year [d], and name components stay interpreted (their
+    * extraction arithmetic has no faithful column-side form). Duplicate
+    * components keep the LAST group — parsePicture overwrites on
+    * re-assignment. */
   private[spark] final case class PictureParse(regex: String, groups: Map[Char, Int])
 
   private[spark] def pictureParseSpec(pic: String): Option[PictureParse] = {
-    val toks =
-      try graft.jsonata.DateTimeFmt.tokens(pic)
+    import graft.jsonata.DateTimeFmt.{padWidth, pictureRegex}
+    val (re, markers) =
+      try pictureRegex(pic)
       catch { case _: Exception => return None }
-    val re = new StringBuilder("^")
-    var gi = 0
-    var groups = Map.empty[Char, Int]
-    toks.foreach {
-      case Left(l) => re.append(java.util.regex.Pattern.quote(l))
-      case Right(graft.jsonata.DateTimeFmt.Marker(comp, mod)) =>
-        if (!"YMDHmsf".contains(comp)) return None
-        // fmtNum-style mods only (no names/ordinals/words/roman)
-        val core = mod.split(',')(0)
-        if (!core.forall(ch => ch.isDigit || ch == '#')) return None
-        val w = graft.jsonata.DateTimeFmt.padWidth(core)
-        if (comp == 'Y' && w == 0) return None // unbounded year: see scaladoc
-        gi += 1
-        groups += (comp -> gi)
-        re.append(if (w > 0) s"(\\d{1,$w})" else "(\\d+)")
+    val numeric = markers.forall { m =>
+      // fmtNum-style mods only (no names/ordinals/words/roman)
+      val core = m.mod.split(',')(0)
+      "YMDHmsf".contains(m.comp) && core.forall(ch => ch.isDigit || ch == '#') &&
+        (m.comp != 'Y' || padWidth(core) > 0) // unbounded year: see scaladoc
     }
-    re.append("$")
-    if (groups.isEmpty) None else Some(PictureParse(re.toString, groups))
+    if (markers.isEmpty || !numeric) None
+    else Some(PictureParse(re, markers.map(_.comp).zip(1 to markers.length).toMap))
   }
 
   /** A regex literal's pattern string with its lexer flags (i/m/s) embedded

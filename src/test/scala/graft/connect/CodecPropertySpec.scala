@@ -44,11 +44,13 @@ class CodecPropertySpec extends AnyFunSuite {
     case CType.INT8 => Arbitrary.arbitrary[Byte]
     case CType.INT16 => Arbitrary.arbitrary[Short]
     case CType.INT32 =>
-      if (s.name == Logical.DateName) Gen.choose(0, 100000).map(Logical.dateToLogical)
+      // back to 0001-01-01: instants before 1970 must keep their form too
+      if (s.name == Logical.DateName) Gen.choose(-719162, 100000).map(Logical.dateToLogical)
       else if (s.name == Logical.TimeName) Gen.choose(0, 86399999).map(Logical.timeToLogical)
       else Arbitrary.arbitrary[Int]
     case CType.INT64 =>
-      if (s.name == Logical.TimestampName) Gen.choose(0L, 4102444800000L).map(Logical.timestampToLogical)
+      if (s.name == Logical.TimestampName)
+        Gen.choose(-62135596800000L, 4102444800000L).map(Logical.timestampToLogical)
       else Arbitrary.arbitrary[Long]
     case CType.FLOAT32 => Arbitrary.arbitrary[Float].suchThat(f => !f.isNaN && !f.isInfinite)
     case CType.FLOAT64 => Arbitrary.arbitrary[Double].suchThat(d => !d.isNaN && !d.isInfinite)

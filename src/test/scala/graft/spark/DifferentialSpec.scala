@@ -1885,6 +1885,56 @@ class DifferentialSpec extends AnyFunSuite with BeforeAndAfterAll {
       "{'n': $count(value.items[$count(tags[% .p > 0]) > 0])}").isEmpty)
   }
 
+  private def keyedDf(ddl: String, rows: org.apache.spark.sql.Row*) = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, StructType.fromDDL(ddl))
+  }
+
+  /** Key conditions a `$sift`/`$each` lambda tests on its `$k` parameter:
+    * constant per struct field, so they compile over fields of any type. */
+  private val keyConds = Seq("$k = 'a'", "$k != 'a'", "$k in ['a', 'b']",
+    "$k = 'a' or $k = 'c'", "$k != 'a' and $k != 'b'")
+
+  test("key conditions in $sift compile over a struct whose fields differ in type") {
+    import org.apache.spark.sql.Row
+    val het = keyedDf("id BIGINT, a BIGINT, b STRING, c DOUBLE",
+      Row(1L, 10L, "x", 1.5), Row(2L, null, "y", null), Row(3L, 30L, null, 0.0))
+    keyConds.foreach { c =>
+      diffDf(het, s"{'id': value.id, 'ks': $$join($$keys($$sift(value, function($$v, $$k){ $c })), '|')}",
+        "id BIGINT, ks STRING", "id")
+    }
+    // the $o form needs a struct that bridges to a map: integral and double
+    val num = keyedDf("id BIGINT, a INT, b DOUBLE, c BIGINT",
+      Row(1L, 1, 2.5, 7L), Row(2L, null, 0.5, null), Row(3L, 3, null, 9L))
+    keyConds.foreach { c =>
+      diffDf(num, s"{'id': value.id, 'ks': $$join($$keys($$sift(value, function($$v, $$k, $$o){ $c })), '|')}",
+        "id BIGINT, ks STRING", "id")
+    }
+  }
+
+  test("key conditions choose the $each branch per field of a heterogeneous struct") {
+    import org.apache.spark.sql.Row
+    val het = keyedDf("id BIGINT, n BIGINT, s STRING, d DOUBLE",
+      Row(1L, 10L, "x", 1.5), Row(2L, null, "y", null), Row(3L, 30L, null, 0.0))
+    diffDf(het, "{'id': value.id, 's': $sum($each(value, function($v, $k){ $k = 'n' ? $v : 0 }))}",
+      "id BIGINT, s BIGINT", "id")
+    val ab = keyedDf("id BIGINT, a BIGINT, b INT, c STRING",
+      Row(1L, 10L, 2, "x"), Row(2L, null, 3, "y"), Row(3L, 30L, null, null))
+    Seq("$k = 'a'", "$k in ['a', 'b']", "$k = 'a' or $k = 'b'", "$k != 'c' and $k != 'id'")
+      .foreach { c =>
+        diffDf(ab, s"{'id': value.id, 's': $$sum($$each(value, function($$v, $$k){ $c ? $$v : 0 }))}",
+          "id BIGINT, s BIGINT", "id")
+      }
+  }
+
+  test("a key condition only the engine can fold picks the $each branch") {
+    import org.apache.spark.sql.Row
+    val het = keyedDf("id BIGINT, n_a BIGINT, n_b INT, s_x STRING",
+      Row(1L, 10L, 2, "x"), Row(2L, null, 3, "y"), Row(3L, 30L, null, null))
+    diffDf(het, "{'id': value.id, 's': $sum($each(value, function($v, $k){ " +
+      "$substringBefore($k, '_') = 'n' ? $v : 0 }))}", "id BIGINT, s BIGINT", "id")
+  }
+
   test("$merge right-bias is on PRESENT keys: per-row absent keys never clobber earlier parts") {
     // round-11 review finding (verified divergence before the fix): the
     // merge combine statically overwrote duplicate keys, so a later part's
